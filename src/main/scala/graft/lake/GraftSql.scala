@@ -2,8 +2,11 @@ package graft.lake
 
 import scala.util.matching.Regex
 
+import graft.sources.GraftCatalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType,
+  LongType, StringType, StructField, StructType}
 
 /** SQL front-end for GraftLake maintenance statements — the exact
   * statement shapes the reference lab runs against Delta (reference
@@ -13,8 +16,16 @@ import org.apache.spark.sql.functions._
   * plus RESTORE and UPDATE. Anything else falls through to
   * `spark.sql` with every registered table exposed as a temp view of
   * its current snapshot.
+  *
+  * The statement table lives in the companion: each shape declares
+  * its pattern and its catalog route, which
+  * [[graft.sources.GraftSqlParser]] reads to serve the same
+  * statements on catalog names. A table name may be qualified or
+  * backtick-quoted; it resolves in the local registry first, then
+  * through the session's [[graft.sources.GraftCatalog]]s.
   */
 final class GraftSql(spark: SparkSession) {
+  import GraftSql._
 
   private val tables = scala.collection.mutable.Map[String, GraftTable]()
   private val matViews = scala.collection.mutable.Map[String, MaterializedAgg]()
@@ -36,190 +47,25 @@ final class GraftSql(spark: SparkSession) {
     t
   }
 
-  def table(name: String): GraftTable = tables.getOrElse(name,
+  def table(name: String): GraftTable = lookup(name).getOrElse(
     throw new IllegalArgumentException(s"unknown GraftLake table: $name"))
 
-  private val optimizeRe: Regex =
-    """(?is)^\s*OPTIMIZE\s+(\w+)(\s+FULL)?(\s+VORDER)?(?:\s+ZORDER\s+BY\s*\(([^)]+)\))?(\s+VORDER)?(?:\s+WHERE\s+(.+?))?\s*;?\s*$""".r
-  private val vacuumLiteRe: Regex =
-    """(?is)^\s*VACUUM\s+(\w+)\s+LITE(?:\s+RETAIN\s+([0-9.]+)\s+HOURS)?(\s+DRY\s+RUN)?\s*;?\s*$""".r
-  private val vacuumDryRe: Regex =
-    """(?is)^\s*VACUUM\s+(\w+)\s+DRY\s+RUN\s*;?\s*$""".r
-  private val vacuumRetainRe: Regex =
-    """(?is)^\s*VACUUM\s+(\w+)(?:\s+RETAIN\s+([0-9.]+)\s+HOURS)?\s*;?\s*$""".r
-  private val historyRe: Regex =
-    """(?is)^\s*DESCRIBE\s+HISTORY\s+(\w+)(?:\s+LIMIT\s+(\d+))?\s*;?\s*$""".r
-  private val detailRe: Regex =
-    """(?is)^\s*DESCRIBE\s+DETAIL\s+(\w+)\s*;?\s*$""".r
-  private val extendedRe: Regex =
-    """(?is)^\s*DESCRIBE\s+EXTENDED\s+(\w+)\s*;?\s*$""".r
-  private val clusteringRe: Regex =
-    """(?is)^\s*DESCRIBE\s+CLUSTERING\s+(\w+)(?:\s*\(([\w,\s]+)\))?\s*;?\s*$""".r
-  private val deleteRe: Regex =
-    """(?is)^\s*DELETE\s+FROM\s+(\w+)(?:\s+WHERE\s+(.+?))?\s*;?\s*$""".r
-  private val analyzeRe: Regex =
-    """(?is)^\s*ANALYZE\s+TABLE\s+(\w+)\s+COMPUTE\s+STATISTICS(?:\s+FOR\s+COLUMNS\s*\(([\w,\s]+)\))?\s*;?\s*$""".r
-  private val updateRe: Regex =
-    """(?is)^\s*UPDATE\s+(\w+)\s+SET\s+(.+?)\s+WHERE\s+(.+?)\s*;?\s*$""".r
-  private val showCreateRe: Regex =
-    """(?is)^\s*SHOW\s+CREATE\s+TABLE\s+(\w+)\s*;?\s*$""".r
-  private val createLikeRe: Regex =
-    """(?is)^\s*CREATE\s+TABLE\s+(\w+)\s+LIKE\s+(\w+)\s+LOCATION\s+'([^']+)'\s*;?\s*$""".r
-  private val cloneRe: Regex =
-    """(?is)^\s*CREATE\s+TABLE\s+(\w+)\s+(SHALLOW|DEEP)\s+CLONE\s+(\w+)\s+LOCATION\s+'([^']+)'(?:\s+VERSION\s+AS\s+OF\s+(\d+))?(?:\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)')?\s*;?\s*$""".r
-  private val reorgRe: Regex =
-    """(?is)^\s*REORG\s+TABLE\s+(\w+)\s+APPLY\s*\(\s*PURGE\s*\)\s*;?\s*$""".r
-  private val bloomRe: Regex =
-    """(?is)^\s*COMPUTE\s+BLOOM\s+(?:ON\s+)?(\w+)\s*\(\s*(\w+)\s*\)\s*;?\s*$""".r
-  private val renameColRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)\s*;?\s*$""".r
-  private val dropColRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+DROP\s+COLUMN\s+(\w+)\s*;?\s*$""".r
-  private val addColRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+ADD\s+COLUMNS?\s+(.+?)\s*;?\s*$""".r
-  private val addConstraintRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+ADD\s+CONSTRAINT\s+(\w+)\s+CHECK\s*\((.+)\)\s*;?\s*$""".r
-  private val addPkRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+ADD\s+CONSTRAINT\s+(\w+)\s+PRIMARY\s+KEY\s*\(([^)]+)\)(?:\s+NOT\s+ENFORCED)?\s*;?\s*$""".r
-  private val addFkRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+ADD\s+CONSTRAINT\s+(\w+)\s+FOREIGN\s+KEY\s*\(([^)]+)\)\s+REFERENCES\s+(\w+)\s*\(([^)]+)\)(?:\s+NOT\s+ENFORCED)?\s*;?\s*$""".r
-  private val fsckRe: Regex =
-    """(?is)^\s*FSCK\s+REPAIR\s+TABLE\s+(\w+)(\s+DRY\s+RUN)?\s*;?\s*$""".r
-  private val dropConstraintRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+DROP\s+CONSTRAINT\s+(\w+)\s*;?\s*$""".r
-  private val setPropsRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+SET\s+TBLPROPERTIES\s*\((.+)\)\s*;?\s*$""".r
-  private val clusterByRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+CLUSTER\s+BY\s*(?:\(\s*([\w,\s]+?)\s*\)|NONE)\s*;?\s*$""".r
-  private val setDefaultRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+ALTER\s+COLUMN\s+(\w+)\s+SET\s+DEFAULT\s+(.+?)\s*;?\s*$""".r
-  private val dropDefaultRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+ALTER\s+COLUMN\s+(\w+)\s+DROP\s+DEFAULT\s*;?\s*$""".r
-  private val alterTypeRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+ALTER\s+COLUMN\s+(\w+)\s+TYPE\s+(\w+)\s*;?\s*$""".r
-  private val setNotNullRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+ALTER\s+COLUMN\s+(\w+)\s+SET\s+NOT\s+NULL\s*;?\s*$""".r
-  private val dropNotNullRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+ALTER\s+COLUMN\s+(\w+)\s+DROP\s+NOT\s+NULL\s*;?\s*$""".r
-  private val propPairRe: Regex =
-    """'([^']+)'\s*=\s*'([^']*)'""".r
-  private val ctasRe: Regex =
-    """(?is)^\s*CREATE\s+TABLE\s+(\w+)(?:\s+PARTITIONED\s+BY\s*\(([\w,\s]+)\))?\s+LOCATION\s+'([^']+)'\s+AS\s+(SELECT\s+.+?)\s*;?\s*$""".r
-  private val createOrReplaceRe: Regex =
-    """(?is)^\s*CREATE\s+OR\s+REPLACE\s+TABLE\s+(\w+)(?:\s+LOCATION\s+'([^']+)')?\s+AS\s+(SELECT\s+.+?)\s*;?\s*$""".r
-  private val truncateRe: Regex =
-    """(?is)^\s*TRUNCATE\s+TABLE\s+(\w+)\s*;?\s*$""".r
-  private val generateRe: Regex =
-    """(?is)^\s*GENERATE\s+symlink_format_manifest\s+FOR\s+TABLE\s+(\w+)(\s+MATERIALIZE)?\s*;?\s*$""".r
-  private val exportIcebergRe: Regex =
-    """(?is)^\s*EXPORT\s+ICEBERG\s+METADATA\s+FOR\s+TABLE\s+(\w+)\s*;?\s*$""".r
-  private val createTagRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+CREATE\s+TAG\s+([\w.-]+)(?:\s+AS\s+OF\s+VERSION\s+(\d+))?\s*;?\s*$""".r
-  private val dropTagRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+DROP\s+TAG\s+([\w.-]+)\s*;?\s*$""".r
-  private val showTagsRe: Regex =
-    """(?is)^\s*SHOW\s+TAGS\s+(?:IN\s+|FROM\s+|ON\s+)?(\w+)\s*;?\s*$""".r
-  private val restoreTagRe: Regex =
-    """(?is)^\s*RESTORE\s+(?:TABLE\s+)?(\w+)\s+TO\s+TAG\s+([\w.-]+)\s*;?\s*$""".r
-  private val tagAsOfRe: Regex =
-    """(?is)\b(\w+)\s+VERSION\s+AS\s+OF\s+'([\w.-]+)'""".r
-  private val setRowFilterRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+SET\s+ROW\s+FILTER\s+'(.+)'\s*;?\s*$""".r
-  private val dropRowFilterRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+DROP\s+ROW\s+FILTER\s*;?\s*$""".r
-  private val setMaskRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+SET\s+MASK\s+(\w+)\s+AS\s+'(.+)'\s*;?\s*$""".r
-  private val dropMaskRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+DROP\s+MASK\s+(\w+)\s*;?\s*$""".r
-  private val createBranchRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+CREATE\s+BRANCH\s+([\w.-]+)(?:\s+AS\s+OF\s+VERSION\s+(\d+))?\s*;?\s*$""".r
-  private val createBranchTagRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+CREATE\s+BRANCH\s+([\w.-]+)\s+AS\s+OF\s+TAG\s+'([\w.-]+)'\s*;?\s*$""".r
-  private val dropBranchRe: Regex =
-    """(?is)^\s*ALTER\s+TABLE\s+(\w+)\s+DROP\s+BRANCH\s+([\w.-]+)\s*;?\s*$""".r
-  private val showBranchesRe: Regex =
-    """(?is)^\s*SHOW\s+BRANCHES\s+(?:IN\s+|FROM\s+|ON\s+)?(\w+)\s*;?\s*$""".r
-  private val mergeBranchRe: Regex =
-    """(?is)^\s*MERGE\s+BRANCH\s+([\w.-]+)\s+INTO\s+(\w+)\s*;?\s*$""".r
-  private val rebaseBranchRe: Regex =
-    """(?is)^\s*REBASE\s+BRANCH\s+([\w.-]+)\s+(?:ONTO|ON|IN)\s+(\w+)\s*;?\s*$""".r
-  private val exportDeltaRe: Regex =
-    """(?is)^\s*EXPORT\s+DELTA\s+LOG\s+FOR\s+TABLE\s+(\w+)\s*;?\s*$""".r
-  // zero-copy attach of foreign tables (L111/L117): registers the
-  // new GraftLake table under the given name in one statement
-  private val attachIcebergRe: Regex =
-    """(?is)^\s*ATTACH\s+ICEBERG\s+'([^']+)'\s+AS\s+TABLE\s+(\w+)\s+LOCATION\s+'([^']+)'(?:\s+SNAPSHOT\s+(\d+))?(?:\s+REF\s+'([\w.-]+)')?\s*;?\s*$""".r
-  private val attachDeltaRe: Regex =
-    """(?is)^\s*ATTACH\s+DELTA\s+'([^']+)'\s+AS\s+TABLE\s+(\w+)\s+LOCATION\s+'([^']+)'(?:\s+VERSION\s+(\d+))?\s*;?\s*$""".r
-  private val syncAttachRe: Regex =
-    """(?is)^\s*SYNC\s+ATTACHED\s+TABLE\s+(\w+)\s*;?\s*$""".r
-  private val dropTableRe: Regex =
-    """(?is)^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(\w+)\s*;?\s*$""".r
-  private val showColumnsRe: Regex =
-    """(?is)^\s*SHOW\s+COLUMNS\s+(?:IN|FROM)\s+(\w+)\s*;?\s*$""".r
-  private val createMvRe: Regex =
-    """(?is)^\s*CREATE\s+MATERIALIZED\s+VIEW\s+(\w+)\s+LOCATION\s+'([^']+)'\s+AS\s+SELECT\s+(.+?)\s+FROM\s+(\w+)\s+GROUP\s+BY\s+([\w,\s]+?)\s*;?\s*$""".r
-  private val createMvJoinRe: Regex =
-    """(?is)^\s*CREATE\s+MATERIALIZED\s+VIEW\s+(\w+)\s+LOCATION\s+'([^']+)'\s+AS\s+SELECT\s+(.+?)\s+FROM\s+(\w+)\s+JOIN\s+(\w+)\s+USING\s*\(([\w,\s]+)\)\s+GROUP\s+BY\s+([\w,\s]+?)\s*;?\s*$""".r
-  // LEFT/RIGHT/FULL OUTER join views route to the key-grain state
-  // maintainer ([[MaterializedOuterJoin]]); an outer form the USING
-  // shape doesn't match refuses LOUDLY — without the catch-all it
-  // would miss every MV regex and silently fall through to the
-  // plain-query path, never creating a view at all
-  private val createMvOuterRe: Regex =
-    """(?is)^\s*CREATE\s+MATERIALIZED\s+VIEW\s+(\w+)\s+LOCATION\s+'([^']+)'\s+AS\s+SELECT\s+(.+?)\s+FROM\s+(\w+)\s+(LEFT|RIGHT|FULL)\s+(?:OUTER\s+)?JOIN\s+(\w+)\s+USING\s*\(([\w,\s]+)\)\s+GROUP\s+BY\s+([\w,\s]+?)\s*;?\s*$""".r
-  private val createMvOuterJoinRe: Regex =
-    """(?is)^\s*CREATE\s+MATERIALIZED\s+VIEW\s+\w+\s+LOCATION\s+'[^']+'\s+AS\s+SELECT\s+.+?\s+(LEFT|RIGHT|FULL)(?:\s+OUTER)?\s+JOIN\s+.+$""".r
-  private val refreshMvRe: Regex =
-    """(?is)^\s*REFRESH\s+MATERIALIZED\s+VIEW\s+(\w+)\s*;?\s*$""".r
-  private val mvSumItemRe: Regex =
-    """(?i)^SUM\s*\(\s*(\w+)\s*\)(?:\s+AS\s+\w+)?$""".r
-  private val mvAvgItemRe: Regex =
-    """(?i)^AVG\s*\(\s*(\w+)\s*\)(?:\s+AS\s+\w+)?$""".r
-  private val mvMinItemRe: Regex =
-    """(?i)^MIN\s*\(\s*(\w+)\s*\)(?:\s+AS\s+\w+)?$""".r
-  private val mvMaxItemRe: Regex =
-    """(?i)^MAX\s*\(\s*(\w+)\s*\)(?:\s+AS\s+\w+)?$""".r
-  private val mvCountItemRe: Regex =
-    """(?i)^COUNT\s*\(\s*\*\s*\)(?:\s+AS\s+\w+)?$""".r
-  private val mvCountDistinctItemRe: Regex =
-    """(?i)^COUNT\s*\(\s*DISTINCT\s+(\w+)\s*\)(?:\s+AS\s+\w+)?$""".r
-  private val insertRe: Regex =
-    """(?is)^\s*INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?(\w+)\s+((?:SELECT|VALUES|TABLE)\s*.+?)\s*;?\s*$""".r
-  private val insertColsRe: Regex =
-    """(?is)^\s*INSERT\s+INTO\s+(?:TABLE\s+)?(\w+)\s*\(([\w,\s]+)\)\s*((?:SELECT|VALUES|TABLE)\s*.+?)\s*;?\s*$""".r
-  private val deleteInRe: Regex =
-    """(?is)^\s*DELETE\s+FROM\s+(\w+)\s+WHERE\s+(\w+)\s+IN\s*\(\s*(SELECT\s+.+)\)\s*;?\s*$""".r
-  private val updateInRe: Regex =
-    """(?is)^\s*UPDATE\s+(\w+)\s+SET\s+(.+?)\s+WHERE\s+(\w+)\s+IN\s*\(\s*(SELECT\s+.+)\)\s*;?\s*$""".r
-  private val createSchemaRe: Regex =
-    """(?is)^\s*CREATE\s+TABLE\s+(\w+)\s*\((.+?)\)\s*(?:USING\s+graftlake\s+)?(?:PARTITIONED\s+BY\s*\(([\w,\s]+)\)\s*)?LOCATION\s+'([^']+)'\s*;?\s*$""".r
-  private val showPropsRe: Regex =
-    """(?is)^\s*SHOW\s+TBLPROPERTIES\s+(\w+)\s*;?\s*$""".r
-  private val showPartitionsRe: Regex =
-    """(?is)^\s*SHOW\s+PARTITIONS\s+(\w+)\s*;?\s*$""".r
-  private val restoreRe: Regex =
-    """(?is)^\s*RESTORE\s+(?:TABLE\s+)?(\w+)\s+TO\s+VERSION\s+AS\s+OF\s+(\d+)\s*;?\s*$""".r
-  private val restoreTsRe: Regex =
-    """(?is)^\s*RESTORE\s+(?:TABLE\s+)?(\w+)\s+TO\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'\s*;?\s*$""".r
-  private val copyIntoRe: Regex =
-    """(?is)^\s*COPY\s+INTO\s+(\w+)\s+FROM\s+'([^']+)'\s*;?\s*$""".r
-  private val tableChangesRe: Regex =
-    """(?is)^\s*TABLE\s+CHANGES\s+(\w+)\s+BETWEEN\s+(\d+)\s+AND\s+(\d+)\s*;?\s*$""".r
-  private val tableChangesTsRe: Regex =
-    """(?is)^\s*TABLE\s+CHANGES\s+(\w+)\s+BETWEEN\s+TIMESTAMP\s+'([^']+)'\s+AND\s+TIMESTAMP\s+'([^']+)'\s*;?\s*$""".r
-  private val mergeRe: Regex =
-    """(?is)^\s*MERGE\s+(WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO\s+(\w+)(?:\s+(?:AS\s+)?(\w+))?\s+USING\s+(\w+)(?:\s+(?:AS\s+)?(\w+))?\s+ON\s+(.+?)\s+(WHEN\s+.+?)\s*;?\s*$""".r
-  private val mergeOnRe: Regex =
-    """(?is)^\s*(?:(\w+)\.)?(\w+)\s*=\s*(?:(\w+)\.)?(\w+)\s*$""".r
-  private val mergeClauseRe: Regex =
-    """(?is)WHEN\s+(NOT\s+MATCHED\s+BY\s+SOURCE|NOT\s+MATCHED|MATCHED)(?:\s+AND\s+(.+?))?\s+THEN\s+(UPDATE\s+SET\s+.+?|DELETE|INSERT\s+\*|INSERT\s*\([^)]+\)\s*VALUES\s*\(.+?\))\s*(?=WHEN\s|$)""".r
-  private val mergeInsertColsRe: Regex =
-    """(?is)^INSERT\s*\(([^)]+)\)\s*VALUES\s*\((.+)\)$""".r
-  private val versionAsOfRe: Regex =
-    """(?is)\b(\w+)\s+VERSION\s+AS\s+OF\s+(\d+)""".r
-  private val timestampAsOfRe: Regex =
-    """(?is)\b(\w+)\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'""".r
+  /** The one name lookup: the local registry, then the catalogs. */
+  private def lookup(name: String): Option[GraftTable] =
+    local(name).orElse(GraftCatalog.resolve(spark, name)
+      .map(GraftTable.forPath(spark, _)))
+
+  /** A single-part name (backticks stripped) in the local registry. */
+  private def local(name: String): Option[GraftTable] =
+    GraftCatalog.splitName(name) match {
+      case Seq(one) => tables.get(one)
+      case _ => None
+    }
+
+  // a branch registers as `<table>_<branch>`, non-word chars mapped to _
+  private def branchAlias(name: String, br: String): String =
+    (GraftCatalog.splitName(name).mkString(".") + "_" + br)
+      .replaceAll("[^A-Za-z0-9_]", "_")
 
   private def parseTsMillis(s: String): Long = Snapshot.parseTsMillis(s)
 
@@ -260,64 +106,12 @@ final class GraftSql(spark: SparkSession) {
     result
   }
 
-  /** Backtick-quoted identifiers: the grammar's `(\w+)` captures
-    * can't hold a name like `` `my-sales` ``, so quoted REGISTERED
-    * names normalize to generated word-safe aliases (re-pointed at
-    * the same table object) before matching. Quoted names that are
-    * NOT registered tables/views (column names, new CREATE targets)
-    * pass through untouched — `expr` and the spark.sql fallthrough
-    * both understand backticks natively. String literals are masked
-    * first so a '`' inside '...' never triggers a rewrite.
-    */
-  private def normalizeQuoted(stmt: String): String =
-    if (!stmt.contains('`')) stmt
-    else {
-      val masked = {
-        val b = stmt.toCharArray
-        var inStr = false
-        var i = 0
-        while (i < b.length) {
-          if (b(i) == '\'') inStr = !inStr else if (inStr) b(i) = '_'
-          i += 1
-        }
-        new String(b)
-      }
-      val sb = new StringBuilder
-      var last = 0
-      for (m <- "`([^`]+)`".r.findAllMatchIn(masked)) {
-        val inner = stmt.substring(m.start + 1, m.end - 1)
-        val replacement =
-          if (tables.contains(inner) || matViews.contains(inner) ||
-              distinctViews.contains(inner) || outerViews.contains(inner)) {
-            val alias = "graft_bq_" +
-              java.lang.Integer.toHexString(inner.hashCode).replace('-', '_')
-            tables.get(inner).foreach(tables(alias) = _)
-            // remember which table the alias stands for: txnPrepare
-            // must shadow the SOURCE when a transaction touches the
-            // alias (the quoted original no longer appears in the
-            // statement text), and COMMIT/ROLLBACK must re-point the
-            // alias when the source binding changes — without this a
-            // backticked DML inside BEGIN writes straight to the base
-            if (tables.contains(inner)) bqAliases(alias) = inner
-            matViews.get(inner).foreach(matViews(alias) = _)
-            distinctViews.get(inner).foreach(distinctViews(alias) = _)
-            outerViews.get(inner).foreach(outerViews(alias) = _)
-            alias
-          } else stmt.substring(m.start, m.end)
-        sb.append(stmt.substring(last, m.start)).append(replacement)
-        last = m.end
-      }
-      sb.append(stmt.substring(last)).toString
-    }
-
   /** Expose every registered table as a temp view for the spark.sql
-    * fallthrough. Names the view grammar can't hold (hyphens etc.)
-    * are skipped — a statement reaches them through the backtick
-    * alias normalizeQuoted registered, which IS word-safe.
+    * fallthrough, quoted so names like `my-sales` hold too.
     */
   private def exposeViews(): Unit =
     tables.foreach { case (n, tt) =>
-      if (n.matches("""\w+""")) tt.toDF.createOrReplaceTempView(n) }
+      tt.toDF.createOrReplaceTempView("`" + n.replace("`", "``") + "`") }
 
   // ----------------------------------- cross-statement transactions
 
@@ -336,33 +130,6 @@ final class GraftSql(spark: SparkSession) {
   // throw [[GraftSql.SimulatedCrash]], which the COMMIT handler
   // re-throws WITHOUT any cleanup (a real crash runs none).
   private[lake] var txnCrashHook: String => Unit = _ => ()
-  // backtick alias -> the registered table it stands for (see
-  // normalizeQuoted); consulted so transactions shadow THROUGH the
-  // alias, and bindings re-point after COMMIT/ROLLBACK swaps
-  private val bqAliases = scala.collection.mutable.HashMap[String, String]()
-
-  /** Re-bind every backtick alias to its source's CURRENT table
-    * object — shadow swaps (txnPrepare), rollback restores, and
-    * commit refreshes all change the source binding underneath the
-    * alias, and a stale alias would read (or worse, write) a deleted
-    * shadow directory.
-    */
-  private def repointAliases(): Unit =
-    bqAliases.foreach { case (a, s) => tables.get(s).foreach(tables(a) = _) }
-
-  private val beginRe: Regex =
-    """(?is)^\s*BEGIN(?:\s+TRANSACTION)?\s*;?\s*$""".r
-  private val commitTxnRe: Regex =
-    """(?is)^\s*COMMIT(?:\s+TRANSACTION)?\s*;?\s*$""".r
-  private val rollbackTxnRe: Regex =
-    """(?is)^\s*ROLLBACK(?:\s+TRANSACTION)?\s*;?\s*$""".r
-  // statement classes whose effects cannot squash into one commit
-  // (maintenance/layout/lifecycle verbs) refuse inside a transaction
-  private val txnForbiddenRe: Regex =
-    ("""(?is)^\s*(DROP\s+TABLE|VACUUM|RESTORE|OPTIMIZE|REORG|FSCK|""" +
-      """GENERATE|EXPORT|ATTACH|SYNC\s+ATTACHED|COMPUTE\s+BLOOM|CREATE\s+(?:OR\s+REPLACE\s+)?MATERIALIZED|""" +
-      """REFRESH\s+MATERIALIZED|CREATE\s+TABLE\s+\w+\s+(?:SHALLOW|DEEP)\s+CLONE)\b.*""").r
-
   private def rollbackTxn(st: TxnState): Unit = {
     st.shadows.foreach { case (name, e) =>
       tables(name) = e.base
@@ -381,7 +148,6 @@ final class GraftSql(spark: SparkSession) {
       GraftTable.deleteStagedDir(c.tmpLoc)
     }
     txn = None
-    repointAliases() // backtick aliases must not outlive the shadow
     exposeViews() // re-publish base snapshots over any shadow views
   }
 
@@ -416,32 +182,21 @@ final class GraftSql(spark: SparkSession) {
         stmt.replace(s"'$location'", s"'$tmp'")
       case _ => stmt
     }
-    // first touch of a registered plain table -> swap in a shadow.
-    // A graft_bq_ alias (normalizeQuoted's rewrite of a backticked
-    // registered name) resolves to its SOURCE first: the quoted
-    // original no longer appears in the statement text, so without
-    // the resolve a backticked DML inside BEGIN would write straight
-    // to the base and make ROLLBACK a silent no-op for that table.
+    // first touch of a registered plain table -> swap in a shadow;
+    // a name counts as touched bare or backtick-quoted
     val mvNames = matViews.keySet ++ distinctViews.keySet ++ outerViews.keySet
     tables.keys.toSeq.foreach { name =>
-      val touched = ("(?i)(?<![\\w.`])" +
-        java.util.regex.Pattern.quote(name) + "(?![\\w.`])").r
+      val q = java.util.regex.Pattern.quote(name)
+      val touched = s"(?i)(?<![\\w.`])$q(?![\\w.`])|`$q`".r
         .findFirstIn(masked).isDefined
-      if (touched) {
-        val src = bqAliases.getOrElse(name, name)
-        if (!st.shadows.contains(src) && !st.creates.contains(src) &&
-            !mvNames.contains(src) && !src.startsWith("graft_bq_") &&
-            tables.contains(src)) {
-          val base = tables(src)
-          val tmpDir = s"${base.path}.txn-${java.util.UUID.randomUUID()}"
-          val shadow = GraftTable.shallowClone(spark, base.path, tmpDir)
-          st.shadows(src) = ShadowEntry(base, base.version, shadow,
-            shadow.version)
-          tables(src) = shadow
-        }
-        // normalizeQuoted bound the alias BEFORE the shadow swap —
-        // re-point it so the statement's reads/writes hit the shadow
-        if (name != src) tables.get(src).foreach(tables(name) = _)
+      if (touched && !st.shadows.contains(name) &&
+          !st.creates.contains(name) && !mvNames.contains(name)) {
+        val base = tables(name)
+        val tmpDir = s"${base.path}.txn-${java.util.UUID.randomUUID()}"
+        val shadow = GraftTable.shallowClone(spark, base.path, tmpDir)
+        st.shadows(name) = ShadowEntry(base, base.version, shadow,
+          shadow.version)
+        tables(name) = shadow
       }
     }
     redirected
@@ -632,7 +387,6 @@ final class GraftSql(spark: SparkSession) {
             rollbackTxn(st); throw e
         }
         txn = None
-        repointAliases() // backtick aliases must not outlive the shadow
         exposeViews() // refresh any shadow-bound temp views to the base
         Some(Seq(("status", "committed")).toDF("metric", "value"))
       case rollbackTxnRe() =>
@@ -646,13 +400,12 @@ final class GraftSql(spark: SparkSession) {
 
   def sql(statement0: String): DataFrame = {
     import spark.implicits._
-    val normalized = normalizeQuoted(statement0)
-    txnControl(normalized) match {
+    txnControl(statement0) match {
       case Some(df) => return df
       case None => ()
     }
     val statement =
-      if (txn.isDefined) txnPrepare(normalized) else normalized
+      if (txn.isDefined) txnPrepare(statement0) else statement0
     statement match {
       case optimizeRe(name, full, vorder1, zcols, vorder2, whereCond) =>
         val t = table(name)
@@ -675,15 +428,10 @@ final class GraftSql(spark: SparkSession) {
             else m
           }
         metrics.toSeq.sorted.toDF("metric", "value")
-      case vacuumLiteRe(name, hours, dry) =>
-        table(name).vacuumLite(
-          Option(hours).map(_.toDouble).getOrElse(7 * 24.0),
-          dryRun = dry != null)
-      case vacuumDryRe(name) =>
-        table(name).vacuum(retentionHours = 7 * 24.0, dryRun = true)
-      case vacuumRetainRe(name, hours) =>
+      case vacuumRe(name, lite, hours, dry) =>
         val h = Option(hours).map(_.toDouble).getOrElse(7 * 24.0)
-        table(name).vacuum(h, dryRun = false)
+        if (lite != null) table(name).vacuumLite(h, dryRun = dry != null)
+        else table(name).vacuum(h, dryRun = dry != null)
       case historyRe(name, lim) => // LIMIT paginates to the newest N
         table(name).history(Option(lim).map(_.toInt).getOrElse(Int.MaxValue))
       case detailRe(name) => table(name).detailDF
@@ -794,7 +542,7 @@ final class GraftSql(spark: SparkSession) {
         // fork at the version a TAG pins — "branch from the release"
         val t = table(name)
         val bt = t.createBranch(br, Some(t.tagVersion(tag)))
-        val alias = s"${name}_${br.replaceAll("[^A-Za-z0-9_]", "_")}"
+        val alias = branchAlias(name, br)
         tables(alias) = bt
         Seq(("branch", br), ("fromTag", tag),
           ("registered_as", alias), ("path", bt.path)).toDF("metric", "value")
@@ -803,13 +551,13 @@ final class GraftSql(spark: SparkSession) {
         // the branch auto-registers as `<table>_<branch>` (non-word
         // chars mapped to _) so plain SQL reads and writes it like any
         // table; the handle is a full GraftTable either way
-        val alias = s"${name}_${br.replaceAll("[^A-Za-z0-9_]", "_")}"
+        val alias = branchAlias(name, br)
         tables(alias) = bt
         Seq(("branch", br), ("registered_as", alias), ("path", bt.path))
           .toDF("metric", "value")
       case dropBranchRe(name, br) =>
         table(name).dropBranch(br)
-        tables.remove(s"${name}_${br.replaceAll("[^A-Za-z0-9_]", "_")}")
+        tables.remove(branchAlias(name, br))
         Seq(("dropped", br)).toDF("metric", "value")
       case showBranchesRe(name) =>
         val t = table(name)
@@ -969,7 +717,8 @@ final class GraftSql(spark: SparkSession) {
         graft.plans.MvCatalog.register(mv)
         Seq(("location", location), ("sourceVersion",
           table(srcName).version.toString)).toDF("metric", "value")
-      case refreshMvRe(name) =>
+      case refreshMvRe(name0) =>
+        val name = GraftCatalog.splitName(name0).mkString(".")
         val v = matViews.get(name).map(_.refresh())
           .orElse(distinctViews.get(name).map(_.refresh()))
           .orElse(outerViews.get(name).map(_.refresh()))
@@ -1087,17 +836,15 @@ final class GraftSql(spark: SparkSession) {
         // no WHERE = whole-table delete (Delta parity)
         val c = Option(cond).map(expr).getOrElse(lit(true))
         table(name).delete(c).toSeq.sorted.toDF("metric", "value")
-      case analyzeRe(name, forCols) =>
-        if (forCols == null) table(name).computeStats()
-        else {
-          // FOR COLUMNS: base stats (rows/NDV/min/max) PLUS the
-          // equi-height histograms the CBO's skew-aware selectivity
-          // reads — one ANALYZE statement, both artifacts
-          val t = table(name)
-          t.computeStats()
-          t.computeHistogram(forCols.split(",").map(_.trim).toSeq
-            .filter(_.nonEmpty))
-        }
+      case analyzeRe(name) => table(name).computeStats()
+      case analyzeColumnsRe(name, forCols) =>
+        // FOR COLUMNS: base stats (rows/NDV/min/max) PLUS the
+        // equi-height histograms the CBO's skew-aware selectivity
+        // reads — one ANALYZE statement, both artifacts
+        val t = table(name)
+        t.computeStats()
+        t.computeHistogram(forCols.split(",").map(_.trim).toSeq
+          .filter(_.nonEmpty))
       case updateRe(name, sets, cond) =>
         table(name).update(expr(cond), setAssignments(sets))
           .toSeq.sorted.toDF("metric", "value")
@@ -1245,70 +992,53 @@ final class GraftSql(spark: SparkSession) {
         val v = table(name).setTableProperties(props)
         (props.toSeq.sorted :+ ("version" -> v.toString))
           .toDF("metric", "value")
-      case restoreRe(name, v) =>
-        val nv = table(name).restore(v.toLong)
-        Seq(("restoredToVersion", v), ("newVersion", nv.toString))
-          .toDF("metric", "value")
-      case restoreTsRe(name, ts) =>
-        val nv = table(name).restoreToTimestamp(parseTsMillis(ts))
-        Seq(("restoredToTimestamp", ts), ("newVersion", nv.toString))
-          .toDF("metric", "value")
+      case restoreRe(name, v, ts) =>
+        val (to, nv) =
+          if (v != null) (("restoredToVersion", v), table(name).restore(v.toLong))
+          else (("restoredToTimestamp", ts),
+            table(name).restoreToTimestamp(parseTsMillis(ts)))
+        Seq(to, ("newVersion", nv.toString)).toDF("metric", "value")
       case copyIntoRe(name, src) =>
         table(name).copyInto(src).toSeq.sorted.toDF("metric", "value")
-      case tableChangesRe(name, from, to) =>
+      case tableChangesRe(name, from, to, fromTs, toTs) =>
+        val t = table(name)
         // BETWEEN is inclusive of both bounds; changeFeed's range is
         // (from, to]
-        table(name).changeFeed(from.toLong - 1, to.toLong)
-      case tableChangesTsRe(name, fromTs, toTs) =>
-        // timestamp bounds (Delta CDF parity): start = first commit
-        // AT-OR-AFTER the lower bound (the streaming startingTimestamp
-        // contract — latest-at-or-before would replay earlier changes),
-        // end = last commit at-or-before the upper; an empty window
-        // clamps to an empty feed instead of erroring
-        val log = table(name).log
-        val fromV = Snapshot.versionAtOrAfterTimestamp(log, parseTsMillis(fromTs))
-        val toV = Snapshot.versionAtTimestamp(log, parseTsMillis(toTs))
-        table(name).changeFeed(math.min(fromV - 1, toV), toV)
-      case stmt if mergeRe.findFirstMatchIn(maskLiterals(stmt)).isDefined =>
-        // match group POSITIONS against the literal-masked text (a
-        // string literal containing " WHEN " must not end the ON
-        // clause early), then slice the ORIGINAL text so literal
-        // contents survive into the parsed clauses
-        val m = mergeRe.findFirstMatchIn(maskLiterals(stmt)).get
-        def slice(g: Int): String =
-          if (m.start(g) < 0) null else stmt.substring(m.start(g), m.end(g))
-        executeSqlMerge(slice(2), Option(slice(3)), slice(4), Option(slice(5)),
-          slice(6), slice(7), evolve = slice(1) != null)
+        if (from != null) t.changeFeed(from.toLong - 1, to.toLong)
+        else {
+          // timestamp bounds (Delta CDF parity): start = first commit
+          // AT-OR-AFTER the lower bound (the streaming startingTimestamp
+          // contract — latest-at-or-before would replay earlier
+          // changes), end = last commit at-or-before the upper; an
+          // empty window clamps to an empty feed instead of erroring
+          val fromV = Snapshot.versionAtOrAfterTimestamp(t.log, parseTsMillis(fromTs))
+          val toV = Snapshot.versionAtTimestamp(t.log, parseTsMillis(toTs))
+          t.changeFeed(math.min(fromV - 1, toV), toV)
+        }
+      case mergeRe(tName, tAlias, sName, sAlias, on, clauses) =>
+        executeSqlMerge(tName, Option(tAlias), sName, Option(sAlias), on, clauses)
+      case mergeEvolveRe(tName, tAlias, sName, sAlias, on, clauses) =>
+        executeSqlMerge(tName, Option(tAlias), sName, Option(sAlias), on, clauses,
+          evolve = true)
       case other =>
         // register snapshots (incl. any VERSION AS OF rewrites) and
         // delegate to Spark SQL
         var rewritten = other
-        tagAsOfRe.findAllMatchIn(other).foreach { m =>
-          val (name, tag) = (m.group(1), m.group(2))
-          if (tables.contains(name)) {
-            val v = table(name).tagVersion(tag)
-            val viewName = s"${name}__tag_${tag.replaceAll("[^A-Za-z0-9_]", "_")}"
-            table(name).toDFAt(v).createOrReplaceTempView(viewName)
+        // a registered name read AS OF a tag/version/time reads a view
+        // of that snapshot, named word-safe after the table
+        def asOf(re: Regex, kind: String)(view: (GraftTable, String) => DataFrame)
+            : Unit = re.findAllMatchIn(other).foreach { m =>
+          local(m.group(1)).foreach { t =>
+            val viewName = (GraftCatalog.splitName(m.group(1)).head +
+              s"__${kind}_${m.group(2)}").replaceAll("\\W", "_")
+            view(t, m.group(2)).createOrReplaceTempView(viewName)
             rewritten = rewritten.replace(m.matched, viewName)
           }
         }
-        versionAsOfRe.findAllMatchIn(other).foreach { m =>
-          val (name, v) = (m.group(1), m.group(2).toLong)
-          if (tables.contains(name)) {
-            val viewName = s"${name}__v$v"
-            table(name).toDFAt(v).createOrReplaceTempView(viewName)
-            rewritten = rewritten.replace(m.matched, viewName)
-          }
-        }
-        timestampAsOfRe.findAllMatchIn(other).foreach { m =>
-          val name = m.group(1)
-          if (tables.contains(name)) {
-            val ms = parseTsMillis(m.group(2))
-            val viewName = s"${name}__ts$ms"
-            table(name).toDFAsOfTimestamp(ms).createOrReplaceTempView(viewName)
-            rewritten = rewritten.replace(m.matched, viewName)
-          }
-        }
+        asOf(tagAsOfRe, "tag")((t, tag) => t.toDFAt(t.tagVersion(tag)))
+        asOf(versionAsOfRe, "v")((t, v) => t.toDFAt(v.toLong))
+        asOf(timestampAsOfRe, "ts")((t, ts) =>
+          t.toDFAsOfTimestamp(parseTsMillis(ts)))
         exposeViews()
         spark.sql(rewritten)
     }
@@ -1374,9 +1104,10 @@ final class GraftSql(spark: SparkSession) {
     require(keys.nonEmpty,
       s"MERGE ON needs at least one same-column key equality, got: $onClause")
     val source =
-      if (tables.contains(sName)) table(sName).toDF else spark.table(sName)
-    val tgtRefs = (tAlias.toSeq :+ tName).map(a => s"(?i)\\b$a\\.")
-    val srcRefs = (sAlias.toSeq :+ sName).map(a => s"(?i)\\b$a\\.(\\w+)")
+      lookup(sName).map(_.toDF).getOrElse(spark.table(sName))
+    def ref(a: String) = "(?i)(?<!\\w)" + java.util.regex.Pattern.quote(a) + "\\."
+    val tgtRefs = (tAlias.toSeq :+ tName).map(ref)
+    val srcRefs = (sAlias.toSeq :+ sName).map(ref(_) + "(\\w+)")
     def rewrite(e: String): String = {
       val s1 = srcRefs.foldLeft(e)((acc, r) => acc.replaceAll(r, "src_$1"))
       tgtRefs.foldLeft(s1)((acc, r) => acc.replaceAll(r, ""))
@@ -1474,23 +1205,6 @@ final class GraftSql(spark: SparkSession) {
     b.execute().toSeq.sorted.toDF("metric", "value")
   }
 
-  /** Same-length copy with every character inside a single-quoted SQL
-    * string literal replaced by '_' ('' escapes stay masked): regexes
-    * and keyword scanners run on the mask, content is lifted from the
-    * original by position.
-    */
-  private def maskLiterals(s: String): String = {
-    val b = s.toCharArray
-    var inStr = false
-    var i = 0
-    while (i < b.length) {
-      if (b(i) == '\'') inStr = !inStr
-      else if (inStr) b(i) = '_'
-      i += 1
-    }
-    new String(b)
-  }
-
   /** Split on top-level commas only: parens nest (function calls) and
     * single-quoted SQL strings may carry commas or parens — both are
     * opaque to the splitter ('' is the escaped quote inside a string).
@@ -1572,6 +1286,311 @@ final class GraftSql(spark: SparkSession) {
 }
 
 object GraftSql {
+
+  /** How the session parser ([[graft.sources.GraftSqlParser]]) treats a
+    * statement shape written against a catalog name.
+    */
+  sealed trait Route
+  /** GraftSql only: on catalog names Spark's own grammar serves it. */
+  case object Never extends Route
+  /** A graft-only verb Spark's parser would reject: always intercepted,
+    * answering with `out`.
+    */
+  final case class Always(out: StructType) extends Route
+  /** A statement Spark also parses: intercepted only when the names in
+    * groups `names` resolve to GraftLake tables, answering with `out`.
+    */
+  final case class IfGraft(out: StructType, names: Seq[Int] = Seq(1))
+    extends Route
+  /** Intercepted when the name in group 1 resolves to a GraftLake table
+    * meeting `when`; the parser returns the statement's own lazy plan,
+    * so its columns follow the table and data-sized output stays
+    * distributed.
+    */
+  final case class Lazy(when: GraftTable => Boolean = _ => true)
+    extends Route
+
+  /** One statement of the grammar: the whole-statement pattern around
+    * `body`, and its catalog route. A `masked` shape matches the
+    * literal-masked text and lifts its groups from the original, so a
+    * keyword inside a string literal never ends a clause.
+    */
+  final class Shape private[GraftSql] (val route: Route, body: String,
+      masked: Boolean) {
+    private val re = ("(?is)^\\s*" + body + "\\s*;?\\s*$").r
+    def unapplySeq(stmt: String): Option[List[String]] =
+      if (!masked) re.unapplySeq(stmt)
+      else re.findFirstMatchIn(maskLiterals(stmt)).map(m =>
+        List.tabulate(m.groupCount)(i =>
+          if (m.start(i + 1) < 0) null
+          else stmt.substring(m.start(i + 1), m.end(i + 1))))
+  }
+
+  // the shapes whose route is not Never, in declaration order
+  private val routed = scala.collection.mutable.ArrayBuffer[Shape]()
+  private def shape(body: String, route: Route = Never,
+      masked: Boolean = false): Shape = {
+    val s = new Shape(route, body, masked)
+    if (route != Never) routed += s
+    s
+  }
+
+  /** The statements the session parser intercepts on catalog names. */
+  private[graft] def catalogShapes: Seq[Shape] = routed.toSeq
+
+  /** The route `stmt` takes on catalog names: the first routed shape
+    * that matches, if its rule admits the statement. `tableOf` runs
+    * only after a shape matched, so a plain query costs the routed
+    * patterns and no catalog lookup.
+    */
+  private[graft] def catalogRoute(stmt: String,
+      tableOf: String => Option[GraftTable]): Option[Route] =
+    routed.iterator.flatMap(s => s.unapplySeq(stmt).map(s.route -> _))
+      .nextOption().collect {
+        case (r: Always, _) => r
+        case (r @ IfGraft(_, names), g)
+            if names.forall(i => tableOf(g(i - 1)).isDefined) => r
+        case (r @ Lazy(when), g) if tableOf(g.head).exists(when) => r
+      }
+
+  // a table name: optionally catalog/namespace-qualified, each part a
+  // plain word or a backtick-quoted segment (which may hold dots,
+  // dashes or reserved words); exactly one capturing group
+  private val id = """((?:\w+|`[^`]+`)(?:\.(?:\w+|`[^`]+`))*)"""
+
+  private def columns(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t) })
+  private val metricValue = columns("metric" -> StringType, "value" -> StringType)
+  private val pathOut = columns("path" -> StringType)
+  private val historyOut = columns("version" -> LongType,
+    "timestamp" -> LongType, "operation" -> StringType,
+    "parameters" -> StringType, "metrics" -> StringType)
+  private val detailOut = columns("location" -> StringType,
+    "version" -> LongType, "numFiles" -> IntegerType,
+    "sizeInBytes" -> LongType, "partitionColumns" -> StringType,
+    "numRecords" -> LongType, "clusteringColumns" -> StringType,
+    "rowTracking" -> BooleanType, "indexes" -> StringType)
+  private val statsOut = columns("column" -> StringType,
+    "n_rows" -> LongType, "n_distinct" -> LongType, "n_nulls" -> LongType,
+    "min" -> StringType, "max" -> StringType)
+  private val missingOut = columns("missing_file" -> StringType)
+
+  // ------------------------------------------------- statement shapes
+
+  private val optimizeRe = shape(
+    raw"""OPTIMIZE\s+$id(\s+FULL)?(\s+VORDER)?(?:\s+ZORDER\s+BY\s*\(([^)]+)\))?(\s+VORDER)?(?:\s+WHERE\s+(.+?))?""",
+    Always(metricValue))
+  private val vacuumRe = shape(
+    raw"""VACUUM\s+$id(\s+LITE)?(?:\s+RETAIN\s+([0-9.]+)\s+HOURS)?(\s+DRY\s+RUN)?""",
+    Always(pathOut))
+  private val historyRe = shape(
+    raw"""DESCRIBE\s+HISTORY\s+$id(?:\s+LIMIT\s+(\d+))?""", Always(historyOut))
+  private val detailRe = shape(raw"""DESCRIBE\s+DETAIL\s+$id""", Always(detailOut))
+  private val extendedRe = shape(raw"""DESCRIBE\s+EXTENDED\s+$id""")
+  private val clusteringRe = shape(
+    raw"""DESCRIBE\s+CLUSTERING\s+$id(?:\s*\(([\w,\s]+)\))?""")
+  private val deleteRe = shape(raw"""DELETE\s+FROM\s+$id(?:\s+WHERE\s+(.+?))?""")
+  private val analyzeRe = shape(
+    raw"""ANALYZE\s+TABLE\s+$id\s+COMPUTE\s+STATISTICS""", IfGraft(statsOut))
+  private val analyzeColumnsRe = shape(
+    raw"""ANALYZE\s+TABLE\s+$id\s+COMPUTE\s+STATISTICS\s+FOR\s+COLUMNS\s*\(([\w,\s]+)\)""")
+  private val updateRe = shape(raw"""UPDATE\s+$id\s+SET\s+(.+?)\s+WHERE\s+(.+?)""")
+  private val showCreateRe = shape(raw"""SHOW\s+CREATE\s+TABLE\s+$id""")
+  private val createLikeRe = shape(
+    raw"""CREATE\s+TABLE\s+(\w+)\s+LIKE\s+$id\s+LOCATION\s+'([^']+)'""")
+  private val cloneRe = shape(
+    raw"""CREATE\s+TABLE\s+(\w+)\s+(SHALLOW|DEEP)\s+CLONE\s+$id\s+LOCATION\s+'([^']+)'(?:\s+VERSION\s+AS\s+OF\s+(\d+))?(?:\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)')?""")
+  private val reorgRe = shape(
+    raw"""REORG\s+TABLE\s+$id\s+APPLY\s*\(\s*PURGE\s*\)""", Always(metricValue))
+  private val bloomRe = shape(
+    raw"""COMPUTE\s+BLOOM\s+(?:ON\s+)?$id\s*\(\s*(\w+)\s*\)""")
+  private val renameColRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)""")
+  private val dropColRe = shape(raw"""ALTER\s+TABLE\s+$id\s+DROP\s+COLUMN\s+(\w+)""")
+  private val addColRe = shape(raw"""ALTER\s+TABLE\s+$id\s+ADD\s+COLUMNS?\s+(.+?)""")
+  // constraint DDL: Spark has no v2 TableChange for these, so catalog
+  // names route here too; a foreign key's referenced name must
+  // resolve as well
+  private val addConstraintRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+ADD\s+CONSTRAINT\s+(\w+)\s+CHECK\s*\((.+)\)""",
+    IfGraft(metricValue))
+  private val addPkRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+ADD\s+CONSTRAINT\s+(\w+)\s+PRIMARY\s+KEY\s*\(([^)]+)\)(?:\s+NOT\s+ENFORCED)?""",
+    IfGraft(metricValue))
+  private val addFkRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+ADD\s+CONSTRAINT\s+(\w+)\s+FOREIGN\s+KEY\s*\(([^)]+)\)\s+REFERENCES\s+$id\s*\(([^)]+)\)(?:\s+NOT\s+ENFORCED)?""",
+    IfGraft(metricValue, names = Seq(1, 4)))
+  private val fsckRe = shape(
+    raw"""FSCK\s+REPAIR\s+TABLE\s+$id(\s+DRY\s+RUN)?""", Always(missingOut))
+  private val dropConstraintRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+DROP\s+CONSTRAINT\s+(\w+)""", IfGraft(metricValue))
+  private val setPropsRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+SET\s+TBLPROPERTIES\s*\((.+)\)""")
+  private val clusterByRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+CLUSTER\s+BY\s*(?:\(\s*([\w,\s]+?)\s*\)|NONE)""")
+  private val setDefaultRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+ALTER\s+COLUMN\s+(\w+)\s+SET\s+DEFAULT\s+(.+?)""")
+  private val dropDefaultRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+ALTER\s+COLUMN\s+(\w+)\s+DROP\s+DEFAULT""")
+  private val alterTypeRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+ALTER\s+COLUMN\s+(\w+)\s+TYPE\s+(\w+)""")
+  private val setNotNullRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+ALTER\s+COLUMN\s+(\w+)\s+SET\s+NOT\s+NULL""")
+  private val dropNotNullRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+ALTER\s+COLUMN\s+(\w+)\s+DROP\s+NOT\s+NULL""")
+  // new local names (CREATE / ATTACH / DROP TABLE) stay plain words:
+  // they name registry entries, not existing tables
+  private val ctasRe = shape(
+    raw"""CREATE\s+TABLE\s+(\w+)(?:\s+PARTITIONED\s+BY\s*\(([\w,\s]+)\))?\s+LOCATION\s+'([^']+)'\s+AS\s+(SELECT\s+.+?)""")
+  private val createOrReplaceRe = shape(
+    raw"""CREATE\s+OR\s+REPLACE\s+TABLE\s+(\w+)(?:\s+LOCATION\s+'([^']+)')?\s+AS\s+(SELECT\s+.+?)""")
+  private val truncateRe = shape(raw"""TRUNCATE\s+TABLE\s+$id""")
+  private val generateRe = shape(
+    raw"""GENERATE\s+symlink_format_manifest\s+FOR\s+TABLE\s+$id(\s+MATERIALIZE)?""")
+  private val exportIcebergRe = shape(
+    raw"""EXPORT\s+ICEBERG\s+METADATA\s+FOR\s+TABLE\s+$id""")
+  private val createTagRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+CREATE\s+TAG\s+([\w.-]+)(?:\s+AS\s+OF\s+VERSION\s+(\d+))?""")
+  private val dropTagRe = shape(raw"""ALTER\s+TABLE\s+$id\s+DROP\s+TAG\s+([\w.-]+)""")
+  private val showTagsRe = shape(raw"""SHOW\s+TAGS\s+(?:IN\s+|FROM\s+|ON\s+)?$id""")
+  private val restoreTagRe = shape(
+    raw"""RESTORE\s+(?:TABLE\s+)?$id\s+TO\s+TAG\s+([\w.-]+)""")
+  private val setRowFilterRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+SET\s+ROW\s+FILTER\s+'(.+)'""")
+  private val dropRowFilterRe = shape(raw"""ALTER\s+TABLE\s+$id\s+DROP\s+ROW\s+FILTER""")
+  private val setMaskRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+SET\s+MASK\s+(\w+)\s+AS\s+'(.+)'""")
+  private val dropMaskRe = shape(raw"""ALTER\s+TABLE\s+$id\s+DROP\s+MASK\s+(\w+)""")
+  private val createBranchRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+CREATE\s+BRANCH\s+([\w.-]+)(?:\s+AS\s+OF\s+VERSION\s+(\d+))?""")
+  private val createBranchTagRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+CREATE\s+BRANCH\s+([\w.-]+)\s+AS\s+OF\s+TAG\s+'([\w.-]+)'""")
+  private val dropBranchRe = shape(
+    raw"""ALTER\s+TABLE\s+$id\s+DROP\s+BRANCH\s+([\w.-]+)""")
+  private val showBranchesRe = shape(
+    raw"""SHOW\s+BRANCHES\s+(?:IN\s+|FROM\s+|ON\s+)?$id""")
+  private val mergeBranchRe = shape(
+    raw"""MERGE\s+BRANCH\s+([\w.-]+)\s+INTO\s+$id""")
+  private val rebaseBranchRe = shape(
+    raw"""REBASE\s+BRANCH\s+([\w.-]+)\s+(?:ONTO|ON|IN)\s+$id""")
+  private val exportDeltaRe = shape(raw"""EXPORT\s+DELTA\s+LOG\s+FOR\s+TABLE\s+$id""")
+  // zero-copy attach of foreign tables (L111/L117): registers the
+  // new GraftLake table under the given name in one statement
+  private val attachIcebergRe = shape(
+    raw"""ATTACH\s+ICEBERG\s+'([^']+)'\s+AS\s+TABLE\s+(\w+)\s+LOCATION\s+'([^']+)'(?:\s+SNAPSHOT\s+(\d+))?(?:\s+REF\s+'([\w.-]+)')?""")
+  private val attachDeltaRe = shape(
+    raw"""ATTACH\s+DELTA\s+'([^']+)'\s+AS\s+TABLE\s+(\w+)\s+LOCATION\s+'([^']+)'(?:\s+VERSION\s+(\d+))?""")
+  private val syncAttachRe = shape(raw"""SYNC\s+ATTACHED\s+TABLE\s+$id""")
+  private val dropTableRe = shape(raw"""DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(\w+)""")
+  private val showColumnsRe = shape(raw"""SHOW\s+COLUMNS\s+(?:IN|FROM)\s+$id""")
+  private val createMvRe = shape(
+    raw"""CREATE\s+MATERIALIZED\s+VIEW\s+(\w+)\s+LOCATION\s+'([^']+)'\s+AS\s+SELECT\s+(.+?)\s+FROM\s+$id\s+GROUP\s+BY\s+([\w,\s]+?)""")
+  private val createMvJoinRe = shape(
+    raw"""CREATE\s+MATERIALIZED\s+VIEW\s+(\w+)\s+LOCATION\s+'([^']+)'\s+AS\s+SELECT\s+(.+?)\s+FROM\s+$id\s+JOIN\s+$id\s+USING\s*\(([\w,\s]+)\)\s+GROUP\s+BY\s+([\w,\s]+?)""")
+  // LEFT/RIGHT/FULL OUTER join views route to the key-grain state
+  // maintainer ([[MaterializedOuterJoin]]); an outer form the USING
+  // shape doesn't match refuses LOUDLY — without the catch-all it
+  // would miss every MV shape and silently fall through to the
+  // plain-query path, never creating a view at all
+  private val createMvOuterRe = shape(
+    raw"""CREATE\s+MATERIALIZED\s+VIEW\s+(\w+)\s+LOCATION\s+'([^']+)'\s+AS\s+SELECT\s+(.+?)\s+FROM\s+$id\s+(LEFT|RIGHT|FULL)\s+(?:OUTER\s+)?JOIN\s+$id\s+USING\s*\(([\w,\s]+)\)\s+GROUP\s+BY\s+([\w,\s]+?)""")
+  private val createMvOuterJoinRe = shape(
+    raw"""CREATE\s+MATERIALIZED\s+VIEW\s+\w+\s+LOCATION\s+'[^']+'\s+AS\s+SELECT\s+.+?\s+(LEFT|RIGHT|FULL)(?:\s+OUTER)?\s+JOIN\s+.+""")
+  private val refreshMvRe = shape(raw"""REFRESH\s+MATERIALIZED\s+VIEW\s+$id""")
+  private val insertRe = shape(
+    raw"""INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?$id\s+((?:SELECT|VALUES|TABLE)\s*.+?)""")
+  private val insertColsRe = shape(
+    raw"""INSERT\s+INTO\s+(?:TABLE\s+)?$id\s*\(([\w,\s]+)\)\s*((?:SELECT|VALUES|TABLE)\s*.+?)""")
+  private val deleteInRe = shape(
+    raw"""DELETE\s+FROM\s+$id\s+WHERE\s+(\w+)\s+IN\s*\(\s*(SELECT\s+.+)\)""")
+  private val updateInRe = shape(
+    raw"""UPDATE\s+$id\s+SET\s+(.+?)\s+WHERE\s+(\w+)\s+IN\s*\(\s*(SELECT\s+.+)\)""")
+  private val createSchemaRe = shape(
+    raw"""CREATE\s+TABLE\s+(\w+)\s*\((.+?)\)\s*(?:USING\s+graftlake\s+)?(?:PARTITIONED\s+BY\s*\(([\w,\s]+)\)\s*)?LOCATION\s+'([^']+)'""")
+  private val showPropsRe = shape(raw"""SHOW\s+TBLPROPERTIES\s+$id""")
+  // SHOW PARTITIONS serves the log-metadata inventory (Spark's own
+  // path needs SupportsPartitionManagement), so catalog names route
+  // here when the table is partitioned
+  private val showPartitionsRe = shape(raw"""SHOW\s+PARTITIONS\s+$id""",
+    Lazy(_.snapshot.partitionColumns.nonEmpty))
+  private val restoreRe = shape(
+    raw"""RESTORE\s+(?:TABLE\s+)?$id\s+TO\s+(?:VERSION\s+AS\s+OF\s+(\d+)|TIMESTAMP\s+AS\s+OF\s+'([^']+)')""",
+    Always(metricValue))
+  private val copyIntoRe = shape(raw"""COPY\s+INTO\s+$id\s+FROM\s+'([^']+)'""")
+  // batch change feed as a statement (Delta's table_changes TVF
+  // shape): a lazy plan, since the feed over a big version range is
+  // data-sized and must execute distributed
+  private val tableChangesRe = shape(
+    raw"""TABLE\s+CHANGES\s+$id\s+BETWEEN\s+(?:(\d+)\s+AND\s+(\d+)|TIMESTAMP\s+'([^']+)'\s+AND\s+TIMESTAMP\s+'([^']+)')""",
+    Lazy())
+  private val mergeTail =
+    raw"""INTO\s+$id(?:\s+(?:AS\s+)?(\w+))?\s+USING\s+$id(?:\s+(?:AS\s+)?(\w+))?\s+ON\s+(.+?)\s+(WHEN\s+.+?)"""
+  private val mergeRe = shape(raw"""MERGE\s+$mergeTail""", masked = true)
+  // plain MERGE on a catalog name plans natively through
+  // SupportsRowLevelOperations; WITH SCHEMA EVOLUTION routes here,
+  // since its native resolution expects column defaults this catalog
+  // does not declare
+  private val mergeEvolveRe = shape(
+    raw"""MERGE\s+WITH\s+SCHEMA\s+EVOLUTION\s+$mergeTail""",
+    IfGraft(metricValue), masked = true)
+
+  private val beginRe = shape(raw"""BEGIN(?:\s+TRANSACTION)?""")
+  private val commitTxnRe = shape(raw"""COMMIT(?:\s+TRANSACTION)?""")
+  private val rollbackTxnRe = shape(raw"""ROLLBACK(?:\s+TRANSACTION)?""")
+  // statement classes whose effects cannot squash into one commit
+  // (maintenance/layout/lifecycle verbs) refuse inside a transaction
+  private val txnForbiddenRe: Regex =
+    ("""(?is)^\s*(DROP\s+TABLE|VACUUM|RESTORE|OPTIMIZE|REORG|FSCK|""" +
+      """GENERATE|EXPORT|ATTACH|SYNC\s+ATTACHED|COMPUTE\s+BLOOM|CREATE\s+(?:OR\s+REPLACE\s+)?MATERIALIZED|""" +
+      """REFRESH\s+MATERIALIZED|CREATE\s+TABLE\s+\w+\s+(?:SHALLOW|DEEP)\s+CLONE)\b.*""").r
+
+  // ------------------------------------------- in-statement patterns
+
+  private val propPairRe: Regex = """'([^']+)'\s*=\s*'([^']*)'""".r
+  // time travel inside a query: a registered name followed by AS OF
+  private val tagAsOfRe: Regex =
+    raw"""(?is)(?<![\w.`])$id\s+VERSION\s+AS\s+OF\s+'([\w.-]+)'""".r
+  private val versionAsOfRe: Regex =
+    raw"""(?is)(?<![\w.`])$id\s+VERSION\s+AS\s+OF\s+(\d+)""".r
+  private val timestampAsOfRe: Regex =
+    raw"""(?is)(?<![\w.`])$id\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'""".r
+  private val mvSumItemRe: Regex =
+    """(?i)^SUM\s*\(\s*(\w+)\s*\)(?:\s+AS\s+\w+)?$""".r
+  private val mvAvgItemRe: Regex =
+    """(?i)^AVG\s*\(\s*(\w+)\s*\)(?:\s+AS\s+\w+)?$""".r
+  private val mvMinItemRe: Regex =
+    """(?i)^MIN\s*\(\s*(\w+)\s*\)(?:\s+AS\s+\w+)?$""".r
+  private val mvMaxItemRe: Regex =
+    """(?i)^MAX\s*\(\s*(\w+)\s*\)(?:\s+AS\s+\w+)?$""".r
+  private val mvCountItemRe: Regex =
+    """(?i)^COUNT\s*\(\s*\*\s*\)(?:\s+AS\s+\w+)?$""".r
+  private val mvCountDistinctItemRe: Regex =
+    """(?i)^COUNT\s*\(\s*DISTINCT\s+(\w+)\s*\)(?:\s+AS\s+\w+)?$""".r
+  // an ON conjunct `[q.]c = [q.]c`; a qualifier may be a table name
+  private val mergeOnRe: Regex =
+    raw"""(?is)^\s*(?:$id\.)?(\w+)\s*=\s*(?:$id\.)?(\w+)\s*$$""".r
+  private val mergeClauseRe: Regex =
+    """(?is)WHEN\s+(NOT\s+MATCHED\s+BY\s+SOURCE|NOT\s+MATCHED|MATCHED)(?:\s+AND\s+(.+?))?\s+THEN\s+(UPDATE\s+SET\s+.+?|DELETE|INSERT\s+\*|INSERT\s*\([^)]+\)\s*VALUES\s*\(.+?\))\s*(?=WHEN\s|$)""".r
+  private val mergeInsertColsRe: Regex =
+    """(?is)^INSERT\s*\(([^)]+)\)\s*VALUES\s*\((.+)\)$""".r
+
+  /** Same-length copy with every character inside a single-quoted SQL
+    * string literal replaced by '_' ('' escapes stay masked): regexes
+    * and keyword scanners run on the mask, content is lifted from the
+    * original by position.
+    */
+  private def maskLiterals(s: String): String = {
+    val b = s.toCharArray
+    var inStr = false
+    var i = 0
+    while (i < b.length) {
+      if (b(i) == '\'') inStr = !inStr
+      else if (inStr) b(i) = '_'
+      i += 1
+    }
+    new String(b)
+  }
+
   /** Thrown by test crash hooks to simulate process death inside the
     * multi-table COMMIT protocol — the handler re-throws it without
     * rollback or abort, exactly like a real crash, so specs can then

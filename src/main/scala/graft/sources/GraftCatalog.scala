@@ -22,9 +22,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * no temp views (reference docs/02-lab-optimizations.md:116-187):
   * CREATE TABLE / CTAS, SELECT (incl. `VERSION/TIMESTAMP AS OF` time
   * travel through the `loadTable` overloads), INSERT INTO / INSERT
-  * OVERWRITE, DELETE FROM, DROP/RENAME — plus the maintenance
-  * statements (OPTIMIZE / VACUUM / DESCRIBE HISTORY|DETAIL / RESTORE)
-  * through [[GraftSqlParser]].
+  * OVERWRITE, DELETE FROM, DROP/RENAME — plus [[graft.lake.GraftSql]]'s
+  * statements routed on catalog names by [[GraftSqlParser]] (OPTIMIZE,
+  * VACUUM, DESCRIBE HISTORY|DETAIL, RESTORE, REORG, FSCK, ANALYZE,
+  * constraint DDL, MERGE WITH SCHEMA EVOLUTION, TABLE CHANGES, SHOW
+  * PARTITIONS), which run through GraftSql's one statement table.
   *
   * Layout is filesystem-truthful, like a path-based lakehouse
   * catalog: `warehouse/ns…/tableName/_graft_log` IS the table — no
@@ -67,7 +69,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   /** The backing path for an identifier: managed directory if its log
     * exists, else the external pointer target. Public for
-    * [[GraftSqlParser]]'s maintenance-statement resolution.
+    * [[GraftCatalog.resolve]], GraftSql's catalog name lookup.
     */
   def tablePath(ident: Identifier): Option[String] = {
     val dir = tableDir(ident)
@@ -381,4 +383,56 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         .iterator().asScala.foreach(Files.deleteIfExists(_))
       finally stream.close()
     }
+}
+
+object GraftCatalog {
+
+  /** Split a multipart name on dots OUTSIDE backticks, stripping the
+    * quotes — a quoted part may itself contain dots or dashes.
+    */
+  private[graft] def splitName(name: String): Seq[String] = {
+    val parts = scala.collection.mutable.ArrayBuffer[String]()
+    val sb = new StringBuilder
+    var inQ = false
+    for (c <- name) c match {
+      case '`' => inQ = !inQ
+      case '.' if !inQ => parts += sb.toString; sb.clear()
+      case other => sb.append(other)
+    }
+    parts += sb.toString
+    parts.toSeq
+  }
+
+  /** Resolve a (possibly qualified) name to a GraftLake table path
+    * through the session's catalogs: bare names use the current
+    * catalog + namespace; a qualified head naming a registered
+    * catalog resolves there. None when the name doesn't land on a
+    * [[GraftCatalog]] table.
+    */
+  private[graft] def resolve(spark: SparkSession,
+      tableName: String): Option[String] =
+    try {
+      val cm = spark.sessionState.catalogManager
+      val parts = splitName(tableName)
+      val resolved: Option[(GraftCatalog, Identifier)] = parts match {
+        case Seq(one) => cm.currentCatalog match {
+          case g: GraftCatalog =>
+            Some((g, Identifier.of(cm.currentNamespace, one)))
+          case _ => None
+        }
+        case head +: rest if cm.isCatalogRegistered(head) =>
+          cm.catalog(head) match {
+            case g: GraftCatalog =>
+              val ns =
+                if (rest.init.isEmpty) g.defaultNamespace else rest.init.toArray
+              Some((g, Identifier.of(ns, rest.last)))
+            case _ => None
+          }
+        case init :+ last => cm.currentCatalog match {
+          case g: GraftCatalog => Some((g, Identifier.of(init.toArray, last)))
+          case _ => None
+        }
+      }
+      resolved.flatMap { case (cat, ident) => cat.tablePath(ident) }
+    } catch { case scala.util.control.NonFatal(_) => None }
 }

@@ -1,42 +1,39 @@
 package graft.sources
 
-import scala.util.matching.Regex
-
 import graft.lake.{GraftSql, GraftTable}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-/** Parser extension routing GraftLake maintenance statements —
-  * `OPTIMIZE` / `VACUUM` / `DESCRIBE HISTORY|DETAIL` / `RESTORE` /
-  * `REORG` / `ANALYZE` — through `spark.sql` against CATALOG-named
-  * tables, the reference's own usage mode (reference
-  * docs/02-lab-optimizations.md:116-187 runs OPTIMIZE and DESCRIBE
-  * HISTORY as plain SQL). Installed by [[graft.GraftExtensions]];
-  * anything not matching the maintenance shapes parses through the
-  * delegate untouched, so the extension is a strict superset of
-  * Spark SQL.
+/** Parser extension serving [[GraftSql]]'s statements on CATALOG
+  * names through `spark.sql`, the reference's own usage mode
+  * (reference docs/02-lab-optimizations.md:116-187 runs OPTIMIZE and
+  * DESCRIBE HISTORY as plain SQL). Installed by
+  * [[graft.GraftExtensions]].
   *
-  * Execution reuses [[GraftSql]] verbatim: the matched multipart name
-  * resolves to a table path through the session's [[GraftCatalog]],
-  * the path registers under a local alias, and the statement re-runs
-  * with the alias spliced in — one grammar, one executor, two entry
-  * points.
+  * There is one grammar: GraftSql's statement table, where each shape
+  * declares its catalog route ([[GraftSql.catalogShapes]]). The
+  * intercepted verbs are OPTIMIZE, VACUUM, DESCRIBE HISTORY|DETAIL,
+  * RESTORE, REORG and FSCK always; ANALYZE … COMPUTE STATISTICS, the
+  * constraint DDL (ADD CONSTRAINT CHECK|PRIMARY KEY|FOREIGN KEY, DROP
+  * CONSTRAINT), MERGE WITH SCHEMA EVOLUTION, TABLE CHANGES and (on a
+  * partitioned table) SHOW PARTITIONS only when the name resolves to a
+  * GraftLake table. A match runs the
+  * original text through a fresh GraftSql, whose name lookup reaches
+  * the catalog; anything else parses through the delegate untouched,
+  * so the extension is a strict superset of Spark SQL.
   */
 class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     extends ParserInterface {
 
   override def parsePlan(sqlText: String): LogicalPlan =
-    GraftMaintenance.tryParse(sqlText,
-        name => GraftMaintenance.resolve(session, name).isDefined,
-        name => GraftMaintenance.resolve(session, name).map(p =>
-          graft.lake.GraftTable.forPath(session, p)))
+    GraftSqlParser.intercept(session, sqlText, name =>
+      GraftCatalog.resolve(session, name).map(GraftTable.forPath(session, _)))
       .getOrElse(delegate.parsePlan(sqlText))
 
   override def parseExpression(sqlText: String): Expression =
@@ -57,318 +54,37 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     delegate.parseTableSchema(sqlText)
 }
 
-private[sources] object GraftMaintenance {
+object GraftSqlParser {
 
-  // identifier: optionally catalog/namespace-qualified, each part a
-  // plain word or a backtick-quoted segment (so `my-sales` and
-  // reserved words route to the maintenance verbs instead of parsing
-  // through to the delegate, where OPTIMIZE is not Spark SQL)
-  private val id = """((?:[\w]+|`[^`]+`)(?:\.(?:[\w]+|`[^`]+`))*)"""
-
-  /** Split a multipart name on dots OUTSIDE backticks, stripping the
-    * quotes — a quoted part may itself contain dots or dashes.
+  /** The plan for a statement GraftSql's table routes on catalog
+    * names, or None to delegate. `tableOf` resolves a name to a
+    * GraftLake table. A lazy route returns the statement's own plan
+    * (a change feed must execute distributed, never collect on the
+    * driver); every other route returns a [[GraftSqlCommand]].
     */
-  private[sources] def splitName(name: String): Seq[String] = {
-    val parts = scala.collection.mutable.ArrayBuffer[String]()
-    val sb = new StringBuilder
-    var inQ = false
-    for (c <- name) c match {
-      case '`' => inQ = !inQ
-      case '.' if !inQ => parts += sb.toString; sb.clear()
-      case other => sb.append(other)
+  def intercept(spark: SparkSession, sqlText: String,
+      tableOf: String => Option[GraftTable]): Option[LogicalPlan] =
+    GraftSql.catalogRoute(sqlText, tableOf).map {
+      case GraftSql.Always(out) =>
+        GraftSqlCommand(sqlText, DataTypeUtils.toAttributes(out))
+      case GraftSql.IfGraft(out, _) =>
+        GraftSqlCommand(sqlText, DataTypeUtils.toAttributes(out))
+      case _ => new GraftSql(spark).sql(sqlText).queryExecution.analyzed
     }
-    parts += sb.toString
-    parts.toSeq
-  }
-
-  // (statement template with %s where the alias goes) per shape; the
-  // output schema is static per statement kind, as RunnableCommand
-  // requires. Shapes mirror GraftSql's regexes 1:1.
-  private val optimizeRe: Regex =
-    s"""(?is)^\\s*OPTIMIZE\\s+$id((?:\\s+FULL)?(?:\\s+VORDER)?(?:\\s+ZORDER\\s+BY\\s*\\([^)]+\\))?(?:\\s+VORDER)?(?:\\s+WHERE\\s+.+?)?)\\s*;?\\s*$$""".r
-  private val vacuumRe: Regex =
-    s"""(?is)^\\s*VACUUM\\s+$id((?:\\s+LITE)?(?:\\s+RETAIN\\s+[0-9.]+\\s+HOURS)?(?:\\s+DRY\\s+RUN)?)\\s*;?\\s*$$""".r
-  private val historyRe: Regex =
-    s"""(?is)^\\s*DESCRIBE\\s+HISTORY\\s+$id(?:\\s+LIMIT\\s+(\\d+))?\\s*;?\\s*$$""".r
-  private val detailRe: Regex =
-    s"""(?is)^\\s*DESCRIBE\\s+DETAIL\\s+$id\\s*;?\\s*$$""".r
-  private val restoreRe: Regex =
-    s"""(?is)^\\s*RESTORE\\s+TABLE\\s+$id\\s+(TO\\s+(?:VERSION\\s+AS\\s+OF\\s+\\d+|TIMESTAMP\\s+AS\\s+OF\\s+'[^']+'))\\s*;?\\s*$$""".r
-  private val reorgRe: Regex =
-    s"""(?is)^\\s*REORG\\s+TABLE\\s+$id\\s+(APPLY\\s*\\(\\s*PURGE\\s*\\))\\s*;?\\s*$$""".r
-  private val analyzeRe: Regex =
-    s"""(?is)^\\s*ANALYZE\\s+TABLE\\s+$id\\s+(COMPUTE\\s+STATISTICS)\\s*;?\\s*$$""".r
-  private val fsckRe: Regex =
-    s"""(?is)^\\s*FSCK\\s+REPAIR\\s+TABLE\\s+$id(\\s+DRY\\s+RUN)?\\s*;?\\s*$$""".r
-  // the ONE DML shape still intercepted (see tryParse): MERGE WITH
-  // SCHEMA EVOLUTION — plain UPDATE/MERGE/subquery-DELETE plan
-  // natively through SupportsRowLevelOperations since round 10
-  private val mergeDmlRe: Regex =
-    s"""(?is)^\\s*MERGE\\s+(?:WITH\\s+SCHEMA\\s+EVOLUTION\\s+)?INTO\\s+$id(?:\\s+(?:AS\\s+)?\\w+)?\\s+USING\\s+$id(?:\\s+(?:AS\\s+)?\\w+)?\\s+ON\\s+.+$$""".r
-  // statements whose output schema is the TABLE's (resolved at parse)
-  private val tableChangesRe: Regex =
-    s"""(?is)^\\s*TABLE\\s+CHANGES\\s+$id\\s+BETWEEN\\s+(\\d+)\\s+AND\\s+(\\d+)\\s*;?\\s*$$""".r
-  private val tableChangesTsRe: Regex =
-    s"""(?is)^\\s*TABLE\\s+CHANGES\\s+$id\\s+BETWEEN\\s+TIMESTAMP\\s+'([^']+)'\\s+AND\\s+TIMESTAMP\\s+'([^']+)'\\s*;?\\s*$$""".r
-  private val showPartitionsRe: Regex =
-    s"""(?is)^\\s*SHOW\\s+PARTITIONS\\s+$id\\s*;?\\s*$$""".r
-  // constraint DDL (CHECK / informational PK & FK / DROP) — Spark has
-  // no v2 TableChange for these, so the grammar routes them like the
-  // maintenance verbs; FK resolves its referenced table too
-  private val addCheckRe: Regex =
-    s"""(?is)^\\s*ALTER\\s+TABLE\\s+$id\\s+ADD\\s+CONSTRAINT\\s+(\\w+)\\s+CHECK\\s*\\((.+)\\)\\s*;?\\s*$$""".r
-  private val addPkRe: Regex =
-    s"""(?is)^\\s*ALTER\\s+TABLE\\s+$id\\s+ADD\\s+CONSTRAINT\\s+(\\w+)\\s+PRIMARY\\s+KEY\\s*\\(([^)]+)\\)(\\s+NOT\\s+ENFORCED)?\\s*;?\\s*$$""".r
-  private val addFkRe: Regex =
-    s"""(?is)^\\s*ALTER\\s+TABLE\\s+$id\\s+ADD\\s+CONSTRAINT\\s+(\\w+)\\s+FOREIGN\\s+KEY\\s*\\(([^)]+)\\)\\s+REFERENCES\\s+$id\\s*\\(([^)]+)\\)(\\s+NOT\\s+ENFORCED)?\\s*;?\\s*$$""".r
-  private val dropConstraintRe: Regex =
-    s"""(?is)^\\s*ALTER\\s+TABLE\\s+$id\\s+DROP\\s+CONSTRAINT\\s+(\\w+)\\s*;?\\s*$$""".r
-
-  private def attrs(fields: (String, DataType)*): Seq[Attribute] =
-    fields.map { case (n, t) => AttributeReference(n, t)() }
-
-  private val metricValue = attrs("metric" -> StringType, "value" -> StringType)
-  private val historyOut = attrs("version" -> LongType,
-    "timestamp" -> LongType, "operation" -> StringType,
-    "parameters" -> StringType, "metrics" -> StringType)
-  private val detailOut = attrs("location" -> StringType,
-    "version" -> LongType, "numFiles" -> IntegerType,
-    "sizeInBytes" -> LongType, "partitionColumns" -> StringType,
-    "numRecords" -> LongType, "clusteringColumns" -> StringType,
-    "rowTracking" -> BooleanType, "indexes" -> StringType)
-  private val pathOut = attrs("path" -> StringType)
-
-  /** `isGraft` gates the statements Spark's own parser also accepts
-    * (ANALYZE, UPDATE, MERGE, SHOW PARTITIONS): those must fall
-    * through to the delegate for non-graft tables instead of failing
-    * resolution later. The graft-only verbs (OPTIMIZE/VACUUM/
-    * RESTORE/…) intercept unconditionally — the delegate would reject
-    * them anyway, and the command's own resolution gives the clearer
-    * error. `tableOf` supplies parse-time table handles for the
-    * statements whose OUTPUT SCHEMA depends on the table (change
-    * feed, partition inventory) — RunnableCommand output is fixed at
-    * plan time.
-    */
-  def tryParse(sqlText: String,
-      isGraft: String => Boolean,
-      tableOf: String => Option[graft.lake.GraftTable] = _ => None)
-      : Option[LogicalPlan] = sqlText match {
-    case optimizeRe(name, rest) =>
-      Some(GraftMaintenanceCommand(name, s"OPTIMIZE %s$rest", metricValue))
-    case vacuumRe(name, rest) =>
-      Some(GraftMaintenanceCommand(name, s"VACUUM %s$rest", pathOut))
-    case historyRe(name, lim) =>
-      val suffix = Option(lim).map(n => s" LIMIT $n").getOrElse("")
-      Some(GraftMaintenanceCommand(name, s"DESCRIBE HISTORY %s$suffix",
-        historyOut))
-    case detailRe(name) =>
-      Some(GraftMaintenanceCommand(name, "DESCRIBE DETAIL %s", detailOut))
-    case restoreRe(name, rest) =>
-      Some(GraftMaintenanceCommand(name, s"RESTORE TABLE %s $rest", metricValue))
-    // constraint DDL intercepts only graft-resolvable names; literal
-    // % in a CHECK expression must not be eaten by the format splice
-    case addCheckRe(name, cname, expr) if isGraft(name) =>
-      Some(GraftMaintenanceCommand(name,
-        s"ALTER TABLE %s ADD CONSTRAINT $cname CHECK (${expr.replace("%", "%%")})",
-        metricValue))
-    case addPkRe(name, cname, cols, enforced) if isGraft(name) =>
-      Some(GraftMaintenanceCommand(name,
-        s"ALTER TABLE %s ADD CONSTRAINT $cname PRIMARY KEY ($cols)" +
-          Option(enforced).getOrElse(""), metricValue))
-    case addFkRe(name, cname, cols, refName, refCols, enforced)
-        if isGraft(name) && isGraft(refName) =>
-      Some(GraftMaintenanceCommand(name,
-        s"ALTER TABLE %1$$s ADD CONSTRAINT $cname FOREIGN KEY ($cols) " +
-          s"REFERENCES %2$$s ($refCols)" + Option(enforced).getOrElse(""),
-        metricValue, refTable = Some(refName)))
-    case dropConstraintRe(name, cname) if isGraft(name) =>
-      Some(GraftMaintenanceCommand(name,
-        s"ALTER TABLE %s DROP CONSTRAINT $cname", metricValue))
-    case reorgRe(name, rest) =>
-      Some(GraftMaintenanceCommand(name, s"REORG TABLE %s $rest", metricValue))
-    case analyzeRe(name, rest) if isGraft(name) =>
-      // computeStats' per-column schema is dynamic; RunnableCommand
-      // needs a static one → flatten to (metric, value) string pairs
-      Some(GraftMaintenanceCommand(name, s"ANALYZE TABLE %s $rest",
-        metricValue, flattenToMetrics = true))
-    case fsckRe(name, rest) =>
-      Some(GraftMaintenanceCommand(name,
-        s"FSCK REPAIR TABLE %s${Option(rest).getOrElse("")}", metricValue))
-    // UPDATE / MERGE / subquery-DELETE are NOT intercepted anymore:
-    // since the table implements SupportsRowLevelOperations
-    // ([[GraftRowLevelOperation]]), Spark's own row-level rewrites
-    // plan them natively (group-based copy-on-write, runtime group
-    // filtering on _graft_file) — EXPLAIN shows the real ReplaceData
-    // plan instead of an opaque command. The ONE DML shape still
-    // intercepted is MERGE WITH SCHEMA EVOLUTION, whose native
-    // resolution expects Spark-managed column defaults this catalog
-    // does not declare; it keeps the proven GraftSql route.
-    case mergeDmlRe(target, source)
-        if isGraft(target) &&
-          """(?is)^\s*MERGE\s+WITH\s+SCHEMA\s+EVOLUTION\b.*""".r
-            .matches(sqlText) =>
-      Some(GraftDmlCommand(sqlText, target, Some(source)))
-    // batch change feed as a statement (Delta's table_changes TVF
-    // shape): returns the LAZY changeFeed plan, NOT a collecting
-    // command — the feed over a big version range is data-scaled and
-    // must execute distributed, never materialize on the driver
-    case tableChangesRe(name, from, to) =>
-      tableOf(name).map(t =>
-        t.changeFeed(from.toLong - 1, to.toLong) // BETWEEN is inclusive
-          .queryExecution.analyzed)
-    // timestamp bounds: start at-or-after, end at-or-before (the same
-    // resolution GraftSql's route uses); empty windows clamp to empty
-    case tableChangesTsRe(name, fromTs, toTs) =>
-      tableOf(name).map { t =>
-        val fromV = graft.lake.Snapshot.versionAtOrAfterTimestamp(
-          t.log, graft.lake.Snapshot.parseTsMillis(fromTs))
-        val toV = graft.lake.Snapshot.versionAtTimestamp(
-          t.log, graft.lake.Snapshot.parseTsMillis(toTs))
-        t.changeFeed(math.min(fromV - 1, toV), toV).queryExecution.analyzed
-      }
-    // SHOW PARTITIONS needs SupportsPartitionManagement on Spark's own
-    // path — the log-metadata inventory serves it instead (bounded:
-    // |partitions| rows, so a command collect is the right shape)
-    case showPartitionsRe(name) if isGraft(name) =>
-      tableOf(name).map(_.snapshot).filter(_.partitionColumns.nonEmpty)
-        .map { snap =>
-          val out = snap.partitionColumns.map(c =>
-            AttributeReference(c, StringType)()) :+
-            AttributeReference("num_files", LongType)()
-          GraftMaintenanceCommand(name, "SHOW PARTITIONS %s", out)
-        }
-    case _ => None
-  }
-
-  /** Resolve a (possibly qualified) name to a GraftLake table path
-    * through the session's catalogs: bare names use the current
-    * catalog + namespace; a qualified head naming a registered
-    * catalog resolves there. None when the name doesn't land on a
-    * [[GraftCatalog]] table.
-    */
-  def resolve(spark: SparkSession, tableName: String): Option[String] =
-    try {
-      val cm = spark.sessionState.catalogManager
-      val parts = splitName(tableName)
-      val resolved: Option[(GraftCatalog, Identifier)] = parts match {
-        case Seq(one) => cm.currentCatalog match {
-          case g: GraftCatalog =>
-            Some((g, Identifier.of(cm.currentNamespace, one)))
-          case _ => None
-        }
-        case head +: rest if cm.isCatalogRegistered(head) =>
-          cm.catalog(head) match {
-            case g: GraftCatalog =>
-              val ns =
-                if (rest.init.isEmpty) g.defaultNamespace else rest.init.toArray
-              Some((g, Identifier.of(ns, rest.last)))
-            case _ => None
-          }
-        case init :+ last => cm.currentCatalog match {
-          case g: GraftCatalog => Some((g, Identifier.of(init.toArray, last)))
-          case _ => None
-        }
-      }
-      resolved.flatMap { case (cat, ident) => cat.tablePath(ident) }
-    } catch { case scala.util.control.NonFatal(_) => None }
 }
 
-/** Runs one maintenance statement against a catalog-resolved
-  * GraftLake table. Name resolution follows Spark's rules: a bare
-  * name resolves in the current catalog + namespace; a qualified name
-  * whose head is a registered catalog resolves there. The resolved
-  * catalog must be a [[GraftCatalog]].
+/** Runs one catalog-named statement through [[GraftSql]]; `output`
+  * is what its statement table declares for the shape.
   */
-/** Executes UPDATE / MERGE on a catalog-resolved GraftLake target
-  * through [[GraftSql]]'s DML grammar. The (possibly multipart)
-  * target name is spliced to a registered local alias; a MERGE
-  * source that also resolves in a graft catalog registers under its
-  * own alias, while any other source (temp view, other catalog)
-  * stays verbatim — GraftSql falls back to `spark.table` for it.
-  */
-final case class GraftDmlCommand(statement: String,
-    target: String, source: Option[String])
-  extends LeafRunnableCommand {
-
-  override val output: Seq[Attribute] =
-    Seq(AttributeReference("metric", StringType)(),
-      AttributeReference("value", StringType)())
+final case class GraftSqlCommand(statement: String,
+    override val output: Seq[Attribute]) extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val gsql = new GraftSql(spark)
-    val tPath = GraftMaintenance.resolve(spark, target)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no GraftLake table $target in the session's catalogs"))
-    gsql.register("graft_target", tPath)
-    // splice matches against a LITERAL-MASKED copy and rebuilds from
-    // the original by position: a string literal containing the table
-    // name (SET c = 'sales') must never be rewritten
-    def splice(stmt: String, name: String, alias: String): String = {
-      val masked = {
-        val b = stmt.toCharArray
-        var inStr = false
-        var i = 0
-        while (i < b.length) {
-          if (b(i) == '\'') inStr = !inStr else if (inStr) b(i) = '_'
-          i += 1
-        }
-        new String(b)
-      }
-      val re = ("(?i)(?<![\\w.])" +
-        java.util.regex.Pattern.quote(name) + "(?![\\w.])").r
-      val sb = new StringBuilder
-      var last = 0
-      for (m <- re.findAllMatchIn(masked)) {
-        sb.append(stmt.substring(last, m.start)).append(alias)
-        last = m.end
-      }
-      sb.append(stmt.substring(last)).toString
-    }
-    var stmt = splice(statement, target, "graft_target")
-    source.foreach { s =>
-      GraftMaintenance.resolve(spark, s).foreach { sPath =>
-        gsql.register("graft_source", sPath)
-        stmt = splice(stmt, s, "graft_source")
-      }
-      // a multipart non-graft source still needs a GraftSql-legal
-      // single-word name: expose it as a session view
-      if (s.contains(".") && GraftMaintenance.resolve(spark, s).isEmpty) {
-        spark.table(s).createOrReplaceTempView("graft_merge_source")
-        stmt = splice(stmt, s, "graft_merge_source")
-      }
-    }
-    gsql.sql(stmt).collect().toSeq
-  }
-}
-
-final case class GraftMaintenanceCommand(
-    tableName: String, template: String,
-    override val output: Seq[Attribute],
-    flattenToMetrics: Boolean = false,
-    refTable: Option[String] = None)
-  extends LeafRunnableCommand {
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    val path = GraftMaintenance.resolve(spark, tableName)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no GraftLake table $tableName in the session's catalogs — " +
-          "maintenance statements need a graftlake catalog table"))
-    val gsql = new GraftSql(spark)
-    gsql.register("graft_target", path)
-    refTable.foreach { r =>
-      val rp = GraftMaintenance.resolve(spark, r)
-        .getOrElse(throw new IllegalArgumentException(
-          s"no GraftLake table $r in the session's catalogs — " +
-            "the referenced table must be a graftlake catalog table"))
-      gsql.register("graft_ref", rp)
-    }
-    // extra format args are ignored by single-%s templates
-    val df = gsql.sql(template.format("graft_target", "graft_ref"))
-    if (flattenToMetrics)
-      df.collect().toSeq.flatMap(r =>
-        df.schema.fieldNames.zipWithIndex.map { case (n, i) =>
-          Row(n, String.valueOf(r.get(i)))
-        })
-    else df.collect().toSeq
+    val df = new GraftSql(spark).sql(statement)
+    require(df.schema.map(f => f.name -> f.dataType) ==
+      output.map(a => a.name -> a.dataType),
+      s"$statement answered ${df.schema.simpleString}, its shape " +
+        s"declares ${output.map(a => s"${a.name}:${a.dataType.simpleString}")}")
+    df.collect().toSeq
   }
 }

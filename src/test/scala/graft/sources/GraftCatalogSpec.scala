@@ -281,25 +281,25 @@ class GraftCatalogSpec extends GraftSparkSpec {
   test("ANALYZE intercepts only graft-resolvable names; graft-only verbs always") {
     useCatalog()
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graftc.default")
-    // non-graft ANALYZE must fall through to the delegate parser (the
-    // statement is valid Spark SQL for spark_catalog tables)
-    assert(GraftMaintenance.tryParse(
-      "ANALYZE TABLE not_graft COMPUTE STATISTICS", _ => false).isEmpty,
-      "ANALYZE on a non-graft name must delegate to Spark")
-    assert(GraftMaintenance.tryParse(
-      "ANALYZE TABLE g COMPUTE STATISTICS", _ => true).isDefined)
-    // graft-only verbs intercept regardless (Spark would reject them)
-    assert(GraftMaintenance.tryParse(
-      "OPTIMIZE whatever", _ => false).isDefined)
-    // end-to-end: ANALYZE through the parser feeds the stats the CBO reads
     spark.range(80).withColumn("g", pmod(col("id"), lit(4)))
       .createOrReplaceTempView("an_src")
     spark.sql("CREATE TABLE graftc.default.an_tbl USING graftlake " +
       "AS SELECT * FROM an_src")
-    spark.sql("ANALYZE TABLE graftc.default.an_tbl COMPUTE STATISTICS")
     val warehousePath =
       java.nio.file.Paths.get(tmpWarehouse, "default", "an_tbl").toString
     val t = graft.lake.GraftTable.forPath(spark, warehousePath)
+    // non-graft ANALYZE must fall through to the delegate parser (the
+    // statement is valid Spark SQL for spark_catalog tables)
+    assert(GraftSqlParser.intercept(spark,
+      "ANALYZE TABLE not_graft COMPUTE STATISTICS", _ => None).isEmpty,
+      "ANALYZE on a non-graft name must delegate to Spark")
+    assert(GraftSqlParser.intercept(spark,
+      "ANALYZE TABLE g COMPUTE STATISTICS", _ => Some(t)).isDefined)
+    // graft-only verbs intercept regardless (Spark would reject them)
+    assert(GraftSqlParser.intercept(spark,
+      "OPTIMIZE whatever", _ => None).isDefined)
+    // end-to-end: ANALYZE through the parser feeds the stats the CBO reads
+    spark.sql("ANALYZE TABLE graftc.default.an_tbl COMPUTE STATISTICS")
     assert(graft.lake.Cbo.rowCount(t).contains(80L),
       "parser-routed ANALYZE must persist stats")
     spark.sql("DROP TABLE graftc.default.an_tbl")
@@ -318,7 +318,7 @@ class GraftCatalogSpec extends GraftSparkSpec {
     assert(spark.sql("SELECT SUM(v) AS s FROM graftc.default.dml_tbl " +
       "WHERE id < 10").head().getLong(0)
       == (0 until 10).map(_ * 10 + 1).sum)
-    // MERGE with a graft catalog SOURCE: both names spliced
+    // MERGE with a graft catalog SOURCE
     spark.range(5).withColumn("v", lit(7L))
       .createOrReplaceTempView("merge_upd")
     spark.sql("CREATE TABLE graftc.default.dml_delta USING graftlake " +
@@ -332,7 +332,7 @@ class GraftCatalogSpec extends GraftSparkSpec {
       .head().getLong(0) == 105)
     assert(spark.sql("SELECT COUNT(*) AS n FROM graftc.default.dml_tbl " +
       "WHERE v = -1").head().getLong(0) == 10)
-    // MERGE with a TEMP VIEW source: target spliced, source verbatim
+    // MERGE with a TEMP VIEW source
     spark.sql("MERGE INTO graftc.default.dml_tbl AS t " +
       "USING merge_upd AS s ON t.id = s.id " +
       "WHEN MATCHED THEN UPDATE SET v = s.v")
@@ -346,7 +346,7 @@ class GraftCatalogSpec extends GraftSparkSpec {
       .head().getLong(0) == 100)
     assert(spark.sql("SELECT COUNT(*) AS n FROM graftc.default.dml_tbl " +
       "WHERE v = 7").head().getLong(0) == 0)
-    // a literal containing the table name must survive the splice
+    // a literal containing the table name is kept as written
     spark.sql("CREATE TABLE graftc.default.lit_tbl USING graftlake " +
       "AS SELECT id, CAST('x' AS STRING) AS tag FROM range(5)")
     spark.sql("UPDATE graftc.default.lit_tbl " +
@@ -363,6 +363,91 @@ class GraftCatalogSpec extends GraftSparkSpec {
       s"non-graft UPDATE must not be intercepted, got: ${e.getMessage.take(120)}")
     spark.sql("DROP TABLE graftc.default.dml_tbl")
     spark.sql("DROP TABLE graftc.default.dml_delta")
+  }
+
+  test("MERGE WITH SCHEMA EVOLUTION, REORG PURGE and RESTORE TO TIMESTAMP " +
+      "on catalog names") {
+    useCatalog()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graftc.default")
+    spark.sql("CREATE TABLE graftc.default.evo USING graftlake " +
+      "AS SELECT id, id * 10 AS v FROM range(10)")
+    val path = java.nio.file.Paths.get(tmpWarehouse, "default", "evo").toString
+    def one(q: String): org.apache.spark.sql.Row = spark.sql(q).head()
+    def columns(): Seq[String] =
+      spark.sql("SELECT * FROM graftc.default.evo").columns.toSeq
+    // temp-view source carrying a column the target lacks
+    spark.range(5, 15).selectExpr("id", "CAST(-1 AS BIGINT) AS v",
+      "CAST('view' AS STRING) AS tag").createOrReplaceTempView("evo_view")
+    spark.sql("MERGE WITH SCHEMA EVOLUTION INTO graftc.default.evo AS t " +
+      "USING evo_view AS s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+    assert(columns() == Seq("id", "v", "tag"))
+    assert(one("SELECT COUNT(*), COUNT(tag) FROM graftc.default.evo") ==
+      org.apache.spark.sql.Row(15L, 10L))
+    // a graft catalog table as the source
+    spark.sql("CREATE TABLE graftc.default.evo_src USING graftlake " +
+      "AS SELECT id, CAST(-2 AS BIGINT) AS v, CAST('cat' AS STRING) AS tag, " +
+      "CAST(id AS DOUBLE) AS score FROM range(12, 18)")
+    spark.sql("MERGE WITH SCHEMA EVOLUTION INTO graftc.default.evo AS t " +
+      "USING graftc.default.evo_src AS s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+    assert(columns() == Seq("id", "v", "tag", "score"))
+    assert(one("SELECT COUNT(*), COUNT(score), COUNT_IF(tag = 'cat') " +
+      "FROM graftc.default.evo") == org.apache.spark.sql.Row(18L, 6L, 6L))
+    // a string literal equal to the target's qualified name stays as
+    // written; the clause condition reads the target row
+    spark.range(4, 8).selectExpr("id", "CAST(0 AS BIGINT) AS v",
+      "CAST('lit' AS STRING) AS tag", "CAST(0 AS DOUBLE) AS score")
+      .createOrReplaceTempView("evo_lit")
+    spark.sql("MERGE WITH SCHEMA EVOLUTION INTO graftc.default.evo AS t " +
+      "USING evo_lit AS s ON t.id = s.id " +
+      "WHEN MATCHED AND t.id < 7 THEN UPDATE SET tag = 'graftc.default.evo'")
+    val tags = spark.sql("SELECT id, tag FROM graftc.default.evo WHERE id " +
+      "BETWEEN 4 AND 7").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(tags == Map(4L -> "graftc.default.evo", 5L -> "graftc.default.evo",
+      6L -> "graftc.default.evo", 7L -> "view"))
+    // REORG ... APPLY (PURGE) rewrites the deletion-vector masked files
+    graft.lake.GraftTable.forPath(spark, path).deleteMergeOnRead(col("id") < 2)
+    assert(graft.lake.GraftTable.forPath(spark, path).snapshot.dvFiles.nonEmpty)
+    val reorg = spark.sql("REORG TABLE graftc.default.evo APPLY (PURGE)")
+    assert(reorg.columns.toSeq == Seq("metric", "value"))
+    val t = graft.lake.GraftTable.forPath(spark, path)
+    assert(t.snapshot.dvFiles.isEmpty, "REORG must retire every DV sidecar")
+    assert(one("SELECT COUNT(*) FROM graftc.default.evo").getLong(0) == 16L)
+    // RESTORE TABLE ... TO TIMESTAMP AS OF the post-REORG commit
+    val fmt = java.time.format.DateTimeFormatter
+      .ofPattern("yyyy-MM-dd HH:mm:ss.SSS").withZone(java.time.ZoneOffset.UTC)
+    val ts = fmt.format(java.time.Instant.ofEpochMilli(
+      t.log.commitTimestamp(t.version)))
+    Thread.sleep(5) // the DELETE commit must land on a later millisecond
+    spark.sql("DELETE FROM graftc.default.evo WHERE id >= 10")
+    assert(one("SELECT COUNT(*) FROM graftc.default.evo").getLong(0) == 8L)
+    val restored = spark.sql(
+      s"RESTORE TABLE graftc.default.evo TO TIMESTAMP AS OF '$ts'")
+    assert(restored.columns.toSeq == Seq("metric", "value"))
+    assert(one("SELECT COUNT(*) FROM graftc.default.evo").getLong(0) == 16L)
+    spark.sql("DROP TABLE graftc.default.evo")
+    spark.sql("DROP TABLE graftc.default.evo_src")
+  }
+
+  test("FSCK REPAIR TABLE on a catalog name lists, then drops, a missing file") {
+    useCatalog()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graftc.default")
+    spark.range(40).repartition(4).createOrReplaceTempView("fsck_src")
+    spark.sql("CREATE TABLE graftc.default.fsck_tbl USING graftlake " +
+      "AS SELECT * FROM fsck_src")
+    val path = java.nio.file.Paths.get(tmpWarehouse, "default", "fsck_tbl")
+    val victim = graft.lake.GraftTable.forPath(spark, path.toString)
+      .snapshot.activeFiles.head
+    java.nio.file.Files.delete(path.resolve(victim.path))
+    val dry = spark.sql("FSCK REPAIR TABLE graftc.default.fsck_tbl DRY RUN")
+    assert(dry.collect().map(_.getString(0)).toSeq == Seq(victim.path))
+    assert(dry.columns.toSeq == Seq("missing_file"))
+    spark.sql("FSCK REPAIR TABLE graftc.default.fsck_tbl")
+    val lost = victim.stats.map(_.numRecords).getOrElse(0L)
+    assert(spark.sql("SELECT COUNT(*) FROM graftc.default.fsck_tbl")
+      .head().getLong(0) == 40L - lost, "the repaired table must read again")
+    spark.sql("DROP TABLE graftc.default.fsck_tbl")
   }
 
   test("TABLE CHANGES and SHOW PARTITIONS on catalog names") {

@@ -31,7 +31,7 @@ class RowLevelOpsSpec extends GraftSparkSpec {
       "AS SELECT * FROM rlo_src")
     val analyzed = spark.sessionState.sqlParser.parsePlan(
       "UPDATE graftrlo.default.plan_tbl SET v = 0 WHERE id < 5")
-    assert(!analyzed.getClass.getName.contains("GraftDmlCommand"),
+    assert(!analyzed.getClass.getName.contains("GraftSqlCommand"),
       "the parser interception for UPDATE must be gone")
     val explained = spark.sql(
       "EXPLAIN EXTENDED UPDATE graftrlo.default.plan_tbl SET v = 0 WHERE id < 5")
