@@ -120,20 +120,13 @@ object Bench {
       System.err.println(s"[bench] tmpdir sidecar sweep failed: ${e.getMessage}")
     }
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 215 queries × several codegen units each overflow the default
-      // 100-entry generated-class cache, so pass B would re-pay codegen
-      // compilation that pass A already did and the pair ratios would
-      // measure the cache, not the host. Sized to hold the whole suite;
-      // scale-independent (bench hygiene, not a query tuning knob).
-      .config("spark.sql.codegen.cache.maxEntries", "8000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 215 queries × several codegen units each overflow the default
+    // 100-entry generated-class cache, so pass B would re-pay codegen
+    // compilation that pass A already did and the pair ratios would
+    // measure the cache, not the host. Sized to hold the whole suite;
+    // scale-independent (bench hygiene, not a query tuning knob).
+    val spark = LocalSession(cpus,
+      extra = _.config("spark.sql.codegen.cache.maxEntries", "8000"))
 
     // JVM/codegen warmup on the smallest sf (not timed): the join
     // pipeline (entry) plus the text/dedup pipeline, so the first

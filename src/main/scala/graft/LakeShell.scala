@@ -1,7 +1,6 @@
 package graft
 
 import graft.lake.GraftSql
-import org.apache.spark.sql.SparkSession
 
 /** Tiny CLI for GraftLake tables: register tables, run statements.
   *
@@ -18,15 +17,7 @@ object LakeShell {
     val statements = rest.drop(1)
     require(regs.nonEmpty && statements.nonEmpty,
       "usage: LakeShell name=path [...] -- \"STMT\" [...]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "ERROR")
     GraftFunctions.register(spark)
     val gsql = new GraftSql(spark)
     regs.foreach { r =>

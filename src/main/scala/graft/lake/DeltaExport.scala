@@ -287,7 +287,7 @@ object DeltaExport {
           val canon = GraftTable.canonicalFsPath(t.dataPath(f.path))
           val fp = fingerprint(f)
           val subDir = matDir.resolve(fp.take(16))
-          val df = t.physicalDfForFiles(s, Seq(f))
+          val df = t.scan(s, Seq(f)).select(s.physicalColumns: _*)
           val w = df.write.mode("overwrite")
           (if (physParts.nonEmpty) w.partitionBy(physParts: _*) else w)
             .parquet(subDir.toString)

@@ -602,24 +602,8 @@ final class GraftSql(spark: SparkSession) {
         // fact-side aggregates only (the class refuses others)
         val groupCols = groupBy.split(",").map(_.trim).filter(_.nonEmpty).toSeq
         val joinKeys = using.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        val items = selectList.split(",").map(_.trim).filter(_.nonEmpty)
-        val sumCols = items.flatMap {
-          case mvSumItemRe(c) => Some(c)
-          case mvAvgItemRe(c) => Some(c)
-          case _ => None
-        }.distinct.toSeq
-        val minColsSql = items.flatMap {
-          case mvMinItemRe(c) => Some(c); case _ => None }.distinct.toSeq
-        val maxColsSql = items.flatMap {
-          case mvMaxItemRe(c) => Some(c); case _ => None }.distinct.toSeq
-        items.foreach {
-          case mvSumItemRe(_) | mvAvgItemRe(_) | mvMinItemRe(_) |
-               mvMaxItemRe(_) | mvCountItemRe() => ()
-          case item if groupCols.contains(item) => ()
-          case item => throw new IllegalArgumentException(
-            s"materialized views maintain group columns, COUNT(*), " +
-              s"SUM/AVG(col), and MIN/MAX(col) only; cannot maintain: $item")
-        }
+        val items = selectList.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+        val (sumCols, minColsSql, maxColsSql) = mvAggColumns(items, groupCols)
         val mv = MaterializedOuterJoin.create(spark, location, table(srcName),
           table(dimName), joinKeys, groupCols, sumCols, minColsSql, maxColsSql,
           joinType = kind.toLowerCase)
@@ -641,24 +625,8 @@ final class GraftSql(spark: SparkSession) {
         // (the single-table rewrite declines dim-bearing views).
         val groupCols = groupBy.split(",").map(_.trim).filter(_.nonEmpty).toSeq
         val joinKeys = using.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        val items = selectList.split(",").map(_.trim).filter(_.nonEmpty)
-        val sumCols = items.flatMap {
-          case mvSumItemRe(c) => Some(c)
-          case mvAvgItemRe(c) => Some(c)
-          case _ => None
-        }.distinct.toSeq
-        val minColsSql = items.flatMap {
-          case mvMinItemRe(c) => Some(c); case _ => None }.distinct.toSeq
-        val maxColsSql = items.flatMap {
-          case mvMaxItemRe(c) => Some(c); case _ => None }.distinct.toSeq
-        items.foreach {
-          case mvSumItemRe(_) | mvAvgItemRe(_) | mvMinItemRe(_) |
-               mvMaxItemRe(_) | mvCountItemRe() => ()
-          case item if groupCols.contains(item) => ()
-          case item => throw new IllegalArgumentException(
-            s"materialized views maintain group columns, COUNT(*), " +
-              s"SUM/AVG(col), and MIN/MAX(col) only; cannot maintain: $item")
-        }
+        val items = selectList.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+        val (sumCols, minColsSql, maxColsSql) = mvAggColumns(items, groupCols)
         val mv = MaterializedAgg.createJoin(spark, location, table(srcName),
           table(dimName), joinKeys, groupCols, sumCols, minColsSql, maxColsSql)
         matViews(name) = mv
@@ -667,12 +635,8 @@ final class GraftSql(spark: SparkSession) {
         Seq(("location", location), ("sourceVersion",
           table(srcName).version.toString)).toDF("metric", "value")
       case createMvRe(name, location, selectList, srcName, groupBy) =>
-        // select list must be exactly what the view can maintain:
-        // group columns, COUNT(*), SUM/AVG(col) (avg stores its sum +
-        // non-null count pair), MIN/MAX(col) (insert-only fold with
-        // recompute-on-retract) — anything else refuses
         val groupCols = groupBy.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        val items = selectList.split(",").map(_.trim).filter(_.nonEmpty)
+        val items = selectList.split(",").map(_.trim).filter(_.nonEmpty).toSeq
         val distinctCols = items.flatMap {
           case mvCountDistinctItemRe(c) => Some(c); case _ => None }.distinct
         if (distinctCols.nonEmpty) {
@@ -692,23 +656,7 @@ final class GraftSql(spark: SparkSession) {
           return Seq(("location", location), ("sourceVersion",
             table(srcName).version.toString)).toDF("metric", "value")
         }
-        val sumCols = items.flatMap {
-          case mvSumItemRe(c) => Some(c)
-          case mvAvgItemRe(c) => Some(c)
-          case _ => None
-        }.distinct.toSeq
-        val minColsSql = items.flatMap {
-          case mvMinItemRe(c) => Some(c); case _ => None }.distinct.toSeq
-        val maxColsSql = items.flatMap {
-          case mvMaxItemRe(c) => Some(c); case _ => None }.distinct.toSeq
-        items.foreach {
-          case mvSumItemRe(_) | mvAvgItemRe(_) | mvMinItemRe(_) |
-               mvMaxItemRe(_) | mvCountItemRe() => ()
-          case item if groupCols.contains(item) => ()
-          case item => throw new IllegalArgumentException(
-            s"materialized views maintain group columns, COUNT(*), " +
-              s"SUM/AVG(col), and MIN/MAX(col) only; cannot maintain: $item")
-        }
+        val (sumCols, minColsSql, maxColsSql) = mvAggColumns(items, groupCols)
         val mv = MaterializedAgg.create(spark, location, table(srcName),
           groupCols, sumCols, minColsSql, maxColsSql)
         matViews(name) = mv
@@ -1203,6 +1151,29 @@ final class GraftSql(spark: SparkSession) {
       }
     }
     b.execute().toSeq.sorted.toDF("metric", "value")
+  }
+
+  /** The (SUM/AVG, MIN, MAX) source columns of a CREATE MATERIALIZED
+    * VIEW select list, which must be exactly what a view can maintain:
+    * group columns, COUNT(*), SUM/AVG(col) (avg stores its sum +
+    * non-null count pair), MIN/MAX(col) (insert-only fold with
+    * recompute-on-retract) — anything else refuses.
+    */
+  private def mvAggColumns(items: Seq[String], groupCols: Seq[String])
+      : (Seq[String], Seq[String], Seq[String]) = {
+    items.foreach {
+      case mvSumItemRe(_) | mvAvgItemRe(_) | mvMinItemRe(_) |
+           mvMaxItemRe(_) | mvCountItemRe() => ()
+      case item if groupCols.contains(item) => ()
+      case item => throw new IllegalArgumentException(
+        s"materialized views maintain group columns, COUNT(*), " +
+          s"SUM/AVG(col), and MIN/MAX(col) only; cannot maintain: $item")
+    }
+    def sources(pick: PartialFunction[String, String]): Seq[String] =
+      items.collect(pick).distinct
+    (sources { case mvSumItemRe(c) => c; case mvAvgItemRe(c) => c },
+      sources { case mvMinItemRe(c) => c },
+      sources { case mvMaxItemRe(c) => c })
   }
 
   /** Split on top-level commas only: parens nest (function calls) and

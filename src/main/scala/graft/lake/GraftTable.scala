@@ -28,34 +28,41 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
 
   // ---------------------------------------------------------------- read
 
-  private def dfForFiles(snap: Snapshot, files: Seq[AddFile]): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], snap.schema)
-    else {
-      val masked = physicalDfForFiles(snap, files)
-      if (snap.colMap.isEmpty) masked
-      else masked.select(snap.schema.fields.map(f =>
-        col(snap.physicalName(f.name)).as(f.name)).toIndexedSeq: _*)
-    }
-
   /** Log paths are table-root-relative, except shallow-cloned entries
     * which are absolute references into the source table.
     */
   private[lake] def dataPath(p: String): String =
     if (p.startsWith("/")) p else s"$path/$p"
 
-  /** Physical-schema scan of `files`, optionally with `_metadata`
-    * (file_path, row_index) projected as __fp/__ri. Root-relative and
-    * clone-absolute files scan as separate branches so each gets the
-    * right `basePath` for partition-directory inference; `_metadata`
-    * must be projected per branch (it does not survive a union).
+  /** The one snapshot scan: `files` of `s` under their LOGICAL column
+    * names, with deletion-vector masks applied (an anti join on (file,
+    * row position) — deletes cost no rewrite until compaction). `meta`
+    * requests extra columns, appended in this order: [[RowIdCol]], the
+    * stable id (materialized value first, else baseRowId + position —
+    * the read half of row tracking, also the rewrite source that lets
+    * layout ops preserve ids), then `file_path` / `row_index` from
+    * `_metadata` (the DV mark key). With no DVs and no `meta` this is a
+    * bare parquet scan.
+    *
+    * Root-relative and clone-absolute files scan as separate branches
+    * so each gets the right `basePath` for partition-directory
+    * inference; `_metadata` must be projected per branch (it does not
+    * survive a union).
     */
-  private def physicalScan(snap: Snapshot, files: Seq[AddFile],
-                           withMeta: Boolean,
-                           extraCols: Seq[org.apache.spark.sql.types.StructField] = Nil)
-      : DataFrame = {
+  private[graft] def scan(s: Snapshot, files: Seq[AddFile],
+                          meta: Set[String] = Set.empty): DataFrame = {
+    val metaFields = Seq(StructField(RowIdCol, LongType, nullable = true),
+      StructField("file_path", StringType), StructField("row_index", LongType))
+      .filter(f => meta(f.name))
+    if (files.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(s.schema.fields ++ metaFields))
+    val rowIds = meta(RowIdCol)
+    val withMeta = metaFields.nonEmpty || s.dvFiles.nonEmpty
+    val readSchema = StructType(s.physicalSchema.fields ++
+      metaFields.filter(_.name == RowIdCol))
     val (abs, rel) = files.partition(_.path.startsWith("/"))
-    val srcRoot = snap.metadata.map(_.properties).getOrElse(Map.empty)
+    val srcRoot = s.metadata.map(_.properties).getOrElse(Map.empty)
       .get("graft.cloneSource")
     // Partition-directory inference reads the segments BETWEEN
     // basePath and each file, so merged-branch entries (L113 — live
@@ -70,8 +77,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         case _ => base
       }
     def scanGroup(basePath: Option[String], fs: Seq[AddFile]): DataFrame = {
-      val reader = spark.read.schema(org.apache.spark.sql.types.StructType(
-        snap.physicalSchema.fields ++ extraCols))
+      val reader = spark.read.schema(readSchema)
       val r = basePath.fold(reader)(b => reader.option("basePath", b))
         .parquet(fs.map(f => dataPath(f.path)): _*)
       if (!withMeta) r
@@ -86,29 +92,42 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
           f.path.stripPrefix(sr + "/") else "")))
       .toSeq.sortBy(_._1.getOrElse(""))
       .map { case (b, fs) => scanGroup(b, fs) }
-    (relGroups ++ absGroups).reduce(_ unionByName _)
-  }
-
-  private[lake] def physicalDfForFiles(snap: Snapshot, files: Seq[AddFile]): DataFrame =
-    if (snap.dvFiles.isEmpty) physicalScan(snap, files, withMeta = false)
-    else {
-      // merge-on-read: mask rows marked by deletion vectors via an
-      // anti join on (file, row position) — the scan itself is
-      // untouched, so deletes cost no rewrite until compaction
-      val dv = DvSidecar.read(spark, snap.dvFiles.map(dataPath))
-        .select(col("file_path").as("__dv_fp"), col("row_index").as("__dv_ri"))
-      physicalScan(snap, files, withMeta = true)
-        .join(dv, col("__fp") === col("__dv_fp") && col("__ri") === col("__dv_ri"),
+    val raw = (relGroups ++ absGroups).reduce(_ unionByName _)
+    if (!withMeta && s.colMap.isEmpty) return raw
+    val live =
+      if (s.dvFiles.isEmpty) raw
+      else {
+        val dv = DvSidecar.read(spark, s.dvFiles.map(dataPath))
+          .select(col("file_path").as("__dv_fp"), col("row_index").as("__dv_ri"))
+        raw.join(dv, col("__fp") === col("__dv_fp") && col("__ri") === col("__dv_ri"),
           "left_anti")
-        .drop("__fp", "__ri")
-    }
-
-  /** Scan an explicit file subset of a snapshot (column mapping, DV
-    * masking, and clone-absolute paths all handled) — the streaming
-    * source builds its micro-batches through this.
-    */
-  private[graft] def dfFor(snap: Snapshot, files: Seq[AddFile]): DataFrame =
-    dfForFiles(snap, files)
+      }
+    val resolved =
+      if (!rowIds) live
+      else {
+        // Spark-generated part files carry a task UUID, so the bare file
+        // name is a safe unique join key against _metadata.file_path (no
+        // URI-encoding hazards — names are plain ASCII); guard anyway.
+        // The base side is a broadcast of (file name → base) pairs, KBs
+        // of metadata riding the same join shape the DV mask uses.
+        import spark.implicits._
+        val entries = files.flatMap(f => f.baseRowId.map(b =>
+          (Paths.get(f.path).getFileName.toString, b)))
+        require(entries.map(_._1).distinct.size == entries.size,
+          s"duplicate data-file names in $path; row-id resolve would be ambiguous")
+        live.withColumn("__rt_name", element_at(split(col("__fp"), "/"), -1))
+          .join(broadcast(entries.toDF("__rt_name", "__rt_base")), Seq("__rt_name"), "left")
+          .withColumn(RowIdCol, coalesce(col(RowIdCol), col("__rt_base") + col("__ri")))
+      }
+    val logicalCols =
+      if (s.colMap.isEmpty) s.schema.fieldNames.toSeq.map(col)
+      else s.schema.fields.toSeq.map(f => col(s.physicalName(f.name)).as(f.name))
+    resolved.select(logicalCols ++ metaFields.map(_.name).map {
+      case "file_path" => col("__fp").as("file_path")
+      case "row_index" => col("__ri").as("row_index")
+      case c => col(c)
+    }: _*)
+  }
 
   /** Snapshot for a PUBLIC read: one resolution, with the attached-
     * table auto-sync staleness probe applied — shared by every read
@@ -132,22 +151,73 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     if (synced) snapshot else s0
   }
 
-  def toDF: DataFrame = {
-    // ONE snapshot resolution per read: `s` IS the current snapshot,
-    // so the policy extracts from it directly instead of re-listing
-    // the log through `currentPolicy` (r15 profiling fix); the
-    // auto-sync probe reuses it and only a real sync re-resolves
-    val s = readSnapshot()
-    val p = policyOf(s)
-    governed(dfForFiles(s, policyPruned(p, s, s.activeFiles)), p)
+  /** The one governed snapshot read, under every public read surface
+    * (path API, relation, catalog incl. metadata columns, time
+    * travel, DFP/bloom reads):
+    *   - ONE snapshot resolution: the live read takes [[readSnapshot]]
+    *     (auto-sync probe, so a predicate read never serves older data
+    *     than an unfiltered one) and its policy from that same
+    *     snapshot; a pinned `version` is governed by the CURRENT
+    *     policy (L114 — time travel is not a policy bypass);
+    *   - `pred` prunes files through partition values, footer stats
+    *     and blooms — the pinned snapshot's own stats and bloom
+    *     pointers describe it exactly — except when it references a
+    *     MASKED column: stats describe RAW values while the user
+    *     queries the masked view, so skipping on them would silently
+    *     drop files whose masked rows match (r14 advisory);
+    *   - the row filter prunes files too, then [[governed]] applies
+    *     the exact filter and the masks.
+    * `pred` itself is NOT applied to rows: callers filter (the relation
+    * re-applies pushed filters; row-id reads filter after the rename).
+    * `meta` may ask for [[RowIdCol]], `_graft_file` (the log-recorded
+    * path, the row-level group key) and `_graft_pos` (the row's index
+    * in its file); they are appended after the data columns.
+    */
+  private[graft] def read(pred: Option[Column], version: Option[Long] = None,
+                          meta: Set[String] = Set.empty): DataFrame = {
+    val s = version.fold(readSnapshot())(snapshotAt)
+    val p = if (version.isEmpty) policyOf(s) else currentPolicy
+    pred.foreach(recordPredicate(s, _))
+    require(!meta(RowIdCol) || rowTrackingOn(s),
+      s"row tracking is not enabled on $path (set graft.rowTracking=true at create)")
+    val skipping = pred.filterNot(q => p.maskedCols.nonEmpty && org.apache.spark.sql
+      .GraftSqlShims.expression(q).references.exists(a => p.maskedCols(a.name)))
+    val files = policyPruned(p, s, skipping.fold(s.activeFiles)(q =>
+      bloomPrune(s, candidates(s, s.activeFiles, q), q)))
+    val provenance = meta("_graft_file") || meta("_graft_pos")
+    val out = governed(scan(s, files, meta.filter(_ == RowIdCol) ++
+      (if (provenance) Set("file_path", "row_index") else Set.empty)), p)
+    if (!provenance) out
+    else {
+      val withPos =
+        if (meta("_graft_pos")) out.withColumn("_graft_pos", col("row_index"))
+        else out
+      val withFile =
+        if (!meta("_graft_file")) withPos
+        else {
+          // file name → log-recorded path (names carry a writer UUID and
+          // are unique per table; the row-id resolve relies on the same
+          // invariant)
+          import spark.implicits._
+          val names = files.map(f => (Paths.get(f.path).getFileName.toString, f.path))
+          withPos
+            .withColumn("__pv_name", element_at(split(col("file_path"), "/"), -1))
+            .join(broadcast(names.toDF("__pv_name", "__pv_rel")), Seq("__pv_name"), "left")
+            .withColumn("_graft_file", col("__pv_rel"))
+            .drop("__pv_name", "__pv_rel")
+        }
+      withFile.drop("file_path", "row_index")
+    }
   }
+
+  def toDF: DataFrame = read(None)
 
   /** Ungoverned full read — maintenance/validation/stats/CDC only
     * (L114): a row filter must HIDE rows, never let a rewrite delete
     * them; every public surface goes through [[governed]] instead.
     */
   private[graft] def rawDF: DataFrame =
-    { val s = snapshot; dfForFiles(s, s.activeFiles) }
+    { val s = snapshot; scan(s, s.activeFiles) }
 
   // ------------------------------------------------- row tracking
 
@@ -163,10 +233,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * baseRowId + position-in-file, files produced by layout rewrites
     * (OPTIMIZE / ZORDER compaction) carry the materialized
     * [[RowIdCol]] column instead — so compaction reshuffling rows
-    * across files never changes any row's id. The base-id side of the
-    * resolve is a broadcast of (file name → base) pairs, KBs of
-    * metadata riding the same `_metadata.file_path` join shape the
-    * deletion-vector mask uses.
+    * across files never changes any row's id.
     */
   def toDFWithRowIds: DataFrame = readWhereWithRowIds(None)
 
@@ -175,79 +242,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * id — the rowIds reader path keeps the same file skipping as the
     * plain one. The caller still applies the full predicate.
     */
-  def readWhereWithRowIds(predicate: Option[Column]): DataFrame = {
-    val s = readSnapshot() // auto-sync probe: same freshness as toDF
-    predicate.foreach(recordPredicate(s, _))
-    require(rowTrackingOn(s),
-      s"row tracking is not enabled on $path (set graft.rowTracking=true at create)")
-    val pol = policyOf(s)
-    // footer/bloom stats describe RAW values; a predicate over a
-    // MASKED column arrives in masked space, so raw-stats skipping
-    // would silently drop files whose masked rows match (r14
-    // advisory — the relation layer pushes filters straight in, so
-    // the guard must live HERE, mirroring readWhere's). Skipping
-    // files never changes a surviving row's id either way.
-    val maskedPred = pol.maskedCols.nonEmpty && predicate.exists(p =>
-      org.apache.spark.sql.GraftSqlShims.expression(p).references
-        .exists(a => pol.maskedCols(a.name)))
-    val files = predicate match {
-      case Some(p) if !maskedPred => policyPruned(pol, s, bloomPrune(s,
-        Pruning.prune(logicalFiles(s), s.schema, s.partitionColumns,
-          shredded(s, p), generatedExprs(s)), p))
-      case _ => policyPruned(pol, s, s.activeFiles)
-    }
-    // the caller still applies the full predicate post-governed
-    governed(rowIdScan(s, files), pol).withColumnRenamed(RowIdCol, "row_id")
-  }
-
-  /** Scan `files` with the stable-id column resolved (materialized
-    * value first, else base + row position), DV masks applied, and
-    * physical names mapped back to logical — the read half of row
-    * tracking, also the rewrite source that lets layout ops preserve
-    * ids.
-    */
-  private def rowIdScan(s: Snapshot, files: Seq[AddFile],
-                        keepMeta: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val extra = org.apache.spark.sql.types.StructField(RowIdCol,
-      org.apache.spark.sql.types.LongType, nullable = true)
-    val metaFields = if (!keepMeta) Nil else Seq(
-      org.apache.spark.sql.types.StructField("file_path",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("row_index",
-        org.apache.spark.sql.types.LongType))
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        org.apache.spark.sql.types.StructType(
-          (s.schema.fields :+ extra) ++ metaFields))
-    val scan0 = physicalScan(s, files, withMeta = true, extraCols = Seq(extra))
-    val scan = if (s.dvFiles.isEmpty) scan0 else {
-      val dv = DvSidecar.read(spark, s.dvFiles.map(dataPath))
-        .select(col("file_path").as("__dv_fp"), col("row_index").as("__dv_ri"))
-      scan0.join(dv,
-        col("__fp") === col("__dv_fp") && col("__ri") === col("__dv_ri"),
-        "left_anti")
-    }
-    // Spark-generated part files carry a task UUID, so the bare file
-    // name is a safe unique join key against _metadata.file_path (no
-    // URI-encoding hazards — names are plain ASCII); guard anyway.
-    val entries = files.flatMap(f => f.baseRowId.map(b =>
-      (Paths.get(f.path).getFileName.toString, b)))
-    require(entries.map(_._1).distinct.size == entries.size,
-      s"duplicate data-file names in $path; row-id resolve would be ambiguous")
-    val baseDf = broadcast(entries.toDF("__rt_name", "__rt_base"))
-    val joined = scan
-      .withColumn("__rt_name", element_at(split(col("__fp"), "/"), -1))
-      .join(baseDf, Seq("__rt_name"), "left")
-      .withColumn(RowIdCol,
-        coalesce(col(RowIdCol), col("__rt_base") + col("__ri")))
-    val logicalCols =
-      if (s.colMap.isEmpty) s.schema.fieldNames.toSeq.map(col)
-      else s.schema.fields.toSeq.map(f => col(s.physicalName(f.name)).as(f.name))
-    val metaCols = if (!keepMeta) Nil
-      else Seq(col("__fp").as("file_path"), col("__ri").as("row_index"))
-    joined.select(logicalCols ++ (col(RowIdCol) +: metaCols): _*)
-  }
+  def readWhereWithRowIds(predicate: Option[Column]): DataFrame =
+    read(predicate, meta = Set(RowIdCol)).withColumnRenamed(RowIdCol, "row_id")
 
   /** Delta-parity guard for row-tracked update-all MERGE: several
     * source rows matching one target key would each inherit the SAME
@@ -287,7 +283,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * plain masked read.
     */
   private def layoutRewriteSource(s: Snapshot, files: Seq[AddFile]): DataFrame =
-    if (!rowTrackingOn(s)) dfForFiles(s, files) else rowIdScan(s, files)
+    scan(s, files, if (rowTrackingOn(s)) Set(RowIdCol) else Set.empty)
 
   /** Reserve contiguous id ranges for a commit's fresh files from the
     * snapshot high-water mark. Files without numRecords stats stay
@@ -325,13 +321,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * Governed by the CURRENT policy (L114) — time travel is not a
     * policy bypass.
     */
-  def toDFAt(v: Long): DataFrame = {
-    val p = currentPolicy; val s = snapshotAt(v)
-    governed(dfForFiles(s, policyPruned(p, s, s.activeFiles)), p)
-  }
+  def toDFAt(v: Long): DataFrame = read(None, Some(v))
 
   private[graft] def rawDFAt(v: Long): DataFrame =
-    { val s = snapshotAt(v); dfForFiles(s, s.activeFiles) }
+    { val s = snapshotAt(v); scan(s, s.activeFiles) }
 
   /** Timestamp-based time travel. */
   def toDFAsOfTimestamp(tsMillis: Long): DataFrame =
@@ -719,8 +712,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   private[lake] def currentPolicy: GraftTable.Policy =
     if (!log.exists) GraftTable.Policy(None, Nil) else policyOf(snapshot)
 
-  private[lake] def maskedColumnSet: Set[String] = currentPolicy.maskedCols
-
   /** The principal a policy's `current_user()` binds to: the graft
     * session principal when set, else the Spark user. Session-scoped
     * (`spark.conf`), so two `newSession()` handles of one JVM read
@@ -752,26 +743,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     org.apache.spark.sql.GraftSqlShims.column(rewritten)
   }
 
-  /** Apply the current policy to a read: the row filter evaluates on
-    * RAW values (visibility decisions run on true data — the
-    * Databricks row-filter convention), then every mask evaluates
-    * against RAW values in ONE projection, so a mask referencing
-    * another masked column sees the original and mask order can never
-    * matter. Mask output casts to the column's declared type — the
-    * schema is policy-invariant. Purely a plan transform: filters and
-    * codegen'd expressions ride whole-stage codegen, pruning happened
-    * before on raw stats (sound — policy only narrows rows).
-    *
-    * Scope: every PUBLIC read surface (path API, relation, catalog,
-    * SQL, streaming batches, time travel, DFP/bloom/cost-based reads,
-    * and — since r15 — `TABLE CHANGES` / batch + streaming CDF /
-    * [[changesBetween]]). Maintenance stays RAW by construction — DML
-    * rewrites, OPTIMIZE/ZORDER, CHECK/NOT-NULL validation, ANALYZE
-    * stats, and CDC staging read through [[rawDF]]/[[rawChangeFeed]]
-    * or the physical/file-level paths, so a policy can never silently
-    * DELETE the data it hides. External Delta/Iceberg exports REFUSE
-    * on governed tables instead (raw egress has no enforcement point).
-    */
   /** Policy-driven FILE pruning: the row filter evaluates on RAW
     * values, so it can skip files through the same footer-stats /
     * partition pruning stack any predicate can — at 100 TB a policy
@@ -784,20 +755,34 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
                            files: Seq[AddFile]): Seq[AddFile] =
     p.filter match {
       case Some(f) if files.nonEmpty =>
-        scala.util.Try(Pruning.prune(files, s.schema, s.partitionColumns,
-          shredded(s, policyColumn(f)), generatedExprs(s))).getOrElse(files)
+        scala.util.Try(candidates(s, files, policyColumn(f))).getOrElse(files)
       case _ => files
     }
-
-  /** Time-travel convenience: pinned-snapshot callers prune by the
-    * CURRENT policy against the pinned snapshot's file stats.
-    */
-  private def policyPruned(s: Snapshot, files: Seq[AddFile]): Seq[AddFile] =
-    policyPruned(currentPolicy, s, files)
 
   private[graft] def governed(df: DataFrame): DataFrame =
     governed(df, currentPolicy)
 
+  /** Apply the current policy to a read: the row filter evaluates on
+    * RAW values (visibility decisions run on true data — the
+    * Databricks row-filter convention), then every mask evaluates
+    * against RAW values in ONE projection, so a mask referencing
+    * another masked column sees the original and mask order can never
+    * matter. Mask output casts to the column's declared type — the
+    * schema is policy-invariant. Purely a plan transform: filters and
+    * codegen'd expressions ride whole-stage codegen, pruning happened
+    * before on raw stats (sound — policy only narrows rows).
+    *
+    * Scope: every PUBLIC read surface — [[read]] serves the path API,
+    * relation, catalog (metadata-column reads included), SQL, time
+    * travel and DFP/bloom/cost-based reads; streaming batches and —
+    * since r15 — `TABLE CHANGES` / batch + streaming CDF /
+    * [[changesBetween]] call it directly. Maintenance stays RAW by
+    * construction — DML rewrites, OPTIMIZE/ZORDER, CHECK/NOT-NULL
+    * validation, ANALYZE stats, and CDC staging read through
+    * [[rawDF]]/[[rawChangeFeed]] or [[scan]], so a policy can never
+    * silently DELETE the data it hides. External Delta/Iceberg exports REFUSE
+    * on governed tables instead (raw egress has no enforcement point).
+    */
   private[graft] def governed(df: DataFrame,
                               p: GraftTable.Policy): DataFrame = {
     val filtered = p.filter.map(e => df.filter(policyColumn(e))).getOrElse(df)
@@ -897,23 +882,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * partition value may satisfy `predicate` are scanned; the full
     * predicate is still applied, so this is pure I/O reduction.
     */
-  def readWhere(predicate: Column): DataFrame = {
-    val s = readSnapshot() // auto-sync probe: same freshness as toDF
-    recordPredicate(s, predicate)
-    // a predicate over a MASKED column cannot drive stats/bloom
-    // pruning (footer stats describe RAW values, the user queries the
-    // masked view) — scan all active files and filter post-mask; the
-    // policy-free path keeps the full skipping stack
-    val p = policyOf(s)
-    val masked = p.maskedCols
-    if (masked.nonEmpty && org.apache.spark.sql.GraftSqlShims
-        .expression(predicate).references.exists(a => masked(a.name)))
-      return governed(dfForFiles(s, policyPruned(p, s, s.activeFiles)), p)
-        .filter(predicate)
-    val kept = Pruning.prune(logicalFiles(s), s.schema, s.partitionColumns, shredded(s, predicate), generatedExprs(s))
-    governed(dfForFiles(s, policyPruned(p, s, bloomPrune(s, kept, predicate))), p)
-      .filter(predicate)
-  }
+  def readWhere(predicate: Column): DataFrame =
+    read(Some(predicate)).filter(predicate)
 
   /** Dynamic file pruning (Delta DFP parity, API-level): when a
     * selective dimension frame drives an equi-join into this table,
@@ -945,36 +915,22 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   def readDynamicallyPrunedMulti(dim: DataFrame, keys: Seq[String],
       maxKeys: Int = 10000, versionAsOf: Option[Long] = None): DataFrame = {
     require(keys.nonEmpty, "dynamic pruning needs at least one key column")
-    // auto-sync probe on head reads only — a pinned VERSION AS OF is a
-    // historical state and must not trigger (or follow) a sync
-    val s = versionAsOf.map(snapshotAt).getOrElse(readSnapshot())
-    // join keys are clustering signals too (L120)
-    keys.filter(s.schema.fieldNames.contains) match {
-      case Nil =>
-      case ks => if (s.metadata.exists(
-          _.properties.get("graft.clusterAuto").contains("true")))
-        PredicateStats.record(path, ks)
-    }
+    val s = versionAsOf.fold(snapshot)(snapshotAt)
     keys.foreach(k =>
       require(s.schema.fieldNames.contains(k), s"no such column: $k"))
+    // join keys are clustering signals too (L120): [[read]] records the
+    // IN / range conjuncts built here
     val preds = keys.map { key =>
       val vals = dim.select(col(key)).distinct().limit(maxKeys + 1)
         .collect().map(_.get(0)).filter(_ != null)
-      if (vals.isEmpty) return governed(dfForFiles(s, Nil))
+      if (vals.isEmpty) return read(Some(lit(false)), versionAsOf)
       if (vals.length <= maxKeys) col(key).isin(vals.toIndexedSeq: _*)
       else {
         val r = dim.agg(min(col(key)), max(col(key))).head()
         col(key) >= lit(r.get(0)) && col(key) <= lit(r.get(1))
       }
     }
-    val pred = preds.reduce(_ && _)
-    // a masked join key invalidates file skipping on raw stats — fall
-    // back to a governed full scan (the caller's join still applies
-    // the exact predicate)
-    if (keys.exists(maskedColumnSet)) return governed(dfForFiles(s, s.activeFiles))
-    val kept = Pruning.prune(logicalFiles(s), s.schema, s.partitionColumns,
-      pred, generatedExprs(s))
-    governed(dfForFiles(s, bloomPrune(s, kept, pred)))
+    read(Some(preds.reduce(_ && _)), versionAsOf)
   }
 
   /** Runtime bloom semi-join filter: where [[readDynamicallyPruned]]
@@ -1003,14 +959,11 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       case other => throw new IllegalArgumentException(
         s"bloom join filters support integral/string keys, not $other")
     }
-    if (maskedColumnSet(key)) return governed(dfForFiles(s, s.activeFiles))
     val keys = dim.select(col(key)).na.drop().distinct()
     val n = keys.count()
-    if (n == 0) return governed(dfForFiles(s, Nil))
+    if (n == 0) return read(Some(lit(false)))
     val bounds = keys.agg(min(col(key)), max(col(key))).head()
     val rangePred = col(key) >= lit(bounds.get(0)) && col(key) <= lit(bounds.get(1))
-    val kept = Pruning.prune(logicalFiles(s), s.schema, s.partitionColumns,
-      rangePred, generatedExprs(s))
     val bf = keys.rdd.treeAggregate(BloomFilter.create(math.max(1000L, n), fpp))(
       (b, r) => {
         if (integral) b.putLong(r.get(0).asInstanceOf[Number].longValue())
@@ -1021,7 +974,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)
     import org.apache.spark.sql.GraftSqlShims
-    governed(dfForFiles(s, kept)).filter(GraftSqlShims.column(
+    read(Some(rangePred)).filter(GraftSqlShims.column(
       graft.functions.BloomMightContain(
         GraftSqlShims.expression(col(key)), bos.toByteArray)))
   }
@@ -1052,7 +1005,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val keys = dim.select(col(key)).na.drop().distinct()
     val agg = keys.agg(count(lit(1)), min(col(key)), max(col(key))).head()
     val n = agg.getLong(0)
-    if (n == 0) return ("empty", governed(dfForFiles(s, Nil)))
+    if (n == 0) return ("empty", read(Some(lit(false))))
     def asD(v: Any): Option[Double] = v match {
       case x: Number => Some(x.doubleValue())
       case _ => None
@@ -1076,31 +1029,38 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       fpp: Double = 0.01, minCutFraction: Double = 0.5): DataFrame =
     readCostBasedTagged(dim, key, maxKeys, fpp, minCutFraction)._2
 
-  /** Active files with stats/partition keys remapped to logical column
-    * names so pruning can match predicates written against the current
-    * (possibly renamed) schema. Identity when no mapping exists.
+  /** The one file selector: the entries of `files` (log entries of
+    * `s`) that partition values, footer min/max and generated-column
+    * bounds cannot rule out for `pred`. Conservative — a kept file may
+    * hold no match; callers still apply the predicate to rows. Stats
+    * and partition values are matched under LOGICAL column names, so a
+    * predicate written against the current (possibly renamed) schema
+    * prunes a column-mapped table too; the entries come back as logged.
     */
-  private def logicalFiles(s: Snapshot): Seq[AddFile] =
-    if (s.colMap.isEmpty) s.activeFiles
-    else {
-      val rev = s.colMap.map(_.swap)
-      def rekey[V](m: Map[String, V]): Map[String, V] =
-        m.map { case (k, v) => rev.getOrElse(k, k) -> v }
-      s.activeFiles.map { a =>
-        a.copy(
-          partitionValues = rekey(a.partitionValues),
-          stats = a.stats.map(st => st.copy(
-            minValues = rekey(st.minValues),
-            maxValues = rekey(st.maxValues),
-            nullCounts = rekey(st.nullCounts))))
-      }
-    }
+  private[graft] def candidates(s: Snapshot, files: Seq[AddFile],
+                                pred: Column): Seq[AddFile] = {
+    val rev = s.colMap.map(_.swap)
+    def rekey[V](m: Map[String, V]): Map[String, V] =
+      m.map { case (k, v) => rev.getOrElse(k, k) -> v }
+    val logical =
+      if (rev.isEmpty) files
+      else files.map(a => a.copy(
+        partitionValues = rekey(a.partitionValues),
+        stats = a.stats.map(st => st.copy(
+          minValues = rekey(st.minValues),
+          maxValues = rekey(st.maxValues),
+          nullCounts = rekey(st.nullCounts)))))
+    val kept = Pruning.prune(logical, s.schema, s.partitionColumns,
+      shredded(s, pred), generatedExprs(s))
+    if (rev.isEmpty) kept
+    else { val paths = kept.map(_.path).toSet; files.filter(f => paths(f.path)) }
+  }
 
   /** Files that survive pruning for `predicate` (for tests/metrics). */
   def pruneFiles(predicate: Column): (Int, Int) = {
     val s = snapshot
-    val kept = Pruning.prune(logicalFiles(s), s.schema, s.partitionColumns, shredded(s, predicate), generatedExprs(s))
-    (bloomPrune(s, kept, predicate).size, s.activeFiles.size)
+    (bloomPrune(s, candidates(s, s.activeFiles, predicate), predicate).size,
+      s.activeFiles.size)
   }
 
   // ------------------------------------------------- bloom file skipping
@@ -1118,7 +1078,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     import org.apache.spark.util.sketch.BloomFilter
     val s = snapshot
     require(s.schema.fieldNames.contains(column), s"no such column: $column")
-    val phys = s.physicalName(column)
     val dt = s.schema(column).dataType
     import org.apache.spark.sql.types._
     val put: (BloomFilter, Any) => Unit = dt match {
@@ -1134,8 +1093,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val pathByAbs = s.activeFiles.map(f =>
       Paths.get(dataPath(f.path)).toAbsolutePath.normalize.toString -> f.path).toMap
     val bc = spark.sparkContext.broadcast(pathByAbs)
-    val perFile = physicalScan(s, s.activeFiles, withMeta = true)
-      .select(col("__fp"), col(phys)).rdd
+    val perFile = scan(s, s.activeFiles, Set("file_path"))
+      .select(col("file_path"), col(column)).rdd
       .flatMap { r =>
         if (r.isNullAt(1)) None
         else {
@@ -1285,7 +1244,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         stamp("append", Map(s"$pfx.deltas" -> deltas))
       } else {
         val dirty = feed.select(col(idCol).cast("long").as("id")).distinct()
-        val cur = dfForFiles(s, s.activeFiles)
+        val cur = scan(s, s.activeFiles)
         val fresh = cur.join(dirty, cur(idCol).cast("long") === dirty("id"),
           "left_semi")
         val rel = writeConsolidated(dirty, fresh)
@@ -1349,7 +1308,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         rel
       }
     }
-    val df = dfForFiles(s, s.activeFiles)
+    val df = scan(s, s.activeFiles)
     val n = df.count()
     require(n > 0, "cannot build a PQ index on an empty table")
     val minId = df.agg(min(col(idCol)).cast("long")).head.getLong(0)
@@ -1415,7 +1374,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         rel
       }
     }
-    val df = dfForFiles(s, s.activeFiles)
+    val df = scan(s, s.activeFiles)
     val n = df.count()
     require(n > 0, "cannot build an SQ index on an empty table")
     val minId = df.agg(min(col(idCol)).cast("long")).head.getLong(0)
@@ -1519,7 +1478,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         rel
       }
     }
-    val df = dfForFiles(s, s.activeFiles)
+    val df = scan(s, s.activeFiles)
     val n = df.count()
     require(n > 0, "cannot build an IVF index on an empty table")
     val k = graft.operators.IvfIndex.kFor(n)
@@ -1625,7 +1584,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       writeBands(rel)
       rel
     }
-    val df = dfForFiles(s, s.activeFiles)
+    val df = scan(s, s.activeFiles)
     val n = df.count()
     require(n > 0, "cannot build a MinHash index on an empty table")
     val rel = s"_graft_minhash/$textCol-${UUID.randomUUID()}"
@@ -1698,7 +1657,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
           .unionByName(postingsOf(fresh)), rel)
       rel
     }
-    val df = dfForFiles(s, s.activeFiles)
+    val df = scan(s, s.activeFiles)
     val n = df.count()
     require(n > 0, "cannot build a text index on an empty table")
     val rel = s"_graft_text/$textCol-${UUID.randomUUID()}"
@@ -1995,46 +1954,21 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   private[graft] def rowLevelGeneratedExprs(s: Snapshot): Map[String, String] =
     generatedExprs(s)
 
-  /** Stats/partition-pruned candidate files for a row-level rewrite —
-    * the same [[Pruning]] pass the CoW DELETE/UPDATE plan with, so the
-    * native path starts from the identical file superset before
-    * runtime group filtering narrows it to exactly-matching files.
-    */
-  private[graft] def rowLevelCandidates(s: Snapshot,
-      cond: Option[Column]): Seq[AddFile] =
-    cond.map(c =>
-        Pruning.prune(logicalFiles(s), s.schema, s.partitionColumns,
-          shredded(s, c), generatedExprs(s)))
-      .getOrElse(logicalFiles(s))
-
-  /** Commit a native row-level rewrite: executor tasks already staged
-    * the replacement files under `stagingRel`; validate the staged
-    * rows against CHECK / NOT NULL constraints, regenerate generated
-    * columns (derived state is recomputed, the same contract as the
-    * DataFrame UPDATE's regeneration — at the cost of one restage of
-    * the delta when the table declares generation expressions), then
-    * commit removes+adds with the standard optimistic conflict check.
-    * No CDC sidecar is staged: the change feed's exact per-version
-    * diff covers row-level commits (insert/delete rows), while
-    * update_pre/postimage tagging remains on the DataFrame DML paths.
-    */
   /** Validate+absorb the replacement files a row-level write's tasks
     * staged: CHECK / NOT NULL constraints run over the staged rows,
     * and when the table declares generated columns the derived state
     * recomputes from its expressions and the corrected frame RESTAGES
     * (partition directories must follow regenerated values too).
     * Shared by the group-based (CoW) and delta-based (MoR) commits.
-    */
-  /** Returns (absorbed AddFiles, whether a generated-column RESTAGE
-    * ran). Tables with generated partition columns normally pay a
-    * full read+rewrite of the staged rows to recompute the derived
-    * values — but an UPDATE/MERGE that never touched the source or
-    * generated columns passes both through unchanged, so the commit
-    * first PROVES consistency with one column-pruned scan over the
-    * staged files (derived partition value vs the generation
-    * expression, null-safe) and absorbs them as-is when they match.
-    * O(changed rows) read instead of O(changed rows) read+write; the
-    * restage only runs when an assignment actually broke derivation.
+    * Returns (absorbed AddFiles, whether a generated-column RESTAGE
+    * ran). The restage is a full read+rewrite of the staged rows, but
+    * an UPDATE/MERGE that never touched the source or generated
+    * columns passes both through unchanged, so the commit first PROVES
+    * consistency with one column-pruned scan over the staged files
+    * (derived partition value vs the generation expression, null-safe)
+    * and absorbs them as-is when they match: O(changed rows) read
+    * instead of O(changed rows) read+write; the restage only runs when
+    * an assignment actually broke derivation.
     */
   private def validateAndAbsorbStaged(s: Snapshot, staging: Path,
       committedRels: Set[String]): (Seq[AddFile], Boolean) = {
@@ -2089,6 +2023,17 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     }
   }
 
+  /** Commit a native row-level rewrite: executor tasks already staged
+    * the replacement files under `stagingRel`; validate the staged
+    * rows against CHECK / NOT NULL constraints, regenerate generated
+    * columns (derived state is recomputed, the same contract as the
+    * DataFrame UPDATE's regeneration — at the cost of one restage of
+    * the delta when the table declares generation expressions), then
+    * commit removes+adds with the standard optimistic conflict check.
+    * No CDC sidecar is staged: the change feed's exact per-version
+    * diff covers row-level commits (insert/delete rows), while
+    * update_pre/postimage tagging remains on the DataFrame DML paths.
+    */
   private[graft] def rowLevelCommitReplace(s: Snapshot, opName: String,
       stagingRel: String, removed: Seq[AddFile],
       committedRels: Set[String]): Map[String, String] = {
@@ -2352,62 +2297,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   /** Transaction cleanup: remove a shadow (or staged-create) dir. */
   private[lake] def deleteTransactionDir(dir: String): Unit =
     deleteRecursively(Paths.get(dir))
-
-  /** Snapshot read with the DSv2 metadata columns appended — what the
-    * V1 scan bridge serves when a query selects `_graft_file` (the
-    * log-recorded file path, the row-level group key) or
-    * `_graft_row_id`. DV masking and column mapping match the plain
-    * read; the file name→log path resolve is the same bounded
-    * broadcast shape as the row-tracking base resolve.
-    */
-  private[graft] def readWithProvenance(pred: Option[Column],
-      wantFile: Boolean, wantRowId: Boolean,
-      wantPos: Boolean = false): DataFrame = {
-    val s = snapshot
-    val files = pred.map(p => Pruning.prune(logicalFiles(s), s.schema,
-      s.partitionColumns, shredded(s, p), generatedExprs(s))).getOrElse(s.activeFiles)
-    val base =
-      if (wantRowId) rowIdScan(s, files, keepMeta = true)
-        .withColumnRenamed(RowIdCol, "_graft_row_id")
-      else {
-        // physical scan + DV mask with file_path kept, logical rename
-        val scan0 = physicalScan(s, files, withMeta = true)
-        val masked =
-          if (s.dvFiles.isEmpty) scan0
-          else {
-            val dv = DvSidecar.read(spark, s.dvFiles.map(dataPath))
-              .select(col("file_path").as("__dv_fp"),
-                col("row_index").as("__dv_ri"))
-            scan0.join(dv,
-              col("__fp") === col("__dv_fp") && col("__ri") === col("__dv_ri"),
-              "left_anti")
-          }
-        masked.select((s.schema.fields.map(f =>
-          col(s.physicalName(f.name)).as(f.name)) ++
-          Seq(col("__fp").as("file_path"), col("__ri").as("row_index")))
-          .toIndexedSeq: _*)
-      }
-    val withPos =
-      if (wantPos) base.withColumn("_graft_pos", col("row_index"))
-      else base
-    val out =
-      if (!wantFile) withPos.drop("file_path", "row_index")
-      else {
-        // file name → log-recorded path (names carry a writer UUID and
-        // are unique per table; the row-tracking resolve relies on the
-        // same invariant)
-        import spark.implicits._
-        val names = files.map(f =>
-          (Paths.get(f.path).getFileName.toString, f.path))
-        val nameDf = broadcast(names.toDF("__pv_name", "__pv_rel"))
-        withPos
-          .withColumn("__pv_name", element_at(split(col("file_path"), "/"), -1))
-          .join(nameDf, Seq("__pv_name"), "left")
-          .withColumn("_graft_file", col("__pv_rel"))
-          .drop("__pv_name", "__pv_rel", "file_path", "row_index")
-      }
-    pred.map(out.filter).getOrElse(out)
-  }
 
   /** Commit with optimistic write-write conflict detection: when the
     * mutation removes (or, via `readPaths`, depends on) files, any
@@ -3081,7 +2970,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val old = Cbo.tableStats(this)
     if (old.isEmpty) { computeStats(); return }
     val cols = s.schema.fieldNames.toSeq.take(statsMaxColumns).filter(old.contains)
-    val batch = dfForFiles(s, adds)
+    val batch = scan(s, adds)
     val dRow = batch.agg(lit(1).as("__one"),
       cols.map(c => countDistinct(col(c)).as(s"d_$c")): _*).head()
     val addRows = adds.flatMap(_.stats.map(_.numRecords)).sum
@@ -3577,16 +3466,16 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
             .toIndexedSeq: _*)
         } else if (AppendOps.contains(op) && removesDC.isEmpty && !dvChange &&
             addsDC.nonEmpty)
-          align(dfForFiles(snapAt, addsDC), snapAt)
+          align(scan(snapAt, addsDC), snapAt)
             .withColumn("_change_type", lit("insert"))
         else if (addsDC.isEmpty && removesDC.isEmpty && !dvChange)
           emptyChanges(s)
         else {
           // exact per-version diff on current-schema columns
           val cur = s.schema.fieldNames.map(col).toIndexedSeq
-          val before = align(dfForFiles(snapBefore, snapBefore.activeFiles),
+          val before = align(scan(snapBefore, snapBefore.activeFiles),
             snapBefore).select(cur: _*)
-          val after = align(dfForFiles(snapAt, snapAt.activeFiles), snapAt)
+          val after = align(scan(snapAt, snapAt.activeFiles), snapAt)
             .select(cur: _*)
           after.exceptAll(before).withColumn("_change_type", lit("insert"))
             .unionByName(before.exceptAll(after)
@@ -4019,7 +3908,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     */
   def delete(cond: Column): Map[String, String] = {
     val s = snapshot
-    val candidates = Pruning.prune(logicalFiles(s), s.schema, s.partitionColumns, shredded(s, cond), generatedExprs(s))
+    val candidates = this.candidates(s, s.activeFiles, cond)
     if (candidates.isEmpty) {
       commitAndCheckpoint(Seq(info("DELETE", metrics = Map("numRemovedFiles" -> "0"))))
       return Map("numRemovedFiles" -> "0")
@@ -4035,7 +3924,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       RemoveFile(f.path, System.currentTimeMillis(), dataChange = true))
     val cdc: Seq[Action] =
       if (!cdfEnabled(s)) Nil
-      else Seq(stageCdc(s, dfForFiles(s, candidates)
+      else Seq(stageCdc(s, scan(s, candidates)
         .filter(coalesce(cond, lit(false)))
         .withColumn("_change_type", lit("delete"))))
     val metrics = Map(
@@ -4055,34 +3944,20 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     */
   def deleteMergeOnRead(cond: Column): Map[String, String] = {
     val s = snapshot
-    val candidates = Pruning.prune(logicalFiles(s), s.schema, s.partitionColumns, shredded(s, cond), generatedExprs(s))
+    val candidates = this.candidates(s, s.activeFiles, cond)
     if (candidates.isEmpty) {
       commitAndCheckpoint(Seq(info("DELETE",
         params = Map("mode" -> "merge-on-read"),
         metrics = Map("numDeletionVectors" -> "0"))))
       return Map("numDeletionVectors" -> "0")
     }
-    // physical scan + logical rename so `cond` (written against the
-    // current schema) evaluates correctly on column-mapped tables;
-    // rows already masked by existing DVs are excluded (re-marking is
-    // harmless for the mask but would emit phantom CDC deletes)
-    val scan0 = physicalScan(s, candidates, withMeta = true)
-    val maskedScan0 =
-      if (s.dvFiles.isEmpty) scan0
-      else {
-        val dv = DvSidecar.read(spark, s.dvFiles.map(dataPath))
-          .select(col("file_path").as("__dv_fp"), col("row_index").as("__dv_ri"))
-        scan0.join(dv,
-          col("__fp") === col("__dv_fp") && col("__ri") === col("__dv_ri"),
-          "left_anti")
-      }
-    val scan = maskedScan0.select((s.schema.fields.map(f =>
-      col(s.physicalName(f.name)).as(f.name)) ++
-      Seq(col("__fp").as("file_path"), col("__ri").as("row_index"))).toIndexedSeq: _*)
-    // with CDF on, the matched rows feed both the marks write and the
+    // the scan masks rows existing DVs already delete (re-marking is
+    // harmless for the mask but would emit phantom CDC deletes).
+    // With CDF on, the matched rows feed both the marks write and the
     // CDC sidecar: persist so the candidate scan runs once
     val withCdf = cdfEnabled(s)
-    val matchedRows0 = scan.filter(coalesce(cond, lit(false)))
+    val matchedRows0 = scan(s, candidates, Set("file_path", "row_index"))
+      .filter(coalesce(cond, lit(false)))
     val matchedRows =
       if (withCdf) matchedRows0
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -4125,7 +4000,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   /** UPDATE ... SET assignments WHERE cond. */
   def update(cond: Column, set: Map[String, Column]): Map[String, String] = {
     val s = snapshot
-    val candidates = Pruning.prune(logicalFiles(s), s.schema, s.partitionColumns, shredded(s, cond), generatedExprs(s))
+    val candidates = this.candidates(s, s.activeFiles, cond)
     if (candidates.isEmpty) {
       commitAndCheckpoint(Seq(info("UPDATE", metrics = Map("numRemovedFiles" -> "0"))))
       return Map("numRemovedFiles" -> "0")
@@ -4149,7 +4024,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val cdc: Seq[Action] =
       if (!cdfEnabled(s)) Nil
       else {
-        val pre = dfForFiles(s, candidates).filter(coalesce(cond, lit(false)))
+        val pre = scan(s, candidates).filter(coalesce(cond, lit(false)))
         val post = regenerateGenerated(set.foldLeft(pre) { case (df, (c, v)) =>
           df.withColumn(c, v.cast(s.schema(c).dataType))
         }, set.keySet, s, None)
@@ -4175,31 +4050,19 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     */
   def updateMergeOnRead(cond: Column, set: Map[String, Column]): Map[String, String] = {
     val s = snapshot
-    val candidates = Pruning.prune(logicalFiles(s), s.schema, s.partitionColumns, shredded(s, cond), generatedExprs(s))
+    val candidates = this.candidates(s, s.activeFiles, cond)
     if (candidates.isEmpty) {
       commitAndCheckpoint(Seq(info("UPDATE",
         params = Map("mode" -> "merge-on-read"),
         metrics = Map("numDeletionVectors" -> "0"))))
       return Map("numDeletionVectors" -> "0")
     }
-    val scan0 = physicalScan(s, candidates, withMeta = true)
-    // rows already masked by existing DVs must not match: appending
-    // their post-image would resurrect deleted rows
-    val maskedScan =
-      if (s.dvFiles.isEmpty) scan0
-      else {
-        val dv = DvSidecar.read(spark, s.dvFiles.map(dataPath))
-          .select(col("file_path").as("__dv_fp"), col("row_index").as("__dv_ri"))
-        scan0.join(dv,
-          col("__fp") === col("__dv_fp") && col("__ri") === col("__dv_ri"),
-          "left_anti")
-      }
+    // the scan masks rows already deleted by existing DVs — they must
+    // not match: appending their post-image would resurrect them.
     // matched feeds the marks write, the post-image write, and (with
     // CDF) the CDC sidecar — persist so the candidate scan + DV
     // anti-join runs once, not three times (O(matches) storage)
-    val matched = maskedScan.select((s.schema.fields.map(f =>
-      col(s.physicalName(f.name)).as(f.name)) ++
-      Seq(col("__fp").as("file_path"), col("__ri").as("row_index"))).toIndexedSeq: _*)
+    val matched = scan(s, candidates, Set("file_path", "row_index"))
       .filter(coalesce(cond, lit(false)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -4383,9 +4246,9 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       nmbsUpdate: Option[(Option[Column], Map[String, Column])],
       nmbsDelete: Option[Column]): Seq[AddFile] = {
     if (nmbsUpdate.isEmpty && nmbsDelete.isEmpty) return Nil
-    val rest = logicalFiles(s).filterNot(f => candidatePaths(f.path))
     val conds = nmbsDelete.toSeq ++ nmbsUpdate.map(_._1.getOrElse(lit(true))).toSeq
-    Pruning.prune(rest, s.schema, s.partitionColumns, shredded(s, conds.reduce(_ || _)), generatedExprs(s))
+    candidates(s, s.activeFiles.filterNot(f => candidatePaths(f.path)),
+      conds.reduce(_ || _))
   }
 
   /** Unmatched-source insert rows under ORDERED first-match clause
@@ -4445,7 +4308,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     validateConstraints(source, s)
     enforceSchema(source.schema, s.schema)
     val keyRange = sourceKeyRange(source, keys)
-    val candidates = Pruning.prune(logicalFiles(s), s.schema, s.partitionColumns, keyRange, generatedExprs(s))
+    val candidates = this.candidates(s, s.activeFiles, keyRange)
     // row tracking: surviving target rows (kept, updated, or NMBS-
     // transformed) carry their stable id through the rewrite; inserts
     // ride with a null materialized id and resolve to the new files'
@@ -4630,7 +4493,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     validateConstraints(source, s)
     enforceSchema(source.schema, s.schema)
     val keyRange = sourceKeyRange(source, keys)
-    val candidates = Pruning.prune(logicalFiles(s), s.schema, s.partitionColumns, keyRange, generatedExprs(s))
+    val candidates = this.candidates(s, s.activeFiles, keyRange)
     val restFiles = nmbsRestFiles(s, candidates.map(_.path).toSet, nmbsUpdate, nmbsDelete)
     val scanFiles = candidates ++ restFiles
     val fields = s.schema.fieldNames.toIndexedSeq.map(col)
@@ -4642,30 +4505,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
 
     // unmasked target rows of every file a clause may touch, with
     // (file_path, row_index) identity for DV marks
-    val live: DataFrame =
-      if (rt) rowIdScan(s, scanFiles, keepMeta = true)
-      else if (scanFiles.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          org.apache.spark.sql.types.StructType(s.schema.fields ++ Seq(
-            org.apache.spark.sql.types.StructField("file_path",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("row_index",
-              org.apache.spark.sql.types.LongType))))
-      else {
-        val scan0 = physicalScan(s, scanFiles, withMeta = true)
-        val masked =
-          if (s.dvFiles.isEmpty) scan0
-          else {
-            val dv = DvSidecar.read(spark, s.dvFiles.map(dataPath))
-              .select(col("file_path").as("__dv_fp"), col("row_index").as("__dv_ri"))
-            scan0.join(dv,
-              col("__fp") === col("__dv_fp") && col("__ri") === col("__dv_ri"),
-              "left_anti")
-          }
-        masked.select((s.schema.fields.map(f =>
-          col(s.physicalName(f.name)).as(f.name)) ++
-          Seq(col("__fp").as("file_path"), col("__ri").as("row_index"))).toIndexedSeq: _*)
-      }
+    val live = scan(s, scanFiles,
+      Set("file_path", "row_index") ++ (if (rt) Set(RowIdCol) else Set.empty))
     // matched / NMBS-changed rows are sparse (a small delta against a
     // huge table) — persist them so the candidate scan runs once across
     // the DV write, the post-image write, and the CDC sidecar
@@ -4849,7 +4690,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val s = snapshot
     validateConstraints(df, s)
     enforceSchema(df.schema, s.schema)
-    val candidates = Pruning.prune(logicalFiles(s), s.schema, s.partitionColumns, shredded(s, cond), generatedExprs(s))
+    val candidates = this.candidates(s, s.activeFiles, cond)
     // row tracking: rows that survive the predicate keep their ids
     // through the rewrite (same invariant as DELETE); the replacement
     // rows are new rows and draw fresh ids via a null materialized id
@@ -4871,7 +4712,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val cdc: Seq[Action] =
       if (!cdfEnabled(s)) Nil
       else Seq(stageCdc(s,
-        dfForFiles(s, candidates).filter(coalesce(cond, lit(false)))
+        scan(s, candidates).filter(coalesce(cond, lit(false)))
           .select(s.schema.fieldNames.map(col): _*)
           .withColumn("_change_type", lit("delete"))
           .unionByName(df.select(s.schema.fieldNames.map(col): _*)
@@ -4966,7 +4807,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val cdc: Seq[Action] =
       if (!cdfEnabled(s)) Nil
       else Seq(stageCdc(s,
-        dfForFiles(s, replaced).select(s.schema.fieldNames.map(col): _*)
+        scan(s, replaced).select(s.schema.fieldNames.map(col): _*)
           .withColumn("_change_type", lit("delete"))
           .unionByName(df.select(s.schema.fieldNames.map(col): _*)
             .withColumn("_change_type", lit("insert")))))
@@ -5201,7 +5042,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     var added = 0
     val actions = scala.collection.mutable.Buffer[Action]()
     val scoped = where match {
-      case Some(p) => Pruning.prune(logicalFiles(s), s.schema, s.partitionColumns, shredded(s, p), generatedExprs(s))
+      case Some(p) => candidates(s, s.activeFiles, p)
       case None => s.activeFiles
     }
     val compactable = scoped.groupBy(_.partitionValues).toSeq
@@ -5420,7 +5261,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val target = if (targetBytes > 0) targetBytes else resolveTargetBytes(s)
     where.foreach(validatePredicate(s, _))
     val scoped = where match {
-      case Some(p) => Pruning.prune(logicalFiles(s), s.schema, s.partitionColumns, shredded(s, p), generatedExprs(s))
+      case Some(p) => candidates(s, s.activeFiles, p)
       case None => s.activeFiles
     }
     zorderFiles(s, scoped, target, cols)
@@ -5561,7 +5402,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
           // physical-schema scan with masks applied: the materialized
           // files' column layout matches the untouched originals, so
           // an external reader sees ONE consistent parquet schema
-          val df = physicalDfForFiles(s, masked)
+          val df = scan(s, masked).select(s.physicalColumns: _*)
           val physParts = s.partitionColumns.map(s.physicalName)
           val tsKey = "spark.sql.parquet.outputTimestampType"
           val prevTs = spark.conf.getOption(tsKey)
@@ -7240,11 +7081,10 @@ object GraftTable {
         // on, the rewrite carries each live row's stable id — the
         // byte-copied files keep theirs, so the rewritten ones must too
         val rt = src.rowTrackingOn(snap)
-        val live0 =
-          if (rt) src.rowIdScan(snap, masked) else src.dfFor(snap, masked)
-        val live = live0.select(snap.schema.fields.map(f =>
-          col(f.name).as(snap.physicalName(f.name))).toIndexedSeq ++
-          (if (rt) Seq(col(src.RowIdCol)) else Nil): _*)
+        val live = src.scan(snap, masked,
+            if (rt) Set(src.RowIdCol) else Set.empty)
+          .select(snap.physicalColumns ++
+            (if (rt) Seq(col(src.RowIdCol)) else Nil): _*)
         t.stageWrite(live, snap.partitionColumns, dataChange = true)
       }
     t.commitAndCheckpoint(Seq(

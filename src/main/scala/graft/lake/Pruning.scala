@@ -398,6 +398,7 @@ object Pruning {
         }
       case Or(l, r) =>
         mayMatch(f, partitionCols, l) || mayMatch(f, partitionCols, r)
+      case Literal(false, BooleanType) => false // an empty key set
       case _ => true // unsupported shape → cannot exclude
     }
   }

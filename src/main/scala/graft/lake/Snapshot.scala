@@ -1,6 +1,7 @@
 package graft.lake
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Reconstructed table state at a version: metadata + active files.
@@ -47,6 +48,12 @@ final case class Snapshot(
   /** Schema with on-disk (physical) column names, for parquet reads. */
   def physicalSchema: StructType =
     StructType(schema.fields.map(f => f.copy(name = physicalName(f.name))))
+
+  /** Logical columns renamed back to their on-disk names — the layout
+    * files handed to external readers (exports, clones) must keep.
+    */
+  private[lake] def physicalColumns: Seq[Column] =
+    schema.fields.toSeq.map(f => col(f.name).as(physicalName(f.name)))
 
   def numFiles: Int = activeFiles.size
   def sizeInBytes: Long = activeFiles.map(_.size).sum

@@ -23,9 +23,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * reference docs/02-lab-optimizations.md:116-187).
   *
   * Reads and writes bridge to the battle-tested V1 paths rather than
-  * re-implementing a reader: [[V1Scan]] wraps [[GraftRelation]] (so
-  * pushed filters keep driving partition/stats/bloom file skipping)
-  * and [[V1Write]] wraps the transactional `append`/`overwrite`.
+  * re-implementing a reader: [[V1Scan]] serves GraftTable's one
+  * governed read (pushed filters drive partition/stats/bloom file
+  * skipping; the row filter and masks apply to data and metadata
+  * columns alike) and [[V1Write]] wraps the transactional
+  * `append`/`overwrite`.
   * `pinnedVersion` carries `VERSION/TIMESTAMP AS OF` resolution from
   * the catalog's time-travel `loadTable` overloads into the scan.
   */
@@ -75,7 +77,8 @@ final class GraftLakeTable(
     * `_graft_pos` (the row's index within its file — with `_graft_file`
     * it is the delta-write row id), plus `_graft_row_id` on
     * row-tracked tables (the stable id, resolved exactly like the
-    * `rowIds` reader option).
+    * `rowIds` reader option). Selecting them is still a governed read:
+    * the row filter and masks apply as they do to the plain columns.
     */
   override def metadataColumns(): Array[MetadataColumn] = {
     def mc(n: String, dt: org.apache.spark.sql.types.DataType,
@@ -144,7 +147,7 @@ final class GraftLakeTable(
       TableCapability.OVERWRITE_BY_FILTER,
       TableCapability.OVERWRITE_DYNAMIC)
 
-  // --- read: V1Scan bridge into GraftRelation's pruning scan --------
+  // --- read: V1Scan bridge into GraftTable.read ----------------------
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder
@@ -178,33 +181,27 @@ final class GraftLakeTable(
         override def readSchema(): StructType = required
         override def toV1TableScan[T <: BaseRelation with TableScan](
             ctx: SQLContext): T = {
-          val opts = pinnedVersion
-            .map(v => Map("versionasof" -> v.toString)).getOrElse(Map.empty)
-          val rel = new GraftRelation(ctx, path, opts)
           val (cols, filters) = (required.fieldNames, pushed)
-          val metaWanted = cols.filter(c =>
-            c == "_graft_file" || c == "_graft_row_id" || c == "_graft_pos")
+          val meta = cols.toSet.intersect(
+            Set("_graft_file", "_graft_pos", "_graft_row_id"))
+          // metadata columns are a live-snapshot read (a pinned
+          // version's files may predate id assignment)
+          require(pinnedVersion.isEmpty || meta.isEmpty,
+            "metadata columns are a live-snapshot read")
+          // the querying session's handle: policies bind its principal
+          val reader = GraftTable.forPath(ctx.sparkSession, path)
           new BaseRelation with TableScan {
             override def sqlContext: SQLContext = ctx
             override def schema: StructType = required
-            override def buildScan(): RDD[Row] =
-              if (metaWanted.isEmpty) rel.buildScan(cols, filters)
-              else {
-                // metadata-column read (SELECT _graft_file / _graft_row_id):
-                // the provenance scan keeps the same DV masking and file
-                // skipping; live snapshot only (a pinned version's files
-                // may predate id assignment)
-                require(pinnedVersion.isEmpty,
-                  "metadata columns are a live-snapshot read")
-                val pred = filters.flatMap(GraftFilters.toColumn)
-                  .reduceOption(_ && _)
-                table.readWithProvenance(pred,
-                    wantFile = metaWanted.contains("_graft_file"),
-                    wantRowId = metaWanted.contains("_graft_row_id"),
-                    wantPos = metaWanted.contains("_graft_pos"))
-                  .select(cols.map(org.apache.spark.sql.functions.col)
-                    .toIndexedSeq: _*).rdd
-              }
+            override def buildScan(): RDD[Row] = {
+              // the same governed read as every other surface: file
+              // skipping, DV masking, row filter and masks all apply,
+              // metadata columns included
+              val pred = filters.flatMap(GraftFilters.toColumn).reduceOption(_ && _)
+              val df = reader.read(pred, pinnedVersion, meta)
+              pred.fold(df)(df.filter)
+                .select(cols.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*).rdd
+            }
           }.asInstanceOf[T]
         }
       }

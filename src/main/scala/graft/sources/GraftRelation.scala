@@ -8,11 +8,13 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 
 /** Batch-read relation for `spark.read.format("graftlake").load(path)`
-  * (and `CREATE ... USING graftlake OPTIONS (path ...)`). Pushed
-  * filters drive GraftLake's file skipping — partition values, footer
-  * min/max stats, and bloom sidecars — before any scan task launches;
-  * Spark still re-applies the full predicate, so unsupported shapes
-  * simply skip the pruning, never correctness.
+  * (and `CREATE ... USING graftlake OPTIONS (path ...)`). Every
+  * snapshot read — live, `versionAsOf`/`timestampAsOf`/`tagAsOf`, or
+  * `rowIds` — is one call to GraftTable's governed read: pushed
+  * filters drive file skipping (partition values, footer min/max
+  * stats, bloom sidecars) before any scan task launches, and the row
+  * filter and masks apply. Spark still re-applies the full predicate,
+  * so unsupported shapes simply skip the pruning, never correctness.
   */
 final class GraftRelation(
     override val sqlContext: SQLContext,
@@ -60,9 +62,6 @@ final class GraftRelation(
   private val withRowIds = opts.getOrElse("rowids", "false").toBoolean
   require(!withRowIds || (!cdfRead && pinnedVersion.isEmpty),
     "rowIds cannot combine with readChangeFeed or time travel")
-
-  private def snapshotDf =
-    pinnedVersion.map(table.toDFAt).getOrElse(table.toDF)
 
   override def schema: StructType = {
     val base0 = pinnedSnapshot.map(_.schema).getOrElse(table.snapshot.schema)
@@ -155,18 +154,12 @@ final class GraftRelation(
       return table.changeFeed(cdfStart - 1, cdfEnd)
         .select(requiredColumns.map(col).toIndexedSeq: _*).rdd
     val pred = filters.flatMap(toColumn(_)).reduceOption(_ && _)
-    // pruning (stats/bloom) applies only to the live snapshot; pinned
-    // versions scan their full file set and let Spark filter
-    val df =
-      if (withRowIds) {
-        // same file skipping as the plain path: ids are per-file, so
-        // pruning can never change a surviving row's id
-        val base = table.readWhereWithRowIds(pred)
-        pred.map(base.filter).getOrElse(base)
-      } else pinnedVersion match {
-        case Some(_) => pred.map(snapshotDf.filter).getOrElse(snapshotDf)
-        case None => pred.map(table.readWhere).getOrElse(table.toDF)
-      }
-    df.select(requiredColumns.map(col).toIndexedSeq: _*).rdd
+    // one governed read prunes files for live and pinned snapshots
+    // alike; row ids ride the same skipping (ids are per-file, so
+    // pruning can never change a surviving row's id)
+    val df = table.read(pred, pinnedVersion,
+        if (withRowIds) Set(table.RowIdCol) else Set.empty)
+      .withColumnRenamed(table.RowIdCol, "row_id")
+    pred.fold(df)(df.filter).select(requiredColumns.map(col).toIndexedSeq: _*).rdd
   }
 }

@@ -107,7 +107,8 @@ private[sources] final class GraftRowLevelScanBuilder(
 
   override def build(): Scan = {
     val cond = pushed.flatMap(GraftFilters.toColumn).reduceOption(_ && _)
-    val candidates = table.rowLevelCandidates(snapshot, cond)
+    val candidates = cond.fold(snapshot.activeFiles)(
+      table.candidates(snapshot, snapshot.activeFiles, _))
     val scan = new GraftRowLevelScan(spark, table, snapshot, tracking,
       required, candidates)
     op.registerScan(scan)
@@ -202,7 +203,7 @@ private[sources] final class GraftRowLevelScan(
       // (the log stores decoded strings; Cast gives the exact read-side
       // value the directory-inference scan would produce)
       val vals: Array[Any] = partFields.map { pf =>
-        f.partitionValues.get(pf.name) match {
+        f.partitionValues.get(snapshot.physicalName(pf.name)) match {
           case None => null
           case Some(v) if v == ParquetShim.defaultPartitionName => null
           case Some(v) =>

@@ -188,7 +188,7 @@ final class GraftSource(
         // governed (L114/r15): the CDF initial snapshot is a public
         // read like any other — hidden rows must not leak as inserts
         val snap = Snapshot.at(spark, log, Some(endV))
-        table.governed(table.dfFor(snap, snap.activeFiles))
+        table.governed(table.scan(snap, snap.activeFiles))
           .withColumn("_change_type",
             org.apache.spark.sql.functions.lit("insert"))
           .select(schema.fieldNames.map(org.apache.spark.sql.functions.col): _*)
@@ -205,7 +205,7 @@ final class GraftSource(
       // governed (L114): a streaming reader is a public read surface —
       // micro-batches see the same filtered/masked view batch reads do
       // (the CDF mode above is governed too, since r15)
-      table.governed(table.dfFor(snap, files))
+      table.governed(table.scan(snap, files))
         .select(schema.fieldNames.map(org.apache.spark.sql.functions.col): _*)
 
   override def commit(end: OffsetV1): Unit = ()

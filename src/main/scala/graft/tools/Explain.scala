@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit harness: prints each named SparkEntry query's physical
   * plan (or a one-line join/exchange census with no args after the
   * names). `runMain graft.tools.Explain [-full] name...` — the
@@ -13,14 +11,7 @@ object Explain {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val full = args.contains("-full")
     val names = args.filterNot(_.startsWith("-")).toSeq
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession("8", "ERROR")
     names.foreach { n =>
       val qe = graft.SparkEntry.queries(n)(spark, sfDir).queryExecution
       val plan = qe.executedPlan.toString

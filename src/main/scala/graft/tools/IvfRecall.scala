@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: prints IVF recall@5 vs brute force for a testdata
   * dir — the measurement behind OperatorsSpec's recall bar and the
   * SURVEY §6 tuning notes. Usage:
@@ -10,13 +8,8 @@ import org.apache.spark.sql.SparkSession
 object IvfRecall {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .appName("graft-ivf-recall")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"),
+      extra = _.appName("graft-ivf-recall").config("spark.sql.shuffle.partitions", "32"))
     val bf = graft.operators.Similarity.simBruteforceTopk(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val t0 = System.nanoTime()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageSubmitted}
-import org.apache.spark.sql.SparkSession
 
 /** Developer profiler for the optimize-measure loop (guide §1): runs
   * one query and prints every Spark job's wall time + description,
@@ -17,14 +16,7 @@ object ProfileOne {
     require(args.nonEmpty, "usage: ProfileOne <queryName> [more...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(cpus)
 
     final case class Job(id: Int, var desc: String, start: Long, var end: Long)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()

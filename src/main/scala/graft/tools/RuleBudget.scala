@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Times the per-plan cost of the graft extension rules (r14 verdict
   * item 4): plans a trivial aggregate-over-parquet N times — analysis
   * + optimization + physical planning only, no execution — once per
@@ -23,15 +21,8 @@ object RuleBudget {
   def main(args: Array[String]): Unit = {
     val withExt = args.headOption.contains("ext")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (withExt)
-      b.config("spark.sql.extensions", "graft.GraftExtensions") else b)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("4", extra = b =>
+      if (withExt) b.config("spark.sql.extensions", "graft.GraftExtensions") else b)
     val base = spark.read.parquet(s"$sfDir/lineitem.parquet")
     def planOnce(): Unit = {
       // fresh plan each time (varying literal defeats any plan cache)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-evidence data builder: synthesizes an sf1-equivalent dataset
@@ -30,11 +30,7 @@ object ScaleUp {
     // chaining decades (sf1 -> sf10) needs a bigger stride than the
     // source's own key span, or replica offsets collide
     val Off = if (args.length > 3) args(3).toLong else 10000000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("32")
 
     def replicate(name: String, keyCols: Seq[String]): Unit = {
       val base = graft.Tables(spark, src, name)

@@ -571,6 +571,33 @@ class GraftCatalogSpec extends GraftSparkSpec {
     spark.sql("DROP TABLE graftc.default.tt_tbl")
   }
 
+  test("metadata-column reads are governed: selecting _graft_file, " +
+      "_graft_pos or _graft_row_id returns the rows and values of the plain read") {
+    useCatalog()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graftc.default")
+    spark.range(10).withColumn("secret", col("id") * 100)
+      .repartition(2).createOrReplaceTempView("gov_meta_src")
+    spark.sql("CREATE TABLE graftc.default.gov_meta USING graftlake " +
+      "TBLPROPERTIES ('graft.rowTracking' = 'true') AS SELECT * FROM gov_meta_src")
+    val t = graft.lake.GraftTable.forPath(spark,
+      java.nio.file.Paths.get(tmpWarehouse, "default", "gov_meta").toString)
+    // the policy verbs have no catalog route; install them on the path
+    t.setRowFilter("id < 5")
+    t.setColumnMask("secret", "-1")
+    def rows(extra: String, where: String = ""): Seq[(Long, Long)] =
+      spark.sql(s"SELECT id, secret$extra FROM graftc.default.gov_meta $where")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
+    val plain = rows("")
+    assert(plain == (0L until 5L).map(_ -> -1L))
+    Seq("_graft_file", "_graft_pos", "_graft_row_id").foreach { c =>
+      assert(rows(s", $c") == plain,
+        s"selecting $c must not bypass the row filter or the mask")
+      assert(rows(s", $c", "WHERE id >= 3") == plain.filter(_._1 >= 3),
+        s"a pushed filter next to $c must not bypass the policy either")
+    }
+    spark.sql("DROP TABLE graftc.default.gov_meta")
+  }
+
   test("catalog-named dimension broadcasts at runtime via AQE sizes") {
     useCatalog()
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graftc.default")

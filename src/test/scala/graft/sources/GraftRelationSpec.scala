@@ -71,6 +71,13 @@ class GraftRelationSpec extends GraftSparkSpec {
     assert(live.count() == nation.count() + 5)
     assert(v0.filter(col("n_nationkey") === 0).count() ==
       nation.filter(col("n_nationkey") === 0).count())
+    // a pinned read prunes files by its own snapshot's stats; the rows
+    // must equal the API time travel filtered by the same predicate
+    val pred = col("n_nationkey") < 5 && col("n_regionkey") =!= 0
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    assert(sorted(v0.filter(pred)) == sorted(t.toDFAt(0).filter(pred)))
+    assert(sorted(v0.filter(pred)).nonEmpty)
   }
 
   test("batch readChangeFeed returns the operation-level feed") {
