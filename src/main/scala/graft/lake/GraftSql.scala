@@ -727,19 +727,20 @@ final class GraftSql(spark: SparkSession) {
             paddedKeySource(name, keyCol, sub), keyCol)
           .whenMatchedKeep().whenNotMatchedIgnore()
           .whenMatchedUpdate(assignments, None)
-          .execute()
+          .inTableMode().execute()
         m.toSeq.sorted.toDF("metric", "value")
       case deleteInRe(name, keyCol, sub) =>
         // IN-subquery DELETE runs as a keyed anti-merge: the subquery
         // result joins the table on the key (hash equi-join — the
         // 100 TB shape; never a collected value list) and matched rows
-        // delete via the CoW merge path with its stats pruning
+        // delete through the merge planner with its stats pruning, in
+        // the table's graft.dml.mode
         exposeViews()
         val m = table(name).mergeBuilder(
             paddedKeySource(name, keyCol, sub), keyCol)
           .whenMatchedKeep().whenNotMatchedIgnore()
           .whenMatchedDelete(lit(true))
-          .execute()
+          .inTableMode().execute()
         m.toSeq.sorted.toDF("metric", "value")
       case insertRe(mode, name, payload) =>
         val t = table(name)
@@ -783,7 +784,7 @@ final class GraftSql(spark: SparkSession) {
       case deleteRe(name, cond) =>
         // no WHERE = whole-table delete (Delta parity)
         val c = Option(cond).map(expr).getOrElse(lit(true))
-        table(name).delete(c).toSeq.sorted.toDF("metric", "value")
+        table(name).deleteRows(c).toSeq.sorted.toDF("metric", "value")
       case analyzeRe(name) => table(name).computeStats()
       case analyzeColumnsRe(name, forCols) =>
         // FOR COLUMNS: base stats (rows/NDV/min/max) PLUS the
@@ -794,7 +795,7 @@ final class GraftSql(spark: SparkSession) {
         t.computeHistogram(forCols.split(",").map(_.trim).toSeq
           .filter(_.nonEmpty))
       case updateRe(name, sets, cond) =>
-        table(name).update(expr(cond), setAssignments(sets))
+        table(name).updateRows(expr(cond), setAssignments(sets))
           .toSeq.sorted.toDF("metric", "value")
       case showCreateRe(name) =>
         // Spark/Delta parity: one row, the re-runnable DDL — schema
@@ -1074,7 +1075,7 @@ final class GraftSql(spark: SparkSession) {
       }.toMap
     val updateSetRe = """(?is)^UPDATE\s+SET\s+(.+)$""".r
     var b = table(tName).mergeBuilder(source, keys)
-      .whenMatchedKeep().whenNotMatchedIgnore()
+      .whenMatchedKeep().whenNotMatchedIgnore().inTableMode()
     if (evolve) b = b.withSchemaEvolution()
     if (residConjs.nonEmpty)
       b = b.onCondition(expr(rewrite(

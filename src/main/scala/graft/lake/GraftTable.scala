@@ -1842,8 +1842,23 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         .filter(p => only.forall(_.contains(staging.relativize(p).toString)))
         .toSeq.sortBy(_.toString)
       finally walk.close()
+    // one task writing several partitions gives its file the same name
+    // in each partition directory; the row-id resolve keys on the bare
+    // file name, so the k-th repeat of a name moves as `<stem>-k.<ext>`
+    // (names carry the write's UUID, so this keeps them table-unique)
+    val seen = scala.collection.mutable.Map.empty[String, Int]
     val moved = staged.map { src =>
-      val rel = staging.relativize(src).toString
+      val rel0 = staging.relativize(src).toString
+      val name = src.getFileName.toString
+      val k = seen.getOrElse(name, 0)
+      seen(name) = k + 1
+      val rel =
+        if (k == 0) rel0
+        else {
+          val dot = if (name.contains('.')) name.indexOf('.') else name.length
+          val unique = s"${name.take(dot)}-$k${name.drop(dot)}"
+          Option(Paths.get(rel0).getParent).fold(unique)(p => s"$p/$unique")
+        }
       val dest = root.resolve(rel)
       Files.createDirectories(dest.getParent)
       Files.move(src, dest)
@@ -2023,16 +2038,16 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     }
   }
 
-  /** Commit a native row-level rewrite: executor tasks already staged
-    * the replacement files under `stagingRel`; validate the staged
-    * rows against CHECK / NOT NULL constraints, regenerate generated
-    * columns (derived state is recomputed, the same contract as the
-    * DataFrame UPDATE's regeneration — at the cost of one restage of
-    * the delta when the table declares generation expressions), then
-    * commit removes+adds with the standard optimistic conflict check.
+  /** Commit a native row-level rewrite (catalog UPDATE / MERGE /
+    * subquery DELETE under copy-on-write): executor tasks already
+    * staged the replacement files under `stagingRel`;
+    * [[validateAndAbsorbStaged]] checks them against CHECK / NOT NULL
+    * constraints and generated columns, then the same
+    * [[rewriteCommit]] tail as the path API replaces the removed files.
     * No CDC sidecar is staged: the change feed's exact per-version
-    * diff covers row-level commits (insert/delete rows), while
-    * update_pre/postimage tagging remains on the DataFrame DML paths.
+    * diff covers these commits, typing an update as delete + insert
+    * (the path API and `GraftSql` type update_preimage /
+    * update_postimage).
     */
   private[graft] def rowLevelCommitReplace(s: Snapshot, opName: String,
       stagingRel: String, removed: Seq[AddFile],
@@ -2040,17 +2055,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val staging = root.resolve(stagingRel)
     try {
       val (adds, restaged) = validateAndAbsorbStaged(s, staging, committedRels)
-      val removes = removed.map(f =>
-        RemoveFile(f.path, System.currentTimeMillis(), dataChange = true))
-      val metrics = Map(
-        "numRemovedFiles" -> removes.size.toString,
-        "numAddedFiles" -> adds.size.toString,
-        "restagedGenerated" -> restaged.toString,
-        "rewrite" -> "row-level")
-      commitAndCheckpoint(
-        Seq(info(opName, metrics = metrics)) ++ removes ++ adds,
-        readVersion = s.version)
-      metrics
+      rewriteCommit(s, opName, removed, mayInsert = true, adds, None,
+        Map("restagedGenerated" -> restaged.toString, "rewrite" -> "row-level"))
     } catch {
       case e: Throwable => deleteRecursively(staging); throw e
     }
@@ -2060,13 +2066,15 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   private[graft] def rowLevelAbort(stagingRel: String): Unit =
     deleteRecursively(root.resolve(stagingRel))
 
-  /** Commit a native DELTA (merge-on-read) row-level write: the marks
-    * the tasks staged become ONE deletion-vector sidecar (masked at
-    * every scan until compaction), inserted/post-image rows absorb as
-    * new files — O(changed rows) total write, no candidate rewrite.
-    * Same conflict rules as the path API's MoR ops: `conflictOnDV`
-    * plus the candidate read set, so an interleaved masker/rewriter
-    * aborts the loser instead of resurrecting rows.
+  /** Commit a native DELTA (merge-on-read) row-level write through the
+    * same [[maskCommit]] tail as the path API: the marks the committed
+    * task attempts staged become the deletion-vector sidecar (an
+    * orphaned retry's marks would be idempotent but carry paths the
+    * committed attempt may not have planned), inserted / post-image
+    * rows absorb as new files — O(changed rows) total write, no
+    * candidate rewrite. `readPaths` is the scan's candidate set, so an
+    * interleaved masker or rewriter aborts the loser instead of
+    * resurrecting rows; auto-REORG runs after the commit.
     */
   private[graft] def rowLevelCommitDelta(s: Snapshot, opName: String,
       dataStagingRel: String, marksStagingRel: String,
@@ -2077,38 +2085,18 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     try {
       val (adds, restaged) =
         validateAndAbsorbStaged(s, dataStaging, committedDataRels)
-      // only the committed attempts' mark files form the sidecar (an
-      // orphaned retry's marks would be idempotent but carry paths the
-      // committed attempt may not have planned)
       val markFiles = committedMarkRels.toSeq.sorted
         .map(marksStaging.resolve).filter(Files.exists(_))
-      val dvActions =
-        if (markFiles.isEmpty) { deleteRecursively(marksStaging); Nil }
-        else {
-          val rel = s"_graft_dv/dv-${UUID.randomUUID()}"
-          val dest = root.resolve(rel)
-          Files.createDirectories(dest)
-          markFiles.foreach(f =>
-            Files.move(f, dest.resolve(f.getFileName.toString)))
-          deleteRecursively(marksStaging)
-          Seq(AddDV(rel))
-        }
-      val metrics = Map(
-        "numAddedFiles" -> adds.size.toString,
-        "numDeletionVectors" -> dvActions.size.toString,
-        "restagedGenerated" -> restaged.toString,
-        "rewrite" -> "row-level-delta")
-      commitAndCheckpoint(
-        Seq(info(opName, params = Map("mode" -> "merge-on-read"),
-          metrics = metrics)) ++ dvActions ++ adds,
-        readVersion = s.version, readPaths = readPaths,
-        conflictOnDV = true)
-      metrics
-    } catch {
-      case e: Throwable =>
-        deleteRecursively(dataStaging)
-        deleteRecursively(marksStaging)
-        throw e
+      def moveMarks(rel: String): Unit = if (markFiles.nonEmpty) {
+        val dest = root.resolve(rel)
+        Files.createDirectories(dest)
+        markFiles.foreach(f => Files.move(f, dest.resolve(f.getFileName.toString)))
+      }
+      maskCommit(s, opName, readPaths, moveMarks, mayInsert = true, adds, None,
+        Map("restagedGenerated" -> restaged.toString, "rewrite" -> "row-level-delta"))
+    } finally {
+      deleteRecursively(dataStaging)
+      deleteRecursively(marksStaging)
     }
   }
 
@@ -3900,41 +3888,24 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     }
   }
 
-  // ------------------------------------------------------ DML (CoW)
+  // ------------------------------------------------------------ DML
+
+  /** `graft.dml.mode`: copy-on-write (the default) or merge-on-read
+    * (`merge-on-read` / `mor`). The one mode switch for every DML entry
+    * point that names no mode: `GraftSql` DELETE / UPDATE / MERGE,
+    * catalog DELETE / UPDATE / MERGE and [[mergeStreamBatch]]. The path
+    * API names its mode in the method (`delete` / `deleteMergeOnRead`,
+    * `update` / `updateMergeOnRead`, `MergeBuilder.mergeOnRead`).
+    */
+  private[graft] def dmlMergeOnRead: Boolean =
+    snapshot.metadata.flatMap(_.properties.get("graft.dml.mode"))
+      .exists(m => m.equalsIgnoreCase("merge-on-read") || m.equalsIgnoreCase("mor"))
 
   /** DELETE FROM ... WHERE cond (reference 02-lab:220-225).
     * Copy-on-write: only stats-pruned candidate files are rewritten;
     * rows where cond is false/null survive.
     */
-  def delete(cond: Column): Map[String, String] = {
-    val s = snapshot
-    val candidates = this.candidates(s, s.activeFiles, cond)
-    if (candidates.isEmpty) {
-      commitAndCheckpoint(Seq(info("DELETE", metrics = Map("numRemovedFiles" -> "0"))))
-      return Map("numRemovedFiles" -> "0")
-    }
-    // with row tracking on, surviving rows carry their stable id
-    // through the rewrite (Delta "preserved row ids" semantics) — a
-    // downstream incremental consumer keyed on row_id must not see a
-    // delete of OTHER rows reassign the survivors
-    val keep = layoutRewriteSource(s, candidates)
-      .filter(coalesce(cond, lit(false)) === false)
-    val adds = stageWrite(keep, s.partitionColumns, dataChange = true)
-    val removes = candidates.map(f =>
-      RemoveFile(f.path, System.currentTimeMillis(), dataChange = true))
-    val cdc: Seq[Action] =
-      if (!cdfEnabled(s)) Nil
-      else Seq(stageCdc(s, scan(s, candidates)
-        .filter(coalesce(cond, lit(false)))
-        .withColumn("_change_type", lit("delete"))))
-    val metrics = Map(
-      "numRemovedFiles" -> removes.size.toString,
-      "numAddedFiles" -> adds.size.toString)
-    commitOrReclaimCdc(cdc)(commitAndCheckpoint(
-      Seq(info("DELETE", metrics = metrics)) ++ cdc ++ removes ++ adds,
-      readVersion = s.version))
-    metrics
-  }
+  def delete(cond: Column): Map[String, String] = deleteRows(cond, mor = false)
 
   /** Merge-on-read DELETE: instead of rewriting candidate files, mark
     * matching (file, row_index) pairs in a deletion-vector sidecar
@@ -3942,104 +3913,13 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * sizes — the modern Delta delete path; compaction (OPTIMIZE
     * ZORDER or CoW ops touching the file) physically drops the rows.
     */
-  def deleteMergeOnRead(cond: Column): Map[String, String] = {
-    val s = snapshot
-    val candidates = this.candidates(s, s.activeFiles, cond)
-    if (candidates.isEmpty) {
-      commitAndCheckpoint(Seq(info("DELETE",
-        params = Map("mode" -> "merge-on-read"),
-        metrics = Map("numDeletionVectors" -> "0"))))
-      return Map("numDeletionVectors" -> "0")
-    }
-    // the scan masks rows existing DVs already delete (re-marking is
-    // harmless for the mask but would emit phantom CDC deletes).
-    // With CDF on, the matched rows feed both the marks write and the
-    // CDC sidecar: persist so the candidate scan runs once
-    val withCdf = cdfEnabled(s)
-    val matchedRows0 = scan(s, candidates, Set("file_path", "row_index"))
-      .filter(coalesce(cond, lit(false)))
-    val matchedRows =
-      if (withCdf) matchedRows0
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else matchedRows0
-    try {
-      val marks = matchedRows.select("file_path", "row_index")
-      val rel = s"_graft_dv/dv-${UUID.randomUUID()}"
-      marks.write.mode("overwrite").parquet(s"$path/$rel")
-      // zero actual matches: an empty DV is pure overhead (mask anti-join
-      // on every read, spurious DV-conflict aborts) — no-op instead
-      // (footer-count, not a Spark job: the marks were just written)
-      if (stagedRowCount(rel) == 0) {
-        deleteRecursively(root.resolve(rel))
-        commitAndCheckpoint(Seq(info("DELETE",
-          params = Map("mode" -> "merge-on-read"),
-          metrics = Map("numDeletionVectors" -> "0"))))
-        return Map("numDeletionVectors" -> "0")
-      }
-      val cdc: Seq[Action] =
-        if (!withCdf) Nil
-        else Seq(stageCdc(s, matchedRows.drop("file_path", "row_index")
-          .withColumn("_change_type", lit("delete"))))
-      val metrics = Map("numDeletionVectors" -> "1",
-        "numCandidateFiles" -> candidates.size.toString)
-      // conflictOnDV: a concurrent merge-on-read UPDATE both masks rows
-      // and appends post-images; this delete planned its marks against
-      // the pre-update snapshot, so committing blindly would leave the
-      // update's post-image rows (which may match our predicate) alive.
-      // Pure MoR deletes rarely interleave in the same millisecond
-      // window; when they do, the loser re-runs — still correct.
-      commitOrReclaimCdc(cdc)(commitAndCheckpoint(Seq(info("DELETE",
-        params = Map("mode" -> "merge-on-read"), metrics = metrics), AddDV(rel)) ++ cdc,
-        readVersion = s.version, readPaths = candidates.map(_.path).toSet,
-        conflictOnDV = true))
-      maybeAutoReorg()
-      metrics
-    } finally if (withCdf) { matchedRows.unpersist(); () }
-  }
+  def deleteMergeOnRead(cond: Column): Map[String, String] = deleteRows(cond, mor = true)
 
-  /** UPDATE ... SET assignments WHERE cond. */
-  def update(cond: Column, set: Map[String, Column]): Map[String, String] = {
-    val s = snapshot
-    val candidates = this.candidates(s, s.activeFiles, cond)
-    if (candidates.isEmpty) {
-      commitAndCheckpoint(Seq(info("UPDATE", metrics = Map("numRemovedFiles" -> "0"))))
-      return Map("numRemovedFiles" -> "0")
-    }
-    // row tracking: updated rows keep their stable id (the UPDATE is
-    // the same row, post-image) — the materialized column rides the
-    // rewrite untouched by the set clauses
-    val updated = regenerateGenerated(
-      set.foldLeft(layoutRewriteSource(s, candidates)) { case (df, (c, v)) =>
-        df.withColumn(c,
-          when(coalesce(cond, lit(false)), v.cast(s.schema(c).dataType))
-            .otherwise(col(c)))
-      }, set.keySet, s, Some(cond))
-    validateConstraints(updated, s)
-    val adds = stageWrite(updated, s.partitionColumns, dataChange = true)
-    val removes = candidates.map(f =>
-      RemoveFile(f.path, System.currentTimeMillis(), dataChange = true))
-    // unlike the MoR paths (sparse matches, persisted), CoW candidates
-    // are the full rewrite set — persisting them would spill
-    // O(candidate bytes); one extra pruned scan is the cheaper trade
-    val cdc: Seq[Action] =
-      if (!cdfEnabled(s)) Nil
-      else {
-        val pre = scan(s, candidates).filter(coalesce(cond, lit(false)))
-        val post = regenerateGenerated(set.foldLeft(pre) { case (df, (c, v)) =>
-          df.withColumn(c, v.cast(s.schema(c).dataType))
-        }, set.keySet, s, None)
-        Seq(stageCdc(s,
-          pre.withColumn("_change_type", lit("update_preimage"))
-            .unionByName(post.withColumn("_change_type", lit("update_postimage")))))
-      }
-    val metrics = Map(
-      "numRemovedFiles" -> removes.size.toString,
-      "numAddedFiles" -> adds.size.toString)
-    commitOrReclaimCdc(cdc)(commitAndCheckpoint(
-      Seq(info("UPDATE", metrics = metrics)) ++ cdc ++ removes ++ adds,
-      readVersion = s.version))
-    metrics
-  }
+  /** UPDATE ... SET assignments WHERE cond, copy-on-write. Assignments
+    * evaluate simultaneously against the pre-update row.
+    */
+  def update(cond: Column, set: Map[String, Column]): Map[String, String] =
+    updateRows(cond, set, mor = false)
 
   /** UPDATE ... merge-on-read (Delta DV-update parity): matching rows
     * are masked out via a deletion vector and their updated post-images
@@ -4048,65 +3928,22 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * 100 TB table. Compaction (OPTIMIZE ZORDER full rewrite / CoW ops
     * touching the files) later materializes the masks physically.
     */
-  def updateMergeOnRead(cond: Column, set: Map[String, Column]): Map[String, String] = {
-    val s = snapshot
-    val candidates = this.candidates(s, s.activeFiles, cond)
-    if (candidates.isEmpty) {
-      commitAndCheckpoint(Seq(info("UPDATE",
-        params = Map("mode" -> "merge-on-read"),
-        metrics = Map("numDeletionVectors" -> "0"))))
-      return Map("numDeletionVectors" -> "0")
-    }
-    // the scan masks rows already deleted by existing DVs — they must
-    // not match: appending their post-image would resurrect them.
-    // matched feeds the marks write, the post-image write, and (with
-    // CDF) the CDC sidecar — persist so the candidate scan + DV
-    // anti-join runs once, not three times (O(matches) storage)
-    val matched = scan(s, candidates, Set("file_path", "row_index"))
-      .filter(coalesce(cond, lit(false)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val rel = s"_graft_dv/dv-${UUID.randomUUID()}"
-      matched.select("file_path", "row_index")
-        .write.mode("overwrite").parquet(s"$path/$rel")
-      // stats-pruned candidates with zero actual matches: committing an
-      // empty DV would tax every future read with the mask anti-join and
-      // spuriously conflict-abort concurrent rewrites — bail to a no-op
-      // commit instead (driver-side footer count, no Spark job)
-      if (stagedRowCount(rel) == 0) {
-        deleteRecursively(root.resolve(rel))
-        commitAndCheckpoint(Seq(info("UPDATE",
-          params = Map("mode" -> "merge-on-read"),
-          metrics = Map("numDeletionVectors" -> "0"))))
-        return Map("numDeletionVectors" -> "0")
-      }
-      val updated = regenerateGenerated(
-        set.foldLeft(matched.drop("file_path", "row_index")) {
-          case (df, (c, v)) => df.withColumn(c, v.cast(s.schema(c).dataType))
-        }, set.keySet, s, None)
-      validateConstraints(updated, s)
-      val adds = stageWrite(updated, s.partitionColumns, dataChange = true)
-      val cdc: Seq[Action] =
-        if (!cdfEnabled(s)) Nil
-        else Seq(stageCdc(s,
-          matched.drop("file_path", "row_index")
-            .withColumn("_change_type", lit("update_preimage"))
-            .unionByName(updated.withColumn("_change_type", lit("update_postimage")))))
-      val metrics = Map(
-        "numDeletionVectors" -> "1",
-        "numAddedFiles" -> adds.size.toString,
-        "numCandidateFiles" -> candidates.size.toString)
-      // conflictOnDV: a concurrent MoR delete's mask landed after our
-      // post-images were computed — committing would resurrect its rows
-      commitOrReclaimCdc(cdc)(commitAndCheckpoint(Seq(info("UPDATE",
-        params = Map("mode" -> "merge-on-read"), metrics = metrics),
-        AddDV(rel)) ++ cdc ++ adds,
-        readVersion = s.version, readPaths = candidates.map(_.path).toSet,
-        conflictOnDV = true))
-      maybeAutoReorg()
-      metrics
-    } finally matched.unpersist()
-  }
+  def updateMergeOnRead(cond: Column, set: Map[String, Column]): Map[String, String] =
+    updateRows(cond, set, mor = true)
+
+  /** DELETE / UPDATE through the one planner: with no source every
+    * target row is "not matched by source", so the WHERE clause is a
+    * not-matched-by-source clause. The mode defaults to the table's
+    * `graft.dml.mode`.
+    */
+  private[graft] def deleteRows(cond: Column,
+      mor: Boolean = dmlMergeOnRead): Map[String, String] =
+    executeDml("DELETE", None, Nil, DmlClauses(nmbsDelete = Some(cond)), mor)
+
+  private[graft] def updateRows(cond: Column, set: Map[String, Column],
+      mor: Boolean = dmlMergeOnRead): Map[String, String] =
+    executeDml("UPDATE", None, Nil,
+      DmlClauses(nmbsUpdate = Some((Some(cond), set))), mor)
 
   /** MERGE INTO by key equality: matched → replace with source row,
     * not-matched → insert (the default clause set of [[mergeBuilder]]).
@@ -4288,367 +4125,260 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       .reduce(_ unionByName _)
   }
 
-  private[lake] def executeMerge(sourceIn: DataFrame, keys: Seq[String],
-      updateAll: Boolean, updateCond: Option[Column],
-      updateSet: Option[Map[String, Column]] = None,
-      deleteCond: Option[Column], insertUnmatched: Boolean,
-      nmbsUpdate: Option[(Option[Column], Map[String, Column])] = None,
-      nmbsDelete: Option[Column] = None,
-      insertCond: Option[Column] = None,
-      insertSet: Option[Map[String, Column]] = None,
-      moreInserts: Seq[(Option[Column], Option[Map[String, Column]])] = Nil,
-      matchCond: Option[Column] = None,
-      extraActions: Seq[Action] = Nil): Map[String, String] = {
-    val s = snapshot
-    // the source is a small delta against a huge table and is referenced
-    // by the key-range probe, four joins, and the numSourceRows metric —
-    // persist once instead of recomputing an arbitrary source plan per use
-    val source = sourceIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val numSourceRows = source.count()
-    validateConstraints(source, s)
-    enforceSchema(source.schema, s.schema)
-    val keyRange = sourceKeyRange(source, keys)
-    val candidates = this.candidates(s, s.activeFiles, keyRange)
-    // row tracking: surviving target rows (kept, updated, or NMBS-
-    // transformed) carry their stable id through the rewrite; inserts
-    // ride with a null materialized id and resolve to the new files'
-    // fresh base range — ids from disjoint ranges can never collide
-    val rt = rowTrackingOn(s)
-    val candDF = layoutRewriteSource(s, candidates)
-    val fields = s.schema.fieldNames.toIndexedSeq.map(col)
-    val outFields = if (rt) fields :+ col(RowIdCol) else fields
-    val keyCols = keys.map(col)
-
-    // Arbitrary-ON support: the equality keys still drive key-range
-    // pruning and the hash join; a residual boolean (target columns
-    // unprefixed, source columns `src_`-prefixed) rides as an extra
-    // join predicate — a row pair "matches" only when keys are equal
-    // AND the residual holds (NULL residual = no match, like SQL ON).
-    val srcM = source.select(source.columns.toIndexedSeq.map(c =>
-      col(c).as(s"src_$c")): _*)
-    val fullCondM = matchCond.map(mc =>
-      keys.map(k => col(k) === col(s"src_$k")).reduce(_ && _) &&
-        (coalesce(mc, lit(false)) === true))
-    def semiSrc(tgt: DataFrame): DataFrame = fullCondM match {
-      case None => tgt.join(source.select(keyCols: _*), keys, "left_semi")
-      case Some(c) => tgt.join(srcM, c, "left_semi")
-    }
-    def antiSrc(tgt: DataFrame): DataFrame = fullCondM match {
-      case None => tgt.join(source, keys, "left_anti")
-      case Some(c) => tgt.join(srcM, c, "left_anti")
-    }
-    def srcUnmatched(tgt: DataFrame): DataFrame = fullCondM match {
-      case None => source.join(tgt.select(keyCols: _*), keys, "left_anti")
-      case Some(c) => srcM.join(tgt, c, "left_anti")
-        .select(source.columns.toIndexedSeq.map(c2 => col(s"src_$c2").as(c2)): _*)
-    }
-
-    // target rows with no source match: NOT-MATCHED-BY-SOURCE clauses
-    // apply — inside the candidate files AND in the (clause-pruned)
-    // rest of the table, which by key-range construction holds no match
-    val untouched = antiSrc(candDF)
-    val restFiles = nmbsRestFiles(s, candidates.map(_.path).toSet, nmbsUpdate, nmbsDelete)
-    val restDF = layoutRewriteSource(s, restFiles)
-    val matched = semiSrc(candDF)
-    // matched rows that survive (delete condition not met), evaluated
-    // against the TARGET row
-    val afterDelete = deleteCond match {
-      case Some(dc) => matched.filter(coalesce(dc, lit(false)) === false)
-      case None => matched
-    }
-    // matched survivors: replaced by the source row (or partial-update
-    // assignments) when updateAll (and updateCond holds on the target
-    // row), else kept as-is
-    val (toUpdate, keptMatched) = if (updateAll) {
-      val upd = updateCond match {
-        case Some(uc) => afterDelete.filter(coalesce(uc, lit(false)) === true)
-        case None => afterDelete
-      }
-      val notUpdated = updateCond match {
-        case Some(uc) => afterDelete.filter(coalesce(uc, lit(false)) === false)
-        case None => afterDelete.limit(0)
-      }
-      (upd, notUpdated)
-    } else (afterDelete.limit(0), afterDelete)
-
-    val replacements = (updateSet, matchCond) match {
-      case (Some(set), _) =>
-        assignAll(matchedPairs(toUpdate, source, keys, matchCond), set, s, None)
-      case (None, Some(_)) =>
-        // residual path: guarded (target,source) PAIRS — each updated
-        // target is replaced by its unique residual-matching source
-        // row, keeping its stable id when row tracking is on
-        val srcCols = s.schema.fieldNames.toIndexedSeq.map(n => col(s"src_$n").as(n))
-        matchedPairs(toUpdate, source, keys, matchCond)
-          .select((if (rt) srcCols :+ col(RowIdCol) else srcCols): _*)
-      case (None, None) =>
-        // update-all: the source row replaces the target row, which
-        // KEEPS its id (same logical row) — attach it by key. One id
-        // per key (min for determinism): duplicate-key targets
-        // collapse to one replacement row exactly as the left_semi
-        // non-tracked path does, so enabling row tracking never
-        // changes the merged row count
-        if (rt) {
-          requireUniqueSourceKeys(source, toUpdate.select(keyCols: _*), keys)
-          source.join(toUpdate.groupBy(keyCols: _*)
-            .agg(min(col(RowIdCol)).as(RowIdCol)), keys)
-        }
-        else source.join(toUpdate.select(keyCols: _*), keys, "left_semi")
-    }
-    val inserts0 =
-      if (insertUnmatched) buildInserts(srcUnmatched(candDF), s,
-        (insertCond, insertSet) +: moreInserts)
-      else source.limit(0).select(
-        s.schema.fieldNames.toIndexedSeq.map(col): _*)
-    val inserts =
-      if (rt) inserts0.withColumn(RowIdCol, lit(null).cast("long"))
-      else inserts0
-
-    val merged = Seq(applyNmbs(untouched, s, nmbsUpdate, nmbsDelete),
-        applyNmbs(restDF, s, nmbsUpdate, nmbsDelete), keptMatched)
-      .map(_.select(outFields: _*))
-      .reduce(_ unionByName _)
-      .unionByName(replacements.select(outFields: _*))
-      .unionByName(inserts.select(outFields: _*))
-    // unconditional: insert-ALL / update-ALL copy SOURCE values, which
-    // can violate CHECK/NOT NULL exactly like explicit sets can; with
-    // no constraints declared this is free (no jobs run)
-    validateConstraints(merged, s)
-    val adds = stageWrite(merged, s.partitionColumns, dataChange = true)
-    val removes = (candidates ++ restFiles).map(f =>
-      RemoveFile(f.path, System.currentTimeMillis(), dataChange = true))
-    val cdc: Seq[Action] =
-      if (!cdfEnabled(s)) Nil
-      else {
-        val deleted = deleteCond match {
-          case Some(dc) => matched.filter(coalesce(dc, lit(false)) === true)
-          case None => matched.limit(0)
-        }
-        val unmatchedAll = untouched.select(fields: _*)
-          .unionByName(restDF.select(fields: _*))
-        val nmbsDeleted = nmbsDelete match {
-          case Some(dc) => unmatchedAll.filter(coalesce(dc, lit(false)) === true)
-          case None => unmatchedAll.limit(0)
-        }
-        val nmbsPre = nmbsUpdate match {
-          case Some((cond, _)) =>
-            applyNmbs(unmatchedAll, s, None, nmbsDelete)
-              .filter(coalesce(cond.getOrElse(lit(true)), lit(false)) === true)
-          case None => unmatchedAll.limit(0)
-        }
-        val nmbsPost = nmbsUpdate match {
-          case Some((cond, set)) =>
-            assignAll(nmbsPre, set, s, Some(cond.getOrElse(lit(true))))
-          case None => unmatchedAll.limit(0)
-        }
-        Seq(stageCdc(s,
-          deleted.select(fields: _*).withColumn("_change_type", lit("delete"))
-            .unionByName(nmbsDeleted.select(fields: _*)
-              .withColumn("_change_type", lit("delete")))
-            .unionByName(toUpdate.select(fields: _*)
-              .withColumn("_change_type", lit("update_preimage")))
-            .unionByName(replacements.select(fields: _*)
-              .withColumn("_change_type", lit("update_postimage")))
-            .unionByName(nmbsPre.select(fields: _*)
-              .withColumn("_change_type", lit("update_preimage")))
-            .unionByName(nmbsPost.select(fields: _*)
-              .withColumn("_change_type", lit("update_postimage")))
-            .unionByName(inserts.select(fields: _*)
-              .withColumn("_change_type", lit("insert")))))
-      }
-    val metrics = Map(
-      "numSourceRows" -> numSourceRows.toString,
-      "numRemovedFiles" -> removes.size.toString,
-      "numAddedFiles" -> adds.size.toString)
-    try commitOrReclaimCdc(cdc)(commitAndCheckpoint(
-      Seq(info("MERGE", metrics = metrics)) ++ extraActions ++ cdc ++ removes ++ adds,
-      readVersion = s.version))
-    finally { source.unpersist(); () }
-    metrics
-  }
-
-  /** MERGE merge-on-read (DV path): every clause's effect on existing
-    * target rows becomes a deletion-vector mask, with update post-images
-    * and inserts appended as new files — write cost O(changed rows +
-    * source rows) instead of O(candidate file bytes). The right trade
-    * for a small delta merging into a 100 TB table: candidate files are
-    * never rewritten; compaction materializes the masks later.
+  /** The one DML planner, for both modes: DELETE, UPDATE and MERGE from
+    * the path API, `GraftSql` and streaming upserts. It works out which
+    * target rows the clauses delete, update or keep and which source
+    * rows they insert; the mode decides only how the target is read and
+    * which commit tail lands the result:
+    *   - copy-on-write reads the candidate files for a full rewrite and
+    *     commits through [[rewriteCommit]];
+    *   - merge-on-read reads them with each row's (file_path,
+    *     row_index) mark, masks the changed rows and appends only
+    *     post-images and inserts through [[maskCommit]].
+    * Candidate files are pruned to the source's key range (one 1-row
+    * agg over the source) plus, for not-matched-by-source clauses, the
+    * rest of the table pruned by the clause conditions. With no source
+    * (DELETE, UPDATE) every target row is unmatched. Row tracking:
+    * kept, updated and NMBS-updated rows keep their stable id; inserts
+    * ride with a null materialized id and resolve to the new files'
+    * fresh base range. Everything persisted here is released in the
+    * `finally`, whether the statement commits or fails.
     */
-  private[lake] def executeMergeMoR(sourceIn: DataFrame, keys: Seq[String],
-      updateAll: Boolean, updateCond: Option[Column],
-      updateSet: Option[Map[String, Column]],
-      deleteCond: Option[Column], insertUnmatched: Boolean,
-      nmbsUpdate: Option[(Option[Column], Map[String, Column])],
-      nmbsDelete: Option[Column],
-      insertCond: Option[Column] = None,
-      insertSet: Option[Map[String, Column]] = None,
-      moreInserts: Seq[(Option[Column], Option[Map[String, Column]])] = Nil,
-      matchCond: Option[Column] = None,
+  private[lake] def executeDml(op: String, sourceIn: Option[DataFrame],
+      keys: Seq[String], c: DmlClauses, mor: Boolean,
       extraActions: Seq[Action] = Nil): Map[String, String] = {
     val s = snapshot
-    // small-delta source feeds the key-range probe, the semi/anti joins
-    // and the numSourceRows metric — persist once (see executeMerge)
-    val source = sourceIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val numSourceRows = source.count()
-    validateConstraints(source, s)
-    enforceSchema(source.schema, s.schema)
-    val keyRange = sourceKeyRange(source, keys)
-    val candidates = this.candidates(s, s.activeFiles, keyRange)
-    val restFiles = nmbsRestFiles(s, candidates.map(_.path).toSet, nmbsUpdate, nmbsDelete)
-    val scanFiles = candidates ++ restFiles
-    val fields = s.schema.fieldNames.toIndexedSeq.map(col)
-    // row tracking: post-images keep the masked original's id (same
-    // logical row, like the CoW path); inserts resolve to the new
-    // files' fresh base range via a null materialized id
-    val rt = rowTrackingOn(s)
-    val outFields = if (rt) fields :+ col(RowIdCol) else fields
-
-    // unmasked target rows of every file a clause may touch, with
-    // (file_path, row_index) identity for DV marks
-    val live = scan(s, scanFiles,
-      Set("file_path", "row_index") ++ (if (rt) Set(RowIdCol) else Set.empty))
-    // matched / NMBS-changed rows are sparse (a small delta against a
-    // huge table) — persist them so the candidate scan runs once across
-    // the DV write, the post-image write, and the CDC sidecar
-    val keyCols = keys.map(col)
-    // arbitrary-ON residual rides the match join (see executeMerge)
-    val srcM = source.select(source.columns.toIndexedSeq.map(c =>
-      col(c).as(s"src_$c")): _*)
-    val fullCondM = matchCond.map(mc =>
-      keys.map(k => col(k) === col(s"src_$k")).reduce(_ && _) &&
-        (coalesce(mc, lit(false)) === true))
-    val matched = (fullCondM match {
-        case None => live.join(source.select(keyCols: _*), keys, "left_semi")
-        case Some(c) => live.join(srcM, c, "left_semi")
-      }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val unmatchedTarget = fullCondM match {
-      case None => live.join(source.select(keyCols: _*), keys, "left_anti")
-      case Some(c) => live.join(srcM, c, "left_anti")
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def cache(df: DataFrame): DataFrame = {
+      cached += df; df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    val changeConds = nmbsDelete.toSeq ++ nmbsUpdate.map(_._1.getOrElse(lit(true))).toSeq
-    val nmbsChanged = (if (changeConds.isEmpty) unmatchedTarget.limit(0)
-      else unmatchedTarget.filter(coalesce(changeConds.reduce(_ || _), lit(false)) === true))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val delRows = deleteCond match {
-        case Some(dc) => matched.filter(coalesce(dc, lit(false)) === true)
-        case None => matched.limit(0)
+      // the source is a small delta against a huge table, read by the
+      // key-range probe, the match joins and the numSourceRows metric —
+      // persist once instead of recomputing an arbitrary source plan
+      val source = sourceIn.map(cache)
+      val sourceMetrics = source.fold(Map.empty[String, String])(src =>
+        Map("numSourceRows" -> src.count().toString))
+      source.foreach { src => validateConstraints(src, s); enforceSchema(src.schema, s.schema) }
+      val candidates = source.fold(Seq.empty[AddFile])(src =>
+        this.candidates(s, s.activeFiles, sourceKeyRange(src, keys)))
+      val restFiles = nmbsRestFiles(s, candidates.map(_.path).toSet, c.nmbsUpdate, c.nmbsDelete)
+      val rt = rowTrackingOn(s)
+      val fields = s.schema.fieldNames.toIndexedSeq.map(col)
+      val outFields = if (rt) fields :+ col(RowIdCol) else fields
+      val keyCols = keys.map(col)
+      // the scan applies the existing DVs: an already-masked row can
+      // neither be marked again (a phantom CDC delete) nor get a
+      // post-image (a resurrected row)
+      def target(files: Seq[AddFile]): DataFrame = scan(s, files,
+        (if (rt) Set(RowIdCol) else Set.empty[String]) ++
+          (if (mor) Set("file_path", "row_index") else Set.empty[String]))
+      val candT = target(candidates)
+      val restT = target(restFiles)
+      def isTrue(e: Column): Column = coalesce(e, lit(false)) === true
+      def isFalse(e: Column): Column = coalesce(e, lit(false)) === false
+
+      // Arbitrary ON: the equality keys drive key-range pruning and the
+      // hash join; a residual boolean (target columns unprefixed, source
+      // columns `src_`-prefixed) rides as an extra join predicate — a pair
+      // matches only when the keys are equal AND the residual holds
+      // (NULL residual = no match, like SQL ON).
+      val on = c.matchCond.map(mc =>
+        keys.map(k => col(k) === col(s"src_$k")).reduce(_ && _) && isTrue(mc))
+      def prefixed(src: DataFrame): DataFrame =
+        src.select(src.columns.toIndexedSeq.map(n => col(n).as(s"src_$n")): _*)
+      def semi(src: DataFrame, tgt: DataFrame): DataFrame = on.fold(
+        tgt.join(src.select(keyCols: _*), keys, "left_semi"))(
+        tgt.join(prefixed(src), _, "left_semi"))
+      def anti(src: DataFrame, tgt: DataFrame): DataFrame = on.fold(
+        tgt.join(src, keys, "left_anti"))(tgt.join(prefixed(src), _, "left_anti"))
+      def unmatchedSource(src: DataFrame, tgt: DataFrame): DataFrame = on.fold(
+        src.join(tgt.select(keyCols: _*), keys, "left_anti"))(cond =>
+        prefixed(src).join(tgt, cond, "left_anti")
+          .select(src.columns.toIndexedSeq.map(n => col(s"src_$n").as(n)): _*))
+
+      // MATCHED clauses: the delete condition first, then the update
+      // (gated by its condition), both evaluated on the target row. MoR
+      // persists the sparse matched rows: they feed the marks, the
+      // post-images and the CDC
+      val matched = source.map { src =>
+        val m = semi(src, candT); if (mor) cache(m) else m
       }
-      val afterDelete = deleteCond match {
-        case Some(dc) => matched.filter(coalesce(dc, lit(false)) === false)
-        case None => matched
-      }
-      val updRows =
-        if (!updateAll) afterDelete.limit(0)
-        else updateCond.fold(afterDelete)(uc =>
-          afterDelete.filter(coalesce(uc, lit(false)) === true))
-      val postImages = (updateSet, matchCond) match {
+      val delRows = for (m <- matched; dc <- c.deleteCond) yield m.filter(isTrue(dc))
+      val afterDelete = matched.map(m => c.deleteCond.fold(m)(dc => m.filter(isFalse(dc))))
+      val updPre = afterDelete.filter(_ => c.updateAll)
+        .map(a => c.updateCond.fold(a)(uc => a.filter(isTrue(uc))))
+      val keptMatched = afterDelete.flatMap(a =>
+        if (!c.updateAll) Some(a) else c.updateCond.map(uc => a.filter(isFalse(uc))))
+      val updPost = for (src <- source; pre <- updPre) yield (c.updateSet, c.matchCond) match {
         case (Some(set), _) =>
-          assignAll(matchedPairs(updRows, source, keys, matchCond), set, s, None)
+          assignAll(matchedPairs(pre, src, keys, c.matchCond), set, s, None)
         case (None, Some(_)) =>
-          // residual path: guarded pairs, post-image = source row (+
-          // the masked target's stable id when row tracking is on)
+          // residual path: guarded (target, source) PAIRS — each updated
+          // target is replaced by its unique residual-matching source row
           val srcCols = s.schema.fieldNames.toIndexedSeq.map(n => col(s"src_$n").as(n))
-          matchedPairs(updRows, source, keys, matchCond)
+          matchedPairs(pre, src, keys, c.matchCond)
             .select((if (rt) srcCols :+ col(RowIdCol) else srcCols): _*)
         case (None, None) =>
-          // one id per key (min) — multiplicity parity with left_semi,
-          // see the copy-on-write path
+          // update-all: the source row replaces the target row, which
+          // KEEPS its id (same logical row) — attached by key, one id per
+          // key (min for determinism), so duplicate-key targets collapse
+          // to one replacement exactly as the untracked left_semi does
           if (rt) {
-            requireUniqueSourceKeys(source, updRows.select(keyCols: _*), keys)
-            source.join(updRows.groupBy(keyCols: _*)
-              .agg(min(col(RowIdCol)).as(RowIdCol)), keys)
-          }
-          else source.join(updRows.select(keyCols: _*), keys, "left_semi")
+            requireUniqueSourceKeys(src, pre.select(keyCols: _*), keys)
+            src.join(pre.groupBy(keyCols: _*).agg(min(col(RowIdCol)).as(RowIdCol)), keys)
+          } else src.join(pre.select(keyCols: _*), keys, "left_semi")
       }
-      val nmbsDelRows = nmbsDelete match {
-        case Some(dc) => nmbsChanged.filter(coalesce(dc, lit(false)) === true)
-        case None => nmbsChanged.limit(0)
+      val inserts = source.filter(_ => c.inserts.nonEmpty).map { src =>
+        val rows = buildInserts(unmatchedSource(src, candT), s, c.inserts)
+        if (rt) rows.withColumn(RowIdCol, lit(null).cast("long")) else rows
       }
-      val nmbsSurvivors = nmbsDelete match {
-        case Some(dc) => nmbsChanged.filter(coalesce(dc, lit(false)) === false)
-        case None => nmbsChanged
-      }
-      val nmbsUpdPre = nmbsUpdate match {
-        case Some((cond, _)) => nmbsSurvivors.filter(
-          coalesce(cond.getOrElse(lit(true)), lit(false)) === true)
-        case None => nmbsChanged.limit(0)
-      }
-      val nmbsPost = nmbsUpdate match {
-        case Some((_, set)) => assignAll(nmbsUpdPre, set, s, None)
-        case None => nmbsChanged.limit(0).select(outFields: _*)
-      }
-      val srcUnmatched = fullCondM match {
-        case None => source.join(live.select(keyCols: _*), keys, "left_anti")
-        case Some(c) => srcM.join(live, c, "left_anti")
-          .select(source.columns.toIndexedSeq.map(c2 => col(s"src_$c2").as(c2)): _*)
-      }
-      val inserts0 =
-        if (insertUnmatched) buildInserts(srcUnmatched, s,
-          (insertCond, insertSet) +: moreInserts)
-        else source.limit(0).select(
-          s.schema.fieldNames.toIndexedSeq.map(col): _*)
-      val inserts =
-        if (rt) inserts0.withColumn(RowIdCol, lit(null).cast("long"))
-        else inserts0
 
-      val rel = s"_graft_dv/dv-${UUID.randomUUID()}"
-      Seq(delRows, updRows, nmbsDelRows, nmbsUpdPre)
-        .map(_.select("file_path", "row_index")).reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$path/$rel")
-      val nMasked = stagedRowCount(rel) // footer count, no re-read job
+      // NOT MATCHED BY SOURCE clauses act on target rows with no match:
+      // the candidates' unmatched rows and the rest files, which by
+      // key-range construction hold none. CoW rewrites all of them
+      // (applyNmbs) and does not persist: they are the full rewrite set,
+      // so a cache would spill O(candidate bytes) where the CDC pays one
+      // more pruned scan. MoR reads only the rows a clause changes,
+      // persisted when more than the marks read them
+      val untouched = source.map(anti(_, candT))
+      val unmatched = untouched.fold(restT)(_.unionByName(restT))
+      val changeConds = c.nmbsDelete.toSeq ++ c.nmbsUpdate.map(_._1.getOrElse(lit(true)))
+      val nmbsBase =
+        if (changeConds.isEmpty) None
+        else if (!mor) Some(unmatched)
+        else {
+          val changed = unmatched.filter(isTrue(changeConds.reduce(_ || _)))
+          Some(if (c.nmbsUpdate.isDefined || cdfEnabled(s)) cache(changed) else changed)
+        }
+      val nmbsDel = for (b <- nmbsBase; dc <- c.nmbsDelete) yield b.filter(isTrue(dc))
+      val nmbsUpdPre = for (b <- nmbsBase; (cond, _) <- c.nmbsUpdate) yield
+        c.nmbsDelete.fold(b)(dc => b.filter(isFalse(dc)))
+          .filter(isTrue(cond.getOrElse(lit(true))))
+      val nmbsUpdPost = for (pre <- nmbsUpdPre; (_, set) <- c.nmbsUpdate) yield
+        assignAll(pre, set, s, None)
 
-      val newRows = postImages.select(outFields: _*)
-        .unionByName(nmbsPost.select(outFields: _*))
-        .unionByName(inserts.select(outFields: _*))
-      // unconditional, as in the CoW path: *-clauses copy source values
-      validateConstraints(newRows, s)
-      // empty unions stage zero-row part files — drop them rather than
-      // commit adds that tax every future scan
-      val adds0 = stageWrite(newRows, s.partitionColumns, dataChange = true)
-      val (adds, emptyAdds) = adds0.partition(_.stats.forall(_.numRecords > 0))
-      emptyAdds.foreach(f => Files.deleteIfExists(root.resolve(f.path)))
-      if (nMasked == 0 && adds.isEmpty) {
-        deleteRecursively(root.resolve(rel))
-        // a no-op epoch still advances the SetTxn watermark: a replay
-        // after crash must see the epoch as applied
-        commitAndCheckpoint(Seq(info("MERGE",
-          params = Map("mode" -> "merge-on-read"),
-          metrics = Map("numDeletionVectors" -> "0"))) ++ extraActions)
-        return Map("numDeletionVectors" -> "0")
+      def changeRows: DataFrame = Seq(
+          delRows -> "delete", nmbsDel -> "delete",
+          updPre -> "update_preimage", updPost -> "update_postimage",
+          nmbsUpdPre -> "update_preimage", nmbsUpdPost -> "update_postimage",
+          inserts -> "insert")
+        .collect { case (Some(df), ct) =>
+          df.select(fields: _*).withColumn("_change_type", lit(ct)) }
+        .reduceOption(_ unionByName _).getOrElse(emptyChanges(s))
+      // CHECK / NOT NULL / generated columns: every clause that writes
+      // values is validated, *-copies of source rows included; a
+      // DELETE's survivors were valid already
+      def stage(rows: DataFrame): Seq[AddFile] = {
+        if (source.isDefined || c.nmbsUpdate.isDefined) validateConstraints(rows, s)
+        stageWrite(rows, s.partitionColumns, dataChange = true)
       }
-      val dvActions: Seq[Action] =
-        if (nMasked > 0) Seq(AddDV(rel))
-        else { deleteRecursively(root.resolve(rel)); Nil }
-      val cdc: Seq[Action] =
-        if (!cdfEnabled(s)) Nil
-        else Seq(stageCdc(s,
-          delRows.select(fields: _*).withColumn("_change_type", lit("delete"))
-            .unionByName(nmbsDelRows.select(fields: _*)
-              .withColumn("_change_type", lit("delete")))
-            .unionByName(updRows.select(fields: _*)
-              .withColumn("_change_type", lit("update_preimage")))
-            .unionByName(postImages.select(fields: _*)
-              .withColumn("_change_type", lit("update_postimage")))
-            .unionByName(nmbsUpdPre.select(fields: _*)
-              .withColumn("_change_type", lit("update_preimage")))
-            .unionByName(nmbsPost.select(fields: _*)
-              .withColumn("_change_type", lit("update_postimage")))
-            .unionByName(inserts.select(fields: _*)
-              .withColumn("_change_type", lit("insert")))))
-      val metrics = Map(
-        "numSourceRows" -> numSourceRows.toString,
-        "numDeletionVectors" -> (if (nMasked > 0) "1" else "0"),
-        "numMaskedRows" -> nMasked.toString,
-        "numAddedFiles" -> adds.size.toString)
-      commitOrReclaimCdc(cdc)(commitAndCheckpoint(Seq(info("MERGE",
-        params = Map("mode" -> "merge-on-read"), metrics = metrics)) ++
-        dvActions ++ cdc ++ adds ++ extraActions,
-        readVersion = s.version, readPaths = scanFiles.map(_.path).toSet,
-        conflictOnDV = true))
-      maybeAutoReorg()
-      metrics
-    } finally { source.unpersist(); matched.unpersist(); nmbsChanged.unpersist(); () }
+
+      val touched = candidates ++ restFiles
+      if (!mor) {
+        // one pass over the candidates: unmatched rows pass through the
+        // NMBS projection, matched rows are kept, replaced or dropped
+        val rewritten = ((untouched.toSeq :+ restT)
+          .map(applyNmbs(_, s, c.nmbsUpdate, c.nmbsDelete)) ++
+          keptMatched ++ updPost ++ inserts)
+          .map(_.select(outFields: _*)).reduce(_ unionByName _)
+        rewriteCommit(s, op, touched, mayInsert = inserts.isDefined,
+          stage(rewritten), Some(changeRows), sourceMetrics, extraActions)
+      } else {
+        val marks = Seq(delRows, updPre, nmbsDel, nmbsUpdPre).flatten
+          .map(_.select("file_path", "row_index")).reduceOption(_ unionByName _)
+        val newRows = (updPost ++ nmbsUpdPost ++ inserts)
+          .map(_.select(outFields: _*)).reduceOption(_ unionByName _)
+        maskCommit(s, op, touched.map(_.path).toSet,
+          rel => marks.foreach(_.write.mode("overwrite").parquet(s"$path/$rel")),
+          mayInsert = inserts.isDefined, newRows.fold(Seq.empty[AddFile])(stage),
+          Some(changeRows),
+          sourceMetrics + ("numCandidateFiles" -> touched.size.toString), extraActions)
+      }
+    } finally cached.foreach(_.unpersist())
+  }
+
+  /** The copy-on-write commit tail, shared by the planner and the
+    * native row-level rewrite ([[rowLevelCommitReplace]]): the
+    * rewritten candidates replace the removed files in one optimistic
+    * commit, with a CDC sidecar when the table has `graft.cdf`. With
+    * nothing to remove and nothing to insert the statement is a no-op
+    * commit, and `adds` and `cdc` are never evaluated.
+    */
+  private def rewriteCommit(s: Snapshot, op: String, removed: Seq[AddFile],
+      mayInsert: Boolean, adds: => Seq[AddFile], cdc: => Option[DataFrame],
+      metrics: Map[String, String], extraActions: Seq[Action] = Nil)
+      : Map[String, String] = {
+    if (removed.isEmpty && !mayInsert) {
+      val m = metrics + ("numRemovedFiles" -> "0")
+      commitAndCheckpoint(Seq(info(op, metrics = m)) ++ extraActions)
+      return m
+    }
+    val staged = adds
+    val cdcActions: Seq[Action] =
+      if (!cdfEnabled(s)) Nil else cdc.map(stageCdc(s, _)).toSeq
+    val removes = removed.map(f =>
+      RemoveFile(f.path, System.currentTimeMillis(), dataChange = true))
+    val m = metrics ++ Map(
+      "numRemovedFiles" -> removes.size.toString,
+      "numAddedFiles" -> staged.size.toString)
+    commitOrReclaimCdc(cdcActions)(commitAndCheckpoint(
+      Seq(info(op, metrics = m)) ++ extraActions ++ cdcActions ++ removes ++ staged,
+      readVersion = s.version))
+    m
+  }
+
+  /** The merge-on-read commit tail, shared by the planner and the
+    * native delta write ([[rowLevelCommitDelta]]). `writeMarks` places
+    * the (file_path, row_index) marks under the given table-relative
+    * directory, which becomes ONE deletion-vector sidecar (masked at
+    * every scan until compaction); `adds` stages the new rows
+    * (post-images, inserts), and zero-row files are dropped rather than
+    * taxing every later scan. Zero marks and no adds make a no-op
+    * commit (an empty DV is pure overhead: a mask anti-join on every
+    * read and spurious DV-conflict aborts). Otherwise the commit
+    * carries the `scanned` read set and `conflictOnDV` — a concurrent
+    * masker's rows must not resurrect through our post-images, so the
+    * loser aborts and re-runs — and auto-REORG runs after it.
+    */
+  private def maskCommit(s: Snapshot, op: String, scanned: Set[String],
+      writeMarks: String => Unit, mayInsert: Boolean, adds: => Seq[AddFile],
+      cdc: => Option[DataFrame], metrics: Map[String, String],
+      extraActions: Seq[Action] = Nil): Map[String, String] = {
+    val params = Map("mode" -> "merge-on-read")
+    val rel = s"_graft_dv/dv-${UUID.randomUUID()}"
+    val dvDir = root.resolve(rel)
+    val (nMasked, staged, cdcActions) = try {
+      // footer count, not a Spark job: the marks were just written
+      val n = if (scanned.isEmpty) 0L else { writeMarks(rel); stagedRowCount(rel) }
+      if (n == 0) deleteRecursively(dvDir)
+      val (kept, empty) =
+        (if (n == 0 && !mayInsert) Seq.empty[AddFile] else adds)
+          .partition(_.stats.forall(_.numRecords > 0))
+      empty.foreach(f => Files.deleteIfExists(root.resolve(f.path)))
+      val cdcs: Seq[Action] =
+        if (!cdfEnabled(s) || (n == 0 && kept.isEmpty)) Nil
+        else cdc.map(stageCdc(s, _)).toSeq
+      (n, kept, cdcs)
+    } catch { case e: Throwable => deleteRecursively(dvDir); throw e }
+    if (nMasked == 0 && staged.isEmpty) {
+      // a no-op still commits extraActions: a streaming epoch's SetTxn
+      // must advance the watermark so a replay sees it applied
+      val m = metrics + ("numDeletionVectors" -> "0")
+      commitAndCheckpoint(Seq(info(op, params = params, metrics = m)) ++ extraActions)
+      return m
+    }
+    val dv = if (nMasked > 0) Seq(AddDV(rel)) else Nil
+    val m = metrics ++ Map(
+      "numDeletionVectors" -> dv.size.toString,
+      "numMaskedRows" -> nMasked.toString,
+      "numAddedFiles" -> staged.size.toString)
+    commitOrReclaimCdc(cdcActions)(commitAndCheckpoint(
+      Seq(info(op, params = params, metrics = m)) ++ dv ++ cdcActions ++ staged ++
+        extraActions,
+      readVersion = s.version, readPaths = scanned, conflictOnDV = true))
+    maybeAutoReorg()
+    m
   }
 
   /** Idempotent streaming upsert — the `foreachBatch` + MERGE pattern
@@ -4657,29 +4387,21 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * (engine retry after crash) is skipped instead of double-applied.
     * Exactly-once upserts from a stream into a 100 TB table.
     *
-    * With table property `graft.streamUpsert.mor=true` each epoch
-    * commits merge-on-read: DV masks over updated rows + appended
-    * post-images/inserts, O(changed rows) per epoch. At high epoch
+    * Each epoch commits in the table's `graft.dml.mode`. Under
+    * `merge-on-read` an epoch masks the updated rows and appends
+    * post-images and inserts, O(changed rows) per epoch: at high epoch
     * rates the copy-on-write default rewrites every candidate file
     * every epoch — write amplification that MoR avoids entirely;
     * compaction moves to the maintenance schedule (OPTIMIZE / REORG
-    * PURGE), where it belongs.
+    * PURGE, or `graft.autoReorg`), where it belongs.
     */
   def mergeStreamBatch(appId: String, epochId: Long, source: DataFrame,
-                       key: String): Map[String, String] = {
-    val s = snapshot
-    if (s.txns.get(appId).exists(_ >= epochId))
+                       key: String): Map[String, String] =
+    if (snapshot.txns.get(appId).exists(_ >= epochId))
       Map("skippedEpoch" -> epochId.toString)
-    else if (s.metadata.map(_.properties).getOrElse(Map.empty)
-        .getOrElse("graft.streamUpsert.mor", "false").toBoolean)
-      executeMergeMoR(source, Seq(key), updateAll = true, updateCond = None,
-        updateSet = None, deleteCond = None, insertUnmatched = true,
-        nmbsUpdate = None, nmbsDelete = None,
-        extraActions = Seq(SetTxn(appId, epochId)))
-    else executeMerge(source, Seq(key), updateAll = true, updateCond = None,
-      deleteCond = None, insertUnmatched = true,
+    else executeDml("MERGE", Some(source), Seq(key),
+      DmlClauses(updateAll = true, inserts = Seq((None, None))), dmlMergeOnRead,
       extraActions = Seq(SetTxn(appId, epochId)))
-  }
 
   /** Atomic `replaceWhere`: in ONE commit, drop every row matching
     * `cond` and insert `df` — the partition-overwrite idiom

@@ -26,11 +26,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * unprefixed and the source row's columns as `src_<name>` — e.g.
   * `Map("qty" -> (col("qty") + col("src_qty")))`.
   *
-  * `mergeOnRead()` switches execution to the deletion-vector path:
-  * changed target rows are masked via a DV sidecar and their
-  * post-images appended, so write cost is O(changed rows) instead of
-  * O(candidate file bytes) — the right trade for a small delta
-  * merging into a 100 TB table.
+  * The builder names its mode: copy-on-write unless `mergeOnRead()`.
+  * `GraftSql`'s MERGE follows the table's `graft.dml.mode` instead.
+  * Both modes run the same clause planner (`GraftTable.executeDml`).
   */
 final class MergeBuilder private[lake] (t: GraftTable, source: DataFrame, keys: Seq[String]) {
   private var updateAll = true
@@ -119,8 +117,18 @@ final class MergeBuilder private[lake] (t: GraftTable, source: DataFrame, keys: 
     nmbsUpdate = Some((condition, set)); this
   }
 
-  /** Execute merge-on-read: DV-mask changed rows + append post-images. */
+  /** Execute merge-on-read: changed target rows are masked via a
+    * deletion-vector sidecar and their post-images appended with the
+    * inserts, so write cost is O(changed rows) instead of O(candidate
+    * file bytes) — the right trade for a small delta merging into a
+    * 100 TB table. Same clause planner and results as copy-on-write.
+    */
   def mergeOnRead(): MergeBuilder = { mor = true; this }
+
+  /** Run in the table's `graft.dml.mode` (the SQL entry points name no
+    * mode).
+    */
+  private[lake] def inTableMode(): MergeBuilder = { mor = t.dmlMergeOnRead; this }
 
   /** Append source columns the table lacks before merging (Delta
     * `withSchemaEvolution`): metadata-only ADD COLUMN per new field,
@@ -144,17 +152,27 @@ final class MergeBuilder private[lake] (t: GraftTable, source: DataFrame, keys: 
     val src = if (evolve) {
       t.evolveSchemaFor(source); t.alignToSchema(source)
     } else source
-    val insertUnmatched = insertClauses.nonEmpty
-    val (insertCond, insertSet) =
-      insertClauses.headOption.getOrElse((None, None))
-    val moreInserts = if (insertClauses.isEmpty) Nil else insertClauses.tail
-    if (mor)
-      t.executeMergeMoR(src, keys, updateAll, updateCond, updateSet,
-        deleteCond, insertUnmatched, nmbsUpdate, nmbsDelete,
-        insertCond, insertSet, moreInserts, matchCond)
-    else
-      t.executeMerge(src, keys, updateAll, updateCond, updateSet,
-        deleteCond, insertUnmatched, nmbsUpdate, nmbsDelete,
-        insertCond, insertSet, moreInserts, matchCond)
+    t.executeDml("MERGE", Some(src), keys,
+      DmlClauses(updateAll, updateCond, updateSet, deleteCond, insertClauses,
+        nmbsUpdate, nmbsDelete, matchCond), mor)
   }
 }
+
+/** A DML statement's clauses as the one planner
+  * ([[GraftTable.executeDml]]) reads them. MATCHED clauses act on
+  * target rows with a source match (delete first, then update-all or
+  * `updateSet` assignments, each gated by its condition on the target
+  * row); `inserts` on unmatched source rows, ordered, the first clause
+  * whose condition holds wins; `nmbs*` on target rows with no source
+  * match — with no source at all that is every target row, which is
+  * how DELETE and UPDATE run.
+  */
+private[lake] final case class DmlClauses(
+    updateAll: Boolean = false,
+    updateCond: Option[Column] = None,
+    updateSet: Option[Map[String, Column]] = None,
+    deleteCond: Option[Column] = None,
+    inserts: Seq[(Option[Column], Option[Map[String, Column]])] = Nil,
+    nmbsUpdate: Option[(Option[Column], Map[String, Column])] = None,
+    nmbsDelete: Option[Column] = None,
+    matchCond: Option[Column] = None)

@@ -46,27 +46,26 @@ final class GraftLakeTable(
 
   // --- native row-level operations (UPDATE / MERGE / subquery DELETE)
 
-  /** Spark's row-level rewrites plan against this. The write shape is
-    * table-selectable, mirroring Delta/Iceberg's per-table write
-    * modes: the default is the group-based copy-on-write rewrite
-    * ([[GraftRowLevelOperation]] — whole matching files rewritten,
-    * runtime group filtering scopes them), while
-    * `graft.dml.mode = merge-on-read` selects the delta-based
-    * operation ([[GraftDeltaOperation]] — only CHANGED rows ship:
-    * deletes become deletion-vector marks, post-images append;
-    * O(changed rows) for sparse DML on huge files). Simple-filter
-    * DELETEs still take the [[SupportsDelete]] path below (Spark's
-    * OptimizeMetadataOnlyDeleteFromTable restores it).
+  /** Spark's row-level rewrites plan against this. The write shape
+    * follows the table's `graft.dml.mode` (read by
+    * `GraftTable.dmlMergeOnRead`, the one mode switch): the default is
+    * the group-based copy-on-write rewrite ([[GraftRowLevelOperation]]
+    * — whole matching files rewritten, runtime group filtering scopes
+    * them), while `merge-on-read` selects the delta-based operation
+    * ([[GraftDeltaOperation]] — only CHANGED rows ship: deletes become
+    * deletion-vector marks, post-images append; O(changed rows) for
+    * sparse DML on huge files). Both commit through the path API's
+    * rewrite / mask tails. Simple-filter DELETEs take the
+    * [[SupportsDelete]] path below (Spark's
+    * OptimizeMetadataOnlyDeleteFromTable restores it), which honours
+    * the same mode.
     */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     require(pinnedVersion.isEmpty,
       "cannot run row-level DML on a time-travelled table snapshot")
-    val mor = table.snapshot.metadata.map(_.properties)
-      .flatMap(_.get("graft.dml.mode"))
-      .exists(m => m.equalsIgnoreCase("merge-on-read") ||
-        m.equalsIgnoreCase("mor"))
+    val mor = table.dmlMergeOnRead
     () =>
       if (mor) new GraftDeltaOperation(spark, table, info.command())
       else new GraftRowLevelOperation(spark, table, info.command())
@@ -273,7 +272,7 @@ final class GraftLakeTable(
     }
   }
 
-  // --- DELETE FROM ---------------------------------------------------
+  // --- DELETE FROM: the path API's DELETE in the table's graft.dml.mode
 
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     filters.forall(GraftFilters.translatesFully)
@@ -282,6 +281,6 @@ final class GraftLakeTable(
     require(pinnedVersion.isEmpty, "cannot delete from a table snapshot")
     val cond = filters.flatMap(GraftFilters.toColumn)
       .reduceOption(_ && _).getOrElse(lit(true))
-    table.delete(cond)
+    table.deleteRows(cond)
   }
 }

@@ -22,8 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`_graft_file`, `_graft_pos`) row id the scan emits; inserts and
   * update post-images append as new files. The commit is O(changed
   * rows) regardless of file sizes — the sparse-update shape a 100 TB
-  * table needs, and the native-plan twin of the path API's
-  * `deleteMergeOnRead` / `updateMergeOnRead`.
+  * table needs. The commit runs the path API's merge-on-read tail
+  * (`GraftTable.rowLevelCommitDelta` → `maskCommit`): same sidecar,
+  * no-op, conflict and auto-REORG rules as `deleteMergeOnRead` /
+  * `updateMergeOnRead` / `mergeOnRead()` merges.
   */
 final class GraftDeltaOperation(
     spark: SparkSession,
@@ -59,7 +61,12 @@ private[sources] final class GraftDeltaWriteImpl(
 
   private val dataStagingRel = s"_staging/rlod-${UUID.randomUUID()}"
   private val marksStagingRel = s"_staging/rlom-${UUID.randomUUID()}"
-  private val partCols = snapshot.partitionColumns
+  // a DELETE's rows carry only their row id, no data columns: there is
+  // nothing to cluster by and nothing to write but marks
+  private val partCols = {
+    val pc = snapshot.partitionColumns
+    if (pc.forall(info.schema().fieldNames.contains)) pc else Nil
+  }
 
   override def build(): DeltaWrite = this
   override def toBatch: DeltaBatchWrite = this

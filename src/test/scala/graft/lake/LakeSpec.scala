@@ -1248,4 +1248,19 @@ class LakeSpec extends GraftSparkSpec {
       assert(t2.toDF.agg(sum("id")).head.getLong(0) == (1L to 25L).sum + 100L)
     } finally spark.conf.unset("spark.graft.checkpoint.partActions")
   }
+
+  test("UPDATE assignments all see the pre-update row, CoW and MoR") {
+    import spark.implicits._
+    for (mor <- Seq(false, true)) {
+      val t = GraftTable.create(spark, tmpDir(s"upd-simul-$mor"),
+        Seq((0L, 1L, 2L), (5L, 3L, 4L)).toDF("k", "a", "b"))
+      // the condition reads k, which the first assignment changes, and
+      // the swap reads each other's old value
+      val set = Map("k" -> (col("k") + 100), "a" -> col("b"), "b" -> col("a"))
+      if (mor) t.updateMergeOnRead(col("k") === 0, set)
+      else t.update(col("k") === 0, set)
+      val rows = t.toDF.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(rows == Set((100L, 2L, 1L), (5L, 3L, 4L)), s"mor=$mor: $rows")
+    }
+  }
 }

@@ -705,4 +705,33 @@ class MergeBuilderSpec extends GraftSparkSpec {
     assert(t.snapshot.dvFiles.isEmpty, "no-op merge committed a DV")
     assert(t.toDF.count() == o.count())
   }
+
+  test("a failed MERGE leaves no cached source behind, CoW and MoR") {
+    import spark.implicits._
+    val cache = spark.sharedState.cacheManager
+    for (mor <- Seq(false, true)) {
+      val mode = if (mor) "mor" else "cow"
+      val t = GraftTable.create(spark, tmpDir(s"mb-leak-$mode"),
+        (1 to 20).map(i => (i.toLong, i * 10L)).toDF("k", "v"))
+      t.addConstraint("v_pos", "v > 0")
+      def run(b: MergeBuilder): Unit = {
+        (if (mor) b.mergeOnRead() else b).execute(); ()
+      }
+      spark.catalog.clearCache()
+      val e1 = intercept[IllegalArgumentException] {
+        run(t.mergeBuilder(Seq((5L, -1L)).toDF("k", "v"), "k")
+          .whenMatchedUpdateAll().whenNotMatchedIgnore())
+      }
+      assert(e1.getMessage.contains("v_pos"))
+      assert(cache.isEmpty, s"$mode: a CHECK-refused MERGE left its source cached")
+      val e2 = intercept[IllegalArgumentException] {
+        run(t.mergeBuilder(Seq((3L, 31L), (3L, 32L)).toDF("k", "v"), "k")
+          .onCondition(col("src_v") > col("v"))
+          .whenMatchedUpdateAll().whenNotMatchedIgnore())
+      }
+      assert(e2.getMessage.contains("multiple source rows"))
+      assert(cache.isEmpty, s"$mode: a multiple-match MERGE left its source cached")
+      assert(t.version == 1, s"$mode: refused merges must not commit")
+    }
+  }
 }

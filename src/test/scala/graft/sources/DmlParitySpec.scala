@@ -1,0 +1,164 @@
+package graft.sources
+
+import graft.GraftSparkSpec
+import graft.lake.{AddDV, GraftSql, GraftTable, RemoveFile}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** The same DML statement through each entry point — the path API,
+  * `GraftSql` on a registered name, and catalog `spark.sql` — lands
+  * the same table. For DELETE / UPDATE / MERGE under copy-on-write
+  * and merge-on-read (`graft.dml.mode`), on one fixture with change
+  * data feed, row tracking and a partition column, every entry point
+  * must agree on:
+  *   - the final rows;
+  *   - the stable `_graft_row_id` of every row that existed before;
+  *   - the commit shape: a deletion vector and no removed file under
+  *     merge-on-read, removed files and no deletion vector under
+  *     copy-on-write;
+  *   - the change feed: typed rows equal between the path API and
+  *     `GraftSql`; catalog statements compared as net change only
+  *     (the catalog feed types an update as delete + insert).
+  */
+class DmlParitySpec extends GraftSparkSpec {
+
+  private lazy val warehouse = tmpDir("dml-parity-warehouse")
+  private def useCatalog(): Unit = {
+    spark.conf.set("spark.sql.catalog.graftdml", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftdml.warehouse", warehouse)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graftdml.default")
+  }
+
+  private def fixture(path: String, mor: Boolean): GraftTable = {
+    val rows = spark.range(60)
+      .withColumn("part", concat(lit("p"), pmod(col("id"), lit(3)).cast("string")))
+      .withColumn("v", col("id") * 10)
+      .repartition(2)
+    GraftTable.create(spark, path, rows, partitionBy = Seq("part"),
+      properties = Map("graft.cdf" -> "true", "graft.rowTracking" -> "true") ++
+        (if (mor) Map("graft.dml.mode" -> "merge-on-read") else Map.empty))
+  }
+
+  private def mergeSource(): DataFrame =
+    spark.range(10, 16).select(col("id"),
+        concat(lit("p"), pmod(col("id"), lit(3)).cast("string")).as("part"),
+        lit(-1L).as("v"))
+      .unionByName(spark.range(1000, 1003).select(col("id"), lit("p0").as("part"),
+        (col("id") + 1).as("v")))
+
+  private val deleteWhere = "id % 5 = 0 AND id < 40"
+  private val updateWhere = "id < 20"
+  private val mergeSql = "USING dml_par_src AS s ON t.id = s.id " +
+    "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *"
+
+  /** One statement's observable outcome on one table. */
+  private case class Outcome(rows: Set[(Long, String, Long)],
+      ids: Map[Long, Long], dvAdded: Int, filesRemoved: Int,
+      feed: Map[(Long, String, Long, String), Int])
+
+  private def run(t: GraftTable)(statement: => Unit): Outcome = {
+    val before = t.toDFWithRowIds.select("id", "row_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val v0 = t.version
+    statement
+    val t1 = GraftTable.forPath(spark, t.path)
+    val v1 = t1.version
+    assert(v1 == v0 + 1, s"one statement must make one commit: v$v0 -> v$v1")
+    val actions = t1.log.readCommit(v1)
+    val after = t1.toDFWithRowIds.select("id", "part", "v", "row_id").collect()
+    val feed = t1.changeFeed(v0, v1).select("id", "part", "v", "_change_type")
+      .collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
+      .groupBy(identity).map { case (k, vs) => k -> vs.size }
+    Outcome(
+      after.map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet,
+      after.map(r => r.getLong(0) -> r.getLong(3)).toMap
+        .filter { case (id, _) => before.contains(id) },
+      actions.count(_.isInstanceOf[AddDV]),
+      actions.count(_.isInstanceOf[RemoveFile]),
+      feed)
+  }
+
+  /** Net row change: +1 per inserted or post-image row, -1 per deleted
+    * or pre-image row, zero entries dropped.
+    */
+  private def net(feed: Map[(Long, String, Long, String), Int])
+      : Map[(Long, String, Long), Int] =
+    feed.toSeq.map { case ((id, p, v, ct), n) =>
+      (id, p, v) -> (if (ct == "insert" || ct == "update_postimage") n else -n)
+    }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sum }
+      .filter(_._2 != 0)
+
+  private def parity(op: String, mor: Boolean)(
+      pathApi: GraftTable => Unit, graftSql: String => String,
+      catalog: String => String): Unit = {
+    useCatalog()
+    mergeSource().createOrReplaceTempView("dml_par_src")
+    val tag = s"${op}_${if (mor) "mor" else "cow"}"
+    val viaPath = {
+      val t = fixture(tmpDir(s"dml-par-$tag-path"), mor)
+      run(t)(pathApi(t))
+    }
+    val viaSql = {
+      val gsql = new GraftSql(spark)
+      val t = fixture(tmpDir(s"dml-par-$tag-sql"), mor)
+      gsql.register(s"par_$tag", t.path)
+      run(t)(gsql.sql(graftSql(s"par_$tag")).collect())
+    }
+    val viaCatalog = {
+      val t = fixture(java.nio.file.Paths.get(warehouse, "default", tag).toString, mor)
+      try run(t)(spark.sql(catalog(s"graftdml.default.$tag")).collect())
+      finally spark.sql(s"DROP TABLE IF EXISTS graftdml.default.$tag")
+    }
+    for ((name, o) <- Seq("GraftSql" -> viaSql, "catalog" -> viaCatalog)) {
+      assert(o.rows == viaPath.rows, s"$tag: $name final rows differ from the path API")
+      assert(o.ids == viaPath.ids,
+        s"$tag: $name changed the row ids of surviving rows")
+      if (mor) {
+        assert(o.dvAdded == 1 && o.filesRemoved == 0,
+          s"$tag: $name must mask (1 DV, 0 removes), " +
+            s"got ${o.dvAdded} DV, ${o.filesRemoved} removes")
+      } else {
+        assert(o.dvAdded == 0 && o.filesRemoved > 0,
+          s"$tag: $name must rewrite (0 DV, removes > 0), " +
+            s"got ${o.dvAdded} DV, ${o.filesRemoved} removes")
+      }
+    }
+    assert(viaPath.dvAdded == (if (mor) 1 else 0))
+    assert(viaSql.feed == viaPath.feed, s"$tag: GraftSql change feed differs")
+    assert(net(viaCatalog.feed) == net(viaPath.feed),
+      s"$tag: catalog net change differs")
+  }
+
+  for (mor <- Seq(false, true)) {
+    val mode = if (mor) "merge-on-read" else "copy-on-write"
+
+    test(s"DELETE parity across entry points, $mode") {
+      parity("delete", mor)(
+        t => if (mor) t.deleteMergeOnRead(expr(deleteWhere)) else t.delete(expr(deleteWhere)),
+        n => s"DELETE FROM $n WHERE $deleteWhere",
+        n => s"DELETE FROM $n WHERE $deleteWhere")
+    }
+
+    test(s"UPDATE parity across entry points, $mode") {
+      val set = Map("v" -> (col("v") + 100))
+      parity("update", mor)(
+        t => if (mor) t.updateMergeOnRead(expr(updateWhere), set)
+          else t.update(expr(updateWhere), set),
+        n => s"UPDATE $n SET v = v + 100 WHERE $updateWhere",
+        n => s"UPDATE $n SET v = v + 100 WHERE $updateWhere")
+    }
+
+    test(s"MERGE parity across entry points, $mode") {
+      parity("merge", mor)(
+        { t =>
+          val b = t.mergeBuilder(spark.table("dml_par_src"), "id")
+            .whenMatchedUpdate(Map("v" -> col("src_v")))
+            .whenNotMatchedInsertAll()
+          (if (mor) b.mergeOnRead() else b).execute()
+        },
+        n => s"MERGE INTO $n AS t $mergeSql",
+        n => s"MERGE INTO $n AS t $mergeSql")
+    }
+  }
+}

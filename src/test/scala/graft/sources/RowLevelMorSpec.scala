@@ -124,6 +124,21 @@ class RowLevelMorSpec extends GraftSparkSpec {
     spark.sql("DROP TABLE graftmor.default.pt")
   }
 
+  test("catalog MoR UPDATE runs auto-REORG, as updateMergeOnRead does") {
+    val t = morTable("areorg", 100)
+    t.setTableProperties(Map("graft.autoReorg" -> "0.25"))
+    spark.sql("UPDATE graftmor.default.areorg SET v = -1 WHERE id < 20")
+    val ops = GraftTable.forPath(spark, t.path).history(3).collect()
+      .map(r => (r.getAs[String]("operation"), r.getAs[String]("parameters")))
+    assert(ops.exists { case (op, ps) => op == "REORG" && ps.contains("mode=auto") },
+      s"a masked file past the threshold must be purged in-line: ${ops.toSeq}")
+    assert(spark.sql("SELECT COUNT(*) AS n FROM graftmor.default.areorg " +
+      "WHERE v = -1").head().getLong(0) == 20)
+    assert(spark.sql("SELECT COUNT(*) AS n FROM graftmor.default.areorg")
+      .head().getLong(0) == 100)
+    spark.sql("DROP TABLE graftmor.default.areorg")
+  }
+
   test("_graft_pos metadata column is selectable and file-local") {
     val t = morTable("pos", 60)
     val rows = spark.sql("SELECT _graft_file, _graft_pos, id " +

@@ -204,7 +204,7 @@ class StreamingSpec extends GraftSparkSpec {
     def mk(tag: String, props: Map[String, String]) =
       GraftTable.create(spark, tmpDir(s"stream-autoreorg-$tag"),
         (0L until 200L).map(i => (i, 0L)).toDF("k", "v"),
-        properties = Map("graft.streamUpsert.mor" -> "true") ++ props)
+        properties = Map("graft.dml.mode" -> "merge-on-read") ++ props)
     val auto = mk("auto", Map("graft.autoReorg" -> "0.3"))
     val ctrl = mk("ctrl", Map.empty)
     // a production upsert stream: every epoch rewrites every key's
@@ -346,7 +346,7 @@ class StreamingSpec extends GraftSparkSpec {
     val orders = graft.Tables(spark, sfDir, "orders")
     val t = GraftTable.create(spark, tmpDir("stream-upsert-mor"),
       orders.repartition(4),
-      properties = Map("graft.streamUpsert.mor" -> "true"))
+      properties = Map("graft.dml.mode" -> "merge-on-read"))
     val nBefore = t.toDF.count()
     val filesBefore = t.snapshot.activeFiles.map(_.path).toSet
     val batch = orders.limit(50)
