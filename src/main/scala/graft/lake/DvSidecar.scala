@@ -79,8 +79,7 @@ object DvSidecar {
   private def projectionFor(p: java.nio.file.Path,
       fields: Seq[String]): org.apache.parquet.schema.MessageType = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toString),
-      new org.apache.hadoop.conf.Configuration())
+      new org.apache.hadoop.fs.Path(p.toString), Stats.hadoopConf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     val fileSchema = try r.getFooter.getFileMetaData.getSchema finally r.close()
     new org.apache.parquet.schema.MessageType("dv",
@@ -94,7 +93,7 @@ object DvSidecar {
   private def foreachFilePath(parts: Seq[java.nio.file.Path])(
       f: String => Unit): Unit =
     parts.foreach { p =>
-      val conf = new org.apache.hadoop.conf.Configuration()
+      val conf = new org.apache.hadoop.conf.Configuration(Stats.hadoopConf)
       conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
         projectionFor(p, Seq("file_path")).toString)
       val reader = org.apache.parquet.hadoop.ParquetReader
@@ -127,7 +126,7 @@ object DvSidecar {
     val part = dir.resolve("part-00000-driver.snappy.parquet")
     val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
       "message dv { optional binary file_path (UTF8); optional int64 row_index; }")
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = new org.apache.hadoop.conf.Configuration(Stats.hadoopConf)
     org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, conf)
     val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
       .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
@@ -181,7 +180,7 @@ object DvSidecar {
             .getPrimitiveTypeName ==
             org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64,
             s"$posField is not int64")
-          val conf = new org.apache.hadoop.conf.Configuration()
+          val conf = new org.apache.hadoop.conf.Configuration(Stats.hadoopConf)
           conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
             proj.toString)
           val reader = org.apache.parquet.hadoop.ParquetReader

@@ -22,6 +22,11 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   val log = new TxnLog(path)
   private def root: Path = Paths.get(path)
 
+  /** The table's identity: its root as a normalized absolute path, the
+    * same for handles opened under different spellings of one path.
+    */
+  private[graft] lazy val location: String = GraftTable.location(path)
+
   def snapshot: Snapshot = Snapshot.at(spark, log)
   def snapshotAt(v: Long): Snapshot = Snapshot.at(spark, log, Some(v))
   def version: Long = log.latestVersion().getOrElse(-1L)
@@ -31,7 +36,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   /** Log paths are table-root-relative, except shallow-cloned entries
     * which are absolute references into the source table.
     */
-  private[lake] def dataPath(p: String): String =
+  private[graft] def dataPath(p: String): String =
     if (p.startsWith("/")) p else s"$path/$p"
 
   /** The one snapshot scan: `files` of `s` under their LOGICAL column
@@ -44,10 +49,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * `_metadata` (the DV mark key). With no DVs and no `meta` this is a
     * bare parquet scan.
     *
-    * Root-relative and clone-absolute files scan as separate branches
-    * so each gets the right `basePath` for partition-directory
-    * inference; `_metadata` must be projected per branch (it does not
-    * survive a union).
+    * The parquet relation sits on a [[graft.sources.GraftFileIndex]]:
+    * the log's own file list (root-relative, clone-absolute and branch
+    * entries alike) with partition values from the log, so building a
+    * scan lists no directory and starts no job.
     */
   private[graft] def scan(s: Snapshot, files: Seq[AddFile],
                           meta: Set[String] = Set.empty): DataFrame = {
@@ -59,40 +64,12 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         StructType(s.schema.fields ++ metaFields))
     val rowIds = meta(RowIdCol)
     val withMeta = metaFields.nonEmpty || s.dvFiles.nonEmpty
-    val readSchema = StructType(s.physicalSchema.fields ++
-      metaFields.filter(_.name == RowIdCol))
-    val (abs, rel) = files.partition(_.path.startsWith("/"))
-    val srcRoot = s.metadata.map(_.properties).getOrElse(Map.empty)
-      .get("graft.cloneSource")
-    // Partition-directory inference reads the segments BETWEEN
-    // basePath and each file, so merged-branch entries (L113 — live
-    // under `_graft_branches/<name>/` with their k=v dirs BELOW that)
-    // must scan with the branch dir as their basePath or inference
-    // sees the non-k=v branch segments and refuses. Group each file
-    // under its effective base; plain entries keep the table root.
-    def effectiveBase(base: String, rel: String): String =
-      rel.split('/') match {
-        case segs if segs.length > 2 && segs(0) == GraftTable.BranchesDir =>
-          s"$base/${segs(0)}/${segs(1)}"
-        case _ => base
-      }
-    def scanGroup(basePath: Option[String], fs: Seq[AddFile]): DataFrame = {
-      val reader = spark.read.schema(readSchema)
-      val r = basePath.fold(reader)(b => reader.option("basePath", b))
-        .parquet(fs.map(f => dataPath(f.path)): _*)
-      if (!withMeta) r
-      else r.withColumn("__fp", col("_metadata.file_path"))
+    val relation = graft.sources.GraftFileIndex.scan(this, s, files,
+      StructType(s.physicalSchema.fields ++ metaFields.filter(_.name == RowIdCol)))
+    val raw =
+      if (!withMeta) relation
+      else relation.withColumn("__fp", col("_metadata.file_path"))
         .withColumn("__ri", col("_metadata.row_index"))
-    }
-    val relGroups = rel.groupBy(f => effectiveBase(path, f.path))
-      .toSeq.sortBy(_._1)
-      .map { case (b, fs) => scanGroup(Some(b), fs) }
-    val absGroups = abs.groupBy(f => srcRoot.map(sr =>
-        effectiveBase(sr, if (f.path.startsWith(sr + "/"))
-          f.path.stripPrefix(sr + "/") else "")))
-      .toSeq.sortBy(_._1.getOrElse(""))
-      .map { case (b, fs) => scanGroup(b, fs) }
-    val raw = (relGroups ++ absGroups).reduce(_ unionByName _)
     if (!withMeta && s.colMap.isEmpty) return raw
     val live =
       if (s.dvFiles.isEmpty) raw
@@ -172,6 +149,14 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * `meta` may ask for [[RowIdCol]], `_graft_file` (the log-recorded
     * path, the row-level group key) and `_graft_pos` (the row's index
     * in its file); they are appended after the data columns.
+    *
+    * The scan's file list is the log's ([[scan]]), so a live read
+    * stats no file: VACUUM never deletes live files, and a file lost
+    * out of band fails the query that reads it (FSCK repairs the log).
+    * A whole-table live `count()` may therefore answer from the log's
+    * stats without opening a file, as Delta's metadata-only count
+    * does. A pinned `version` may have lost files to VACUUM, so its
+    * files are stat'ed here and a missing one fails the build.
     */
   private[graft] def read(pred: Option[Column], version: Option[Long] = None,
                           meta: Set[String] = Set.empty): DataFrame = {
@@ -184,6 +169,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       .GraftSqlShims.expression(q).references.exists(a => p.maskedCols(a.name)))
     val files = policyPruned(p, s, skipping.fold(s.activeFiles)(q =>
       bloomPrune(s, candidates(s, s.activeFiles, q), q)))
+    if (version.isDefined)
+      files.map(f => dataPath(f.path)).find(f => !Files.exists(Paths.get(f)))
+        .foreach(f => throw new java.io.FileNotFoundException(
+          s"$f of $path version ${s.version} no longer exists (vacuumed?)"))
     val provenance = meta("_graft_file") || meta("_graft_pos")
     val out = governed(scan(s, files, meta.filter(_ == RowIdCol) ++
       (if (provenance) Set("file_path", "row_index") else Set.empty)), p)
@@ -819,7 +808,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // or `CREATE MATERIALIZED VIEW` via GraftSql followed by
     // `SET ROW FILTER` leaves a governed table answering from
     // ungoverned aggregates (r14 advisory)
-    require(!graft.plans.MvCatalog.hasViewFor(path),
+    require(!graft.plans.MvCatalog.hasViewFor(this),
       s"cannot $what: the table has a session-registered materialized " +
         "view (drop the view first — governed tables and MVs are exclusive)")
   }
@@ -1965,7 +1954,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * validation and conflict rules as the DataFrame DML paths.
     */
   private[graft] def rowLevelTrackingOn(s: Snapshot): Boolean = rowTrackingOn(s)
-  private[graft] def rowLevelDataPath(rel: String): String = dataPath(rel)
   private[graft] def rowLevelGeneratedExprs(s: Snapshot): Map[String, String] =
     generatedExprs(s)
 
@@ -6051,6 +6039,9 @@ object GraftTable {
 
   def isGraftTable(path: String): Boolean = new TxnLog(path).exists
 
+  private[graft] def location(path: String): String =
+    Paths.get(path).toAbsolutePath.normalize.toString
+
   /** Remove a staged/orphaned directory WITHOUT a table handle —
     * tolerates a missing or half-written path. Transaction rollback
     * needs this: a CTAS that failed mid-statement leaves its staged
@@ -6382,7 +6373,7 @@ object GraftTable {
         stats = None)
     }.sortBy(_.path)
     require(adds0.nonEmpty, s"no live data files in the Delta log at $deltaRoot")
-    // the scan-time basePath comes from the FILES, not the log dir:
+    // the data root comes from the FILES, not the log dir:
     // strip each file's hive partition segments and require one common
     // data root (a round-tripped L110 export's adds live under the
     // source TABLE root, with _delta_log off to the side)
@@ -6524,8 +6515,7 @@ object GraftTable {
     }.sortBy(_.path)
     require(adds0.nonEmpty,
       s"no live data files in the Iceberg metadata at $icebergRoot")
-    // one common Hive-style data root (same contract as attachDelta):
-    // scan-time partition inference needs a single basePath
+    // one common Hive-style data root (same contract as attachDelta)
     def fileRoot(abs: String): String = {
       var d = Paths.get(abs).getParent
       var i = 0
@@ -6538,9 +6528,9 @@ object GraftTable {
     val roots = adds0.map(a => fileRoot(a.path)).distinct
     // ONE main hive root, but a BRANCH-ref attach legitimately spans
     // the parent root plus `_graft_branches/<name>/` sub-roots (the
-    // exported-branch layout) — the scan's effectiveBase grouping
-    // gives each its own basePath for partition inference, so those
-    // are admitted; any other multi-root layout still refuses
+    // exported-branch layout), so those are admitted; any other
+    // multi-root layout still refuses. (The scan does not care: its
+    // file index takes every path and partition value from the log.)
     val mainRoot = roots.minBy(_.length)
     val branchSub = roots.forall { r =>
       r == mainRoot || {
@@ -6757,11 +6747,11 @@ object GraftTable {
       snap.activeFiles.partition(f => maskedSet.contains(f.path))
     // destination-relative path: kept verbatim for source-relative
     // entries; rebuilt from partition values for clone-absolute ones
-    // (a deep clone of a shallow clone) so directory inference works.
-    // Escaping must be Hive's (what Spark wrote and its partition
-    // inference + stageWrite's URLDecoder invert) — URLEncoder's
-    // '+'-for-space convention would make inferred values disagree
-    // with the AddFile.partitionValues carried in the log.
+    // (a deep clone of a shallow clone) so the clone keeps a Hive
+    // layout. Escaping must be Hive's (what Spark wrote and
+    // stageWrite's unescape inverts) — URLEncoder's '+'-for-space
+    // convention would make directory values disagree with the
+    // AddFile.partitionValues carried in the log.
     def destRel(f: AddFile): String =
       if (!f.path.startsWith("/")) f.path
       else {

@@ -244,7 +244,7 @@ object IcebergExport {
     val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
       "message iceberg_delete { optional binary file_path (UTF8); " +
         "optional int64 pos; }")
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = new org.apache.hadoop.conf.Configuration(Stats.hadoopConf)
     org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, conf)
     val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
       .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(

@@ -367,13 +367,9 @@ object MaterializedAgg {
     val stored = t.snapshot.metadata.map(_.properties).getOrElse(Map.empty)
     val srcPath = stored.getOrElse(SourceKey,
       throw new IllegalArgumentException(s"not a materialized view: $path"))
-    // canonical comparison: the stored pointer may be relative while
-    // the caller's handle is absolute (e.g. the MvCatalog auto-load
-    // probe walks up from absolute scan paths) — same directory, same
-    // table
-    def norm(p: String): String =
-      java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
-    require(norm(srcPath) == norm(source.path),
+    // the stored pointer and the caller's handle may spell the path
+    // differently — same location, same table
+    require(GraftTable.location(srcPath) == source.location,
       s"view at $path materializes $srcPath, not ${source.path}")
     require(!stored.contains(MaterializedDistinct.DistinctKey),
       s"view at $path is a COUNT DISTINCT view — open it with " +
@@ -393,9 +389,7 @@ object MaterializedAgg {
       source: GraftTable): MaterializedAgg = {
     val t = GraftTable.forPath(spark, path)
     val stored = t.snapshot.metadata.map(_.properties).getOrElse(Map.empty)
-    def norm(p: String): String =
-      java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
-    require(stored.get(SourceKey).map(norm).contains(norm(source.path)),
+    require(stored.get(SourceKey).map(GraftTable.location).contains(source.location),
       s"view at $path does not materialize ${source.path}")
     new MaterializedAgg(spark, t, source)
   }
@@ -682,9 +676,7 @@ object MaterializedDistinct {
       source: GraftTable): MaterializedDistinct = {
     val t = GraftTable.forPath(spark, path)
     val stored = t.snapshot.metadata.map(_.properties).getOrElse(Map.empty)
-    def norm(p: String): String = // canonical, like MaterializedAgg.forPath
-      java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
-    require(stored.get(SourceKey).map(norm).contains(norm(source.path)) &&
+    require(stored.get(SourceKey).map(GraftTable.location).contains(source.location) &&
       stored.contains(DistinctKey),
       s"not a COUNT DISTINCT view of ${source.path}: $path")
     new MaterializedDistinct(spark, t, source)

@@ -617,7 +617,7 @@ object TxnLog {
     }
     Files.createDirectories(dir)
     val part = dir.resolve("part-00000-driver.snappy.parquet")
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = new org.apache.hadoop.conf.Configuration(Stats.hadoopConf)
     org.apache.parquet.hadoop.example.GroupWriteSupport
       .setSchema(parquetSchema, conf)
     val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter

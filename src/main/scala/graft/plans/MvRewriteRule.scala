@@ -2,7 +2,8 @@ package graft.plans
 
 import scala.collection.mutable
 
-import graft.lake.MaterializedAgg
+import graft.lake.{GraftTable, MaterializedAgg}
+import graft.sources.GraftFileIndex
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, Divide, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
@@ -25,11 +26,12 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *    the source auto-loads the registration from the source's own
   *    transaction log — no re-registration, no second metastore. The
   *    pointer lives on the source (not the view) because the rewrite
-  *    rule starts from the scanned source files; one upward walk to
-  *    the table root finds the log, one property read finds the view.
+  *    rule starts from the source scan, whose file index names the
+  *    table; one property read finds the view.
   *
-  * Probing is cached per source root for the life of the process
-  * (positive and negative): planning never pays more than one disk
+  * Registrations are keyed by the source's [[GraftTable.location]].
+  * Probing is cached per source for the life of the process
+  * (positive and negative): planning never pays more than one log
   * probe per table. A view registered persistently by ANOTHER process
   * after this one first queried the source becomes visible on restart
   * or an explicit [[clear]] — the documented staleness bound.
@@ -48,31 +50,28 @@ object MvCatalog {
 
   def register(mv: MaterializedAgg): Unit = {
     requireUngoverned(mv.source)
-    synchronized { views(mv.source.path) = mv }
+    synchronized { views(mv.source.location) = mv }
   }
   def registerDistinct(mv: graft.lake.MaterializedDistinct): Unit = {
     requireUngoverned(mv.source)
-    synchronized { distinctViews(mv.source.path) = mv }
+    synchronized { distinctViews(mv.source.location) = mv }
   }
   def registerOuter(mv: graft.lake.MaterializedOuterJoin): Unit = {
     requireUngoverned(mv.source)
-    synchronized { outerViews(mv.source.path) = mv }
+    synchronized { outerViews(mv.source.location) = mv }
   }
 
   /** Whether ANY in-process registration (session-scoped or loaded
-    * from a persisted pointer) targets `sourcePath` — consulted by
-    * the policy-install guard so `CREATE MATERIALIZED VIEW` via the
+    * from a persisted pointer) targets `source` — consulted by the
+    * policy-install guard so `CREATE MATERIALIZED VIEW` via the
     * session catalog can't slip past the exclusivity rule the
     * persisted-pointer check enforces (r14 advisory).
     */
-  def hasViewFor(sourcePath: String): Boolean = {
-    val norm =
-      java.nio.file.Paths.get(sourcePath).toAbsolutePath.normalize.toString
-    def hit(keys: Iterable[String]): Boolean = keys.exists(sp =>
-      java.nio.file.Paths.get(sp).toAbsolutePath.normalize.toString == norm)
-    synchronized {
-      hit(views.keys) || hit(distinctViews.keys) || hit(outerViews.keys)
-    }
+  def hasViewFor(source: GraftTable): Boolean = registered(source.location)
+
+  private def registered(location: String): Boolean = synchronized {
+    views.contains(location) || distinctViews.contains(location) ||
+      outerViews.contains(location)
   }
   /** Governance exclusivity (L114): an MV folds raw CDC deltas, so a
     * row filter / column mask on the source would let the transparent
@@ -80,7 +79,7 @@ object MvCatalog {
     * refuse registration (the reverse direction refuses in
     * GraftTable.setRowFilter/setColumnMask).
     */
-  private def requireUngoverned(source: graft.lake.GraftTable): Unit = {
+  private def requireUngoverned(source: GraftTable): Unit = {
     val props = source.snapshot.metadata.map(_.properties).getOrElse(Map.empty)
     require(!props.contains("graft.rowFilter") &&
         !props.keys.exists(_.startsWith("graft.colMask.")),
@@ -106,91 +105,58 @@ object MvCatalog {
     registerDistinct(mv)
   }
   /** Withdraw a persisted registration: empty pointer = unregistered. */
-  def deregisterPersistent(source: graft.lake.GraftTable): Unit = {
+  def deregisterPersistent(source: GraftTable): Unit = {
     source.setTableProperties(Map(RegisteredViewKey -> ""))
     deregister(source.path)
   }
 
-  def deregister(sourcePath: String): Unit =
+  def deregister(sourcePath: String): Unit = {
+    val location = GraftTable.location(sourcePath)
     synchronized {
-      views.remove(sourcePath); distinctViews.remove(sourcePath)
-      outerViews.remove(sourcePath); ()
+      views.remove(location); distinctViews.remove(location)
+      outerViews.remove(location); ()
     }
+  }
   def clear(): Unit = synchronized {
     views.clear(); distinctViews.clear(); outerViews.clear(); probed.clear()
-    rootByDir.clear()
   }
-  private[plans] def lookup(p: String => Boolean): Option[MaterializedAgg] =
-    synchronized { views.collectFirst { case (sp, mv) if p(sp) => mv } }
-  private[plans] def lookupDistinct(p: String => Boolean)
+  private[plans] def lookup(source: GraftTable): Option[MaterializedAgg] =
+    synchronized { views.get(source.location) }
+  private[plans] def lookupDistinct(source: GraftTable)
       : Option[graft.lake.MaterializedDistinct] =
-    synchronized { distinctViews.collectFirst { case (sp, mv) if p(sp) => mv } }
-  private[plans] def lookupOuter(p: String => Boolean)
+    synchronized { distinctViews.get(source.location) }
+  private[plans] def lookupOuter(source: GraftTable)
       : Option[graft.lake.MaterializedOuterJoin] =
-    synchronized { outerViews.collectFirst { case (sp, mv) if p(sp) => mv } }
+    synchronized { outerViews.get(source.location) }
 
-  /** Load any PERSISTED registration for the table owning `scanned`
-    * files into the in-process maps (once per root; misses cached).
+  /** Load any PERSISTED registration for `src` into the in-process
+    * maps (once per table; misses cached).
     */
-  private[plans] def ensureLoaded(spark: SparkSession,
-      scanned: Seq[String]): Unit =
-    scanned.headOption.flatMap(sourceRoot).foreach { root =>
-      val shouldProbe = synchronized {
-        def known(keys: Iterable[String]): Boolean = keys.exists(sp =>
-          java.nio.file.Paths.get(sp).toAbsolutePath.normalize.toString == root)
-        if (probed.contains(root) || known(views.keys) ||
-            known(distinctViews.keys) || known(outerViews.keys)) false
-        else { probed += root; true }
-      }
-      if (shouldProbe) try {
-        val src = graft.lake.GraftTable.forPath(spark, root)
-        src.snapshot.metadata.map(_.properties).getOrElse(Map.empty)
-          .get(RegisteredViewKey).filter(_.nonEmpty).foreach { viewPath =>
-            val vt = graft.lake.GraftTable.forPath(spark, viewPath)
-            val vprops =
-              vt.snapshot.metadata.map(_.properties).getOrElse(Map.empty)
-            if (vprops.contains(graft.lake.MaterializedDistinct.DistinctKey))
-              registerDistinct(
-                graft.lake.MaterializedDistinct.forPath(spark, viewPath, src))
-            else if (vprops.contains(
-                graft.lake.MaterializedOuterJoin.OuterDimKey))
-              registerOuter(
-                graft.lake.MaterializedOuterJoin.forPath(spark, viewPath, src))
-            else register(MaterializedAgg.forPath(spark, viewPath, src))
-          }
-      } catch {
-        // a dangling pointer (view dropped, log cleaned) simply means
-        // no transparent rewrite — the query still answers from source
-        case scala.util.control.NonFatal(_) => ()
-      }
+  private[plans] def ensureLoaded(spark: SparkSession, src: GraftTable): Unit = {
+    val shouldProbe = synchronized {
+      if (probed.contains(src.location) || registered(src.location)) false
+      else { probed += src.location; true }
     }
-
-  /** Walk up from a scanned data file to the directory owning a
-    * `_graft_log` — the table root. Bounded hops: partition dirs are
-    * shallow.
-    */
-  // upward-walk results memoized by the scanned file's parent dir —
-  // WITHOUT this, every aggregate over a plain (non-graft) parquet
-  // table would re-stat up to 8 ancestors per query, planning-path
-  // disk IO that never changes answer within a process
-  private val rootByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[String]]()
-
-  private def sourceRoot(file: String): Option[String] = {
-    val dir = java.nio.file.Paths.get(file).toAbsolutePath.normalize
-      .getParent
-    if (dir == null) return None
-    rootByDir.computeIfAbsent(dir.toString, _ => {
-      var p = dir
-      var hops = 0
-      var found: Option[String] = None
-      while (p != null && hops < 8 && found.isEmpty) {
-        if (java.nio.file.Files.isDirectory(p.resolve("_graft_log")))
-          found = Some(p.toString)
-        else { p = p.getParent; hops += 1 }
-      }
-      found
-    })
+    if (shouldProbe) try {
+      src.snapshot.metadata.map(_.properties).getOrElse(Map.empty)
+        .get(RegisteredViewKey).filter(_.nonEmpty).foreach { viewPath =>
+          val vt = GraftTable.forPath(spark, viewPath)
+          val vprops =
+            vt.snapshot.metadata.map(_.properties).getOrElse(Map.empty)
+          if (vprops.contains(graft.lake.MaterializedDistinct.DistinctKey))
+            registerDistinct(
+              graft.lake.MaterializedDistinct.forPath(spark, viewPath, src))
+          else if (vprops.contains(
+              graft.lake.MaterializedOuterJoin.OuterDimKey))
+            registerOuter(
+              graft.lake.MaterializedOuterJoin.forPath(spark, viewPath, src))
+          else register(MaterializedAgg.forPath(spark, viewPath, src))
+        }
+    } catch {
+      // a dangling pointer (view dropped, log cleaned) simply means
+      // no transparent rewrite — the query still answers from source
+      case scala.util.control.NonFatal(_) => ()
+    }
   }
 }
 
@@ -201,9 +167,11 @@ object MvCatalog {
   * state instead of the full source scan — at 100 TB that turns the
   * dashboard aggregate into a metadata-sized read.
   *
+  * The source is the table the scan's [[GraftFileIndex]] names.
   * Strictly correctness-gated: the rewrite fires only when (a) the
-  * scanned file set IS the source's current active file set (a stale
-  * DataFrame handle keeps its own plan), (b) the view's stamped
+  * scanned file set IS the source's current active file set, with no
+  * deletion vectors outstanding (a stale DataFrame handle keeps its
+  * own plan), (b) the view's stamped
   * source version equals the source's current version (a stale view
   * never answers), and (c) every output expression maps 1:1 onto
   * stored state — grouping attrs, `count(*)`/`count(1)`, or
@@ -266,17 +234,48 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         .getOrElse(agg)
   }
 
-  private def scannedFiles(lr: LogicalRelation): Option[Seq[String]] =
+  /** The GraftLake source `lr` scans, with its registrations loaded. */
+  private def source(lr: LogicalRelation): Option[GraftTable] =
     lr.relation match {
-      case h: HadoopFsRelation =>
-        Some(h.location.inputFiles.toSeq.map(u => new java.net.URI(u).getPath))
+      case HadoopFsRelation(idx: GraftFileIndex, _, _, _, _, _) =>
+        MvCatalog.ensureLoaded(spark, idx.table)
+        Some(idx.table)
       case _ => None
     }
 
-  private def activeSet(t: graft.lake.GraftTable): Set[String] =
-    t.snapshot.activeFiles.map(a =>
-      java.nio.file.Paths.get(t.path).resolve(a.path)
-        .toAbsolutePath.normalize.toString).toSet
+  /** Whether `lr` scans exactly `t`'s current active set, with no
+    * deletion vectors outstanding.
+    */
+  private def scansCurrent(lr: LogicalRelation, t: GraftTable): Boolean =
+    lr.relation match {
+      case HadoopFsRelation(idx: GraftFileIndex, _, _, _, _, _) =>
+        val s = t.snapshot
+        idx.table.location == t.location && s.dvFiles.isEmpty && idx.covers(s)
+      case _ => false
+    }
+
+  /** The column names `cond` equates, when it is a conjunction of
+    * same-named equalities with one side from each relation.
+    */
+  private def equiJoinKeys(l: LogicalRelation, r: LogicalRelation,
+      cond: Expression): Option[Set[String]] = {
+    val lAttrs = l.output.map(a => a.exprId -> a.name).toMap
+    val rAttrs = r.output.map(a => a.exprId -> a.name).toMap
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case org.apache.spark.sql.catalyst.expressions.And(a, b) =>
+        conjuncts(a) ++ conjuncts(b)
+      case other => Seq(other)
+    }
+    Some(conjuncts(cond).map {
+      case EqualTo(a: AttributeReference, b: AttributeReference) =>
+        val (la, ra) = (lAttrs.get(a.exprId), rAttrs.get(b.exprId))
+        val (lb, rb) = (lAttrs.get(b.exprId), rAttrs.get(a.exprId))
+        if (la.isDefined && ra.isDefined && la == ra) la.get
+        else if (lb.isDefined && rb.isDefined && lb == rb) lb.get
+        else return None
+      case _ => return None
+    }.toSet)
+  }
 
   /** Rewrite `fact ⋈ dim GROUP BY keys` onto a registered, DOUBLY
     * fresh join view: both sides' scans must be their tables' current
@@ -289,14 +288,7 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       aggExprs: Seq[NamedExpression], l: LogicalRelation,
       r: LogicalRelation, cond: Expression,
       filter: Option[Expression]): Option[LogicalPlan] = {
-    val scannedL = scannedFiles(l).getOrElse(return None)
-    val scannedR = scannedFiles(r).getOrElse(return None)
-    if (scannedL.isEmpty || scannedR.isEmpty) return None
-    MvCatalog.ensureLoaded(spark, scannedL)
-    val mv = MvCatalog.lookup(sp =>
-      scannedL.forall(_.startsWith(
-        java.nio.file.Paths.get(sp).toAbsolutePath.normalize.toString)))
-      .getOrElse(return None)
+    val mv = source(l).flatMap(MvCatalog.lookup).getOrElse(return None)
     val dim = mv.dim.getOrElse(return None)
     val vprops = mv.view.snapshot.metadata.map(_.properties).getOrElse(Map.empty)
     // freshness on BOTH stamps, and both scans must be current
@@ -304,31 +296,12 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         .contains(mv.source.version)) return None
     if (!vprops.get("graft.mv.dimVersion").map(_.toLong)
         .contains(dim.version)) return None
-    def norm(p: String): String =
-      java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
-    if (scannedL.map(norm).toSet != activeSet(mv.source)) return None
-    if (scannedR.map(norm).toSet != activeSet(dim)) return None
+    if (!scansCurrent(l, mv.source) || !scansCurrent(r, dim)) return None
     // the join condition must be an equi-conjunction on EXACTLY the
     // view's join keys, one side from each relation
     val joinKeys = vprops.getOrElse("graft.mv.joinKeys", "")
       .split(",").filter(_.nonEmpty).toSet
-    val lAttrs = l.output.map(a => a.exprId -> a.name).toMap
-    val rAttrs = r.output.map(a => a.exprId -> a.name).toMap
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case org.apache.spark.sql.catalyst.expressions.And(a, b) =>
-        conjuncts(a) ++ conjuncts(b)
-      case other => Seq(other)
-    }
-    val pairs = conjuncts(cond).map {
-      case EqualTo(a: AttributeReference, b: AttributeReference) =>
-        val (la, ra) = (lAttrs.get(a.exprId), rAttrs.get(b.exprId))
-        val (lb, rb) = (lAttrs.get(b.exprId), rAttrs.get(a.exprId))
-        if (la.isDefined && ra.isDefined && la == ra) la.get
-        else if (lb.isDefined && rb.isDefined && lb == rb) lb.get
-        else return None
-      case _ => return None
-    }
-    if (pairs.toSet != joinKeys) return None
+    if (!equiJoinKeys(l, r, cond).contains(joinKeys)) return None
     val groupCols = vprops("graft.mv.groupCols").split(",").toSeq.filter(_.nonEmpty)
     val groupNames = groupingExprs.map {
       case a: AttributeReference => a.name
@@ -358,23 +331,7 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val mvOut: Map[String, Attribute] = mvPlan.output.map(a => a.name -> a).toMap
     val projections = stateProjections(aggExprs, mvOut, groupCols, sumCols,
       minCols, maxCols, rollup).getOrElse(return None)
-    val base: LogicalPlan = filter match {
-      case Some(fcond) =>
-        val remapped = fcond.transform {
-          case a: AttributeReference =>
-            val c = mvOut.get(a.name).getOrElse(return None)
-            if (c.dataType != a.dataType) return None
-            c
-        }
-        Filter(remapped, mvPlan)
-      case None => mvPlan
-    }
-    if (exact) Some(Project(projections, base))
-    else {
-      val groupAttrs: Seq[Expression] =
-        groupNames.map(n => mvOut.get(n).getOrElse(return None))
-      Some(Aggregate(groupAttrs, projections, base))
-    }
+    statePlan(mvPlan, mvOut, projections, filter, groupNames, exact)
   }
 
   /** `GROUP BY keys ... COUNT(DISTINCT x)` over a fresh source reads
@@ -388,19 +345,11 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def rewriteDistinct(agg: Aggregate, groupingExprs: Seq[Expression],
       aggExprs: Seq[NamedExpression],
       lr: LogicalRelation): Option[LogicalPlan] = {
-    val scanned = scannedFiles(lr).getOrElse(return None)
-    if (scanned.isEmpty) return None
-    MvCatalog.ensureLoaded(spark, scanned)
-    val mv = MvCatalog.lookupDistinct(sp =>
-      scanned.forall(_.startsWith(
-        java.nio.file.Paths.get(sp).toAbsolutePath.normalize.toString)))
-      .getOrElse(return None)
+    val mv = source(lr).flatMap(MvCatalog.lookupDistinct).getOrElse(return None)
     val props = mv.view.snapshot.metadata.map(_.properties).getOrElse(Map.empty)
     if (!props.get("graft.mv.sourceVersion").map(_.toLong)
         .contains(mv.source.version)) return None
-    def norm(p: String): String =
-      java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
-    if (scanned.map(norm).toSet != activeSet(mv.source)) return None
+    if (!scansCurrent(lr, mv.source)) return None
     val groupCols = props("graft.mv.groupCols").split(",").toSeq.filter(_.nonEmpty)
     val distinctCol = props.getOrElse(
       graft.lake.MaterializedDistinct.DistinctKey, return None)
@@ -442,17 +391,7 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def rewrite(agg: Aggregate, groupingExprs: Seq[Expression],
       aggExprs: Seq[NamedExpression], lr: LogicalRelation,
       filter: Option[Expression]): Option[LogicalPlan] = {
-    val scanned: Seq[String] = lr.relation match {
-      case h: HadoopFsRelation =>
-        h.location.inputFiles.toSeq.map(u => new java.net.URI(u).getPath)
-      case _ => return None
-    }
-    if (scanned.isEmpty) return None
-    MvCatalog.ensureLoaded(spark, scanned)
-    val mv = MvCatalog.lookup(sp =>
-      scanned.forall(_.startsWith(
-        java.nio.file.Paths.get(sp).toAbsolutePath.normalize.toString)))
-      .getOrElse(return None)
+    val mv = source(lr).flatMap(MvCatalog.lookup).getOrElse(return None)
     // freshness: the view must reflect the source's CURRENT version…
     val srcProps = mv.view.snapshot.metadata.map(_.properties).getOrElse(Map.empty)
     // a JOIN view's state aggregates fact⋈dim, not the source alone —
@@ -461,10 +400,7 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     if (!srcProps.get("graft.mv.sourceVersion").map(_.toLong)
         .contains(mv.source.version)) return None
     // …and the plan must scan exactly that version's active files
-    val active = mv.source.snapshot.activeFiles.map(a =>
-      java.nio.file.Paths.get(mv.source.path).resolve(a.path)
-        .toAbsolutePath.normalize.toString).toSet
-    if (scanned.toSet != active) return None
+    if (!scansCurrent(lr, mv.source)) return None
 
     val groupCols = srcProps("graft.mv.groupCols").split(",").toSeq.filter(_.nonEmpty)
     val sumCols = srcProps("graft.mv.sumCols").split(",").toSet
@@ -496,26 +432,7 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val mvOut: Map[String, Attribute] = mvPlan.output.map(a => a.name -> a).toMap
     val projections = stateProjections(aggExprs, mvOut, groupCols, sumCols,
       minCols, maxCols, rollup).getOrElse(return None)
-    // the admissible WHERE re-targets its key attributes at the
-    // state's columns (same names, same types — keys are stored
-    // natively); a type drift between source and state declines
-    val base: LogicalPlan = filter match {
-      case Some(cond) =>
-        val remapped = cond.transform {
-          case a: AttributeReference =>
-            val c = mvOut.get(a.name).getOrElse(return None)
-            if (c.dataType != a.dataType) return None
-            c
-        }
-        Filter(remapped, mvPlan)
-      case None => mvPlan
-    }
-    if (exact) Some(Project(projections, base))
-    else {
-      val groupAttrs: Seq[Expression] =
-        groupNames.map(n => mvOut.get(n).getOrElse(return None))
-      Some(Aggregate(groupAttrs, projections, base))
-    }
+    statePlan(mvPlan, mvOut, projections, filter, groupNames, exact)
   }
 
   /** Map every output expression 1:1 onto stored view state — ONE
@@ -538,42 +455,16 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       groupingExprs: Seq[Expression], aggExprs: Seq[NamedExpression],
       l: LogicalRelation, r: LogicalRelation,
       cond: Expression, kind: String): Option[LogicalPlan] = {
-    val scannedL = scannedFiles(l).getOrElse(return None)
-    val scannedR = scannedFiles(r).getOrElse(return None)
-    if (scannedL.isEmpty || scannedR.isEmpty) return None
-    MvCatalog.ensureLoaded(spark, scannedL)
-    val mv = MvCatalog.lookupOuter(sp =>
-      scannedL.forall(_.startsWith(
-        java.nio.file.Paths.get(sp).toAbsolutePath.normalize.toString)))
-      .getOrElse(return None)
+    val mv = source(l).flatMap(MvCatalog.lookupOuter).getOrElse(return None)
     if (mv.joinType != kind) return None // a left view must not answer right
     val vprops = mv.view.snapshot.metadata.map(_.properties).getOrElse(Map.empty)
     if (!vprops.get("graft.mv.sourceVersion").map(_.toLong)
         .contains(mv.source.version)) return None
-    def norm(p: String): String =
-      java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
-    if (scannedL.map(norm).toSet != activeSet(mv.source)) return None
-    if (scannedR.map(norm).toSet != activeSet(mv.dim)) return None
+    if (!scansCurrent(l, mv.source) || !scansCurrent(r, mv.dim)) return None
     val joinKeys = vprops.getOrElse(
         graft.lake.MaterializedOuterJoin.OuterJoinKeysKey, "")
       .split(",").filter(_.nonEmpty).toSet
-    val lAttrs = l.output.map(a => a.exprId -> a.name).toMap
-    val rAttrs = r.output.map(a => a.exprId -> a.name).toMap
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case org.apache.spark.sql.catalyst.expressions.And(a, b) =>
-        conjuncts(a) ++ conjuncts(b)
-      case other => Seq(other)
-    }
-    val pairs = conjuncts(cond).map {
-      case EqualTo(a: AttributeReference, b: AttributeReference) =>
-        val (la, ra) = (lAttrs.get(a.exprId), rAttrs.get(b.exprId))
-        val (lb, rb) = (lAttrs.get(b.exprId), rAttrs.get(a.exprId))
-        if (la.isDefined && ra.isDefined && la == ra) la.get
-        else if (lb.isDefined && rb.isDefined && lb == rb) lb.get
-        else return None
-      case _ => return None
-    }
-    if (pairs.toSet != joinKeys) return None
+    if (!equiJoinKeys(l, r, cond).contains(joinKeys)) return None
     val groupCols = vprops.getOrElse(
         graft.lake.MaterializedOuterJoin.OuterGroupKey, "")
       .split(",").toSeq.filter(_.nonEmpty)
@@ -600,12 +491,28 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val mvOut: Map[String, Attribute] = mvPlan.output.map(a => a.name -> a).toMap
     val projections = stateProjections(aggExprs, mvOut, groupCols, sumCols,
       minCols, maxCols, rollup).getOrElse(return None)
-    if (exact) Some(Project(projections, mvPlan))
-    else {
-      val groupAttrs: Seq[Expression] =
-        groupNames.map(n => mvOut.get(n).getOrElse(return None))
-      Some(Aggregate(groupAttrs, projections, mvPlan))
+    statePlan(mvPlan, mvOut, projections, None, groupNames, exact)
+  }
+
+  /** The replacement plan over the view state: the admissible WHERE
+    * re-targeted at the state's columns (same names, same types — a
+    * type drift declines), then the projections as-is for exact keys
+    * or re-aggregated by `groupNames` for a rollup.
+    */
+  private def statePlan(mvPlan: LogicalPlan, mvOut: Map[String, Attribute],
+      projections: Seq[NamedExpression], filter: Option[Expression],
+      groupNames: Seq[String], exact: Boolean): Option[LogicalPlan] = {
+    val base = filter.fold(mvPlan) { cond =>
+      Filter(cond.transform {
+        case a: AttributeReference =>
+          val c = mvOut.get(a.name).getOrElse(return None)
+          if (c.dataType != a.dataType) return None
+          c
+      }, mvPlan)
     }
+    if (exact) Some(Project(projections, base))
+    else Some(Aggregate(groupNames.map(n => mvOut.get(n).getOrElse(return None)),
+      projections, base))
   }
 
   private def stateProjections(aggExprs: Seq[NamedExpression],

@@ -2,7 +2,7 @@ package graft.plans
 
 import scala.util.Try
 
-import graft.lake.GraftTable
+import graft.sources.GraftFileIndex
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Literal, NamedExpression}
@@ -14,21 +14,27 @@ import org.apache.spark.sql.types._
 
 /** Metadata-only aggregates (Delta/Photon's `SELECT COUNT(*)`
   * optimization): a whole-table `count(*) / count(col) / min(col) /
-  * max(col)` over a scan that covers EXACTLY a GraftLake table's
+  * max(col)` over a scan that covers EXACTLY a GraftLake snapshot's
   * active file set is answered by folding the log's per-file footer
   * stats — zero data I/O, O(#files) driver metadata, at any table
   * size. `Dataset.count()` on a 100 TB table becomes a log read.
   *
+  * The scan names its table, snapshot and files through its
+  * [[graft.sources.GraftFileIndex]], so a live read and a time-travel
+  * read of any version fold that snapshot's own stats. Like Delta's
+  * metadata-only count, a live fold opens no data file: a file lost
+  * out of band goes unnoticed here (FSCK's job); pinned reads check
+  * their files exist when they are built.
+  *
   * Strictly gated, like [[MvRewriteRule]]: fires only when the
-  * scanned files ARE the current active set of a table rooted above
-  * them, no deletion vectors are outstanding (masked rows would
-  * overcount), every file carries stats, and every output expression
-  * folds from stored stats — count(*) from numRecords, count(col)
-  * from numRecords − nullCount, min/max from typed min/max values
-  * over EXACT-round-trip types only (integral, floating, boolean,
-  * date; strings/timestamps/decimals decline — parquet may truncate
-  * or re-zone them). Anything else leaves the plan untouched; output
-  * attribute ids are preserved.
+  * scanned files ARE the snapshot's active set, no deletion vectors
+  * are outstanding (masked rows would overcount), every file carries
+  * stats, and every output expression folds from stored stats —
+  * count(*) from numRecords, count(col) from numRecords − nullCount,
+  * min/max from typed min/max values over EXACT-round-trip types only
+  * (integral, floating, boolean, date; strings/timestamps/decimals
+  * decline — parquet may truncate or re-zone them). Anything else
+  * leaves the plan untouched; output attribute ids are preserved.
   */
 case class StatsAggregateRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -37,49 +43,13 @@ case class StatsAggregateRule(spark: SparkSession) extends Rule[LogicalPlan] {
       rewrite(aggExprs, lr).getOrElse(agg)
   }
 
-  /** The GraftLake root above `first`: nearest ancestor holding a
-    * `_graft_log` (data files sit at the root or one partition level
-    * down — bounded ascent, never a full walk).
-    */
-  private def tableRoot(first: java.nio.file.Path): Option[java.nio.file.Path] = {
-    var d = first.getParent
-    var depth = 0
-    while (d != null && depth < 4) {
-      if (java.nio.file.Files.isDirectory(d.resolve("_graft_log"))) return Some(d)
-      d = d.getParent
-      depth += 1
-    }
-    None
-  }
-
   private def rewrite(aggExprs: Seq[NamedExpression],
       lr: LogicalRelation): Option[LogicalPlan] = {
-    val scanned: Seq[String] = lr.relation match {
-      case h: HadoopFsRelation =>
-        h.location.inputFiles.toSeq.map(u => new java.net.URI(u).getPath)
+    val s = lr.relation match {
+      case HadoopFsRelation(idx: GraftFileIndex, _, _, _, _, _)
+          if idx.covers(idx.snapshot) => idx.snapshot
       case _ => return None
     }
-    if (scanned.isEmpty) return None
-    val root = tableRoot(java.nio.file.Paths.get(scanned.head)).getOrElse(return None)
-    if (!GraftTable.isGraftTable(root.toString)) return None
-    val t = GraftTable.forPath(spark, root.toString)
-    val cur = t.snapshot
-    val scannedSet = scanned.map(p =>
-      java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString).toSet
-    def matches(sn: graft.lake.Snapshot): Boolean =
-      sn.activeFiles.map(a =>
-        root.resolve(a.path).toAbsolutePath.normalize.toString).toSet == scannedSet
-    // the scan may be a TIME-TRAVEL read (`toDFAt(v).count()`): its
-    // file set is some recent version's active set, whose stats are
-    // just as truthful — probe a bounded window of prior versions
-    // (snapshot loads are cached; versions lost to log cleanup skip)
-    val s =
-      if (matches(cur)) cur
-      else ((cur.version - 1) to math.max(0L, cur.version - 8) by -1)
-        .iterator
-        .flatMap(v => Try(t.snapshotAt(v)).toOption)
-        .find(matches)
-        .getOrElse(return None)
     if (s.dvFiles.nonEmpty) return None
     // column mapping: stats are keyed by PHYSICAL names while the
     // scan's attributes may be either side of a rename (and a rename

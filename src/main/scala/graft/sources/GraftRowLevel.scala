@@ -121,12 +121,13 @@ private[sources] final class GraftRowLevelScanBuilder(
   * absolute path + (start, length) byte range + file size for the
   * parquet reader, the log-relative path (the group key `_graft_file`
   * emits), the row-tracking base id, and the typed partition-column
-  * values evaluated once on the driver. Files larger than the
-  * session's maxPartitionBytes split into byte ranges (the parquet
-  * reader assigns a row group to the split holding its midpoint, and
-  * the row INDEX it generates is file-absolute — DV masks and row-id
-  * bases stay exact across splits), so one huge candidate file never
-  * caps the rewrite's read parallelism.
+  * values evaluated once on the driver with
+  * [[GraftFileIndex.partitionValue]] (the table scan's typing). Files
+  * larger than the session's maxPartitionBytes split into byte ranges
+  * (the parquet reader assigns a row group to the split holding its
+  * midpoint, and the row INDEX it generates is file-absolute — DV
+  * masks and row-id bases stay exact across splits), so one huge
+  * candidate file never caps the rewrite's read parallelism.
   */
 private[sources] final case class GraftRloPartition(
     abs: String, start: Long, length: Long, size: Long, rel: String,
@@ -198,23 +199,13 @@ private[sources] final class GraftRowLevelScan(
     val partFields = required.fields.filter(f => partCols.contains(f.name))
     val maxSplit =
       math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
     files.flatMap { f =>
-      // typed partition values, evaluated once per file on the driver
-      // (the log stores decoded strings; Cast gives the exact read-side
-      // value the directory-inference scan would produce)
-      val vals: Array[Any] = partFields.map { pf =>
-        f.partitionValues.get(snapshot.physicalName(pf.name)) match {
-          case None => null
-          case Some(v) if v == ParquetShim.defaultPartitionName => null
-          case Some(v) =>
-            val c = org.apache.spark.sql.catalyst.expressions.Cast(
-              org.apache.spark.sql.catalyst.expressions.Literal(
-                UTF8String.fromString(v), StringType),
-              pf.dataType, Some("UTC"))
-            c.eval(InternalRow.empty)
-        }
-      }
-      val abs = table.rowLevelDataPath(f.path)
+      // typed partition values, once per file on the driver — the same
+      // typing the table scan's file index gives them
+      val vals: Array[Any] = partFields.map(pf => GraftFileIndex.partitionValue(
+        f.partitionValues.get(snapshot.physicalName(pf.name)), pf.dataType, tz))
+      val abs = table.dataPath(f.path)
       (0L until f.size by maxSplit).map { start =>
         GraftRloPartition(abs, start, math.min(maxSplit, f.size - start),
           f.size, f.path, f.baseRowId, vals): InputPartition
@@ -281,7 +272,7 @@ private[sources] final class GraftRowLevelScan(
     // grow with uncompacted deletes — unpruned, every split would scan
     // them all). A sidecar without stats is kept unconditionally.
     val dvParts = snapshot.dvFiles.flatMap { rel =>
-      val abs = java.nio.file.Paths.get(table.rowLevelDataPath(rel))
+      val abs = java.nio.file.Paths.get(table.dataPath(rel))
       val walk = java.nio.file.Files.walk(abs)
       try {
         import scala.jdk.CollectionConverters._

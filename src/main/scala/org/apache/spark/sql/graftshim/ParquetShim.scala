@@ -6,7 +6,7 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, OutputWriter, OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
@@ -66,6 +66,15 @@ object ParquetShim {
     }
   }
 
+  /** A parquet relation over `index`, laid out as a path read lays it
+    * out: `dataSchema` made nullable (nested fields too), then
+    * `partitionSchema`.
+    */
+  def relation(spark: SparkSession, index: FileIndex, partitionSchema: StructType,
+      dataSchema: StructType): LogicalRelation =
+    LogicalRelation(HadoopFsRelation(index, partitionSchema, dataSchema.asNullable,
+      None, new ParquetFileFormat(), Map.empty)(spark))
+
   /** Driver-side write preparation: an [[OutputWriterFactory]] (it is
     * Serializable by contract) plus the job Configuration it was
     * configured against — both ship to tasks. Timestamps are forced to
@@ -105,8 +114,8 @@ object ParquetShim {
   }
 
   /** Hive-style partition directory escaping (what `df.write
-    * .partitionBy` produces, so the table layer's directory-inference
-    * reads agree).
+    * .partitionBy` produces, so row-level writes keep the table
+    * layer's directory layout).
     */
   def escapePathName(s: String): String = ExternalCatalogUtils.escapePathName(s)
   def defaultPartitionName: String = ExternalCatalogUtils.DEFAULT_PARTITION_NAME

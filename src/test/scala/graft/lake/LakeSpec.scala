@@ -1263,4 +1263,63 @@ class LakeSpec extends GraftSparkSpec {
       assert(rows == Set((100L, 2L, 1L), (5L, 3L, 4L)), s"mor=$mor: $rows")
     }
   }
+
+  test("building a read over 40 files starts no Spark job") {
+    val t = GraftTable.create(spark, tmpDir("scan-nojob"), li.limit(4000).repartition(40))
+    assert(t.snapshot.numFiles == 40)
+    // every job start the listener sees up to a sentinel job's — the
+    // listener bus delivers in order, so once the sentinel arrives any
+    // job the build started has been counted
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val probe = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(probe)
+    try {
+      val df = t.toDF
+      spark.sparkContext.setJobDescription("scan-nojob-sentinel")
+      try spark.range(1).collect() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!started.contains("scan-nojob-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(started.contains("scan-nojob-sentinel"))
+      val buildJobs = started.asScala.filterNot(_ == "scan-nojob-sentinel")
+      assert(buildJobs.isEmpty, s"building the read started jobs: $buildJobs")
+      assert(df.count() == 4000)
+    } finally spark.sparkContext.removeSparkListener(probe)
+  }
+
+  test("a partition filter reads only that partition's files") {
+    val sp = spark
+    import sp.implicits._
+    val t = GraftTable.create(spark, tmpDir("part-filter-files"),
+      (0 until 60).map(i => (i.toLong, s"p${i % 3}")).toDF("k", "part")
+        .repartition(2), partitionBy = Seq("part"))
+    val p1 = t.snapshot.activeFiles.filter(_.partitionValues("part") == "p1")
+    assert(p1.nonEmpty && p1.size < t.snapshot.numFiles)
+    val q = t.toDF.filter(col("part") === "p1")
+    assert(q.count() == 20)
+    val scans = q.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.size == 1)
+    val read = scans.head.selectedPartitions.toPartitionArray.map(_.toPath.getName).toSet
+    assert(read == p1.map(f => java.nio.file.Paths.get(f.path).getFileName.toString).toSet)
+  }
+
+  test("a live read of a data file deleted out of band fails naming the file") {
+    val sp = spark
+    import sp.implicits._
+    val t = GraftTable.create(spark, tmpDir("oob-delete"),
+      (0 until 20).map(i => (i.toLong, i)).toDF("k", "v").repartition(2))
+    val victim = t.snapshot.activeFiles.head.path
+    java.nio.file.Files.delete(java.nio.file.Paths.get(t.path, victim))
+    val e = intercept[Exception](t.toDF.collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage)).mkString("\n")
+    assert(msgs.contains(java.nio.file.Paths.get(victim).getFileName.toString), msgs)
+  }
 }

@@ -62,6 +62,22 @@ class StatsAggregateSpec extends GraftSparkSpec {
     assert(r.getLong(0) == 100 && r.getLong(1) == 100L)
     val current = t.toDF.agg(count(lit(1)).as("n"))
     assert(metadataOnly(current) && current.head.getLong(0) == 70)
+    // however far back the pinned version is
+    (1 to 10).foreach(i => t.append(Seq((200L + i, 0L)).toDF("k", "v")))
+    val old = t.toDFAt(v0).agg(count(lit(1)).as("n"), max("k").as("m"))
+    assert(metadataOnly(old), "a version 12 commits back must fold its stats")
+    assert(old.head.getLong(0) == 100 && old.head.getLong(1) == 100L)
+  }
+
+  test("a whole-table count over a table partitioned by four columns folds") {
+    import spark.implicits._
+    val data = (1 to 48).map(i => (i.toLong, i % 2, i % 3, i % 4 == 0, s"p${i % 4}"))
+      .toDF("k", "a", "b", "c", "d")
+    val t = GraftTable.create(spark, tmpDir("statagg-part4"), data,
+      partitionBy = Seq("a", "b", "c", "d"))
+    val q = t.toDF.agg(count(lit(1)).as("n"), max("k").as("m"))
+    assert(metadataOnly(q), "data files four partition levels down must fold")
+    assert(q.head.getLong(0) == 48 && q.head.getLong(1) == 48L)
   }
 
   test("a column-mapped (renamed) table declines: stats keys are physical names") {

@@ -107,6 +107,45 @@ class RowLevelOpsSpec extends GraftSparkSpec {
     spark.sql("DROP TABLE graftrlo.default.part_tbl")
   }
 
+  test("partition values type the same through toDF, toDFAt, a shallow " +
+      "clone and the row-level scan, null partitions included") {
+    useCatalog()
+    import spark.implicits._
+    val d1 = java.sql.Date.valueOf("2024-01-01")
+    val d2 = java.sql.Date.valueOf("2024-02-29")
+    val rows = Seq[(Long, Option[java.sql.Date], Option[Int], Option[String])](
+      (1L, Some(d1), Some(1), Some("a b")), (2L, Some(d2), Some(2), Some("a%b")),
+      (3L, Some(d2), Some(-3), Some("k=v:w")), (4L, None, None, None))
+    rows.toDF("id", "d", "i", "s").createOrReplaceTempView("rlo_typed_src")
+    spark.sql("CREATE TABLE graftrlo.default.typed_tbl USING graftlake " +
+      "PARTITIONED BY (d, i, s) AS SELECT * FROM rlo_typed_src")
+    val t = GraftTable.forPath(spark, pathOf("typed_tbl"))
+    assert(t.snapshot.activeFiles.exists(
+      _.partitionValues.get("s").contains("__HIVE_DEFAULT_PARTITION__")))
+    def read(df: org.apache.spark.sql.DataFrame) = {
+      assert(Seq("d", "i", "s").map(df.schema(_).dataType) ==
+        Seq(org.apache.spark.sql.types.DateType,
+          org.apache.spark.sql.types.IntegerType,
+          org.apache.spark.sql.types.StringType))
+      df.select("id", "d", "i", "s").as[(Long, Option[java.sql.Date],
+        Option[Int], Option[String])].collect().toSet
+    }
+    val v = t.version
+    assert(read(t.toDF) == rows.toSet)
+    assert(t.toDF.filter(col("s") === "a%b").count() == 1)
+    assert(t.toDF.filter(col("i").isNull).count() == 1)
+    val clone = GraftTable.shallowClone(spark, t.path, tmpDir("rlo-typed-clone"))
+    assert(read(clone.toDF) == rows.toSet)
+    // UPDATE plans through the row-level scan, which types the
+    // partition values it carries into the rewritten rows
+    spark.sql("UPDATE graftrlo.default.typed_tbl SET id = id + 10")
+    val bumped = rows.map { case (id, d, i, s) => (id + 10, d, i, s) }.toSet
+    assert(read(t.toDF) == bumped)
+    assert(read(spark.table("graftrlo.default.typed_tbl")) == bumped)
+    assert(read(t.toDFAt(v)) == rows.toSet)
+    spark.sql("DROP TABLE graftrlo.default.typed_tbl")
+  }
+
   test("deletion-vector masks apply to the rewrite scan") {
     useCatalog()
     spark.range(100).withColumn("v", col("id"))
