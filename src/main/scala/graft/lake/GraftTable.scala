@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 
 /** GraftLake table: ACID-ish table format on Parquet with a JSON
   * transaction log — the full maintenance surface the reference
@@ -1954,8 +1954,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * validation and conflict rules as the DataFrame DML paths.
     */
   private[graft] def rowLevelTrackingOn(s: Snapshot): Boolean = rowTrackingOn(s)
-  private[graft] def rowLevelGeneratedExprs(s: Snapshot): Map[String, String] =
-    generatedExprs(s)
 
   /** Validate+absorb the replacement files a row-level write's tasks
     * staged: CHECK / NOT NULL constraints run over the staged rows,
@@ -2090,32 +2088,23 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
 
   // --------------------------------- cross-statement transactions
 
-  /** Land every change a transaction SHADOW accumulated as ONE
-    * optimistic commit on this (base) table. The shadow is a shallow
-    * clone taken at BEGIN: base files it still references are
-    * untouched, base files its DML rewrote become removes, files it
-    * wrote under its own root MOVE beneath the base root and become
-    * adds (stats, partition values and row-id bases ride along
-    * unchanged), and metadata changes (schema evolution, properties)
-    * carry over minus the clone markers. `readVersion = baseVersion`
-    * gives the transaction SERIALIZABLE semantics against concurrent
-    * writers: any intervening commit that touched our read set aborts
-    * the whole squash, and the caller rolls the shadow back.
+  /** PHASE 1 of the two-phase commit that lands every change a
+    * transaction SHADOW accumulated as ONE optimistic commit on this
+    * (base) table. The shadow is a shallow clone taken at BEGIN: base
+    * files it still references are untouched, base files its DML
+    * rewrote become removes, files it wrote under its own root MOVE
+    * beneath the base root and become adds (stats, partition values
+    * and row-id bases ride along unchanged), and metadata changes
+    * (schema evolution, properties) carry over minus the clone
+    * markers. Merge-on-read masks written by the shadow squash too,
+    * except a mask over a row the SAME transaction inserted (its keys
+    * would reference shadow scan paths that die with the shadow) —
+    * that combination refuses with a pointer at copy-on-write DML.
     *
-    * Merge-on-read masks written by the shadow squash too, except a
-    * mask over a row the SAME transaction inserted (its keys would
-    * reference shadow scan paths that die with the shadow) — that
-    * combination refuses with a pointer at copy-on-write DML.
-    */
-  private[lake] def squashTransaction(shadow: GraftTable,
-      baseVersion: Long): Map[String, String] =
-    commitSquash(prepareSquash(shadow, baseVersion))
-
-  /** PHASE 1 of the two-phase transaction commit: every heavy step —
-    * file moves under the base root, DV key validation, metadata
-    * diffing — happens here withOUT touching the log, so a
-    * multi-table COMMIT can prepare every table first and then land
-    * the log appends back-to-back ([[commitSquash]]). A failure
+    * Every heavy step — file moves under the base root, DV key
+    * validation, metadata diffing — happens here withOUT touching the
+    * log, so a multi-table COMMIT can prepare every table first and
+    * then land the log appends back-to-back ([[commitSquash]]). A failure
     * before the log commit leaves only uncommitted orphan files under
     * the root (invisible to every snapshot read; [[commitSquash]]'s
     * failure path and VACUUM both reclaim them).
@@ -6466,10 +6455,12 @@ object GraftTable {
     * (`_metadata.file_path`), joined through the manifest's file-path
     * space on a broadcast of the O(#files) listing. The name-mapping
     * property translates to graft column mapping (`graft.colmap.*`),
-    * identity-partition values come from Hive-style data directories
-    * at scan time (the manifest partition struct seeds per-file
-    * `partitionValues` for pruning), and `snapshotId` pins a retained
-    * historical snapshot — external time travel INTO the engine.
+    * identity-partition values are the manifest partition struct's,
+    * adopted as per-file `partitionValues` in directory form (dates as
+    * `yyyy-MM-dd`, timestamps as session wall time) since the scan's
+    * file index types them from there for reads and pruning alike, and
+    * `snapshotId` pins a retained historical snapshot — external time
+    * travel INTO the engine.
     *
     * Contract shared with [[attachDelta]]: data files must lie in ONE
     * Hive-style root (what Iceberg writers with identity transforms
@@ -6502,12 +6493,19 @@ object GraftTable {
       val uri = new java.net.URI(u)
       if (uri.getScheme != null) uri.getPath else root.resolve(u).toString
     }
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
     val adds0 = p.dataFiles.map { case (u, pv) =>
       val abs = resolve(u)
       val f = Paths.get(abs)
       require(Files.exists(f), s"manifest lists a missing data file: $abs")
+      // Avro hands dates and timestamps over as epoch days and micros;
+      // the log stores them in directory form, what the scan types
       val partVals = pv.flatMap { case (k, v) =>
-        Option(v).map(k -> _.toString)
+        Option(v).map(v => k -> (schema.find(_.name == k).map(_.dataType) match {
+          case Some(dt @ (DateType | TimestampType | TimestampNTZType)) =>
+            graft.sources.GraftFileIndex.directoryValue(v, dt, tz)
+          case _ => v.toString
+        }))
       }
       AddFile(abs, partVals, Files.size(f),
         Files.getLastModifiedTime(f).toMillis, dataChange = true,

@@ -7,9 +7,10 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftshim.{ParquetShim, StreamShim}
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, DateType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The file index under every GraftLake table scan: `files` of
@@ -102,7 +103,8 @@ private[graft] object GraftFileIndex {
 
   /** The scan of `files` of `s` in `readSchema` (physical names): one
     * parquet `LogicalRelation` over a [[GraftFileIndex]], laid out as a
-    * path read lays it out — data columns, then the partition columns.
+    * path read lays it out — data columns, all nullable, then the
+    * partition columns.
     */
   def scan(table: GraftTable, s: Snapshot, files: Seq[AddFile],
       readSchema: StructType): DataFrame = {
@@ -110,17 +112,30 @@ private[graft] object GraftFileIndex {
     val partitionSchema = StructType(partNames.flatMap(n => readSchema.find(_.name == n)))
     val dataSchema = StructType(readSchema.filterNot(f => partNames.contains(f.name)))
     val index = new GraftFileIndex(table, s, files, partitionSchema)
-    StreamShim.ofRows(table.spark,
-      ParquetShim.relation(table.spark, index, partitionSchema, dataSchema))
+    StreamShim.ofRows(table.spark, LogicalRelation(HadoopFsRelation(index,
+      partitionSchema, ParquetShim.asNullable(dataSchema), None, new ParquetFileFormat(),
+      Map.empty)(table.spark)))
   }
 
   /** One log partition string typed to `dt`, as Spark's directory
     * inference types a partition column the read schema declares: a
     * cast under the session time zone. The Hive default marker and an
-    * absent value read as null.
+    * absent value read as null. A date stored as its epoch day (how
+    * Iceberg attaches once stored it) reads as that day, as
+    * [[graft.lake.Pruning]] compares it.
     */
   def partitionValue(v: Option[String], dt: DataType, timeZone: String): Any =
-    v.filter(_ != ParquetShim.defaultPartitionName).map(s =>
-      Cast(Literal(UTF8String.fromString(s), StringType), dt, Some(timeZone))
-        .eval()).orNull
+    v.filter(_ != ParquetShim.defaultPartitionName).map {
+      case s if dt == DateType && s.toIntOption.isDefined => s.toInt
+      case s => Cast(Literal(UTF8String.fromString(s), StringType), dt,
+        Some(timeZone)).eval()
+    }.orNull
+
+  /** A non-null internal value of a `dt` partition column in directory
+    * form, the string Spark's writer names its directory with and
+    * [[partitionValue]] types back: dates as `yyyy-MM-dd`, timestamps
+    * as wall time in `timeZone`.
+    */
+  def directoryValue(v: Any, dt: DataType, timeZone: String): String =
+    Cast(Literal(v, dt), StringType, Some(timeZone)).eval().toString
 }

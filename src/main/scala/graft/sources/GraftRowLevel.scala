@@ -443,7 +443,8 @@ private[sources] final class GraftRowLevelWrite(
       schema.fields.map(_.dataType), partOrds,
       partCols.toArray, dataOrds, tracking,
       // meta row layout: (_graft_file[, _graft_row_id])
-      rowIdMetaOrd = if (tracking) 1 else -1)
+      rowIdMetaOrd = if (tracking) 1 else -1,
+      spark.sessionState.conf.sessionLocalTimeZone)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -475,7 +476,8 @@ private[sources] final case class GraftRloWriterFactory(
     partCols: Array[String],
     dataOrds: Array[Int],
     tracking: Boolean,
-    rowIdMetaOrd: Int) extends DataWriterFactory {
+    rowIdMetaOrd: Int,
+    timeZone: String) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
@@ -512,21 +514,16 @@ private[sources] final case class GraftRloWriterFactory(
       // only rowIdMetaOrd is ever read by the projection
       private val paddedMeta = new GenericInternalRow(metaArity)
 
-      // timestamps render through Spark's own fraction formatter —
-      // the exact Cast(timestamp -> string) implementation — so
+      // dates and timestamps render as Spark's writer names their
+      // directories (Cast to string under the session zone), so
       // sub-second partition values keep their '.SSSSSS' micros and
-      // round-trip through the scan side's Cast(string -> timestamp,
-      // UTC) bit-exactly; a seconds-precision formatter here would
-      // silently MOVE rows to a truncated partition value on rewrite
-      private lazy val tsFormatter =
-        org.apache.spark.sql.catalyst.util.TimestampFormatter
-          .getFractionFormatter(java.time.ZoneOffset.UTC)
-
+      // round-trip through the scan's typing bit-exactly; a
+      // seconds-precision or other-zone rendering here would silently
+      // MOVE rows to another partition value on rewrite
       private def render(v: Any, dt: DataType): String = dt match {
         case _ if v == null => ParquetShim.defaultPartitionName
-        case DateType =>
-          java.time.LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong).toString
-        case TimestampType => tsFormatter.format(v.asInstanceOf[Long])
+        case DateType | TimestampType | TimestampNTZType =>
+          GraftFileIndex.directoryValue(v, dt, timeZone)
         case _ => String.valueOf(v)
       }
 

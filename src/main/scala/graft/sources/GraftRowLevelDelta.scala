@@ -103,7 +103,8 @@ private[sources] final class GraftDeltaWriteImpl(
     val inner = GraftRloWriterFactory(
       rootAbs + "/" + dataStagingRel, factory, serConf, ext, fileSchema,
       schema.fields.map(_.dataType), partOrds, partCols.toArray, dataOrds,
-      tracking, rowIdMetaOrd = if (tracking) 0 else -1)
+      tracking, rowIdMetaOrd = if (tracking) 0 else -1,
+      spark.sessionState.conf.sessionLocalTimeZone)
     val marksSchema = StructType(Seq(StructField("file_path", StringType),
       StructField("row_index", LongType)))
     val (mFactory, mConf) = ParquetShim.prepareParquetWrite(spark, marksSchema)

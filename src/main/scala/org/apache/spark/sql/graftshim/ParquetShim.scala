@@ -6,7 +6,7 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, OutputWriter, OutputWriterFactory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
@@ -66,14 +66,11 @@ object ParquetShim {
     }
   }
 
-  /** A parquet relation over `index`, laid out as a path read lays it
-    * out: `dataSchema` made nullable (nested fields too), then
-    * `partitionSchema`.
+  /** `schema` with every field nullable, nested fields too, as a path
+    * read declares its data schema (`StructType.asNullable` is
+    * `private[spark]`).
     */
-  def relation(spark: SparkSession, index: FileIndex, partitionSchema: StructType,
-      dataSchema: StructType): LogicalRelation =
-    LogicalRelation(HadoopFsRelation(index, partitionSchema, dataSchema.asNullable,
-      None, new ParquetFileFormat(), Map.empty)(spark))
+  def asNullable(schema: StructType): StructType = schema.asNullable
 
   /** Driver-side write preparation: an [[OutputWriterFactory]] (it is
     * Serializable by contract) plus the job Configuration it was

@@ -406,18 +406,19 @@ class IcebergExportSpec extends GraftSparkSpec {
   test("L117 attachIceberg: export round-trips into a NEW graft table " +
       "— partitions, CoW removes, and position deletes become DV masks") {
     import spark.implicits._
+    val days = Seq("2024-01-01", "2024-02-29").map(java.sql.Date.valueOf)
     val t = GraftTable.create(spark, tmpDir("iatt-src"),
-      (0L until 60L).map(i => (i, s"p${i % 3}", i * 2.0))
-        .toDF("k", "part", "v"),
-      partitionBy = Seq("part"))
+      (0L until 60L).map(i => (i, s"p${i % 3}", i * 2.0, days((i % 2).toInt)))
+        .toDF("k", "part", "v", "d"),
+      partitionBy = Seq("part", "d"))
     t.optimize()
     t.delete(col("k") % 4 === 0)           // CoW: files rewritten
     t.deleteMergeOnRead(col("k") % 5 === 0) // DVs stay live
     IcebergExport.export(GraftTable.forPath(spark, t.path))
     val att = GraftTable.attachIceberg(spark, t.path, tmpDir("iatt-dst"))
     val want = GraftTable.forPath(spark, t.path).toDF
-      .select("k", "part", "v").collect().toSet
-    val got = att.toDF.select("k", "part", "v").collect().toSet
+      .select("k", "part", "v", "d").collect().toSet
+    val got = att.toDF.select("k", "part", "v", "d").collect().toSet
     assert(got == want, s"attached read must equal the source engine read")
     // zero data bytes copied: every adopted file is an absolute ref
     // into the source tree
@@ -425,9 +426,20 @@ class IcebergExportSpec extends GraftSparkSpec {
     assert(snap.activeFiles.nonEmpty &&
       snap.activeFiles.forall(_.path.startsWith("/")))
     assert(snap.dvFiles.nonEmpty, "position deletes must adopt as DVs")
+    // the manifest's epoch-day date values adopt in directory form,
+    // the form the scan types partition values from
+    assert(snap.activeFiles.map(_.partitionValues("d")).toSet ==
+      Set("2024-01-01", "2024-02-29"))
+    // a log attached before that stored the epoch day; it still types
+    // to the same date
+    val dt = org.apache.spark.sql.types.DateType
+    assert(Seq("19723", "2024-01-01").map(v =>
+      graft.sources.GraftFileIndex.partitionValue(Some(v), dt, "UTC")) == Seq(19723, 19723))
     // partition pruning works off the adopted partitionValues
     assert(att.toDF.filter(col("part") === "p1").count() ==
       want.count(_.getString(1) == "p1"))
+    assert(att.toDF.filter(col("d") === days(1)).count() ==
+      want.count(_.getDate(3) == days(1)))
     // footer stats landed (the CONVERT discipline): skipping-ready
     assert(snap.activeFiles.forall(_.stats.nonEmpty))
   }

@@ -107,43 +107,65 @@ class RowLevelOpsSpec extends GraftSparkSpec {
     spark.sql("DROP TABLE graftrlo.default.part_tbl")
   }
 
+  private type TypedRow = (Long, Option[java.sql.Date], Option[Int],
+    Option[String], Option[java.sql.Timestamp], Option[java.time.LocalDateTime])
+
   test("partition values type the same through toDF, toDFAt, a shallow " +
-      "clone and the row-level scan, null partitions included") {
+      "clone and the row-level scan, null partitions included, in a " +
+      "non-UTC session") {
     useCatalog()
     import spark.implicits._
-    val d1 = java.sql.Date.valueOf("2024-01-01")
-    val d2 = java.sql.Date.valueOf("2024-02-29")
-    val rows = Seq[(Long, Option[java.sql.Date], Option[Int], Option[String])](
-      (1L, Some(d1), Some(1), Some("a b")), (2L, Some(d2), Some(2), Some("a%b")),
-      (3L, Some(d2), Some(-3), Some("k=v:w")), (4L, None, None, None))
-    rows.toDF("id", "d", "i", "s").createOrReplaceTempView("rlo_typed_src")
-    spark.sql("CREATE TABLE graftrlo.default.typed_tbl USING graftlake " +
-      "PARTITIONED BY (d, i, s) AS SELECT * FROM rlo_typed_src")
-    val t = GraftTable.forPath(spark, pathOf("typed_tbl"))
-    assert(t.snapshot.activeFiles.exists(
-      _.partitionValues.get("s").contains("__HIVE_DEFAULT_PARTITION__")))
-    def read(df: org.apache.spark.sql.DataFrame) = {
-      assert(Seq("d", "i", "s").map(df.schema(_).dataType) ==
-        Seq(org.apache.spark.sql.types.DateType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.StringType))
-      df.select("id", "d", "i", "s").as[(Long, Option[java.sql.Date],
-        Option[Int], Option[String])].collect().toSet
-    }
-    val v = t.version
-    assert(read(t.toDF) == rows.toSet)
-    assert(t.toDF.filter(col("s") === "a%b").count() == 1)
-    assert(t.toDF.filter(col("i").isNull).count() == 1)
-    val clone = GraftTable.shallowClone(spark, t.path, tmpDir("rlo-typed-clone"))
-    assert(read(clone.toDF) == rows.toSet)
-    // UPDATE plans through the row-level scan, which types the
-    // partition values it carries into the rewritten rows
-    spark.sql("UPDATE graftrlo.default.typed_tbl SET id = id + 10")
-    val bumped = rows.map { case (id, d, i, s) => (id + 10, d, i, s) }.toSet
-    assert(read(t.toDF) == bumped)
-    assert(read(spark.table("graftrlo.default.typed_tbl")) == bumped)
-    assert(read(t.toDFAt(v)) == rows.toSet)
-    spark.sql("DROP TABLE graftrlo.default.typed_tbl")
+    // timestamp partition directories hold session-local wall time:
+    // every read and the row-level rewrite must use the session zone
+    val tzKey = "spark.sql.session.timeZone"
+    val prevTz = spark.conf.get(tzKey)
+    spark.conf.set(tzKey, "America/Los_Angeles")
+    try {
+      val d1 = java.sql.Date.valueOf("2024-01-01")
+      val d2 = java.sql.Date.valueOf("2024-02-29")
+      // 10:30Z is 03:30 in Los Angeles, a 7-hour shift from UTC
+      val ts1 = java.sql.Timestamp.from(java.time.Instant.parse("2024-03-10T10:30:00Z"))
+      val ts2 = java.sql.Timestamp.from(java.time.Instant.parse("2024-07-01T00:00:00.25Z"))
+      val ntz = java.time.LocalDateTime.parse("2024-03-10T02:30:00.000001")
+      val rows = Seq[TypedRow](
+        (1L, Some(d1), Some(1), Some("a b"), Some(ts1), Some(ntz)),
+        (2L, Some(d2), Some(2), Some("a%b"), Some(ts2), None),
+        (3L, Some(d2), Some(-3), Some("k=v:w"), Some(ts1), Some(ntz)),
+        (4L, None, None, None, None, None))
+      rows.toDF("id", "d", "i", "s", "ts", "ntz").createOrReplaceTempView("rlo_typed_src")
+      spark.sql("CREATE TABLE graftrlo.default.typed_tbl USING graftlake " +
+        "PARTITIONED BY (d, i, s, ts, ntz) AS SELECT * FROM rlo_typed_src")
+      val t = GraftTable.forPath(spark, pathOf("typed_tbl"))
+      assert(t.snapshot.activeFiles.exists(
+        _.partitionValues.get("s").contains("__HIVE_DEFAULT_PARTITION__")))
+      assert(t.snapshot.activeFiles.exists(
+        _.partitionValues.get("ts").contains("2024-03-10 03:30:00")))
+      def read(df: org.apache.spark.sql.DataFrame) = {
+        import org.apache.spark.sql.types._
+        assert(Seq("d", "i", "s", "ts", "ntz").map(df.schema(_).dataType) ==
+          Seq(DateType, IntegerType, StringType, TimestampType, TimestampNTZType))
+        df.select("id", "d", "i", "s", "ts", "ntz").as[TypedRow].collect().toSet
+      }
+      val v = t.version
+      assert(read(t.toDF) == rows.toSet)
+      assert(t.toDF.filter(col("s") === "a%b").count() == 1)
+      assert(t.toDF.filter(col("i").isNull).count() == 1)
+      assert(t.toDF.filter(col("ts") === lit(ts1)).count() == 2)
+      val clone = GraftTable.shallowClone(spark, t.path, tmpDir("rlo-typed-clone"))
+      assert(read(clone.toDF) == rows.toSet)
+      // UPDATE plans through the row-level scan, which types the
+      // partition values it matches on and carries into the rewritten
+      // rows; the rewrite renders them back under the same zone
+      spark.sql("UPDATE graftrlo.default.typed_tbl SET id = id + 10")
+      spark.sql("UPDATE graftrlo.default.typed_tbl SET id = id + 100 " +
+        "WHERE ts = TIMESTAMP '2024-03-10 03:30:00'")
+      val bumped = rows.map { case (id, d, i, s, ts, ntz) =>
+        (id + 10 + (if (ts.contains(ts1)) 100 else 0), d, i, s, ts, ntz) }.toSet
+      assert(read(t.toDF) == bumped)
+      assert(read(spark.table("graftrlo.default.typed_tbl")) == bumped)
+      assert(read(t.toDFAt(v)) == rows.toSet)
+      spark.sql("DROP TABLE graftrlo.default.typed_tbl")
+    } finally spark.conf.set(tzKey, prevTz)
   }
 
   test("deletion-vector masks apply to the rewrite scan") {
