@@ -1,7 +1,7 @@
 package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType}
 
 /** Deletion-vector sidecar access (r16 optimization round, guide
   * §1.2/§5): the sidecar schema is fixed at write time —
@@ -16,6 +16,11 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * the distributed path. The driver-side answers are exactly the
   * distinct/count the Spark job computed — callers already held the
   * DISTINCT set on the driver either way.
+  *
+  * The bloom sidecar (`(file_path STRING, bloom BINARY)`, written by
+  * `GraftTable.computeBloomFilter`) is the gate's second user: its
+  * point/IN probe streams the candidates' rows here under the same
+  * gate and keeps the distributed probe above it.
   */
 object DvSidecar {
   /** The sidecar schema as written by every DV producer (MoR
@@ -24,6 +29,13 @@ object DvSidecar {
   val Schema: StructType = StructType(Seq(
     StructField("file_path", StringType),
     StructField("row_index", LongType)))
+
+  /** The bloom sidecar schema as `GraftTable.computeBloomFilter`
+    * writes it; distributed probes read with it pinned.
+    */
+  val BloomSchema: StructType = StructType(Seq(
+    StructField("file_path", StringType),
+    StructField("bloom", BinaryType)))
 
   private val DefaultGateBytes = 64L * 1024 * 1024
 
@@ -71,6 +83,14 @@ object DvSidecar {
     }
   }
 
+  /** The sidecars' parquet parts when their total size sits under the
+    * gate — the one driver-read decision every sidecar helper makes;
+    * None sends the caller down its distributed path.
+    */
+  private[lake] def partsUnderGate(spark: SparkSession,
+      paths: Seq[String]): Option[Seq[java.nio.file.Path]] =
+    expandParts(paths).filter(underGate(spark, _))
+
   /** Projection of `fields` drawn from the FILE's own schema (so the
     * declared repetition — optional vs required — always matches;
     * a fixed requested schema trips parquet's checkContains). Throws
@@ -87,15 +107,19 @@ object DvSidecar {
         fileSchema.getType(fileSchema.getFieldIndex(n))): _*)
   }
 
-  /** Stream `file_path` cells of the sidecar parts through `f`,
-    * driver-side (column-projected — row_index pages are never read).
+  /** Stream the rows of the sidecar parts, projected to `fields`,
+    * through `f` driver-side (pages of other columns are never read).
+    * `check` sees each part's projection before its rows are read.
     */
-  private def foreachFilePath(parts: Seq[java.nio.file.Path])(
-      f: String => Unit): Unit =
+  private def foreachRow(parts: Seq[java.nio.file.Path], fields: Seq[String],
+      check: org.apache.parquet.schema.MessageType => Unit = _ => ())(
+      f: org.apache.parquet.example.data.Group => Unit): Unit =
     parts.foreach { p =>
+      val proj = projectionFor(p, fields)
+      check(proj)
       val conf = new org.apache.hadoop.conf.Configuration(Stats.hadoopConf)
       conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-        projectionFor(p, Seq("file_path")).toString)
+        proj.toString)
       val reader = org.apache.parquet.hadoop.ParquetReader
         .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
           new org.apache.hadoop.fs.Path(p.toString))
@@ -104,11 +128,26 @@ object DvSidecar {
       try {
         var g = reader.read()
         while (g != null) {
-          if (g.getFieldRepetitionCount("file_path") > 0)
-            f(g.getString("file_path", 0))
+          if (fields.forall(g.getFieldRepetitionCount(_) > 0)) f(g)
           g = reader.read()
         }
       } finally reader.close()
+    }
+
+  /** Stream `file_path` cells of the sidecar parts through `f`. */
+  private def foreachFilePath(parts: Seq[java.nio.file.Path])(
+      f: String => Unit): Unit =
+    foreachRow(parts, Seq("file_path"))(g => f(g.getString("file_path", 0)))
+
+  /** Stream the `(file_path, bloom)` rows of bloom sidecar parts whose
+    * path `keep` accepts through `f`. The path is checked first, so a
+    * rejected row's bitset is never handed out for deserialization.
+    */
+  private[lake] def foreachBloom(parts: Seq[java.nio.file.Path],
+      keep: String => Boolean)(f: (String, Array[Byte]) => Unit): Unit =
+    foreachRow(parts, Seq("file_path", "bloom")) { g =>
+      val p = g.getString("file_path", 0)
+      if (keep(p)) f(p, g.getBinary("bloom", 0).getBytes)
     }
 
   /** Write (file_path, row_index) pairs as ONE snappy parquet part +
@@ -153,7 +192,7 @@ object DvSidecar {
     */
   def distinctFilePaths(spark: SparkSession, paths: Seq[String]): Seq[String] =
     if (paths.isEmpty) Nil
-    else expandParts(paths).filter(underGate(spark, _)) match {
+    else partsUnderGate(spark, paths) match {
       case Some(parts) =>
         val set = new scala.collection.mutable.LinkedHashSet[String]
         foreachFilePath(parts)(set += _)
@@ -169,34 +208,17 @@ object DvSidecar {
   def pairsUnderGate(spark: SparkSession, paths: Seq[String],
       posField: String = "row_index"): Option[Seq[(String, Long)]] =
     if (paths.isEmpty) Some(Nil)
-    else expandParts(paths).filter(underGate(spark, _)).flatMap { parts =>
+    else partsUnderGate(spark, paths).flatMap { parts =>
       try {
         val out = Seq.newBuilder[(String, Long)]
-        parts.foreach { p =>
-          val proj = projectionFor(p, Seq("file_path", posField))
-          // only the expected physical shapes take the driver path —
-          // anything else (a foreign writer's int32 pos) falls back
+        // only the expected physical shapes take the driver path —
+        // anything else (a foreign writer's int32 pos) falls back
+        foreachRow(parts, Seq("file_path", posField), proj =>
           require(proj.getType(proj.getFieldIndex(posField)).asPrimitiveType()
             .getPrimitiveTypeName ==
             org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64,
-            s"$posField is not int64")
-          val conf = new org.apache.hadoop.conf.Configuration(Stats.hadoopConf)
-          conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-            proj.toString)
-          val reader = org.apache.parquet.hadoop.ParquetReader
-            .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-              new org.apache.hadoop.fs.Path(p.toString))
-            .withConf(conf)
-            .build()
-          try {
-            var g = reader.read()
-            while (g != null) {
-              if (g.getFieldRepetitionCount("file_path") > 0 &&
-                  g.getFieldRepetitionCount(posField) > 0)
-                out += (g.getString("file_path", 0) -> g.getLong(posField, 0))
-              g = reader.read()
-            }
-          } finally reader.close()
+            s"$posField is not int64")) { g =>
+          out += (g.getString("file_path", 0) -> g.getLong(posField, 0))
         }
         Some(out.result())
       } catch {
@@ -214,7 +236,7 @@ object DvSidecar {
   def refsBySidecar(spark: SparkSession,
       paths: Seq[String]): Seq[(String, String)] = {
     if (paths.isEmpty) return Nil
-    expandParts(paths).filter(underGate(spark, _)) match {
+    partsUnderGate(spark, paths) match {
       case Some(parts) =>
         val set = new scala.collection.mutable.LinkedHashSet[(String, String)]
         parts.foreach { p =>
@@ -239,7 +261,7 @@ object DvSidecar {
   /** Mark count per masked file path across the sidecars. */
   def countsByFile(spark: SparkSession, paths: Seq[String]): Seq[(String, Long)] =
     if (paths.isEmpty) Nil
-    else expandParts(paths).filter(underGate(spark, _)) match {
+    else partsUnderGate(spark, paths) match {
       case Some(parts) =>
         val m = new scala.collection.mutable.LinkedHashMap[String, Long]
         foreachFilePath(parts)(fp => m.update(fp, m.getOrElse(fp, 0L) + 1L))

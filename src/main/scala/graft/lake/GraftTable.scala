@@ -1100,13 +1100,12 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         bos.toByteArray
       }
     // Each bitset is ~1.2 MB per 1M-row file at fpp 0.01; at 100k files
-    // the sidecar is ~100 GB, so it must stream executor→parquet with
-    // full parallelism — the driver never holds a bitset.
+    // the sidecar is ~100 GB, so it streams executor→parquet with full
+    // parallelism. Readers probe it on the driver only while the whole
+    // sidecar sits under the DvSidecar gate (see bloomPrune).
     val rel = s"_graft_bloom/$column-${UUID.randomUUID()}"
-    val sidecarSchema = StructType(Seq(
-      StructField("file_path", StringType), StructField("bloom", BinaryType)))
     spark.createDataFrame(
-        perFile.map { case (p, b) => Row(p, b) }, sidecarSchema)
+        perFile.map { case (p, b) => Row(p, b) }, DvSidecar.BloomSchema)
       .write.parquet(s"$path/$rel")
     val numFiles = stagedRowCount(rel) // footer count, no re-read job
     commitMetadataMerge(
@@ -1703,13 +1702,18 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   /** Drop files whose bloom proves they can't contain an `attr = lit`
     * conjunct's value. Files without a bloom entry are kept.
     *
-    * Membership is evaluated DISTRIBUTED: the sidecar is data-scale
-    * (~1.2 MB bitset per 1M-row file at fpp 0.01 — ~100 GB at the
-    * 100k-file design point), so the driver must never deserialize a
-    * bitset. Tasks read only the candidate files' sidecar rows
-    * (IN-pushdown for small candidate sets, broadcast semi-join
-    * above that), probe each bitset executor-side, and ship back just
-    * the paths the blooms EXCLUDE — O(#candidates) strings.
+    * Only the candidate files' sidecar rows are ever deserialized, and
+    * the answer is just the paths the blooms EXCLUDE. Where membership
+    * is evaluated follows the sidecar's size, under the same gate the
+    * DV sidecar reads use ([[DvSidecar.partsUnderGate]]):
+    *  - under it (a few dozen files: KBs–MBs of bitsets) the driver
+    *    streams the sidecar's parts and probes each candidate's bitset
+    *    — no Spark job;
+    *  - above it (~1.2 MB bitset per 1M-row file at fpp 0.01 — ~100 GB
+    *    at the 100k-file design point) one Spark job reads the sidecar
+    *    with its schema pinned, scopes it to the candidates (IN-pushdown
+    *    for small candidate sets, broadcast semi-join above that) and
+    *    probes executor-side.
     */
   private def bloomPrune(s: Snapshot, files: Seq[AddFile],
                          predicate: Column): Seq[AddFile] = {
@@ -1743,28 +1747,35 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val sp = spark
     import sp.implicits._
     val excluded: Set[String] = checksByCol.iterator.flatMap { case (c, checks) =>
+      val excludes: Array[Byte] => Boolean = bytes => {
+        val bf = BloomFilter.readFrom(bytes)
+        !checks.forall(vs => vs.exists(v => mightFn(bf, v)))
+      }
       // A pointer whose sidecar is gone (RESTORE re-activated metadata
       // from before a vacuum that reclaimed it) degrades to no pruning —
       // blooms are advisory, never load-bearing for correctness.
       val rel = sidecars(c)
+      val dir = s"$path/$rel"
       if (!Files.isDirectory(root.resolve(rel))) Iterator.empty
-      else {
-        val sidecar = spark.read.parquet(s"$path/$rel")
-        val scoped =
-          if (candidates.size <= 1024)
-            sidecar.filter(col("file_path").isin(candidates: _*))
-          else
-            sidecar.join(broadcast(candidates.toDF("file_path")),
-              Seq("file_path"), "left_semi")
-        scoped.select(col("file_path"), col("bloom"))
-          .as[(String, Array[Byte])]
-          .mapPartitions { it =>
-            it.flatMap { case (p, bytes) =>
-              val bf = BloomFilter.readFrom(bytes)
-              if (checks.forall(vs => vs.exists(v => mightFn(bf, v)))) None
-              else Some(p)
-            }
-          }.collect().iterator
+      else DvSidecar.partsUnderGate(spark, Seq(dir)) match {
+        case Some(parts) =>
+          val wanted = candidates.toSet
+          val out = Seq.newBuilder[String]
+          DvSidecar.foreachBloom(parts, wanted) { (p, bytes) =>
+            if (excludes(bytes)) out += p
+          }
+          out.result().iterator
+        case None =>
+          val sidecar = spark.read.schema(DvSidecar.BloomSchema).parquet(dir)
+          val scoped =
+            if (candidates.size <= 1024)
+              sidecar.filter(col("file_path").isin(candidates: _*))
+            else
+              sidecar.join(broadcast(candidates.toDF("file_path")),
+                Seq("file_path"), "left_semi")
+          scoped.as[(String, Array[Byte])]
+            .mapPartitions(_.collect { case (p, bytes) if excludes(bytes) => p })
+            .collect().iterator
       }
     }.toSet
     if (excluded.isEmpty) files else files.filterNot(f => excluded(f.path))

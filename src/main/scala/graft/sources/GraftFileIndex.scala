@@ -102,18 +102,21 @@ private[graft] final class GraftFileIndex private (
 private[graft] object GraftFileIndex {
 
   /** The scan of `files` of `s` in `readSchema` (physical names): one
-    * parquet `LogicalRelation` over a [[GraftFileIndex]], laid out as a
-    * path read lays it out — data columns, all nullable, then the
-    * partition columns.
+    * parquet `LogicalRelation` over a [[GraftFileIndex]], its columns
+    * in `readSchema`'s order, data columns all nullable. The data
+    * schema keeps the partition columns in place: Spark lays a
+    * relation out with partition columns last unless its data schema
+    * names them, and then fills them from the partition values, not
+    * the files — so a partitioned table reads in the log's column
+    * order with or without deletion vectors.
     */
   def scan(table: GraftTable, s: Snapshot, files: Seq[AddFile],
       readSchema: StructType): DataFrame = {
     val partNames = s.partitionColumns.map(s.physicalName)
     val partitionSchema = StructType(partNames.flatMap(n => readSchema.find(_.name == n)))
-    val dataSchema = StructType(readSchema.filterNot(f => partNames.contains(f.name)))
     val index = new GraftFileIndex(table, s, files, partitionSchema)
     StreamShim.ofRows(table.spark, LogicalRelation(HadoopFsRelation(index,
-      partitionSchema, ParquetShim.asNullable(dataSchema), None, new ParquetFileFormat(),
+      partitionSchema, ParquetShim.asNullable(readSchema), None, new ParquetFileFormat(),
       Map.empty)(table.spark)))
   }
 

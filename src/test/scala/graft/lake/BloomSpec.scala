@@ -1,6 +1,7 @@
 package graft.lake
 
 import graft.{GraftSparkSpec, Tables}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Bloom-filter file skipping: point lookups on a high-cardinality key
@@ -9,6 +10,28 @@ import org.apache.spark.sql.functions._
 class BloomSpec extends GraftSparkSpec {
 
   private def li = Tables(spark, sfDir, "lineitem")
+
+  /** `pruneFiles` on both sides of the gate: the same kept count, with
+    * 0 Spark jobs under it and `jobsAbove` (1 when a bloom is probed)
+    * above it.
+    */
+  private def pruneBothSides(t: GraftTable, pred: Column,
+      jobsAbove: Int = 1): (Int, Int) = {
+    val (under, jobsUnder) = jobsStartedBy(t.pruneFiles(pred))
+    val (above, jobsOver) = aboveSidecarGate(jobsStartedBy(t.pruneFiles(pred)))
+    assert(under == above, s"kept counts differ across the gate: $under vs $above")
+    assert(jobsUnder.isEmpty, s"driver-side probe started jobs: $jobsUnder")
+    assert(jobsOver.size == jobsAbove, s"distributed probe ran jobs: $jobsOver")
+    under
+  }
+
+  /** `readWhere(pred)`'s row count, the same rows on both sides of the gate. */
+  private def readBothSides(t: GraftTable, pred: Column): Long = {
+    def rows() = t.readWhere(pred).collect().map(_.toString).sorted.toSeq
+    val under = rows()
+    assert(aboveSidecarGate(rows()) == under, s"readWhere($pred) differs across the gate")
+    under.size.toLong
+  }
 
   test("bloom skipping prunes files min/max can't, result stays exact") {
     // hash-distribute so every file's orderkey range overlaps fully:
@@ -22,37 +45,37 @@ class BloomSpec extends GraftSparkSpec {
     val key = keys(keys.length / 2)
     val pred = col("l_orderkey") === key
 
-    val (keptBefore, total) = t.pruneFiles(pred)
+    val (keptBefore, total) = pruneBothSides(t, pred, jobsAbove = 0)
     assert(keptBefore == total, "min/max alone must not prune hash-distributed files")
 
     t.computeBloomFilter("l_orderkey")
-    val (keptAfter, _) = t.pruneFiles(pred)
+    val (keptAfter, _) = pruneBothSides(t, pred)
     assert(keptAfter < total, s"bloom should skip files, kept $keptAfter/$total")
 
     val expected = li.filter(pred).count()
-    assert(t.readWhere(pred).count() == expected)
+    assert(readBothSides(t, pred) == expected)
     assert(expected > 0)
 
     // IN-lists prune too: a file survives if ANY value might be in it
     val key2 = keys(keys.length / 3)
     val inPred = col("l_orderkey").isin(key, key2)
-    val (keptIn, totalIn) = t.pruneFiles(inPred)
+    val (keptIn, totalIn) = pruneBothSides(t, inPred)
     assert(keptIn < totalIn, s"IN-list bloom should skip, kept $keptIn/$totalIn")
-    assert(t.readWhere(inPred).count() == li.filter(inPred).count())
+    assert(readBothSides(t, inPred) == li.filter(inPred).count())
   }
 
-  test("bloom probes evaluate task-side, scoped to candidate files only") {
+  test("bloom probes deserialize only the candidate files' sidecar rows") {
     val t = GraftTable.create(spark, tmpDir("bloom-scoped"),
       li.repartition(8, col("l_orderkey")))
     t.computeBloomFilter("l_orderkey")
     val rel = t.snapshot.metadata.map(_.properties).getOrElse(Map.empty)
       .apply("graft.bloom.l_orderkey")
     // Plant a sidecar row for a path that is NOT a read candidate whose
-    // bytes are not a serialized bloom. The distributed read path scopes
-    // to candidate files before deserializing, so this row is never
-    // touched; the old driver path (collect the WHOLE sidecar into a
-    // Map) would throw deserializing it — this is the regression guard
-    // that the ~100 GB-at-design-point artifact stays out of the driver.
+    // bytes are not a serialized bloom. Both probes check a row's path
+    // against the candidates before deserializing its bitset, so this
+    // row is never decoded; a probe that decoded every row would throw
+    // on it. At the design point the sidecar is ~100 GB, so decoding
+    // only the candidates' rows is what keeps a probe O(candidates).
     import spark.implicits._
     Seq(("not-an-active-file.parquet", Array[Byte](1, 2, 3)))
       .toDF("file_path", "bloom")
@@ -60,9 +83,9 @@ class BloomSpec extends GraftSparkSpec {
     val keys = li.select("l_orderkey").distinct().orderBy("l_orderkey")
       .collect().map(_.getLong(0))
     val key = keys(keys.length / 2)
-    val (kept, total) = t.pruneFiles(col("l_orderkey") === key)
+    val (kept, total) = pruneBothSides(t, col("l_orderkey") === key)
     assert(kept < total, s"bloom should still skip files, kept $kept/$total")
-    assert(t.readWhere(col("l_orderkey") === key).count() ==
+    assert(readBothSides(t, col("l_orderkey") === key) ==
       li.filter(col("l_orderkey") === key).count())
   }
 
@@ -70,19 +93,19 @@ class BloomSpec extends GraftSparkSpec {
     val t = GraftTable.create(spark, tmpDir("bloom-str"),
       li.limit(4000).repartition(6, col("l_orderkey")))
     t.computeBloomFilter("l_returnflag") // low cardinality: every file has all values
-    val (keptAll, totalAll) = t.pruneFiles(col("l_returnflag") === "R")
+    val (keptAll, totalAll) = pruneBothSides(t, col("l_returnflag") === "R")
     assert(keptAll == totalAll, "value present everywhere must keep all files")
 
     // an absent value INSIDE the min/max range ("A".."R"): only the
     // bloom can prove exclusion
-    val (keptNone, _) = t.pruneFiles(col("l_returnflag") === "B")
+    val (keptNone, _) = pruneBothSides(t, col("l_returnflag") === "B")
     assert(keptNone == 0, s"absent value should skip all files, kept $keptNone")
 
     // optimize rewrites files -> stale sidecar entries; files are kept
     t.optimize(targetBytes = 1024L * 1024 * 1024)
-    val (keptStale, totalStale) = t.pruneFiles(col("l_returnflag") === "B")
+    val (keptStale, totalStale) = pruneBothSides(t, col("l_returnflag") === "B")
     assert(keptStale == totalStale, "rewritten files without bloom entries stay kept")
-    assert(t.readWhere(col("l_returnflag") === "R").count() ==
+    assert(readBothSides(t, col("l_returnflag") === "R") ==
       li.limit(4000).filter(col("l_returnflag") === "R").count())
 
     // opt-in auto-recompute restores skipping right after a compaction
@@ -90,9 +113,9 @@ class BloomSpec extends GraftSparkSpec {
     t.append(li.limit(500))
     t.append(li.limit(500))
     t.optimize(targetBytes = 1024L * 1024 * 1024)
-    val (keptFresh, totalFresh) = t.pruneFiles(col("l_returnflag") === "B")
+    val (keptFresh, totalFresh) = pruneBothSides(t, col("l_returnflag") === "B")
     assert(keptFresh == 0, s"recomputed blooms should skip all, kept $keptFresh/$totalFresh")
-    assert(t.readWhere(col("l_returnflag") === "R").count() ==
+    assert(readBothSides(t, col("l_returnflag") === "R") ==
       li.limit(4000).unionAll(li.limit(500)).unionAll(li.limit(500))
         .filter(col("l_returnflag") === "R").count())
   }

@@ -24,27 +24,39 @@ class DeletionVectorSpec extends GraftSparkSpec {
   }
 
   test("REORG APPLY PURGE rewrites only DV'd files and retires all DVs") {
-    val t = GraftTable.create(spark, tmpDir("dvpurge"), li.repartition(8))
-    // delete confined to one lineitem range so most files carry no mask
-    t.deleteMergeOnRead(col("l_orderkey") < 50)
-    val expected = t.toDF.count()
-    val before = t.snapshot
-    assert(before.dvFiles.nonEmpty)
-    val dvPaths = spark.read.parquet(before.dvFiles.map(p => s"${t.path}/$p"): _*)
-      .select("file_path").distinct().collect().map(_.getString(0)).toSet
-    val untouched = before.activeFiles.map(_.path)
-      .filterNot(rel => dvPaths.exists(_.endsWith("/" + rel))).toSet
-    val m = t.reorgPurge()
-    val after = t.snapshot
-    assert(after.dvFiles.isEmpty, "purge must retire every DV")
-    assert(untouched.subsetOf(after.activeFiles.map(_.path).toSet),
-      "files without masked rows must survive purge untouched")
-    assert(m("numRewrittenFiles").toInt ==
-      before.activeFiles.size - untouched.size)
-    assert(t.toDF.count() == expected, "purge must not change the row set")
-    assert(t.toDF.filter(col("l_orderkey") < 50).count() == 0)
-    // time travel before the purge still sees DV-masked state
-    assert(t.toDFAt(before.version).count() == expected)
+    // run on both sides of the sidecar driver-read gate: the masked-file
+    // lookup answers on the driver under it and as a Spark job above
+    // it, and both must purge the same rows into the same commit
+    def purge(dir: String): (Seq[String], String) = {
+      val t = GraftTable.create(spark, tmpDir(dir), li.repartition(8))
+      // delete confined to one lineitem range so most files carry no mask
+      t.deleteMergeOnRead(col("l_orderkey") < 50)
+      val expected = t.toDF.count()
+      val before = t.snapshot
+      assert(before.dvFiles.nonEmpty)
+      val dvPaths = spark.read.parquet(before.dvFiles.map(p => s"${t.path}/$p"): _*)
+        .select("file_path").distinct().collect().map(_.getString(0)).toSet
+      val untouched = before.activeFiles.map(_.path)
+        .filterNot(rel => dvPaths.exists(_.endsWith("/" + rel))).toSet
+      val m = t.reorgPurge()
+      val after = t.snapshot
+      assert(after.dvFiles.isEmpty, "purge must retire every DV")
+      assert(untouched.subsetOf(after.activeFiles.map(_.path).toSet),
+        "files without masked rows must survive purge untouched")
+      assert(m("numRewrittenFiles").toInt ==
+        before.activeFiles.size - untouched.size)
+      assert(t.toDF.count() == expected, "purge must not change the row set")
+      assert(t.toDF.filter(col("l_orderkey") < 50).count() == 0)
+      // time travel before the purge still sees DV-masked state
+      assert(t.toDFAt(before.version).count() == expected)
+      val commit = t.history(1).head()
+      (t.toDF.collect().map(_.toString).sorted.toSeq,
+        s"${commit.getString(2)} ${commit.getString(3)} ${commit.getString(4)}")
+    }
+    val under = purge("dvpurge")
+    val above = aboveSidecarGate(purge("dvpurge-gate0"))
+    assert(above._2 == under._2, "the purge commits differ across the gate")
+    assert(above._1 == under._1, "the purged rows differ across the gate")
   }
 
   test("REORG APPLY PURGE on a DV-free table is a metadata no-op") {

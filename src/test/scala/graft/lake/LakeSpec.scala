@@ -1267,29 +1267,9 @@ class LakeSpec extends GraftSparkSpec {
   test("building a read over 40 files starts no Spark job") {
     val t = GraftTable.create(spark, tmpDir("scan-nojob"), li.limit(4000).repartition(40))
     assert(t.snapshot.numFiles == 40)
-    // every job start the listener sees up to a sentinel job's — the
-    // listener bus delivers in order, so once the sentinel arrives any
-    // job the build started has been counted
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val probe = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        started.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    spark.sparkContext.addSparkListener(probe)
-    try {
-      val df = t.toDF
-      spark.sparkContext.setJobDescription("scan-nojob-sentinel")
-      try spark.range(1).collect() finally spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (!started.contains("scan-nojob-sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(started.contains("scan-nojob-sentinel"))
-      val buildJobs = started.asScala.filterNot(_ == "scan-nojob-sentinel")
-      assert(buildJobs.isEmpty, s"building the read started jobs: $buildJobs")
-      assert(df.count() == 4000)
-    } finally spark.sparkContext.removeSparkListener(probe)
+    val (df, buildJobs) = jobsStartedBy(t.toDF)
+    assert(buildJobs.isEmpty, s"building the read started jobs: $buildJobs")
+    assert(df.count() == 4000)
   }
 
   test("a partition filter reads only that partition's files") {
@@ -1308,6 +1288,17 @@ class LakeSpec extends GraftSparkSpec {
     assert(scans.size == 1)
     val read = scans.head.selectedPartitions.toPartitionArray.map(_.toPath.getName).toSet
     assert(read == p1.map(f => java.nio.file.Paths.get(f.path).getFileName.toString).toSet)
+    // a leading partition column reads in the log's column order, with
+    // and without deletion vectors masking the scan
+    val lead = GraftTable.create(spark, tmpDir("part-filter-lead"),
+      (0 until 6).map(i => (s"p${i % 2}", i.toLong, i * 10L)).toDF("part", "k", "v"),
+      partitionBy = Seq("part"))
+    assert(lead.toDF.columns.toSeq == Seq("part", "k", "v"))
+    assert(lead.toDF.orderBy("k").head() == org.apache.spark.sql.Row("p0", 0L, 0L))
+    lead.deleteMergeOnRead(col("k") === 0L)
+    assert(lead.snapshot.dvFiles.nonEmpty)
+    assert(lead.toDF.columns.toSeq == Seq("part", "k", "v"))
+    assert(lead.toDF.orderBy("k").head() == org.apache.spark.sql.Row("p1", 1L, 10L))
   }
 
   test("a live read of a data file deleted out of band fails naming the file") {

@@ -131,7 +131,8 @@ class RowLevelOpsSpec extends GraftSparkSpec {
         (1L, Some(d1), Some(1), Some("a b"), Some(ts1), Some(ntz)),
         (2L, Some(d2), Some(2), Some("a%b"), Some(ts2), None),
         (3L, Some(d2), Some(-3), Some("k=v:w"), Some(ts1), Some(ntz)),
-        (4L, None, None, None, None, None))
+        (4L, None, None, None, None, None),
+        (5L, Some(d1), Some(5), Some("é"), Some(ts2), None))
       rows.toDF("id", "d", "i", "s", "ts", "ntz").createOrReplaceTempView("rlo_typed_src")
       spark.sql("CREATE TABLE graftrlo.default.typed_tbl USING graftlake " +
         "PARTITIONED BY (d, i, s, ts, ntz) AS SELECT * FROM rlo_typed_src")
@@ -149,6 +150,7 @@ class RowLevelOpsSpec extends GraftSparkSpec {
       val v = t.version
       assert(read(t.toDF) == rows.toSet)
       assert(t.toDF.filter(col("s") === "a%b").count() == 1)
+      assert(t.toDF.filter(col("s") === "é").count() == 1)
       assert(t.toDF.filter(col("i").isNull).count() == 1)
       assert(t.toDF.filter(col("ts") === lit(ts1)).count() == 2)
       val clone = GraftTable.shallowClone(spark, t.path, tmpDir("rlo-typed-clone"))
