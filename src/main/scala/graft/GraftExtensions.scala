@@ -6,11 +6,13 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions installer — lets any session pick up the
-  * graft expression library via config, no code changes:
+  * graft functions, SQL statements and plan rules via config:
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
   * (or `SparkSession.builder().withExtensions(new GraftExtensions)`).
+  * Catalog and `format("graftlake")` reads require it: their relations
+  * read only through [[graft.plans.GovernedReadRule]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -30,6 +32,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // parses through the delegate untouched
     ext.injectParser((session, delegate) =>
       new graft.sources.GraftSqlParser(session, delegate))
+    // catalog and format reads become the governed read's plan (first,
+    // so every rule below sees its scan)
+    ext.injectPostHocResolutionRule(graft.plans.GovernedReadRule(_))
+    ext.injectOptimizerRule(graft.plans.GovernedReadRule(_, optimizing = true))
     // CBO bridge: LogicalRelations over graftlake tables pick up
     // ANALYZE stats as catalog statistics (rowCount/NDV/nulls), so
     // EXPLAIN EXTENDED and join planning see them with zero API calls

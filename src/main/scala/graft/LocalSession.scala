@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The local SparkSession this project's `main`s run on: `local[cpus]`
   * with one shuffle partition per core, AQE on, UTC session time, no
-  * UI, and `logLevel`. `extra` adds a main's own settings (app name,
-  * codegen cache size, extensions) on top — a later `config` of the
+  * UI, [[GraftExtensions]] installed (graftlake catalog and format
+  * reads need it), and `logLevel`. `extra` adds a main's own settings
+  * (app name, codegen cache size) on top — a later `config` of the
   * same key wins.
   */
 private[graft] object LocalSession {
@@ -17,7 +18,8 @@ private[graft] object LocalSession {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.GraftExtensions"))
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
     spark

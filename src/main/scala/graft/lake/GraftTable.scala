@@ -5,6 +5,8 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Expression, GetStructField, In, InSet, Literal}
+import org.apache.spark.sql.catalyst.expressions.variant.VariantGet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 
@@ -59,9 +61,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val metaFields = Seq(StructField(RowIdCol, LongType, nullable = true),
       StructField("file_path", StringType), StructField("row_index", LongType))
       .filter(f => meta(f.name))
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(s.schema.fields ++ metaFields))
     val rowIds = meta(RowIdCol)
     val withMeta = metaFields.nonEmpty || s.dvFiles.nonEmpty
     val relation = graft.sources.GraftFileIndex.scan(this, s, files,
@@ -129,23 +128,22 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   }
 
   /** The one governed snapshot read, under every public read surface
-    * (path API, relation, catalog incl. metadata columns, time
-    * travel, DFP/bloom reads):
+    * (path API, catalog and format reads incl. metadata columns, SQL,
+    * time travel, DFP/bloom reads):
     *   - ONE snapshot resolution: the live read takes [[readSnapshot]]
     *     (auto-sync probe, so a predicate read never serves older data
     *     than an unfiltered one) and its policy from that same
     *     snapshot; a pinned `version` is governed by the CURRENT
     *     policy (L114 — time travel is not a policy bypass);
-    *   - `pred` prunes files through partition values, footer stats
-    *     and blooms — the pinned snapshot's own stats and bloom
-    *     pointers describe it exactly — except when it references a
-    *     MASKED column: stats describe RAW values while the user
-    *     queries the masked view, so skipping on them would silently
-    *     drop files whose masked rows match (r14 advisory);
-    *   - the row filter prunes files too, then [[governed]] applies
-    *     the exact filter and the masks.
-    * `pred` itself is NOT applied to rows: callers filter (the relation
-    * re-applies pushed filters; row-id reads filter after the rename).
+    *   - the row filter prunes files, then [[governed]] applies the
+    *     exact filter and the masks;
+    *   - a query's own filters prune files at planning, in the file
+    *     index ([[selectFiles]]): Spark pushes them through the mask
+    *     projection, so they reach it over RAW values.
+    * `pred` is the advisory DFP / bloom-join pre-selection, skipped
+    * when it references a MASKED column (stats describe RAW values
+    * while the join matches the masked view, r14 advisory). It is NOT
+    * applied to rows: those frames keep every row of the kept files.
     * `meta` may ask for [[RowIdCol]], `_graft_file` (the log-recorded
     * path, the row-level group key) and `_graft_pos` (the row's index
     * in its file); they are appended after the data columns.
@@ -162,7 +160,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
                           meta: Set[String] = Set.empty): DataFrame = {
     val s = version.fold(readSnapshot())(snapshotAt)
     val p = if (version.isEmpty) policyOf(s) else currentPolicy
-    pred.foreach(recordPredicate(s, _))
     require(!meta(RowIdCol) || rowTrackingOn(s),
       s"row tracking is not enabled on $path (set graft.rowTracking=true at create)")
     val skipping = pred.filterNot(q => p.maskedCols.nonEmpty && org.apache.spark.sql
@@ -226,13 +223,14 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     */
   def toDFWithRowIds: DataFrame = readWhereWithRowIds(None)
 
-  /** Stats/partition/bloom-pruned row-id read: ids are a per-file
-    * property, so skipping files can never change a surviving row's
-    * id — the rowIds reader path keeps the same file skipping as the
-    * plain one. The caller still applies the full predicate.
+  /** Row-id read filtered by `predicate`: ids are a per-file property,
+    * so the file skipping the predicate drives at planning can never
+    * change a surviving row's id.
     */
-  def readWhereWithRowIds(predicate: Option[Column]): DataFrame =
-    read(predicate, meta = Set(RowIdCol)).withColumnRenamed(RowIdCol, "row_id")
+  def readWhereWithRowIds(predicate: Option[Column]): DataFrame = {
+    val df = read(None, meta = Set(RowIdCol)).withColumnRenamed(RowIdCol, "row_id")
+    predicate.fold(df)(df.filter)
+  }
 
   /** Delta-parity guard for row-tracked update-all MERGE: several
     * source rows matching one target key would each inherit the SAME
@@ -867,12 +865,13 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     commitMetadataMerge(info("DROP MASK", Map("column" -> column)))(m =>
       m.copy(properties = m.properties - (GraftTable.ColMaskProp + column)))
 
-  /** Stats+partition-pruned read: only files whose footer min/max or
-    * partition value may satisfy `predicate` are scanned; the full
-    * predicate is still applied, so this is pure I/O reduction.
+  /** The governed read filtered by `predicate`: only files whose
+    * partition value, footer min/max or bloom may satisfy it are
+    * scanned (the file index selects them at planning, as it does for
+    * any filter over [[toDF]]), and the predicate applies to rows.
     */
   def readWhere(predicate: Column): DataFrame =
-    read(Some(predicate)).filter(predicate)
+    read(None).filter(predicate)
 
   /** Dynamic file pruning (Delta DFP parity, API-level): when a
     * selective dimension frame drives an equi-join into this table,
@@ -907,8 +906,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val s = versionAsOf.fold(snapshot)(snapshotAt)
     keys.foreach(k =>
       require(s.schema.fieldNames.contains(k), s"no such column: $k"))
-    // join keys are clustering signals too (L120): [[read]] records the
-    // IN / range conjuncts built here
     val preds = keys.map { key =>
       val vals = dim.select(col(key)).distinct().limit(maxKeys + 1)
         .collect().map(_.get(0)).filter(_ != null)
@@ -1043,6 +1040,36 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       shredded(s, pred), generatedExprs(s))
     if (rev.isEmpty) kept
     else { val paths = kept.map(_.path).toSet; files.filter(f => paths(f.path)) }
+  }
+
+  /** The file selector under every scan (the file index's
+    * `listFiles`): the entries of `files` that the filters Spark pushed
+    * to the scan cannot rule out, by [[candidates]] and [[bloomPrune]].
+    * The filters name PHYSICAL columns; renamed back to logical names
+    * (and a `variant_get` Spark pushed into the scan as a variant-struct
+    * field back to the `variant_get`), they prune as a predicate written
+    * by hand does; an optimizer `InSet` reads as IN. Feeds CLUSTER BY
+    * AUTO's history.
+    */
+  private[graft] def selectFiles(s: Snapshot, files: Seq[AddFile],
+                                 filters: Seq[Expression]): Seq[AddFile] = {
+    import org.apache.spark.sql.execution.datasources.VariantMetadata
+    val logical = s.colMap.map(_.swap)
+    val usable = filters.map(_.transformUp {
+      case a: AttributeReference => a.withName(logical.getOrElse(a.name, a.name))
+      case GetStructField(a: AttributeReference, i, _) if VariantMetadata.isVariantStruct(a.dataType) =>
+        val f = a.dataType.asInstanceOf[StructType](i)
+        val vm = VariantMetadata.fromMetadata(f.metadata)
+        VariantGet(a.withDataType(org.apache.spark.sql.types.VariantType), Literal(vm.path),
+          f.dataType, vm.failOnError, Some(vm.timeZoneId))
+      case i: InSet => In(i.child, i.hset.toSeq.map(Literal(_, i.child.dataType)))
+    })
+    if (files.isEmpty || usable.isEmpty) files
+    else {
+      val pred = GraftExpr.column(usable.reduce(And))
+      recordPredicate(s, pred)
+      bloomPrune(s, candidates(s, files, pred), pred)
+    }
   }
 
   /** Files that survive pruning for `predicate` (for tests/metrics). */
@@ -1869,15 +1896,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val stats = Stats.collect(spark, moved.map(r => root.resolve(r).toString))
     val adds = moved.map { rel =>
       val abs = root.resolve(rel)
-      val partVals = rel.split('/').dropRight(1).filter(_.contains("="))
-        .map { seg =>
-          val Array(k, v) = seg.split("=", 2)
-          // Hive path unescape (%XX only) — URLDecoder is FORM decode
-          // and would corrupt a literal '+' partition value to a space
-          k -> org.apache.spark.sql.catalyst.catalog
-            .ExternalCatalogUtils.unescapePathName(v)
-        }.toMap
-      AddFile(rel, partVals, Files.size(abs),
+      AddFile(rel, GraftTable.partitionValuesOf(rel), Files.size(abs),
         Files.getLastModifiedTime(abs).toMillis, dataChange,
         stats.get(abs.toString))
     }
@@ -1991,17 +2010,14 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       deleteRecursively(staging); return (Nil, false)
     }
     val tracking = rowTrackingOn(s)
-    val readSchema =
-      if (!tracking) s.physicalSchema
-      else org.apache.spark.sql.types.StructType(s.physicalSchema.fields :+
-        org.apache.spark.sql.types.StructField(RowIdCol,
-          org.apache.spark.sql.types.LongType, nullable = true))
-    val committedPaths = committedRels.toSeq.sorted
-      .map(r => staging.resolve(r).toString)
-      .filter(p => Files.exists(Paths.get(p)))
-    val physical = spark.read
-      .option("basePath", staging.toString) // keep partition-dir inference
-      .schema(readSchema).parquet(committedPaths: _*)
+    // the staged files as log entries, read like any scan: no listing,
+    // partition values typed from their directory names
+    val staged = committedRels.toSeq.sorted.map(staging.resolve).filter(Files.exists(_))
+      .map(abs => AddFile(root.relativize(abs).toString,
+        GraftTable.partitionValuesOf(staging.relativize(abs).toString),
+        Files.size(abs), Files.getLastModifiedTime(abs).toMillis, dataChange = true, None))
+    val physical = graft.sources.GraftFileIndex.scan(this, s, staged, StructType(
+      s.physicalSchema.fields ++ Seq(StructField(RowIdCol, LongType)).filter(_ => tracking)))
     val logical = physical.select((s.schema.fields.map(f =>
       col(s.physicalName(f.name)).as(f.name)) ++
       (if (tracking) Seq(col(RowIdCol)) else Nil)).toIndexedSeq: _*)
@@ -5940,7 +5956,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // nulls, so rows/buckets over the total count would overstate
     // every bucket's height on a nullable column and inflate each
     // equality/range selectivity (and the Catalyst bins exported via
-    // GraftRelation) proportionally. One aggregate covers all columns.
+    // GraftStatsRule) proportionally. One aggregate covers all columns.
     val cntRow = df.agg(count(lit(1)).as("__total"),
       columns.map(c => count(col(c)).as(s"__nn_$c")): _*).head()
     require(cntRow.getLong(0) > 0, "cannot histogram an empty table")
@@ -6282,15 +6298,7 @@ object GraftTable {
     val stats = Stats.collect(spark, rels.map(r => root.resolve(r).toString))
     val adds = rels.map { rel =>
       val abs = root.resolve(rel)
-      val partVals = rel.split('/').dropRight(1).filter(_.contains("="))
-        .map { seg =>
-          val Array(k, v) = seg.split("=", 2)
-          // Hive path unescape (%XX only) — URLDecoder is FORM decode
-          // and would corrupt a literal '+' partition value to a space
-          k -> org.apache.spark.sql.catalyst.catalog
-            .ExternalCatalogUtils.unescapePathName(v)
-        }.toMap
-      AddFile(rel, partVals, Files.size(abs),
+      AddFile(rel, GraftTable.partitionValuesOf(rel), Files.size(abs),
         Files.getLastModifiedTime(abs).toMillis, dataChange = true,
         stats.get(abs.toString))
     }
@@ -6847,6 +6855,17 @@ object GraftTable {
     GraftTable.create(spark, destPath, empty,
       partitionBy = s.partitionColumns, properties = kept)
   }
+
+  /** The partition values a data file's table-relative path names, in
+    * directory form: each `k=v` directory segment, Hive-unescaped (%XX
+    * only — URLDecoder is FORM decode and would corrupt a literal '+'
+    * partition value to a space).
+    */
+  private[lake] def partitionValuesOf(rel: String): Map[String, String] =
+    rel.split('/').dropRight(1).filter(_.contains("=")).map { seg =>
+      val Array(k, v) = seg.split("=", 2)
+      k -> org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(v)
+    }.toMap
 
   def create(spark: SparkSession, path: String, df: DataFrame,
              partitionBy: Seq[String] = Nil,

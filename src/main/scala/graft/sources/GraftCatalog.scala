@@ -236,15 +236,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   private def stagedFor(requested: StructType, ident: Identifier,
       t: Table): StagedTable =
-    new StagedTable with SupportsRead with SupportsWrite {
+    new StagedTable with SupportsWrite {
       private val gt = t.asInstanceOf[GraftLakeTable]
       override def name(): String = gt.name()
       override def schema(): StructType = requested
       override def partitioning(): Array[Transform] = gt.partitioning()
       override def properties(): util.Map[String, String] = gt.properties()
       override def capabilities(): util.Set[TableCapability] = gt.capabilities()
-      override def newScanBuilder(o: CaseInsensitiveStringMap) =
-        gt.newScanBuilder(o)
       override def newWriteBuilder(i: org.apache.spark.sql.connector.write.LogicalWriteInfo) =
         gt.newWriteBuilder(i)
       override def commitStagedChanges(): Unit = ()

@@ -20,11 +20,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * building the index makes no filesystem call and starts no Spark
   * job, whatever the file count.
   *
-  * `listFiles` applies Spark's partition filters the way
-  * `InMemoryFileIndex` does; data filters are left to the reader
-  * (stats skipping already chose `files`). Equality is over the
-  * scanned file set, as `InMemoryFileIndex`'s root-path equality is,
-  * so two reads of the same files share a cached plan.
+  * `listFiles` selects files at planning: the pushed partition and
+  * data filters run through the table's file selector
+  * ([[GraftTable.selectFiles]]), then partition filters apply exactly,
+  * as `InMemoryFileIndex` applies them. Equality is over the scanned
+  * file set, as `InMemoryFileIndex`'s root-path equality is, so two
+  * reads of the same files share a cached plan.
   *
   * The index also names what it scans — [[table]], [[snapshot]],
   * [[files]] — which is how the stats-aggregate and MV rewrite rules
@@ -43,13 +44,13 @@ private[graft] final class GraftFileIndex private (
       fs.makeQualified(new Path(table.dataPath(f.path)))))
   }
 
-  /** One directory per distinct partition value tuple, in first-seen
-    * file order.
+  /** One directory per distinct partition value tuple of `entries`, in
+    * first-seen file order.
     */
-  private lazy val partitions: Seq[PartitionDirectory] = {
+  private def directories(entries: Seq[(AddFile, FileStatus)]): Seq[PartitionDirectory] = {
     val tz = table.spark.sessionState.conf.sessionLocalTimeZone
     val groups = mutable.LinkedHashMap[Seq[Option[String]], mutable.Buffer[FileStatus]]()
-    files.zip(statuses).foreach { case (f, st) =>
+    entries.foreach { case (f, st) =>
       groups.getOrElseUpdate(partitionSchema.fieldNames.toSeq.map(f.partitionValues.get),
         mutable.Buffer()) += st
     }
@@ -69,16 +70,19 @@ private[graft] final class GraftFileIndex private (
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val kept = table.selectFiles(snapshot, files, partitionFilters ++ dataFilters)
+      .map(_.path).toSet
+    val dirs = directories(files.zip(statuses).filter { case (f, _) => kept(f.path) })
     val names = partitionSchema.fieldNames
     val pruning = partitionFilters.filter(_.references.forall(a => names.contains(a.name)))
-    if (pruning.isEmpty) partitions
+    if (pruning.isEmpty) dirs
     else {
       val pred = Predicate.createInterpreted(pruning.reduce(And).transform {
         case a: AttributeReference =>
           val i = names.indexOf(a.name)
           BoundReference(i, partitionSchema(i).dataType, nullable = true)
       })
-      partitions.filter(p => pred.eval(p.values))
+      dirs.filter(p => pred.eval(p.values))
     }
   }
 

@@ -4,9 +4,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 
-/** Shared V1 `Filter` → `Column` translation, used by both the scan
-  * path (where a missed shape only costs pruning — Spark re-applies
-  * the full predicate) and the DSv2 `DELETE FROM` path (where the
+/** Shared V1 `Filter` → `Column` translation, used by both the
+  * row-level scan (where a missed shape only costs pruning — Spark
+  * re-applies the full predicate) and the DSv2 `DELETE FROM` path (where the
   * caller must REFUSE untranslatable shapes via [[translatesFully]]
   * rather than delete the wrong rows).
   */

@@ -5,14 +5,13 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import graft.lake.GraftTable
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsDynamicOverwrite, SupportsOverwrite, SupportsTruncate, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.connector.read.ScanBuilder
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsOverwrite, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
+import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -22,14 +21,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * views (the reference drives everything through bare SQL:
   * reference docs/02-lab-optimizations.md:116-187).
   *
-  * Reads and writes bridge to the battle-tested V1 paths rather than
-  * re-implementing a reader: [[V1Scan]] serves GraftTable's one
-  * governed read (pushed filters drive partition/stats/bloom file
-  * skipping; the row filter and masks apply to data and metadata
-  * columns alike) and [[V1Write]] wraps the transactional
-  * `append`/`overwrite`.
+  * It describes the table (schema, partitioning, properties, metadata
+  * columns) and hands reads to [[graft.plans.GovernedReadRule]], which
+  * replaces the relation with GraftTable's one governed read; without
+  * `spark.sql.extensions=graft.GraftExtensions` a read fails. Writes
+  * bridge to the transactional `append`/`overwrite` through
+  * [[V1Write]], and row-level DML plans against
+  * [[GraftRowLevelOperation]] / [[GraftDeltaOperation]].
   * `pinnedVersion` carries `VERSION/TIMESTAMP AS OF` resolution from
-  * the catalog's time-travel `loadTable` overloads into the scan.
+  * the catalog's time-travel `loadTable` overloads into the read.
   */
 final class GraftLakeTable(
     spark: SparkSession,
@@ -146,65 +146,23 @@ final class GraftLakeTable(
       TableCapability.OVERWRITE_BY_FILTER,
       TableCapability.OVERWRITE_DYNAMIC)
 
-  // --- read: V1Scan bridge into GraftTable.read ----------------------
+  // --- read: handed to graft.plans.GovernedReadRule -----------------
+
+  /** The governed read [[graft.plans.GovernedReadRule]] puts in this
+    * table's place, under `session`'s handle (policies bind its
+    * principal), with the `_graft_*` metadata columns `cols` names.
+    */
+  private[graft] def read(session: SparkSession, cols: Seq[String]): DataFrame = {
+    val meta = cols.toSet.intersect(Set("_graft_file", "_graft_pos", "_graft_row_id"))
+    // metadata columns are a live-snapshot read (a pinned version's
+    // files may predate id assignment)
+    require(pinnedVersion.isEmpty || meta.isEmpty,
+      "metadata columns are a live-snapshot read")
+    GraftTable.forPath(session, path).read(None, pinnedVersion, meta)
+  }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder
-        with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-      private var pushed: Array[Filter] = Array.empty
-      private var required: StructType = schema()
-
-      // filters drive FILE SKIPPING only; report every filter back as
-      // residual so Spark keeps the exact post-scan Filter (same
-      // contract as GraftRelation.unhandledFilters)
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        pushed = filters; filters
-      }
-      override def pushedFilters(): Array[Filter] = pushed
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        // keep snapshot field order; an empty projection (COUNT(*))
-        // still needs one column to materialize rows
-        required =
-          if (requiredSchema.isEmpty) StructType(schema().fields.take(1))
-          else requiredSchema
-
-      // NOTE on join sizing: Scan-level SupportsReportStatistics is
-      // USELESS on this route — V2ScanRelationPushDown wraps a V1Scan
-      // in V1ScanWrapper, which does not forward statistics, so the
-      // static planner sees the default "assume huge" size either
-      // way. Broadcast decisions for catalog-named tables come from
-      // AQE's runtime sizes (asserted in GraftCatalogSpec); the
-      // path-based `format("graftlake")` reader keeps its static
-      // BaseRelation.sizeInBytes estimate.
-      override def build(): Scan = new V1Scan {
-        override def readSchema(): StructType = required
-        override def toV1TableScan[T <: BaseRelation with TableScan](
-            ctx: SQLContext): T = {
-          val (cols, filters) = (required.fieldNames, pushed)
-          val meta = cols.toSet.intersect(
-            Set("_graft_file", "_graft_pos", "_graft_row_id"))
-          // metadata columns are a live-snapshot read (a pinned
-          // version's files may predate id assignment)
-          require(pinnedVersion.isEmpty || meta.isEmpty,
-            "metadata columns are a live-snapshot read")
-          // the querying session's handle: policies bind its principal
-          val reader = GraftTable.forPath(ctx.sparkSession, path)
-          new BaseRelation with TableScan {
-            override def sqlContext: SQLContext = ctx
-            override def schema: StructType = required
-            override def buildScan(): RDD[Row] = {
-              // the same governed read as every other surface: file
-              // skipping, DV masking, row filter and masks all apply,
-              // metadata columns included
-              val pred = filters.flatMap(GraftFilters.toColumn).reduceOption(_ && _)
-              val df = reader.read(pred, pinnedVersion, meta)
-              pred.fold(df)(df.filter)
-                .select(cols.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*).rdd
-            }
-          }.asInstanceOf[T]
-        }
-      }
-    }
+    throw graft.plans.GovernedReadRule.extensionRequired(tableName)
 
   // --- write: V1 InsertableRelation bridge --------------------------
 

@@ -9,12 +9,11 @@ package graft.tools
   *   sbt "runMain graft.tools.RuleBudget ext"
   *   sbt "runMain graft.tools.RuleBudget noext"
   *
-  * Context for the number: the BENCH and VERIFY sessions do not
-  * inject the extensions at all (their queries wire graft rules
-  * explicitly where needed), so whatever this measures is a
-  * test-session-only cost — the r14 per-query-creep suspect in the
-  * bench artifact reduces to the governance snapshot re-resolution,
-  * fixed in r15 by threading the current snapshot through
+  * Context for the number: every `main` (BENCH and VERIFY included)
+  * runs under the extensions through [[graft.LocalSession]], which
+  * `noext` overrides; the r14 per-query-creep suspect in the bench
+  * artifact reduced to the governance snapshot re-resolution, fixed in
+  * r15 by threading the current snapshot through
   * [[graft.lake.GraftTable.policyOf]].
   */
 object RuleBudget {
@@ -22,7 +21,7 @@ object RuleBudget {
     val withExt = args.headOption.contains("ext")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = graft.LocalSession("4", extra = b =>
-      if (withExt) b.config("spark.sql.extensions", "graft.GraftExtensions") else b)
+      if (withExt) b else b.config("spark.sql.extensions", ""))
     val base = spark.read.parquet(s"$sfDir/lineitem.parquet")
     def planOnce(): Unit = {
       // fresh plan each time (varying literal defeats any plan cache)

@@ -611,9 +611,13 @@ class GraftCatalogSpec extends GraftSparkSpec {
       "SELECT n_name, COUNT(*) AS n FROM graftc.default.bc_fact f " +
         "JOIN graftc.default.bc_dim d ON f.o_custkey % 25 = d.n_nationkey " +
         "GROUP BY n_name")
-    // V1ScanWrapper hides scan statistics from the static planner, so
-    // the pre-execution plan is a sort-merge join; AQE must flip it
-    // to broadcast from the dim's ACTUAL runtime size
+    // a catalog read is the governed read's parquet scan, whose file
+    // index reports the dim's size: the static planner already
+    // broadcasts it, before AQE sees any runtime size
+    val initialPlan = joined.queryExecution.executedPlan.toString
+    assert(initialPlan.contains("isFinalPlan=false") &&
+      initialPlan.contains("BroadcastHashJoin"),
+      s"the pre-AQE plan must broadcast the dim:\n${initialPlan.take(1200)}")
     assert(joined.collect().nonEmpty) // materialize THIS plan → AQE final
     val finalPlan = joined.queryExecution.executedPlan.toString
     assert(finalPlan.contains("isFinalPlan=true"), finalPlan.take(200))

@@ -413,4 +413,25 @@ class RowLevelOpsSpec extends GraftSparkSpec {
         t.snapshot.activeFiles.flatMap(_.partitionValues.get("ts")).distinct)
     spark.sql("DROP TABLE graftrlo.default.ts_tbl")
   }
+
+  test("a rewrite staging more than 32 files validates them with no listing job") {
+    useCatalog()
+    // ~40 files: past Spark's 32-path parallel-listing threshold, where a
+    // path-list parquet read of the staged files would start a job
+    spark.range(400).withColumn("v", col("id"))
+      .repartitionByRange(40, col("id"))
+      .createOrReplaceTempView("rlo_many_src")
+    spark.sql("CREATE TABLE graftrlo.default.many_tbl USING graftlake " +
+      "AS SELECT * FROM rlo_many_src")
+    val t = GraftTable.forPath(spark, pathOf("many_tbl"))
+    assert(t.snapshot.numFiles > 32, s"fixture needs over 32 files, got ${t.snapshot.numFiles}")
+    val (_, jobs) = jobsStartedBy(
+      spark.sql("UPDATE graftrlo.default.many_tbl SET v = v + 1 WHERE v >= 0"))
+    assert(t.snapshot.activeFiles.size > 32, "every file must have been rewritten")
+    assert(!jobs.exists(_.contains("Listing leaf files")),
+      s"staged files must be read through the log-style index, jobs: $jobs")
+    assert(spark.sql("SELECT SUM(v) AS s FROM graftrlo.default.many_tbl")
+      .head().getLong(0) == (0L until 400L).sum + 400L)
+    spark.sql("DROP TABLE graftrlo.default.many_tbl")
+  }
 }
