@@ -11,8 +11,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   spark.sql.extensions=graft.GraftExtensions
   *
   * (or `SparkSession.builder().withExtensions(new GraftExtensions)`).
-  * Catalog and `format("graftlake")` reads require it: their relations
-  * read only through [[graft.plans.GovernedReadRule]].
+  * Catalog and `format("graftlake")` reads require it (their relations
+  * read only through [[graft.plans.GovernedReadRule]]), and so do
+  * catalog DELETE / UPDATE / MERGE ([[graft.plans.GraftDml]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -35,7 +36,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // catalog and format reads become the governed read's plan (first,
     // so every rule below sees its scan)
     ext.injectPostHocResolutionRule(graft.plans.GovernedReadRule(_))
-    ext.injectOptimizerRule(graft.plans.GovernedReadRule(_, optimizing = true))
     // CBO bridge: LogicalRelations over graftlake tables pick up
     // ANALYZE stats as catalog statistics (rowCount/NDV/nulls), so
     // EXPLAIN EXTENDED and join planning see them with zero API calls
@@ -54,6 +54,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // streaming node for the V1 graftlake source WITH reader options
     // (Spark's own V1 fallback would drop them)
     ext.injectResolutionRule(graft.plans.StreamingV1FallbackRule.apply)
+    // catalog DELETE / UPDATE / MERGE run the one DML planner: resolved
+    // here into GraftDml (its source stays a child for the post-hoc
+    // rules above), lowered into its command after every other rule
+    ext.injectResolutionRule(_ => graft.plans.GraftDml.Resolve)
+    ext.injectPostHocResolutionRule(_ => graft.plans.GraftDml.Seal)
     ext.injectFunction((FunctionIdentifier("graft_fingerprint64"),
       info("graft_fingerprint64", "64-bit FNV-1a rolling fingerprint of normalized text"),
       unary("graft_fingerprint64")(Fingerprint64)))

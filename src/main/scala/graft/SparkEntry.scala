@@ -2739,13 +2739,13 @@ object SparkEntry {
       ("SELECT l_returnflag, ROUND(SUM(l_discount),4) AS sum_disc, COUNT(*) AS n FROM (" +
         "SELECT l_returnflag, CASE WHEN l_returnflag='R' THEN 0.0 ELSE l_discount END " +
         "AS l_discount FROM lineitem) t GROUP BY l_returnflag ORDER BY l_returnflag"),
-    // native SupportsRowLevelOperations route — same observable
-    // contract as lake_update, different plan surface (L94)
+    // catalog UPDATE through spark.sql — same planner and observable
+    // contract as lake_update, SQL entry point (L94)
     "lake_rlo_update" ->
       ("SELECT l_returnflag, ROUND(SUM(l_discount),4) AS sum_disc, COUNT(*) AS n FROM (" +
         "SELECT l_returnflag, CASE WHEN l_returnflag='R' THEN 0.0 ELSE l_discount END " +
         "AS l_discount FROM lineitem) t GROUP BY l_returnflag ORDER BY l_returnflag"),
-    // native delta (merge-on-read) route: DV marks + post-images (L97)
+    // catalog UPDATE in merge-on-read mode: DV marks + post-images (L97)
     "lake_rlo_update_mor" ->
       ("SELECT l_returnflag, ROUND(SUM(l_discount),4) AS sum_disc, COUNT(*) AS n FROM (" +
         "SELECT l_returnflag, CASE WHEN l_returnflag='R' THEN 0.0 ELSE l_discount END " +
@@ -2771,7 +2771,7 @@ object SparkEntry {
         "merged AS (SELECT * FROM orders WHERE o_orderkey NOT IN " +
         "(SELECT o_orderkey FROM src) UNION ALL SELECT * FROM src) " +
         "SELECT COUNT(*) AS n, ROUND(SUM(o_totalprice),2) AS total FROM merged"),
-    // native MERGE route: identical final state to lake_merge (L94)
+    // catalog MERGE through spark.sql: identical final state to lake_merge (L94)
     "lake_rlo_merge" ->
       ("WITH src AS (SELECT o_orderkey, o_custkey, o_orderstatus, " +
         "ROUND(o_totalprice*2,2) AS o_totalprice, o_orderdate, o_orderpriority " +

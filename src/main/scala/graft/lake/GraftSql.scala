@@ -722,13 +722,8 @@ final class GraftSql(spark: SparkSession) {
         // IN-subquery UPDATE: same keyed-merge shape as the IN-subquery
         // DELETE; SET expressions evaluate on the target row
         exposeViews()
-        val assignments = setAssignments(sets)
-        val m = table(name).mergeBuilder(
-            paddedKeySource(name, keyCol, sub), keyCol)
-          .whenMatchedKeep().whenNotMatchedIgnore()
-          .whenMatchedUpdate(assignments, None)
-          .inTableMode().execute()
-        m.toSeq.sorted.toDF("metric", "value")
+        keyedMerge(name, keyCol, sub,
+          MergeClause.MatchedUpdate(None, Some(setAssignments(sets))))
       case deleteInRe(name, keyCol, sub) =>
         // IN-subquery DELETE runs as a keyed anti-merge: the subquery
         // result joins the table on the key (hash equi-join — the
@@ -736,12 +731,7 @@ final class GraftSql(spark: SparkSession) {
         // delete through the merge planner with its stats pruning, in
         // the table's graft.dml.mode
         exposeViews()
-        val m = table(name).mergeBuilder(
-            paddedKeySource(name, keyCol, sub), keyCol)
-          .whenMatchedKeep().whenNotMatchedIgnore()
-          .whenMatchedDelete(lit(true))
-          .inTableMode().execute()
-        m.toSeq.sorted.toDF("metric", "value")
+        keyedMerge(name, keyCol, sub, MergeClause.MatchedDelete(None))
       case insertRe(mode, name, payload) =>
         val t = table(name)
         // the payload may SELECT from any registered lake table —
@@ -993,22 +983,17 @@ final class GraftSql(spark: SparkSession) {
     }
   }
 
-  /** Evaluate an IN-subquery's key set and pad it to the target
-    * table's schema with typed nulls — the merge machinery enforces
-    * source-schema parity, and only the key column ever joins.
+  /** An IN-subquery DELETE / UPDATE as a keyed merge: the subquery's
+    * key set joins the table on `keyCol` and `clause` acts on the
+    * matched rows, in the table's `graft.dml.mode`.
     */
-  private def paddedKeySource(name: String, keyCol: String,
-      sub: String): DataFrame = {
-    val schema = table(name).snapshot.schema
-    require(schema.fieldNames.contains(keyCol),
-      s"unknown column $keyCol in the IN-subquery predicate for $name")
-    schema.fields.foldLeft(
-        spark.sql(sub).toDF(keyCol).distinct()
-          .withColumn(keyCol, col(keyCol).cast(schema(keyCol).dataType))) {
-        (d, f) =>
-          if (f.name == keyCol) d
-          else d.withColumn(f.name, lit(null).cast(f.dataType))
-      }.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+  private def keyedMerge(name: String, keyCol: String, sub: String,
+      clause: MergeClause): DataFrame = {
+    import spark.implicits._
+    val t = table(name)
+    t.executeDml("MERGE", Some(DmlClauses.keySource(t, keyCol, spark.sql(sub))),
+      Seq(keyCol), DmlClauses.lower(Seq(clause), None, t.snapshot.schema.fieldNames.toSet),
+      t.dmlMergeOnRead).toSeq.sorted.toDF("metric", "value")
   }
 
   /** `MERGE INTO t [AS a] USING s [AS b] ON <cond> WHEN ... THEN ...`
@@ -1050,9 +1035,8 @@ final class GraftSql(spark: SparkSession) {
         case _ => false
       }
     val keys = keyConjs.map { case mergeOnRe(_, kt, _, _) => kt }
-    require(keys.nonEmpty,
-      s"MERGE ON needs at least one same-column key equality, got: $onClause")
-    val source =
+    DmlClauses.requireKeys(keys, onClause)
+    val source0 =
       lookup(sName).map(_.toDF).getOrElse(spark.table(sName))
     def ref(a: String) = "(?i)(?<!\\w)" + java.util.regex.Pattern.quote(a) + "\\."
     val tgtRefs = (tAlias.toSeq :+ tName).map(ref)
@@ -1074,12 +1058,6 @@ final class GraftSql(spark: SparkSession) {
         rewrite(k.trim) -> expr(rewrite(v.trim))
       }.toMap
     val updateSetRe = """(?is)^UPDATE\s+SET\s+(.+)$""".r
-    var b = table(tName).mergeBuilder(source, keys)
-      .whenMatchedKeep().whenNotMatchedIgnore().inTableMode()
-    if (evolve) b = b.withSchemaEvolution()
-    if (residConjs.nonEmpty)
-      b = b.onCondition(expr(rewrite(
-        residConjs.map(c => s"($c)").mkString(" AND "))))
     // the clause scanner runs over a literal-masked copy so a ') WHEN '
     // or 'THEN' inside a string can never end a clause early; group
     // CONTENT is lifted from the original by match position
@@ -1088,70 +1066,49 @@ final class GraftSql(spark: SparkSession) {
       def g(i: Int): Option[String] =
         Option(m.group(i)).map(_ => clauseTail.substring(m.start(i), m.end(i)))
       (g(1).get.toUpperCase.replaceAll("\\s+", " "), g(2), g(3).get.trim)
-    }.toList
-    // Delta first-match ordering for target-row clauses: each clause
-    // applies only where no EARLIER clause of the same family fired
-    var earlierMatched = List.empty[Option[org.apache.spark.sql.Column]]
-    var earlierNmbs = List.empty[Option[org.apache.spark.sql.Column]]
-    def gated(cond: Option[org.apache.spark.sql.Column],
-        earlier: List[Option[org.apache.spark.sql.Column]]):
-        Option[org.apache.spark.sql.Column] = {
-      if (earlier.isEmpty) cond
-      else {
-        val noneEarlier = earlier
-          .map(c => coalesce(c.getOrElse(lit(true)), lit(false)) === false)
-          .reduce(_ && _)
-        Some(cond.map(_ && noneEarlier).getOrElse(noneEarlier))
-      }
-    }
-    var seen = Set.empty[String]
-    def once(k: String): Unit = {
-      require(!seen(k), s"MERGE supports at most one $k clause")
-      seen += k
-    }
-    clauses.foreach { case (kind, condStr, action) =>
+    }.toList.map { case (kind, condStr, action) =>
       val cond = condStr.map(c => expr(rewrite(c)))
       val actionMasked = maskLiterals(action)
+      def sets: String = updateSetRe.findFirstMatchIn(actionMasked)
+        .map(m => action.substring(m.start(1), m.end(1))).get
       (kind, actionMasked) match {
         case ("MATCHED", updateSetRe(_)) =>
-          once("WHEN MATCHED ... UPDATE")
-          val sets = updateSetRe.findFirstMatchIn(actionMasked)
-            .map(m => action.substring(m.start(1), m.end(1))).get
-          b = if (sets.trim == "*") b.whenMatchedUpdateAll(gated(cond, earlierMatched))
-            else b.whenMatchedUpdate(assignments(sets), gated(cond, earlierMatched))
-          earlierMatched :+= cond
+          MergeClause.MatchedUpdate(cond,
+            if (sets.trim == "*") None else Some(assignments(sets)))
         case ("MATCHED", a) if a.equalsIgnoreCase("DELETE") =>
-          once("WHEN MATCHED ... DELETE")
-          b = b.whenMatchedDelete(gated(cond, earlierMatched).getOrElse(lit(true)))
-          earlierMatched :+= cond
+          MergeClause.MatchedDelete(cond)
         case ("NOT MATCHED", mergeInsertColsRe(_, _)) =>
           val mm = mergeInsertColsRe.findFirstMatchIn(actionMasked).get
           val colList = action.substring(mm.start(1), mm.end(1))
           val valList = action.substring(mm.start(2), mm.end(2))
-          val insCond = condStr.map(c => expr(rewriteIns(c)))
           val cols = colList.split(",").map(c => rewriteIns(c.trim))
           val vals = splitTop(valList).map(v => expr(rewriteIns(v.trim)))
           require(cols.length == vals.length,
             s"INSERT column/value arity mismatch: ${cols.length} vs ${vals.length}")
-          // ordered clause list in the builder — first match wins
-          b = b.whenNotMatchedInsert(cols.toSeq.zip(vals).toMap, insCond)
+          MergeClause.Insert(condStr.map(c => expr(rewriteIns(c))),
+            Some(cols.toSeq.zip(vals).toMap))
         case ("NOT MATCHED", a) if a.toUpperCase.startsWith("INSERT") =>
-          b = b.whenNotMatchedInsertAll(condStr.map(c => expr(rewriteIns(c))))
+          MergeClause.Insert(condStr.map(c => expr(rewriteIns(c))), None)
         case ("NOT MATCHED BY SOURCE", updateSetRe(_)) =>
-          once("WHEN NOT MATCHED BY SOURCE ... UPDATE")
-          val sets = updateSetRe.findFirstMatchIn(actionMasked)
-            .map(m => action.substring(m.start(1), m.end(1))).get
-          b = b.whenNotMatchedBySourceUpdate(assignments(sets), gated(cond, earlierNmbs))
-          earlierNmbs :+= cond
+          MergeClause.NmbsUpdate(cond, assignments(sets))
         case ("NOT MATCHED BY SOURCE", a) if a.equalsIgnoreCase("DELETE") =>
-          once("WHEN NOT MATCHED BY SOURCE ... DELETE")
-          b = b.whenNotMatchedBySourceDelete(gated(cond, earlierNmbs))
-          earlierNmbs :+= cond
+          MergeClause.NmbsDelete(cond)
         case (k, a) => throw new IllegalArgumentException(
           s"unsupported MERGE clause: WHEN $k THEN $a")
       }
     }
-    b.execute().toSeq.sorted.toDF("metric", "value")
+    val t = table(tName)
+    val lowered = DmlClauses.lower(clauses,
+      if (residConjs.isEmpty) None
+      else Some(expr(rewrite(residConjs.map(c => s"($c)").mkString(" AND ")))),
+      t.snapshot.schema.fieldNames.toSet)
+    // WITH SCHEMA EVOLUTION: the source's new columns are added to the
+    // table first (metadata commits), then the source aligns to the
+    // evolved shape by name
+    val source =
+      if (!evolve) source0 else { t.evolveSchemaFor(source0); t.alignToSchema(source0) }
+    t.executeDml("MERGE", Some(source), keys, lowered, t.dmlMergeOnRead)
+      .toSeq.sorted.toDF("metric", "value")
   }
 
   /** The (SUM/AVG, MIN, MAX) source columns of a CREATE MATERIALIZED
@@ -1498,10 +1455,10 @@ object GraftSql {
   private val mergeTail =
     raw"""INTO\s+$id(?:\s+(?:AS\s+)?(\w+))?\s+USING\s+$id(?:\s+(?:AS\s+)?(\w+))?\s+ON\s+(.+?)\s+(WHEN\s+.+?)"""
   private val mergeRe = shape(raw"""MERGE\s+$mergeTail""", masked = true)
-  // plain MERGE on a catalog name plans natively through
-  // SupportsRowLevelOperations; WITH SCHEMA EVOLUTION routes here,
-  // since its native resolution expects column defaults this catalog
-  // does not declare
+  // plain MERGE on a catalog name resolves in Spark's analyzer and runs
+  // as graft.plans.GraftDml over the same planner; WITH SCHEMA
+  // EVOLUTION routes here, since Spark's resolution of it expects
+  // column defaults this catalog does not declare
   private val mergeEvolveRe = shape(
     raw"""MERGE\s+WITH\s+SCHEMA\s+EVOLUTION\s+$mergeTail""",
     IfGraft(metricValue), masked = true)

@@ -145,7 +145,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * while the join matches the masked view, r14 advisory). It is NOT
     * applied to rows: those frames keep every row of the kept files.
     * `meta` may ask for [[RowIdCol]], `_graft_file` (the log-recorded
-    * path, the row-level group key) and `_graft_pos` (the row's index
+    * path) and `_graft_pos` (the row's index
     * in its file); they are appended after the data columns.
     *
     * The scan's file list is the log's ([[scan]]), so a live read
@@ -210,7 +210,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   /** Physical column layout rewrites materialize stable ids into. */
   private[graft] val RowIdCol = "_graft_row_id"
 
-  private def rowTrackingOn(s: Snapshot): Boolean =
+  private[graft] def rowTrackingOn(s: Snapshot): Boolean =
     s.metadata.exists(_.properties.get("graft.rowTracking").contains("true"))
 
   /** Read with a stable `row_id` column (Delta row-tracking parity;
@@ -1022,9 +1022,11 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * and partition values are matched under LOGICAL column names, so a
     * predicate written against the current (possibly renamed) schema
     * prunes a column-mapped table too; the entries come back as logged.
+    * A file whose stats count no rows can hold no match and is dropped.
     */
-  private[graft] def candidates(s: Snapshot, files: Seq[AddFile],
+  private[graft] def candidates(s: Snapshot, allFiles: Seq[AddFile],
                                 pred: Column): Seq[AddFile] = {
+    val files = allFiles.filterNot(_.stats.exists(_.numRecords == 0))
     val rev = s.colMap.map(_.swap)
     def rekey[V](m: Map[String, V]): Map[String, V] =
       m.map { case (k, v) => rev.getOrElse(k, k) -> v }
@@ -1852,21 +1854,15 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
 
   /** Move parquet files under `staging` into the table root
     * (preserving partition-dir fragments), collect footer stats, and
-    * return the AddFile actions. Shared by [[stageWrite]] and the
-    * native row-level write's commit, whose executor tasks staged
-    * their files directly. `only` restricts the move to the
-    * committed task attempts' files (a failed-then-retried attempt
-    * may leave orphans in the staging dir — absorbing them would
-    * duplicate rows); everything else in the staging dir is deleted.
+    * return the AddFile actions; everything else in the staging dir is
+    * deleted.
     */
-  private[graft] def absorbStaged(staging: Path, dataChange: Boolean,
-      only: Option[Set[String]] = None): Seq[AddFile] = {
+  private[graft] def absorbStaged(staging: Path, dataChange: Boolean): Seq[AddFile] = {
     val walk = Files.walk(staging)
     val staged =
       try walk.iterator().asScala
         .filter(p => p.getFileName.toString.endsWith(".parquet") &&
           !p.getFileName.toString.startsWith("."))
-        .filter(p => only.forall(_.contains(staging.relativize(p).toString)))
         .toSeq.sortBy(_.toString)
       finally walk.close()
     // one task writing several partitions gives its file the same name
@@ -1972,146 +1968,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       val all = try walk.iterator().asScala.toSeq finally walk.close()
       all.reverse.foreach(Files.deleteIfExists(_))
     }
-
-  // ------------------------------------ native row-level operations
-
-  /** Support surface for the DSv2 `SupportsRowLevelOperations` path
-    * ([[graft.sources.GraftRowLevelOperation]]): Spark plans the
-    * UPDATE / MERGE / subquery-DELETE rewrite itself (group-based
-    * copy-on-write over `_graft_file` groups); this side supplies the
-    * candidate-file planning, the physical-layout facts the per-file
-    * reader/writer need, and the remove+add log commit with the same
-    * validation and conflict rules as the DataFrame DML paths.
-    */
-  private[graft] def rowLevelTrackingOn(s: Snapshot): Boolean = rowTrackingOn(s)
-
-  /** Validate+absorb the replacement files a row-level write's tasks
-    * staged: CHECK / NOT NULL constraints run over the staged rows,
-    * and when the table declares generated columns the derived state
-    * recomputes from its expressions and the corrected frame RESTAGES
-    * (partition directories must follow regenerated values too).
-    * Shared by the group-based (CoW) and delta-based (MoR) commits.
-    * Returns (absorbed AddFiles, whether a generated-column RESTAGE
-    * ran). The restage is a full read+rewrite of the staged rows, but
-    * an UPDATE/MERGE that never touched the source or generated
-    * columns passes both through unchanged, so the commit first PROVES
-    * consistency with one column-pruned scan over the staged files
-    * (derived partition value vs the generation expression, null-safe)
-    * and absorbs them as-is when they match: O(changed rows) read
-    * instead of O(changed rows) read+write; the restage only runs when
-    * an assignment actually broke derivation.
-    */
-  private def validateAndAbsorbStaged(s: Snapshot, staging: Path,
-      committedRels: Set[String]): (Seq[AddFile], Boolean) = {
-    // only files the committed task attempts reported count — a
-    // failed-then-retried attempt's orphans must not absorb
-    if (committedRels.isEmpty ||
-        !committedRels.exists(r => Files.exists(staging.resolve(r)))) {
-      deleteRecursively(staging); return (Nil, false)
-    }
-    val tracking = rowTrackingOn(s)
-    // the staged files as log entries, read like any scan: no listing,
-    // partition values typed from their directory names
-    val staged = committedRels.toSeq.sorted.map(staging.resolve).filter(Files.exists(_))
-      .map(abs => AddFile(root.relativize(abs).toString,
-        GraftTable.partitionValuesOf(staging.relativize(abs).toString),
-        Files.size(abs), Files.getLastModifiedTime(abs).toMillis, dataChange = true, None))
-    val physical = graft.sources.GraftFileIndex.scan(this, s, staged, StructType(
-      s.physicalSchema.fields ++ Seq(StructField(RowIdCol, LongType)).filter(_ => tracking)))
-    val logical = physical.select((s.schema.fields.map(f =>
-      col(s.physicalName(f.name)).as(f.name)) ++
-      (if (tracking) Seq(col(RowIdCol)) else Nil)).toIndexedSeq: _*)
-    val gens = generatedExprs(s)
-    if (gens.isEmpty) {
-      validateConstraints(logical.drop(RowIdCol), s)
-      (absorbStaged(staging, dataChange = true, only = Some(committedRels)),
-        false)
-    } else {
-      // fast path: prove the staged values already satisfy every
-      // generation expression (one pruned scan — the writer rendered
-      // the partition dirs from the values it was handed, so dir-
-      // inferred columns ARE the derived values to check)
-      val mismatch = gens.map { case (c, e) =>
-        !(expr(e).cast(s.schema(c).dataType) <=> col(c))
-      }.reduce(_ || _)
-      val consistent = logical.filter(mismatch).limit(1).isEmpty
-      if (consistent) {
-        validateConstraints(logical.drop(RowIdCol), s)
-        (absorbStaged(staging, dataChange = true, only = Some(committedRels)),
-          false)
-      } else {
-        val regen = gens.foldLeft(logical) { case (d, (c, e)) =>
-          d.withColumn(c, expr(e).cast(s.schema(c).dataType))
-        }
-        validateConstraints(regen.drop(RowIdCol), s)
-        val staged = stageWrite(regen, s.partitionColumns, dataChange = true)
-        deleteRecursively(staging)
-        (staged, true)
-      }
-    }
-  }
-
-  /** Commit a native row-level rewrite (catalog UPDATE / MERGE /
-    * subquery DELETE under copy-on-write): executor tasks already
-    * staged the replacement files under `stagingRel`;
-    * [[validateAndAbsorbStaged]] checks them against CHECK / NOT NULL
-    * constraints and generated columns, then the same
-    * [[rewriteCommit]] tail as the path API replaces the removed files.
-    * No CDC sidecar is staged: the change feed's exact per-version
-    * diff covers these commits, typing an update as delete + insert
-    * (the path API and `GraftSql` type update_preimage /
-    * update_postimage).
-    */
-  private[graft] def rowLevelCommitReplace(s: Snapshot, opName: String,
-      stagingRel: String, removed: Seq[AddFile],
-      committedRels: Set[String]): Map[String, String] = {
-    val staging = root.resolve(stagingRel)
-    try {
-      val (adds, restaged) = validateAndAbsorbStaged(s, staging, committedRels)
-      rewriteCommit(s, opName, removed, mayInsert = true, adds, None,
-        Map("restagedGenerated" -> restaged.toString, "rewrite" -> "row-level"))
-    } catch {
-      case e: Throwable => deleteRecursively(staging); throw e
-    }
-  }
-
-  /** Abort-side cleanup for the native row-level write. */
-  private[graft] def rowLevelAbort(stagingRel: String): Unit =
-    deleteRecursively(root.resolve(stagingRel))
-
-  /** Commit a native DELTA (merge-on-read) row-level write through the
-    * same [[maskCommit]] tail as the path API: the marks the committed
-    * task attempts staged become the deletion-vector sidecar (an
-    * orphaned retry's marks would be idempotent but carry paths the
-    * committed attempt may not have planned), inserted / post-image
-    * rows absorb as new files — O(changed rows) total write, no
-    * candidate rewrite. `readPaths` is the scan's candidate set, so an
-    * interleaved masker or rewriter aborts the loser instead of
-    * resurrecting rows; auto-REORG runs after the commit.
-    */
-  private[graft] def rowLevelCommitDelta(s: Snapshot, opName: String,
-      dataStagingRel: String, marksStagingRel: String,
-      readPaths: Set[String], committedDataRels: Set[String],
-      committedMarkRels: Set[String]): Map[String, String] = {
-    val dataStaging = root.resolve(dataStagingRel)
-    val marksStaging = root.resolve(marksStagingRel)
-    try {
-      val (adds, restaged) =
-        validateAndAbsorbStaged(s, dataStaging, committedDataRels)
-      val markFiles = committedMarkRels.toSeq.sorted
-        .map(marksStaging.resolve).filter(Files.exists(_))
-      def moveMarks(rel: String): Unit = if (markFiles.nonEmpty) {
-        val dest = root.resolve(rel)
-        Files.createDirectories(dest)
-        markFiles.foreach(f => Files.move(f, dest.resolve(f.getFileName.toString)))
-      }
-      maskCommit(s, opName, readPaths, moveMarks, mayInsert = true, adds, None,
-        Map("restagedGenerated" -> restaged.toString, "rewrite" -> "row-level-delta"))
-    } finally {
-      deleteRecursively(dataStaging)
-      deleteRecursively(marksStaging)
-    }
-  }
 
   // --------------------------------- cross-statement transactions
 
@@ -4130,7 +3986,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   }
 
   /** The one DML planner, for both modes: DELETE, UPDATE and MERGE from
-    * the path API, `GraftSql` and streaming upserts. It works out which
+    * the path API, `GraftSql`, catalog `spark.sql` and streaming upserts. It works out which
     * target rows the clauses delete, update or keep and which source
     * rows they insert; the mode decides only how the target is read and
     * which commit tail lands the result:
@@ -4148,7 +4004,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * fresh base range. Everything persisted here is released in the
     * `finally`, whether the statement commits or fails.
     */
-  private[lake] def executeDml(op: String, sourceIn: Option[DataFrame],
+  private[graft] def executeDml(op: String, sourceIn: Option[DataFrame],
       keys: Seq[String], c: DmlClauses, mor: Boolean,
       extraActions: Seq[Action] = Nil): Map[String, String] = {
     val s = snapshot
@@ -4302,9 +4158,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     } finally cached.foreach(_.unpersist())
   }
 
-  /** The copy-on-write commit tail, shared by the planner and the
-    * native row-level rewrite ([[rowLevelCommitReplace]]): the
-    * rewritten candidates replace the removed files in one optimistic
+  /** The copy-on-write commit tail of the planner: the rewritten
+    * candidates replace the removed files in one optimistic
     * commit, with a CDC sidecar when the table has `graft.cdf`. With
     * nothing to remove and nothing to insert the statement is a no-op
     * commit, and `adds` and `cdc` are never evaluated.
@@ -4332,8 +4187,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     m
   }
 
-  /** The merge-on-read commit tail, shared by the planner and the
-    * native delta write ([[rowLevelCommitDelta]]). `writeMarks` places
+  /** The merge-on-read commit tail of the planner. `writeMarks` places
     * the (file_path, row_index) marks under the given table-relative
     * directory, which becomes ONE deletion-vector sidecar (masked at
     * every scan until compaction); `adds` stages the new rows

@@ -37,7 +37,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * That is exactly what pruning soundness needs: null companions
   * contribute no min/max, and a file whose companion stats are
   * missing entirely (written before the spec existed, adopted by
-  * CONVERT/attach, or staged by the native row-level path) is always
+  * CONVERT/attach) is always
   * kept. Strict `variant_get` error behavior is preserved on every
   * scanned row because the ORIGINAL predicate evaluates post-scan.
   */

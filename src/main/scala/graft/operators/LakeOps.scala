@@ -902,11 +902,10 @@ object LakeOps {
     t.toDF.select("n_seq", "n_name").orderBy("n_seq")
   }
 
-  /** Native row-level UPDATE (L94): a catalog-named table updated via
-    * bare `spark.sql` plans through Spark's own group-based
-    * copy-on-write rewrite (`ReplaceData` + runtime group filtering on
-    * `_graft_file`) — same observable contract as [[lakeUpdate]]'s
-    * path-API route, different (and inspectable) plan surface.
+  /** Catalog UPDATE (L94): a catalog-named table updated via bare
+    * `spark.sql`, which Spark resolves and `graft.plans.GraftDml` runs
+    * through the same copy-on-write planner as [[lakeUpdate]]'s
+    * path-API route — same observable contract, SQL entry point.
     */
   def lakeRloUpdate(spark: SparkSession, dir: String): DataFrame = {
     val wh = workDir(dir, "rlowh") // cleaned per call
@@ -927,11 +926,11 @@ object LakeOps {
       .orderBy("l_returnflag")
   }
 
-  /** Native DELTA (merge-on-read) row-level UPDATE (L97): with
-    * `graft.dml.mode = merge-on-read` the same bare-SQL UPDATE plans
-    * as a WriteDelta — only changed rows ship (deletion-vector marks
-    * + post-image appends), no candidate file rewritten. Same
-    * observable contract as [[lakeRloUpdate]]'s copy-on-write route.
+  /** Catalog merge-on-read UPDATE (L97): with `graft.dml.mode =
+    * merge-on-read` the same bare-SQL UPDATE runs the planner's
+    * merge-on-read mode — deletion-vector marks plus post-image
+    * appends, no candidate file rewritten. Same observable contract as
+    * [[lakeRloUpdate]]'s copy-on-write route.
     */
   def lakeRloUpdateMor(spark: SparkSession, dir: String): DataFrame = {
     val wh = workDir(dir, "rlomorwh") // cleaned per call
@@ -955,11 +954,11 @@ object LakeOps {
       .orderBy("l_returnflag")
   }
 
-  /** Native row-level MERGE (L94): the most intricate rewrite shape —
-    * matched rows update (price×2), unmatched source rows insert —
-    * driven through bare `spark.sql` MERGE on a catalog name (plans
-    * as the v2 row-level write). Same observable contract as
-    * [[lakeMerge]]'s path-API route.
+  /** Catalog MERGE (L94): the most intricate rewrite shape — matched
+    * rows update (price×2), unmatched source rows insert — driven
+    * through bare `spark.sql` MERGE on a catalog name, lowered by
+    * `graft.plans.GraftDml` onto the same planner as [[lakeMerge]]'s
+    * path-API route. Same observable contract.
     */
   def lakeRloMerge(spark: SparkSession, dir: String): DataFrame = {
     val wh = workDir(dir, "rlomergewh") // cleaned per call

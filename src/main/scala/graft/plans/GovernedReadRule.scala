@@ -4,7 +4,7 @@ import graft.sources.{GraftLakeTable, GraftRelation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
-import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
@@ -16,30 +16,23 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * (policies bind the querying principal) and bound to the relation's
   * output attribute ids. The plan serves the snapshot resolved at
   * analysis, as `toDF` does. Write targets are never in read position:
-  * `AppendData` / `OverwriteByExpression` / `ReplaceData` / `WriteDelta`
-  * hold their tables outside their children, and the `DeleteFromTable`
-  * Spark keeps for a truncating `DELETE FROM t` is left whole.
+  * `AppendData` / `OverwriteByExpression` hold their tables outside
+  * their children, and a catalog DELETE / UPDATE / MERGE is already a
+  * [[GraftDml]], whose children are only its source.
   *
-  * Installed first among the post-hoc resolution rules, and as an
-  * optimizer rule for the one relation Spark builds after analysis: a
-  * copy-on-write DML's runtime group filter over the original table.
+  * Installed first among the post-hoc resolution rules.
   */
-private[graft] case class GovernedReadRule(spark: SparkSession, optimizing: Boolean = false)
-    extends Rule[LogicalPlan] {
+private[graft] case class GovernedReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan match {
-    case d: DeleteFromTable => d
-    case _ => plan.transformUpWithSubqueries {
-      case r: DataSourceV2Relation if r.table.isInstanceOf[GraftLakeTable] =>
-        val t = r.table.asInstanceOf[GraftLakeTable]
-        bind(t.read(spark, r.output.map(_.name)), r.output, Some(t.v1Table))
-      case lr: LogicalRelation if lr.relation.isInstanceOf[GraftRelation] =>
-        bind(lr.relation.asInstanceOf[GraftRelation].read(spark), lr.output, lr.catalogTable)
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+    case r: DataSourceV2Relation if r.table.isInstanceOf[GraftLakeTable] =>
+      val t = r.table.asInstanceOf[GraftLakeTable]
+      bind(t.read(spark, r.output.map(_.name)), r.output, Some(t.v1Table))
+    case lr: LogicalRelation if lr.relation.isInstanceOf[GraftRelation] =>
+      bind(lr.relation.asInstanceOf[GraftRelation].read(spark), lr.output, lr.catalogTable)
   }
 
-  /** `df`'s plan (optimized inside the optimizer, whose analysis-
-    * finishing batch already ran) under the attribute ids of `output`,
+  /** `df`'s analyzed plan under the attribute ids of `output`,
     * matched by name: a bare scan takes them directly, so the rules
     * matching an aggregate over a scan still see one; anything else is
     * projected. Scans naming no catalog table take `identity`:
@@ -48,8 +41,7 @@ private[graft] case class GovernedReadRule(spark: SparkSession, optimizing: Bool
     */
   private def bind(df: DataFrame, output: Seq[Attribute],
       identity: Option[CatalogTable]): LogicalPlan = {
-    val plan = (if (optimizing) df.queryExecution.optimizedPlan
-      else df.queryExecution.analyzed).transformUp {
+    val plan = df.queryExecution.analyzed.transformUp {
       case lr: LogicalRelation if lr.catalogTable.isEmpty && identity.isDefined =>
         lr.copy(catalogTable = identity)
     }

@@ -200,8 +200,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       }
     }
     val props = properties.asScala.toMap
+    // Spark qualifies an absolute LOCATION as a `file:` URI; the table
+    // layer and the pointer file take a local path
     val external = props.get(TableCatalog.PROP_LOCATION)
       .filter(_ => props.get(TableCatalog.PROP_IS_MANAGED_LOCATION).isEmpty)
+      .map { loc =>
+        val uri = new org.apache.hadoop.fs.Path(loc).toUri
+        if (uri.getScheme == "file") uri.getPath else loc
+      }
     val dir = external.getOrElse(tableDir(ident).toString)
     Files.createDirectories(nsDir(ident.namespace))
     // engine-reserved keys (provider/location/owner/…) stay out of the

@@ -4,17 +4,15 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 
-/** Shared V1 `Filter` → `Column` translation, used by both the
-  * row-level scan (where a missed shape only costs pruning — Spark
-  * re-applies the full predicate) and the DSv2 `DELETE FROM` path (where the
-  * caller must REFUSE untranslatable shapes via [[translatesFully]]
-  * rather than delete the wrong rows).
+/** V1 `Filter` → `Column` translation for the catalog write bridge's
+  * `overwrite(filters)` (`DataFrameWriterV2.overwrite(cond)` = L20
+  * `replaceWhere`), where the caller must REFUSE untranslatable shapes
+  * via [[translatesFully]] rather than replace the wrong rows.
   */
 private[graft] object GraftFilters {
 
   def toColumn(f: Filter): Option[Column] = f match {
-    // TRUNCATE TABLE arrives as the default TruncatableTable's
-    // deleteWhere([AlwaysTrue]) — refusing it silently no-ops the verb
+    // `.overwrite(lit(true))` arrives as [AlwaysTrue]
     case AlwaysTrue() => Some(lit(true))
     case AlwaysFalse() => Some(lit(false))
     case EqualTo(a, v) => Some(col(a) === v)

@@ -17,64 +17,36 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource-V2 `Table` over a GraftLake path — what
   * [[GraftCatalog]] hands Spark so `spark.sql` SELECT / INSERT /
-  * DELETE / time travel work on catalog-named tables with no temp
-  * views (the reference drives everything through bare SQL:
-  * reference docs/02-lab-optimizations.md:116-187).
+  * DELETE / UPDATE / MERGE / time travel work on catalog-named tables
+  * with no temp views (the reference drives everything through bare
+  * SQL: reference docs/02-lab-optimizations.md:116-187).
   *
   * It describes the table (schema, partitioning, properties, metadata
   * columns) and hands reads to [[graft.plans.GovernedReadRule]], which
   * replaces the relation with GraftTable's one governed read; without
   * `spark.sql.extensions=graft.GraftExtensions` a read fails. Writes
   * bridge to the transactional `append`/`overwrite` through
-  * [[V1Write]], and row-level DML plans against
-  * [[GraftRowLevelOperation]] / [[GraftDeltaOperation]].
-  * `pinnedVersion` carries `VERSION/TIMESTAMP AS OF` resolution from
+  * [[V1Write]]; DELETE / UPDATE / MERGE become [[graft.plans.GraftDml]],
+  * which runs the same DML planner as the path API, and TRUNCATE TABLE
+  * runs `GraftTable.truncate`. `pinnedVersion` carries `VERSION/TIMESTAMP AS OF` resolution from
   * the catalog's time-travel `loadTable` overloads into the read.
   */
 final class GraftLakeTable(
     spark: SparkSession,
     val path: String,
     tableName: String,
-    pinnedVersion: Option[Long] = None)
-  extends Table with SupportsRead with SupportsWrite with SupportsDelete
-  with SupportsRowLevelOperations with SupportsMetadataColumns
+    private[graft] val pinnedVersion: Option[Long] = None)
+  extends Table with SupportsRead with SupportsWrite with TruncatableTable
+  with SupportsMetadataColumns
   with org.apache.spark.sql.graftshim.GraftV1FallbackTable {
 
   private lazy val table = GraftTable.forPath(spark, path)
 
   override def name(): String = tableName
 
-  // --- native row-level operations (UPDATE / MERGE / subquery DELETE)
-
-  /** Spark's row-level rewrites plan against this. The write shape
-    * follows the table's `graft.dml.mode` (read by
-    * `GraftTable.dmlMergeOnRead`, the one mode switch): the default is
-    * the group-based copy-on-write rewrite ([[GraftRowLevelOperation]]
-    * — whole matching files rewritten, runtime group filtering scopes
-    * them), while `merge-on-read` selects the delta-based operation
-    * ([[GraftDeltaOperation]] — only CHANGED rows ship: deletes become
-    * deletion-vector marks, post-images append; O(changed rows) for
-    * sparse DML on huge files). Both commit through the path API's
-    * rewrite / mask tails. Simple-filter DELETEs take the
-    * [[SupportsDelete]] path below (Spark's
-    * OptimizeMetadataOnlyDeleteFromTable restores it), which honours
-    * the same mode.
-    */
-  override def newRowLevelOperationBuilder(
-      info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
-      : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
-    require(pinnedVersion.isEmpty,
-      "cannot run row-level DML on a time-travelled table snapshot")
-    val mor = table.dmlMergeOnRead
-    () =>
-      if (mor) new GraftDeltaOperation(spark, table, info.command())
-      else new GraftRowLevelOperation(spark, table, info.command())
-  }
-
-  /** `_graft_file` (the log-recorded data file path — the row-level
-    * group key, and a provenance column users can SELECT) and
-    * `_graft_pos` (the row's index within its file — with `_graft_file`
-    * it is the delta-write row id), plus `_graft_row_id` on
+  /** `_graft_file` (the log-recorded data file path, a provenance
+    * column users can SELECT) and `_graft_pos` (the row's index within
+    * its file), plus `_graft_row_id` on
     * row-tracked tables (the stable id, resolved exactly like the
     * `rowIds` reader option). Selecting them is still a governed read:
     * the row filter and masks apply as they do to the plain columns.
@@ -89,7 +61,7 @@ final class GraftLakeTable(
     val base = Array(
       mc("_graft_file", org.apache.spark.sql.types.StringType, false),
       mc("_graft_pos", org.apache.spark.sql.types.LongType, false))
-    if (!table.rowLevelTrackingOn(table.snapshot)) base
+    if (!table.rowTrackingOn(table.snapshot)) base
     else base :+ mc("_graft_row_id", org.apache.spark.sql.types.LongType, true)
   }
 
@@ -230,15 +202,11 @@ final class GraftLakeTable(
     }
   }
 
-  // --- DELETE FROM: the path API's DELETE in the table's graft.dml.mode
+  // --- TRUNCATE TABLE: one metadata-only commit of every remove
 
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.forall(GraftFilters.translatesFully)
-
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    require(pinnedVersion.isEmpty, "cannot delete from a table snapshot")
-    val cond = filters.flatMap(GraftFilters.toColumn)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    table.deleteRows(cond)
+  override def truncateTable(): Boolean = {
+    require(pinnedVersion.isEmpty, "cannot truncate a table snapshot")
+    table.truncate()
+    true
   }
 }

@@ -101,13 +101,13 @@ class GraftCatalogSpec extends GraftSparkSpec {
     assert(limited.length == 2 && limited.head == limited.max,
       "LIMIT must keep the newest commits, newest first")
 
-    // TRUNCATE TABLE rides Spark's native v2 command: SupportsDelete
-    // extends TruncatableTable, so no parser interception is needed
+    // TRUNCATE TABLE rides Spark's native v2 command: the table is a
+    // TruncatableTable, so no parser interception is needed
     spark.sql("TRUNCATE TABLE graftc.default.sales")
     assert(count() == 0)
     assert(spark.sql("DESCRIBE HISTORY graftc.default.sales")
-      .select("operation").head().getString(0).startsWith("DELETE"),
-      "truncate must commit through the transactional delete")
+      .select("operation").head().getString(0) == "TRUNCATE",
+      "truncate must commit through the table's metadata-only truncate")
   }
 
   test("USE graftc: bare names resolve through current catalog/namespace") {
@@ -312,8 +312,7 @@ class GraftCatalogSpec extends GraftSparkSpec {
       .createOrReplaceTempView("dml_src")
     spark.sql("CREATE TABLE graftc.default.dml_tbl USING graftlake " +
       "AS SELECT * FROM dml_src")
-    // UPDATE — Spark's own path would reject this outright (the table
-    // has no SupportsRowLevelOperations)
+    // UPDATE — resolved by Spark, run by the graft DML planner
     spark.sql("UPDATE graftc.default.dml_tbl SET v = v + 1 WHERE id < 10")
     assert(spark.sql("SELECT SUM(v) AS s FROM graftc.default.dml_tbl " +
       "WHERE id < 10").head().getLong(0)
@@ -338,8 +337,7 @@ class GraftCatalogSpec extends GraftSparkSpec {
       "WHEN MATCHED THEN UPDATE SET v = s.v")
     assert(spark.sql("SELECT COUNT(*) AS n FROM graftc.default.dml_tbl " +
       "WHERE v = 7").head().getLong(0) == 5)
-    // IN-subquery DELETE: the v2 path can't translate a subquery —
-    // the interception runs it as GraftSql's keyed anti-merge
+    // IN-subquery DELETE runs as GraftSql's keyed merge on the column
     spark.sql("DELETE FROM graftc.default.dml_tbl WHERE id IN " +
       "(SELECT id FROM merge_upd)")
     assert(spark.sql("SELECT COUNT(*) AS n FROM graftc.default.dml_tbl")
@@ -598,6 +596,33 @@ class GraftCatalogSpec extends GraftSparkSpec {
     spark.sql("DROP TABLE graftc.default.gov_meta")
   }
 
+  test("a row-filtered source of a catalog MERGE and of an IN-subquery DELETE is governed") {
+    useCatalog()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graftc.default")
+    spark.sql("CREATE TABLE graftc.default.gov_dml_src USING graftlake " +
+      "AS SELECT id, CAST(-1 AS BIGINT) AS v FROM range(10)")
+    spark.sql("CREATE TABLE graftc.default.gov_dml_tgt USING graftlake " +
+      "AS SELECT id, id AS v FROM range(10)")
+    graft.lake.GraftTable.forPath(spark,
+      java.nio.file.Paths.get(tmpWarehouse, "default", "gov_dml_src").toString)
+      .setRowFilter("current_user() = 'admin' OR id < 4")
+    def n(where: String): Long = spark.sql(
+      s"SELECT COUNT(*) FROM graftc.default.gov_dml_tgt WHERE $where").head().getLong(0)
+    val key = graft.lake.GraftTable.PrincipalConf
+    spark.conf.set(key, "analyst")
+    try {
+      spark.sql("MERGE INTO graftc.default.gov_dml_tgt AS t " +
+        "USING graftc.default.gov_dml_src AS s ON t.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET v = s.v")
+      assert(n("v = -1") == 4, "only the source rows the principal sees may match")
+      spark.sql("DELETE FROM graftc.default.gov_dml_tgt " +
+        "WHERE id IN (SELECT id FROM graftc.default.gov_dml_src)")
+      assert(n("true") == 6 && n("id < 4") == 0,
+        "only the subquery rows the principal sees may delete")
+    } finally spark.conf.unset(key)
+    Seq("gov_dml_src", "gov_dml_tgt").foreach(t => spark.sql(s"DROP TABLE graftc.default.$t"))
+  }
+
   test("catalog-named dimension broadcasts at runtime via AQE sizes") {
     useCatalog()
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graftc.default")
@@ -824,6 +849,19 @@ class GraftCatalogSpec extends GraftSparkSpec {
       spark.sql("SELECT * FROM graftc.default.ext_tbl").collect())
   }
 
+  test("CREATE TABLE with an absolute LOCATION writes there and appends") {
+    useCatalog()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graftc.default")
+    val ext = java.nio.file.Paths.get(tmpDir("catalog-abs-location")).toAbsolutePath.toString
+    spark.sql("CREATE TABLE graftc.default.abs_loc (id BIGINT, v STRING) " +
+      s"USING graftlake LOCATION '$ext'")
+    spark.sql("INSERT INTO graftc.default.abs_loc VALUES (1, 'a'), (2, 'b')")
+    assert(spark.sql("SELECT COUNT(*) FROM graftc.default.abs_loc").head().getLong(0) == 2)
+    assert(new graft.lake.TxnLog(ext).exists, "the table must live at its LOCATION")
+    spark.sql("DROP TABLE graftc.default.abs_loc")
+    assert(new graft.lake.TxnLog(ext).exists, "an external table keeps its data on DROP")
+  }
+
   test("backtick-quoted hyphenated names route through the maintenance verbs") {
     useCatalog()
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graftc.default")
@@ -873,32 +911,32 @@ class GraftCatalogSpec extends GraftSparkSpec {
       t.history(1).collect().head.getAs[String]("metrics")
         .split(";").map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap
 
-    // an UPDATE that leaves ts (and ts_day) alone: the staged
-    // post-images provably satisfy the generation expression, so the
-    // commit must absorb them directly — no restage read+rewrite
+    // an UPDATE that leaves ts (and ts_day) alone masks the rows and
+    // appends post-images in their own partitions: nothing restages
+    val files0 = t.snapshot.activeFiles.map(_.path).toSet
     spark.sql("UPDATE graftc.default.gen_mor SET v = v + 1 WHERE event_id <= 2")
     val fast = lastMetrics()
-    assert(fast("rewrite") == "row-level-delta",
-      s"fixture must stay on the delta path: $fast")
-    assert(fast("restagedGenerated") == "false",
-      s"untouched generation source must skip the restage: $fast")
+    assert(fast("numDeletionVectors") == "1", s"fixture must stay merge-on-read: $fast")
+    assert(files0.subsetOf(t.snapshot.activeFiles.map(_.path).toSet),
+      "merge-on-read must not rewrite a file")
+    assert(t.snapshot.activeFiles.filterNot(f => files0(f.path))
+      .forall(_.partitionValues.get("ts_day").contains("2024-03-01")),
+      "post-images keep their partition")
     assert(spark.sql("SELECT SUM(v) AS s FROM graftc.default.gen_mor")
       .head().getLong(0) == 11 + 21 + 30)
-    // partition pruning still intact after the fast-path commit
+    // partition pruning still intact after the masked commit
     assert(spark.sql("SELECT COUNT(*) AS n FROM graftc.default.gen_mor " +
       "WHERE ts_day = DATE'2024-03-01'").head().getLong(0) == 2)
 
-    // an UPDATE that MOVES ts across the derived boundary must restage
-    // (Spark passes the stale ts_day through; the commit proves the
-    // mismatch and regenerates)
+    // an UPDATE that MOVES ts across the derived boundary re-derives
+    // ts_day, so the post-image lands in the new partition
     spark.sql("UPDATE graftc.default.gen_mor " +
       "SET ts = TIMESTAMP'2024-03-05 09:00:00' WHERE event_id = 1")
-    val slow = lastMetrics()
-    assert(slow("restagedGenerated") == "true",
-      s"a moved generation source must restage: $slow")
     assert(spark.sql("SELECT COUNT(*) AS n FROM graftc.default.gen_mor " +
       "WHERE ts_day = DATE'2024-03-05'").head().getLong(0) == 1,
       "the regenerated derived value must land in the new partition")
+    assert(t.snapshot.activeFiles.exists(
+      _.partitionValues.get("ts_day").contains("2024-03-05")))
     assert(spark.sql("SELECT COUNT(*) AS n FROM graftc.default.gen_mor " +
       "WHERE ts >= TIMESTAMP'2024-03-05 00:00:00'").head().getLong(0) == 1)
     spark.sql("DROP TABLE graftc.default.gen_mor")

@@ -4,12 +4,12 @@ import graft.GraftSparkSpec
 import graft.lake.GraftTable
 import org.apache.spark.sql.functions._
 
-/** Native `SupportsRowLevelOperations` behaviors: plan shape (the v2
-  * ReplaceData rewrite, not an opaque command), runtime group
-  * filtering (unmatched candidate files survive untouched), and the
-  * table-layer invariants the native write must keep — partition
-  * layout, deletion-vector masks, row-tracking ids, generated-column
-  * regeneration, CHECK constraints, change-feed visibility.
+/** Catalog DML through the one planner (`graft.plans.GraftDml`): plan
+  * shape (EXPLAIN names the graft command, its operation and table),
+  * stats-pruned rewrites, and the table-layer invariants every DML
+  * statement keeps — partition layout, deletion-vector masks,
+  * row-tracking ids, generated-column regeneration, CHECK constraints,
+  * change-feed visibility.
   */
 class RowLevelOpsSpec extends GraftSparkSpec {
 
@@ -23,7 +23,16 @@ class RowLevelOpsSpec extends GraftSparkSpec {
   private def pathOf(tbl: String): String =
     java.nio.file.Paths.get(warehouse, "default", tbl).toString
 
-  test("UPDATE plans as a v2 row-level rewrite, not a command") {
+  /** EXPLAIN of `stmt` names the graft DML command, `op` and the table. */
+  private def assertPlansAsGraftDml(stmt: String, op: String, table: String): Unit = {
+    val explained = spark.sql(s"EXPLAIN $stmt").head().getString(0)
+    assert(explained.contains(s"GraftDmlCommand $op $table"),
+      s"EXPLAIN must show the graft DML command, got:\n${explained.take(800)}")
+    assert(!explained.contains("ReplaceData") && !explained.contains("WriteDelta"),
+      s"no v2 row-level rewrite may plan:\n${explained.take(800)}")
+  }
+
+  test("UPDATE plans as the graft DML command") {
     useCatalog()
     spark.range(100).withColumn("v", col("id") * 2)
       .createOrReplaceTempView("rlo_src")
@@ -33,23 +42,21 @@ class RowLevelOpsSpec extends GraftSparkSpec {
       "UPDATE graftrlo.default.plan_tbl SET v = 0 WHERE id < 5")
     assert(!analyzed.getClass.getName.contains("GraftSqlCommand"),
       "the parser interception for UPDATE must be gone")
-    val explained = spark.sql(
-      "EXPLAIN EXTENDED UPDATE graftrlo.default.plan_tbl SET v = 0 WHERE id < 5")
-      .head().getString(0)
-    assert(explained.contains("ReplaceData"),
-      s"EXPLAIN must show the v2 row-level plan, got:\n${explained.take(800)}")
-    assert(explained.contains("GraftRowLevelScan"),
-      "the rewrite must read through the row-level scan")
+    assertPlansAsGraftDml("UPDATE graftrlo.default.plan_tbl SET v = 0 WHERE id < 5",
+      "UPDATE", "graftrlo.default.plan_tbl")
+    val t = GraftTable.forPath(spark, pathOf("plan_tbl"))
+    val v0 = t.version
     spark.sql("UPDATE graftrlo.default.plan_tbl SET v = 0 WHERE id < 5")
+    assert(t.version == v0 + 1, "one UPDATE statement lands one commit")
     assert(spark.sql("SELECT SUM(v) AS s FROM graftrlo.default.plan_tbl")
       .head().getLong(0) == (5 until 100).map(_ * 2L).sum)
     spark.sql("DROP TABLE graftrlo.default.plan_tbl")
   }
 
-  test("runtime group filtering: unmatched files are not rewritten") {
+  test("stats narrow the rewrite to 1 file") {
     useCatalog()
     // 8 files with disjoint id ranges; an UPDATE touching one range
-    // must remove/rewrite ONE file, not all stats-pruned candidates
+    // must remove/rewrite ONE file: the id range prunes the rest
     spark.range(800).withColumn("v", lit(1L))
       .repartitionByRange(8, col("id"))
       .createOrReplaceTempView("rlo_gf_src")
@@ -58,9 +65,8 @@ class RowLevelOpsSpec extends GraftSparkSpec {
     val t = GraftTable.forPath(spark, pathOf("gf_tbl"))
     val filesBefore = t.snapshot.activeFiles.size
     assert(filesBefore >= 8, s"fixture needs multiple files, got $filesBefore")
-    // the predicate is on v (same value everywhere -> stats cannot
-    // prune), but only rows with id in one file's range match: the
-    // GROUP filter must narrow the rewrite to that one file
+    // v is the same everywhere, so only the id range's min/max stats
+    // narrow the candidates, to the one file holding ids 0..9
     spark.sql("UPDATE graftrlo.default.gf_tbl SET v = 9 " +
       "WHERE v = 1 AND id BETWEEN 0 AND 9")
     val hist = t.history(1).collect().head
@@ -69,7 +75,7 @@ class RowLevelOpsSpec extends GraftSparkSpec {
       .map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap
     val removed = metrics("numRemovedFiles").toInt
     assert(removed == 1,
-      s"group filter must narrow the rewrite to 1 file, removed $removed")
+      s"stats must narrow the rewrite to 1 file, removed $removed")
     assert(spark.sql("SELECT COUNT(*) AS n FROM graftrlo.default.gf_tbl " +
       "WHERE v = 9").head().getLong(0) == 10)
     assert(spark.sql("SELECT COUNT(*) AS n FROM graftrlo.default.gf_tbl")
@@ -155,9 +161,9 @@ class RowLevelOpsSpec extends GraftSparkSpec {
       assert(t.toDF.filter(col("ts") === lit(ts1)).count() == 2)
       val clone = GraftTable.shallowClone(spark, t.path, tmpDir("rlo-typed-clone"))
       assert(read(clone.toDF) == rows.toSet)
-      // UPDATE plans through the row-level scan, which types the
-      // partition values it matches on and carries into the rewritten
-      // rows; the rewrite renders them back under the same zone
+      // UPDATE reads through the table scan, which types the partition
+      // values it matches on and carries into the rewritten rows; the
+      // rewrite renders them back under the same zone
       spark.sql("UPDATE graftrlo.default.typed_tbl SET id = id + 10")
       spark.sql("UPDATE graftrlo.default.typed_tbl SET id = id + 100 " +
         "WHERE ts = TIMESTAMP '2024-03-10 03:30:00'")
@@ -265,12 +271,13 @@ class RowLevelOpsSpec extends GraftSparkSpec {
     val v0 = t.version
     spark.sql("UPDATE graftrlo.default.cdf_tbl SET v = 99 WHERE id < 3")
     val v1 = GraftTable.forPath(spark, t.path).version
-    // no CDC sidecar on the native path -> the feed's exact diff
-    // surfaces the change as delete+insert rows
+    // the planner stages a CDC sidecar, so the feed types the update
+    // as pre- and post-images, as the path API's does
     val feed = t.changeFeed(v0, v1)
-    assert(feed.filter(col("_change_type") === "insert" &&
+    assert(feed.filter(col("_change_type") === "update_postimage" &&
       col("v") === 99).count() == 3)
-    assert(feed.filter(col("_change_type") === "delete").count() == 3)
+    assert(feed.filter(col("_change_type") === "update_preimage").count() == 3)
+    assert(feed.filter(col("_change_type").isin("insert", "delete")).count() == 0)
     spark.sql("DROP TABLE graftrlo.default.cdf_tbl")
   }
 
@@ -321,62 +328,27 @@ class RowLevelOpsSpec extends GraftSparkSpec {
     spark.sql("DROP TABLE graftrlo.default.split_tbl")
   }
 
-  test("a concurrent writer conflicts the CoW rewrite's commit") {
-    useCatalog()
-    spark.range(200).withColumn("v", col("id"))
-      .repartitionByRange(4, col("id"))
-      .createOrReplaceTempView("rlo_cc_src")
-    spark.sql("CREATE TABLE graftrlo.default.cc_tbl USING graftlake " +
-      "AS SELECT * FROM rlo_cc_src")
-    val t = GraftTable.forPath(spark, pathOf("cc_tbl"))
-    // interleave: a concurrent CoW delete lands while our UPDATE's
-    // rewrite is planned against the older snapshot — the remove-set
-    // overlap must abort the UPDATE instead of resurrecting rows.
-    // Simulated with a commit hook shim: plan the update DF first via
-    // a pinned operation, then race the delete in, then execute.
-    val op = new GraftRowLevelOperation(spark, t,
-      org.apache.spark.sql.connector.write.RowLevelOperation.Command.UPDATE)
-    val builder = op.newScanBuilder(
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-        java.util.Collections.emptyMap()))
-    val scan = builder.build().asInstanceOf[GraftRowLevelScan]
-    // concurrent writer rewrites (and removes) the files our op read
-    t.delete(col("id") < 50)
-    val writeBuilder = op.newWriteBuilder(null)
-    val write = writeBuilder.asInstanceOf[GraftRowLevelWrite]
-    intercept[java.util.ConcurrentModificationException](
-      write.commit(Array.empty))
-    // the table keeps ONLY the concurrent delete's effect
-    assert(spark.sql("SELECT COUNT(*) AS n FROM graftrlo.default.cc_tbl")
-      .head().getLong(0) == 150)
-    spark.sql("DROP TABLE graftrlo.default.cc_tbl")
-  }
-
-  test("simple DELETE keeps the SupportsDelete path; subquery DELETE rewrites") {
+  test("simple and IN-subquery DELETE plan as the graft DML command") {
     useCatalog()
     spark.range(100).withColumn("v", col("id"))
       .createOrReplaceTempView("rlo_del_src")
     spark.sql("CREATE TABLE graftrlo.default.del_tbl USING graftlake " +
       "AS SELECT * FROM rlo_del_src")
-    // translatable filter -> OptimizeMetadataOnlyDeleteFromTable
-    // restores the SupportsDelete route in the OPTIMIZED plan (the
-    // analyzed plan transiently shows the rewrite, so assert on the
-    // physical EXPLAIN)
-    val simple = spark.sql(
-      "EXPLAIN DELETE FROM graftrlo.default.del_tbl WHERE id < 10")
-      .head().getString(0)
-    assert(!simple.contains("ReplaceData"),
-      s"a translatable DELETE must stay on the SupportsDelete path:\n$simple")
-    spark.sql("DELETE FROM graftrlo.default.del_tbl WHERE id < 10")
-    // subquery condition -> the group-based rewrite
+    val t = GraftTable.forPath(spark, pathOf("del_tbl"))
+    def oneCommit(stmt: String): Unit = {
+      val v0 = t.version
+      spark.sql(stmt)
+      assert(t.version == v0 + 1, s"one commit per statement: $stmt")
+    }
+    // a plain filter runs as the planner's DELETE
+    assertPlansAsGraftDml("DELETE FROM graftrlo.default.del_tbl WHERE id < 10",
+      "DELETE", "graftrlo.default.del_tbl")
+    oneCommit("DELETE FROM graftrlo.default.del_tbl WHERE id < 10")
+    // an IN-subquery runs as GraftSql's keyed merge on the column
     spark.range(10, 20).createOrReplaceTempView("del_keys")
-    val sub = spark.sql("EXPLAIN DELETE FROM " +
-      "graftrlo.default.del_tbl WHERE id IN (SELECT id FROM del_keys)")
-      .head().getString(0)
-    assert(sub.contains("ReplaceData"),
-      s"a subquery DELETE must take the row-level rewrite:\n$sub")
-    spark.sql("DELETE FROM graftrlo.default.del_tbl " +
-      "WHERE id IN (SELECT id FROM del_keys)")
+    val sub = "DELETE FROM graftrlo.default.del_tbl WHERE id IN (SELECT id FROM del_keys)"
+    assertPlansAsGraftDml(sub, "MERGE", "graftrlo.default.del_tbl")
+    oneCommit(sub)
     assert(spark.sql("SELECT COUNT(*) AS n FROM graftrlo.default.del_tbl")
       .head().getLong(0) == 80)
     spark.sql("DROP TABLE graftrlo.default.del_tbl")
@@ -398,7 +370,7 @@ class RowLevelOpsSpec extends GraftSparkSpec {
     val before = spark.sql(byTs).collect()
       .map(r => (r.getTimestamp(0), r.getLong(1))).toSeq
     assert(before.length == 4, s"fixture needs 4 ts partitions: $before")
-    // rewrite every row natively (group filter matches all files)
+    // rewrite every row (every file is a candidate)
     spark.sql("UPDATE graftrlo.default.ts_tbl SET v = -1 WHERE v >= 0")
     val after = spark.sql(byTs).collect()
       .map(r => (r.getTimestamp(0), r.getLong(1))).toSeq
@@ -425,13 +397,81 @@ class RowLevelOpsSpec extends GraftSparkSpec {
       "AS SELECT * FROM rlo_many_src")
     val t = GraftTable.forPath(spark, pathOf("many_tbl"))
     assert(t.snapshot.numFiles > 32, s"fixture needs over 32 files, got ${t.snapshot.numFiles}")
-    val (_, jobs) = jobsStartedBy(
+    // one input split per file, so the rewrite stages one file per file
+    val splitKey = "spark.sql.files.maxPartitionBytes"
+    val prevSplit = spark.conf.get(splitKey)
+    spark.conf.set(splitKey, "1")
+    val (_, jobs) = try jobsStartedBy(
       spark.sql("UPDATE graftrlo.default.many_tbl SET v = v + 1 WHERE v >= 0"))
+    finally spark.conf.set(splitKey, prevSplit)
     assert(t.snapshot.activeFiles.size > 32, "every file must have been rewritten")
     assert(!jobs.exists(_.contains("Listing leaf files")),
       s"staged files must be read through the log-style index, jobs: $jobs")
     assert(spark.sql("SELECT SUM(v) AS s FROM graftrlo.default.many_tbl")
       .head().getLong(0) == (0L until 400L).sum + 400L)
     spark.sql("DROP TABLE graftrlo.default.many_tbl")
+  }
+
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  for (mode <- Seq("copy-on-write", "merge-on-read")) {
+    test(s"a MERGE source narrower than the table, with INT literals, aligns by name, $mode") {
+      useCatalog()
+      val tbl = s"graftrlo.default.narrow_${mode.take(1)}"
+      spark.sql(s"CREATE TABLE $tbl USING graftlake TBLPROPERTIES ('graft.dml.mode' = '$mode') " +
+        "AS SELECT id, id * 10 AS v, 'a' AS tag FROM range(10)")
+      def rows = spark.sql(s"SELECT id, v, tag FROM $tbl").collect()
+        .map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2)))).toSet
+      // a key-only INT source against a BIGINT key
+      spark.sql(s"MERGE INTO $tbl t USING (SELECT 3 AS id) s ON t.id = s.id " +
+        "WHEN MATCHED THEN DELETE")
+      // INT values, no tag column: the inserted row's tag is NULL
+      spark.sql(s"MERGE INTO $tbl t USING (SELECT * FROM VALUES (5, -5), (20, -20) AS s(id, v)) s " +
+        "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v " +
+        "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)")
+      assert(rows == (0L until 10L).filter(_ != 3)
+        .map(i => (i, if (i == 5) -5L else i * 10, Option("a"))).toSet + ((20L, -20L, None)))
+      // a clause reading a source column the table lacks refuses at analysis
+      val e = intercept[Exception](spark.sql(s"MERGE INTO $tbl t " +
+        "USING (SELECT 1 AS id, 2 AS w) s ON t.id = s.id " +
+        "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.w)"))
+      assert(messages(e).contains(s"reads source column(s) w that $tbl does not have"), messages(e))
+      spark.sql(s"DROP TABLE $tbl")
+    }
+
+    test(s"NOT IN, EXISTS and IN-with-a-conjunct conditions run; a correlated one refuses, $mode") {
+      useCatalog()
+      val tbl = s"graftrlo.default.subq_${mode.take(1)}"
+      spark.sql(s"CREATE TABLE $tbl USING graftlake TBLPROPERTIES ('graft.dml.mode' = '$mode') " +
+        "AS SELECT id, id * 10 AS v FROM range(20)")
+      spark.range(5, 15).createOrReplaceTempView("rlo_subq_keys")
+      def rows = spark.sql(s"SELECT id, v FROM $tbl").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      spark.sql(s"DELETE FROM $tbl WHERE id NOT IN (SELECT id FROM rlo_subq_keys)")
+      assert(rows == (5L until 15L).map(i => i -> i * 10).toMap)
+      spark.sql(s"DELETE FROM $tbl WHERE id IN (SELECT id FROM rlo_subq_keys WHERE id < 8) " +
+        "AND v > 50")
+      assert(rows.keySet == (5L until 15L).toSet -- Set(6L, 7L))
+      spark.sql(s"UPDATE $tbl SET v = v + 1 WHERE id > 12 AND " +
+        "EXISTS (SELECT 1 FROM rlo_subq_keys WHERE id = 5)")
+      spark.sql(s"UPDATE $tbl SET v = -2 WHERE id NOT IN " +
+        "(SELECT id FROM rlo_subq_keys WHERE id < 11)")
+      assert(rows == Map(5L -> 50L, 8L -> 80L, 9L -> 90L, 10L -> 100L,
+        11L -> -2L, 12L -> -2L, 13L -> -2L, 14L -> -2L))
+      val v0 = GraftTable.forPath(spark, pathOf(tbl.split('.').last)).version
+      for (stmt <- Seq(
+          s"UPDATE $tbl SET v = -1 WHERE EXISTS " +
+            s"(SELECT 1 FROM rlo_subq_keys k WHERE k.id = $tbl.id)",
+          s"DELETE FROM $tbl WHERE NOT EXISTS " +
+            s"(SELECT 1 FROM rlo_subq_keys k WHERE k.id = $tbl.id + 1)")) {
+        val e = intercept[Exception](spark.sql(stmt))
+        assert(messages(e).contains("a correlated subquery condition is not supported"),
+          s"$stmt\n${messages(e)}")
+      }
+      assert(GraftTable.forPath(spark, pathOf(tbl.split('.').last)).version == v0,
+        "a refused statement commits nothing")
+      spark.sql(s"DROP TABLE $tbl")
+    }
   }
 }
