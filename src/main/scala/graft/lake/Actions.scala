@@ -12,9 +12,15 @@ import scala.jdk.CollectionConverters._
 sealed trait Action
 
 /** Per-file column statistics powering data skipping (reference
-  * docs/02-lab-optimizations.md:587-599 — min/max/null statistics).
-  * Values are stored as strings and re-typed against the table schema
-  * at prune time.
+  * docs/02-lab-optimizations.md:587-599 — min/max/null statistics),
+  * keyed by physical column name. Each min/max string is the parquet
+  * PHYSICAL value as [[Stats]] renders it from the footer: integers,
+  * dates (epoch days) and timestamps (epoch micros) in decimal digits,
+  * floating point as Java prints it, strings as UTF-8 text, booleans
+  * as `true`/`false`, and decimals UNSCALED (`0.25` of a
+  * `decimal(10,2)` is `25`), whatever their parquet width. Readers type
+  * a bound by its column through [[Stats.decode]], never by the value
+  * it is compared with.
   */
 final case class FileStats(
     numRecords: Long,

@@ -182,16 +182,15 @@ object DeltaExport {
     val nullN = node.putObject("nullCount")
     physSchema.fields.foreach { f =>
       def put(tgt: ObjectNode, v: String): Unit =
-        scala.util.Try(f.dataType match {
+        Stats.decode(v, f.dataType).foreach(x => f.dataType match {
           case ByteType | ShortType | IntegerType | LongType =>
-            tgt.put(f.name, v.toLong)
-          case FloatType | DoubleType => tgt.put(f.name, v.toDouble)
-          case d: DecimalType =>
-            tgt.put(f.name, new java.math.BigDecimal(v))
-          case BooleanType => tgt.put(f.name, v.toBoolean)
-          case StringType => tgt.put(f.name, v)
+            tgt.put(f.name, x.asInstanceOf[Number].longValue)
+          case FloatType | DoubleType => tgt.put(f.name, x.asInstanceOf[Number].doubleValue)
+          case _: DecimalType => tgt.put(f.name, x.asInstanceOf[Decimal].toJavaBigDecimal)
+          case BooleanType => tgt.put(f.name, x.asInstanceOf[Boolean])
+          case _: StringType => tgt.put(f.name, x.toString)
           case _ => ()
-        }).getOrElse(())
+        })
       fs.minValues.get(f.name).foreach(put(minN, _))
       fs.maxValues.get(f.name).foreach(put(maxN, _))
       fs.nullCounts.get(f.name).foreach(n => nullN.put(f.name, n))

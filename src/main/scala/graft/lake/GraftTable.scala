@@ -5,8 +5,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Expression, GetStructField, In, InSet, Literal}
-import org.apache.spark.sql.catalyst.expressions.variant.VariantGet
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 
@@ -164,8 +163,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       s"row tracking is not enabled on $path (set graft.rowTracking=true at create)")
     val skipping = pred.filterNot(q => p.maskedCols.nonEmpty && org.apache.spark.sql
       .GraftSqlShims.expression(q).references.exists(a => p.maskedCols(a.name)))
-    val files = policyPruned(p, s, skipping.fold(s.activeFiles)(q =>
-      bloomPrune(s, candidates(s, s.activeFiles, q), q)))
+    val files = policyPruned(p, s, skipping.fold(s.activeFiles) { q =>
+      val conjuncts = skippingConjuncts(s, q)
+      bloomPrune(s, candidates(s, s.activeFiles, conjuncts), conjuncts)
+    })
     if (version.isDefined)
       files.map(f => dataPath(f.path)).find(f => !Files.exists(Paths.get(f)))
         .foreach(f => throw new java.io.FileNotFoundException(
@@ -742,7 +743,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
                            files: Seq[AddFile]): Seq[AddFile] =
     p.filter match {
       case Some(f) if files.nonEmpty =>
-        scala.util.Try(candidates(s, files, policyColumn(f))).getOrElse(files)
+        scala.util.Try(candidates(s, files, skippingConjuncts(s, policyColumn(f))))
+          .getOrElse(files)
       case _ => files
     }
 
@@ -1017,15 +1019,16 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
 
   /** The one file selector: the entries of `files` (log entries of
     * `s`) that partition values, footer min/max and generated-column
-    * bounds cannot rule out for `pred`. Conservative — a kept file may
-    * hold no match; callers still apply the predicate to rows. Stats
-    * and partition values are matched under LOGICAL column names, so a
+    * bounds cannot rule out for `conjuncts` (in [[Pruning]]'s one
+    * form). Conservative — a kept file may hold no match; callers
+    * still apply the predicate to rows. Stats and partition values are
+    * matched under LOGICAL column names, so a
     * predicate written against the current (possibly renamed) schema
     * prunes a column-mapped table too; the entries come back as logged.
     * A file whose stats count no rows can hold no match and is dropped.
     */
   private[graft] def candidates(s: Snapshot, allFiles: Seq[AddFile],
-                                pred: Column): Seq[AddFile] = {
+                                conjuncts: Seq[Expression]): Seq[AddFile] = {
     val files = allFiles.filterNot(_.stats.exists(_.numRecords == 0))
     val rev = s.colMap.map(_.swap)
     def rekey[V](m: Map[String, V]): Map[String, V] =
@@ -1038,47 +1041,50 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
           minValues = rekey(st.minValues),
           maxValues = rekey(st.maxValues),
           nullCounts = rekey(st.nullCounts)))))
-    val kept = Pruning.prune(logical, s.schema, s.partitionColumns,
-      shredded(s, pred), generatedExprs(s))
+    val kept = Pruning.prune(logical, s.partitionColumns,
+      VariantShred.rewrite(conjuncts, variantShreds(s)),
+      Pruning.generation(spark, s.schema, generatedExprs(s)))
     if (rev.isEmpty) kept
     else { val paths = kept.map(_.path).toSet; files.filter(f => paths(f.path)) }
   }
 
+  /** `p` resolved against `s`'s logical schema, in the one form file
+    * skipping reads ([[Pruning.conjuncts]]).
+    */
+  private[graft] def skippingConjuncts(s: Snapshot, p: Column): Seq[Expression] =
+    Pruning.conjuncts(spark, s.schema, p)
+
   /** The file selector under every scan (the file index's
     * `listFiles`): the entries of `files` that the filters Spark pushed
     * to the scan cannot rule out, by [[candidates]] and [[bloomPrune]].
-    * The filters name PHYSICAL columns; renamed back to logical names
-    * (and a `variant_get` Spark pushed into the scan as a variant-struct
-    * field back to the `variant_get`), they prune as a predicate written
-    * by hand does; an optimizer `InSet` reads as IN. Feeds CLUSTER BY
+    * The filters name PHYSICAL columns; in [[Pruning.skippingForm]]
+    * they prune as a predicate written by hand does. Feeds CLUSTER BY
     * AUTO's history.
     */
   private[graft] def selectFiles(s: Snapshot, files: Seq[AddFile],
-                                 filters: Seq[Expression]): Seq[AddFile] = {
-    import org.apache.spark.sql.execution.datasources.VariantMetadata
-    val logical = s.colMap.map(_.swap)
-    val usable = filters.map(_.transformUp {
-      case a: AttributeReference => a.withName(logical.getOrElse(a.name, a.name))
-      case GetStructField(a: AttributeReference, i, _) if VariantMetadata.isVariantStruct(a.dataType) =>
-        val f = a.dataType.asInstanceOf[StructType](i)
-        val vm = VariantMetadata.fromMetadata(f.metadata)
-        VariantGet(a.withDataType(org.apache.spark.sql.types.VariantType), Literal(vm.path),
-          f.dataType, vm.failOnError, Some(vm.timeZoneId))
-      case i: InSet => In(i.child, i.hset.toSeq.map(Literal(_, i.child.dataType)))
-    })
-    if (files.isEmpty || usable.isEmpty) files
+                                 filters: Seq[Expression]): Seq[AddFile] =
+    if (files.isEmpty || filters.isEmpty) files
     else {
-      val pred = GraftExpr.column(usable.reduce(And))
-      recordPredicate(s, pred)
-      bloomPrune(s, candidates(s, files, pred), pred)
+      val logical = s.colMap.map(_.swap)
+      val conjuncts = Pruning.skippingForm(filters, a => logical.getOrElse(a.name, a.name))
+      recordPredicate(s, conjuncts)
+      bloomPrune(s, candidates(s, files, conjuncts), conjuncts)
     }
+
+  /** The files of the current snapshot that survive pruning for
+    * `predicate`.
+    */
+  private[graft] def filesFor(predicate: Column, s: Snapshot = snapshot): Seq[AddFile] = {
+    val conjuncts = skippingConjuncts(s, predicate)
+    bloomPrune(s, candidates(s, s.activeFiles, conjuncts), conjuncts)
   }
 
-  /** Files that survive pruning for `predicate` (for tests/metrics). */
+  /** Files that survive pruning for `predicate`, of all active files
+    * (for tests/metrics).
+    */
   def pruneFiles(predicate: Column): (Int, Int) = {
     val s = snapshot
-    (bloomPrune(s, candidates(s, s.activeFiles, predicate), predicate).size,
-      s.activeFiles.size)
+    (filesFor(predicate, s).size, s.activeFiles.size)
   }
 
   // ------------------------------------------------- bloom file skipping
@@ -1745,16 +1751,16 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     *    probes executor-side.
     */
   private def bloomPrune(s: Snapshot, files: Seq[AddFile],
-                         predicate: Column): Seq[AddFile] = {
+                         conjuncts: Seq[Expression]): Seq[AddFile] = {
     import org.apache.spark.util.sketch.BloomFilter
     val props = s.metadata.map(_.properties).getOrElse(Map.empty)
     val sidecars = props.collect {
       case (k, v) if k.startsWith("graft.bloom.") => k.stripPrefix("graft.bloom.") -> v
     }
     if (sidecars.isEmpty) return files
-    val eqBindings = Pruning.equalityBindings(predicate)
+    val eqBindings = Pruning.equalityBindings(conjuncts)
       .filter { case (c, _) => sidecars.contains(c) }
-    val inLists = Pruning.inBindings(predicate)
+    val inLists = Pruning.inBindings(conjuncts)
       .filter { case (c, vs) => sidecars.contains(c) && vs.nonEmpty }
     if (eqBindings.isEmpty && inLists.isEmpty) return files
     // Each conjunct is one check: the file survives it when ANY of the
@@ -2610,14 +2616,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   private def variantShreds(s: Snapshot): Seq[VariantShred.Spec] =
     VariantShred.specsOf(s.metadata.map(_.properties).getOrElse(Map.empty))
 
-  /** Pruning-side variant rewrite: `variant_get(vcol, path, type)`
-    * over a declared shred becomes the hidden companion attribute —
-    * handed ONLY to the stats/bloom skipping stack, never evaluated
-    * against rows (callers keep filtering by the original predicate).
-    */
-  private def shredded(s: Snapshot, pred: Column): Column =
-    VariantShred.rewrite(pred, variantShreds(s))
-
   /** Declare typed shred paths for a VARIANT column (L119):
     * `setVariantShred("pay", Seq("$.a.b" -> "bigint"))`. Validated
     * now — a typo fails THIS commit, not later writes. Files written
@@ -2823,21 +2821,23 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       cols.map(c => countDistinct(col(c)).as(s"d_$c")): _*).head()
     val addRows = adds.flatMap(_.stats.map(_.numRecords)).sum
     val types = s.schema.fields.map(f => f.name -> f.dataType).toMap
-    // type-aware string min/max merge: numeric strings compare by value,
-    // everything else (dates/timestamps/strings as cast by computeStats)
-    // compares lexicographically, which their rendering preserves
-    def less(a: String, b: String, c: String): Boolean = types(c) match {
-      case _: org.apache.spark.sql.types.NumericType =>
-        // NaN/Inf renderings don't parse as BigDecimal — fall back to
-        // lexicographic rather than fail the write's stats refresh
-        scala.util.Try(BigDecimal(a) < BigDecimal(b)).getOrElse(a < b)
-      case _ => a < b
-    }
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    // min/max merge typed by the column: a footer bound through the
+    // stats decoder, the property's bound as computeStats rendered it
+    // (a cast to string, read back by the inverse cast); the winner is
+    // rendered as computeStats renders one. A bound that does not type
+    // takes no part; a column none of whose bounds type keeps its old one
     def mergeBound(o: String, vs: Seq[String], c: String, takeMin: Boolean): String = {
-      val all = (Seq(o) ++ vs).filter(_.nonEmpty)
-      if (all.isEmpty) ""
-      else all.reduce((x, y) =>
-        if (less(x, y, c) == takeMin) x else y)
+      val dt = types(c)
+      val typed = Some(o).filter(_.nonEmpty).flatMap(v => scala.util.Try(
+          graft.sources.GraftFileIndex.partitionValue(Some(v), dt, tz)).toOption)
+        .filter(_ != null) ++ vs.flatMap(Stats.decode(_, dt))
+      if (typed.isEmpty) o
+      else {
+        val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
+        graft.sources.GraftFileIndex.directoryValue(
+          if (takeMin) typed.min(ord) else typed.max(ord), dt, tz)
+      }
     }
     val statProps = cols.map { c =>
       val o = old(c)
@@ -3945,7 +3945,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     if (nmbsUpdate.isEmpty && nmbsDelete.isEmpty) return Nil
     val conds = nmbsDelete.toSeq ++ nmbsUpdate.map(_._1.getOrElse(lit(true))).toSeq
     candidates(s, s.activeFiles.filterNot(f => candidatePaths(f.path)),
-      conds.reduce(_ || _))
+      skippingConjuncts(s, conds.reduce(_ || _)))
   }
 
   /** Unmatched-source insert rows under ORDERED first-match clause
@@ -4021,7 +4021,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         Map("numSourceRows" -> src.count().toString))
       source.foreach { src => validateConstraints(src, s); enforceSchema(src.schema, s.schema) }
       val candidates = source.fold(Seq.empty[AddFile])(src =>
-        this.candidates(s, s.activeFiles, sourceKeyRange(src, keys)))
+        this.candidates(s, s.activeFiles, skippingConjuncts(s, sourceKeyRange(src, keys))))
       val restFiles = nmbsRestFiles(s, candidates.map(_.path).toSet, c.nmbsUpdate, c.nmbsDelete)
       val rt = rowTrackingOn(s)
       val fields = s.schema.fieldNames.toIndexedSeq.map(col)
@@ -4270,7 +4270,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val s = snapshot
     validateConstraints(df, s)
     enforceSchema(df.schema, s.schema)
-    val candidates = this.candidates(s, s.activeFiles, cond)
+    val candidates = this.candidates(s, s.activeFiles, skippingConjuncts(s, cond))
     // row tracking: rows that survive the predicate keep their ids
     // through the rewrite (same invariant as DELETE); the replacement
     // rows are new rows and draw fresh ids via a null materialized id
@@ -4409,15 +4409,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * ceil(totalSmall/target) right-sized files. `dataChange=false` —
     * rewrites are invisible to incremental readers.
     */
-  /** Force predicate analysis against the table schema so a typo'd
-    * column fails loudly instead of matching nothing — in maintenance
-    * ops "prunes nothing" means a silent full-table rewrite.
-    */
-  private def validatePredicate(s: Snapshot, p: Column): Unit =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s.schema)
-      .filter(p).asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-      .queryExecution.analyzed
-
   /** `where` scopes compaction to files that may match the predicate
     * (partition values + footer stats) — `OPTIMIZE ... WHERE`, for
     * compacting just the hot partitions of a 100 TB table.
@@ -4537,10 +4528,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * the table opted in (the counter map must not grow for every
     * table a long session ever reads).
     */
-  private def recordPredicate(s: Snapshot, pred: Column): Unit =
+  private def recordPredicate(s: Snapshot, conjuncts: Seq[Expression]): Unit =
     if (s.metadata.exists(
         _.properties.get("graft.clusterAuto").contains("true"))) {
-      val cols = Pruning.prunableColumns(pred)
+      val cols = Pruning.prunableColumns(conjuncts)
         .filter(s.schema.fieldNames.contains)
       if (cols.nonEmpty) PredicateStats.record(path, cols)
     }
@@ -4557,7 +4548,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val s0 = snapshot
     val s = if (maybeAutoClusterSpec(s0)) snapshot else s0
     val target = if (targetBytes > 0) targetBytes else resolveTargetBytes(s)
-    where.foreach(validatePredicate(s, _))
     // CLUSTER BY (liquid-clustering-lite): a persisted clustering spec
     // makes plain OPTIMIZE apply the Z-order layout automatically —
     // users declare the clustering once, every later maintenance pass
@@ -4621,10 +4611,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     var removed = 0
     var added = 0
     val actions = scala.collection.mutable.Buffer[Action]()
-    val scoped = where match {
-      case Some(p) => candidates(s, s.activeFiles, p)
-      case None => s.activeFiles
-    }
+    val scoped = where.fold(s.activeFiles)(p =>
+      candidates(s, s.activeFiles, skippingConjuncts(s, p)))
     val compactable = scoped.groupBy(_.partitionValues).toSeq
       .map { case (pv, files) => pv -> files.filter(_.size < target) }
       .filter(_._2.size >= 2)
@@ -4839,11 +4827,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
                   cols: String*): Map[String, String] = {
     val s = snapshot
     val target = if (targetBytes > 0) targetBytes else resolveTargetBytes(s)
-    where.foreach(validatePredicate(s, _))
-    val scoped = where match {
-      case Some(p) => candidates(s, s.activeFiles, p)
-      case None => s.activeFiles
-    }
+    val scoped = where.fold(s.activeFiles)(p =>
+      candidates(s, s.activeFiles, skippingConjuncts(s, p)))
     zorderFiles(s, scoped, target, cols)
   }
 

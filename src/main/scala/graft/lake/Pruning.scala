@@ -2,9 +2,15 @@ package graft.lake
 
 import scala.util.Try
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+import graft.sources.GraftFileIndex
+import org.apache.spark.sql.{classic, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.variant.VariantGet
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.VariantMetadata
+import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -16,17 +22,104 @@ import org.apache.spark.unsafe.types.UTF8String
   * makes selective queries touch a fraction of a 100 TB table
   * (reference docs/02-lab-optimizations.md:314-341 partition pruning +
   * :591-599 stats-based skipping).
+  *
+  * Every entry point hands it one form: resolved, optimized Catalyst
+  * conjuncts over LOGICAL column names ([[conjuncts]] for a `Column`,
+  * [[skippingForm]] of the filters Spark pushed to a scan). A
+  * comparison prunes when one side is a column and the other a literal
+  * of that column's type; the file's bound for the column is typed by
+  * the column ([[Stats.decode]] for footer stats,
+  * [[GraftFileIndex.partitionValue]] for partition values) and compared
+  * under Catalyst's ordering for that type.
   */
 object Pruning {
 
-  def prune(files: Seq[AddFile], schema: StructType,
-            partitionCols: Seq[String], predicate: Column,
-            generated: Map[String, String] = Map.empty): Seq[AddFile] = {
-    val conjuncts = splitConjuncts(normalize(GraftExpr.expression(predicate)))
-    val derived = deriveGenerated(generated, conjuncts)
-    val all = conjuncts ++ derived
+  /** The entries of `files` that no conjunct rules out, the bounds of
+    * `generated` columns derived from the conjuncts included.
+    */
+  def prune(files: Seq[AddFile], partitionCols: Seq[String],
+            conjuncts: Seq[Expression],
+            generated: Seq[(Attribute, Expression)] = Nil): Seq[AddFile] = {
+    val all = conjuncts ++ deriveGenerated(generated, conjuncts)
     files.filter(f => all.forall(c => mayMatch(f, partitionCols, c)))
   }
+
+  /** [[prune]] for a `Column` predicate over a table of logical
+    * `schema`, resolved in the active session.
+    */
+  def prune(files: Seq[AddFile], schema: StructType, partitionCols: Seq[String],
+            predicate: Column): Seq[AddFile] =
+    prune(files, partitionCols, conjuncts(SparkSession.active, schema, predicate))
+
+  /** `f` applied to an empty frame of logical `schema`, analyzed (a
+    * typo'd column fails here, loudly: in DML and maintenance ops
+    * "prunes nothing" would mean a silent full-table rewrite) and
+    * optimized. The frame's rows come from an RDD, so the optimizer
+    * cannot evaluate a filter over them.
+    */
+  private def optimizedOver(spark: SparkSession, schema: StructType)(
+      f: DataFrame => DataFrame): LogicalPlan =
+    f(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
+      .asInstanceOf[classic.Dataset[Row]].queryExecution.optimizedPlan
+
+  /** A `Column` predicate in the one form file skipping reads: its
+    * filter condition over `schema` once the optimizer has replaced
+    * `BETWEEN`, folded constants, pushed `NOT` down and unwrapped
+    * casts, in [[skippingForm]]. A predicate that folds to false is the
+    * one conjunct `false` (prune every file); one that folds to true,
+    * or that the optimizer turns into anything but a filter (a subquery
+    * join), has none (keep every file).
+    */
+  def conjuncts(spark: SparkSession, schema: StructType, predicate: Column): Seq[Expression] =
+    optimizedOver(spark, schema)(_.filter(predicate)) match {
+      case Filter(cond, r: LogicalRDD) =>
+        // an attribute keeps the spelling it was written in (`ID`);
+        // its schema name is the frame's
+        val names = r.output.map(a => a.exprId -> a.name).toMap
+        skippingForm(Seq(cond), a => names.getOrElse(a.exprId, a.name))
+      case _: LocalRelation => Seq(Literal.FalseLiteral)
+      case _ => Nil
+    }
+
+  /** Resolved predicates as [[prune]] reads them: split into
+    * conjuncts, attributes renamed by `logicalName` (physical →
+    * logical for the filters Spark pushed to a scan, the schema's
+    * spelling for a predicate resolved on the logical schema), a
+    * `variant_get` that Spark pushed into the scan as a variant-struct
+    * field back to the `variant_get`, and an optimizer `InSet` as IN.
+    */
+  def skippingForm(filters: Seq[Expression],
+                   logicalName: AttributeReference => String): Seq[Expression] = {
+    def split(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => split(l) ++ split(r)
+      case other => Seq(other)
+    }
+    filters.flatMap(split).map(_.transformUp {
+      case a: AttributeReference => a.withName(logicalName(a))
+      case GetStructField(a: AttributeReference, i, _) if VariantMetadata.isVariantStruct(a.dataType) =>
+        val f = a.dataType.asInstanceOf[StructType](i)
+        val vm = VariantMetadata.fromMetadata(f.metadata)
+        VariantGet(a.withDataType(VariantType), Literal(vm.path),
+          f.dataType, vm.failOnError, Some(vm.timeZoneId))
+      case i: InSet => In(i.child, i.hset.toSeq.map(Literal(_, i.child.dataType)))
+    })
+  }
+
+  /** Each generated column of `schema` (`generated`: column → its
+    * generation SQL) with its generation expression resolved and
+    * optimized as [[conjuncts]] resolves a predicate, for [[prune]]'s
+    * derived bounds; an expression that no longer resolves (its source
+    * renamed) derives nothing.
+    */
+  def generation(spark: SparkSession, schema: StructType,
+                 generated: Map[String, String]): Seq[(Attribute, Expression)] =
+    generated.toSeq.flatMap { case (c, sql) =>
+      schema.find(_.name == c).flatMap { f =>
+        Try(optimizedOver(spark, schema)(_.select(expr(sql).as(c)))).toOption.collect {
+          case Project(Seq(Alias(g, _)), _) => AttributeReference(c, f.dataType)() -> g
+        }
+      }
+    }
 
   /** Columns a predicate could drive FILE SKIPPING by — the conjunct
     * shapes [[mayMatch]] understands (attr-vs-literal comparisons, IN,
@@ -34,158 +127,118 @@ object Pruning {
     * records these per read: they are exactly the columns whose
     * clustering would turn this predicate into skipped files.
     */
-  def prunableColumns(predicate: Column): Set[String] = {
-    def side(l: Expression, r: Expression): Option[String] =
-      attrName(l).filter(_ => litValue(r).isDefined)
-        .orElse(attrName(r).filter(_ => litValue(l).isDefined))
-    splitConjuncts(normalize(GraftExpr.expression(predicate))).flatMap {
-      case EqualTo(l, r) => side(l, r)
-      case LessThan(l, r) => side(l, r)
-      case LessThanOrEqual(l, r) => side(l, r)
-      case GreaterThan(l, r) => side(l, r)
-      case GreaterThanOrEqual(l, r) => side(l, r)
-      case In(a, list) if list.forall(_.foldable) => attrName(a)
+  def prunableColumns(conjuncts: Seq[Expression]): Set[String] = {
+    def side(l: Expression, r: Expression): Option[String] = (l, r) match {
+      case (Col(a), Lit(_)) => Some(a.name)
+      case (Lit(_), Col(a)) => Some(a.name)
+      case _ => None
+    }
+    conjuncts.flatMap {
+      case b: BinaryComparison => side(b.left, b.right)
+      case In(Col(a), list) if list.forall(_.foldable) => Some(a.name)
       case StartsWith(l, r) => side(l, r)
-      case IsNull(x) => attrName(x)
-      case IsNotNull(x) => attrName(x)
+      case IsNull(Col(a)) => Some(a.name)
+      case IsNotNull(Col(a)) => Some(a.name)
       case _ => None
     }.toSet
   }
 
   /** Generated-column pruning (Delta parity): when a partition column
-    * is generated from a source column through a MONOTONE expression
-    * (`day = CAST(ts AS DATE)`), a predicate on the source column
-    * implies bounds on the partition column — `ts >= L` implies
-    * `day >= g(L)` — so a query that filters only on the raw
-    * timestamp still prunes date partitions. Supported shapes:
-    * CAST(src AS DATE), to_date(src), date_trunc(unit, src),
-    * year(src), substring(src, 1, n). Conservative: unrecognized
-    * generation expressions or literals that fail to map derive
-    * nothing (keep behavior unchanged).
+    * `g` is generated from a source column through a MONOTONE
+    * expression (`day = CAST(ts AS DATE)`), a predicate on the source
+    * column implies bounds on the partition column — `ts >= L` implies
+    * `day >= g(L)` — so a query that filters only on the raw timestamp
+    * still prunes date partitions. `generated` pairs each generated
+    * column with its resolved generation expression. A literal maps by
+    * evaluating that expression with the literal in place of the source
+    * column: exactly the arithmetic the write path ran. Only the shapes
+    * [[monotone]] knows derive anything; a non-monotone one (a hash
+    * bucket) derives equality and IN only.
     */
-  private def deriveGenerated(generated: Map[String, String],
-                              conjuncts: Seq[Expression]): Seq[Expression] = {
-    if (generated.isEmpty) return Nil
-    generated.toSeq.flatMap { case (gcol, sql) =>
-      genMapping(sql).toSeq.flatMap { case (src, g, monotone) =>
-        def gLit(e: Expression): Option[Literal] =
-          litValue(e).flatMap { case (v, t) => g(v, t) }
-            .map { case (gv, gt) => Literal(gv, gt) }
-        val ga = UnresolvedAttribute(gcol)
+  private def deriveGenerated(generated: Seq[(Attribute, Expression)],
+                              conjuncts: Seq[Expression]): Seq[Expression] =
+    generated.flatMap { case (ga, g) =>
+      val src = g.references.toSeq match {
+        case Seq(a) => Some(a)
+        case _ => None
+      }
+      src.zip(monotone(g)).toSeq.flatMap { case (src, isMonotone) =>
+        def gLit(e: Expression): Option[Literal] = e match {
+          case Lit(l) if l.dataType == src.dataType =>
+            Try(Cast(g.transform { case a: Attribute if a.semanticEquals(src) => l },
+              ga.dataType, Some(sessionTz)).eval()).toOption
+              .filter(_ != null).map(Literal(_, ga.dataType))
+          case _ => None
+        }
+        // the generation expression was resolved apart from the
+        // predicate: the source column matches by name
+        def isSrc(e: Expression): Boolean = e match {
+          case Col(a) => a.name == src.name
+          case _ => false
+        }
         conjuncts.flatMap {
-          case EqualTo(l, r) if attrName(l).contains(src) =>
-            gLit(r).map(EqualTo(ga, _))
-          case EqualTo(l, r) if attrName(r).contains(src) =>
-            gLit(l).map(EqualTo(ga, _))
-          case In(a, list) if attrName(a).contains(src) && list.forall(_.foldable) =>
+          case EqualTo(l, r) if isSrc(l) => gLit(r).map(EqualTo(ga, _))
+          case EqualTo(l, r) if isSrc(r) => gLit(l).map(EqualTo(ga, _))
+          case In(a, list) if isSrc(a) =>
             val mapped = list.map(gLit)
             if (mapped.forall(_.isDefined)) Some(In(ga, mapped.flatten.distinct))
             else None
           // range shapes are sound ONLY for monotone generation
           // expressions — a hash-bucket mapping must never derive them
-          case _ if !monotone => None
-          case GreaterThan(l, r) if attrName(l).contains(src) =>
+          case _ if !isMonotone => None
+          case GreaterThan(l, r) if isSrc(l) =>
             gLit(r).map(GreaterThanOrEqual(ga, _)) // step fn: non-strict
-          case GreaterThanOrEqual(l, r) if attrName(l).contains(src) =>
-            gLit(r).map(GreaterThanOrEqual(ga, _))
-          case LessThan(l, r) if attrName(l).contains(src) =>
-            gLit(r).map(LessThanOrEqual(ga, _))
-          case LessThanOrEqual(l, r) if attrName(l).contains(src) =>
-            gLit(r).map(LessThanOrEqual(ga, _))
-          case GreaterThan(l, r) if attrName(r).contains(src) =>
+          case GreaterThanOrEqual(l, r) if isSrc(l) => gLit(r).map(GreaterThanOrEqual(ga, _))
+          case LessThan(l, r) if isSrc(l) => gLit(r).map(LessThanOrEqual(ga, _))
+          case LessThanOrEqual(l, r) if isSrc(l) => gLit(r).map(LessThanOrEqual(ga, _))
+          case GreaterThan(l, r) if isSrc(r) =>
             gLit(l).map(LessThanOrEqual(ga, _)) // lit > src ≡ src < lit
-          case GreaterThanOrEqual(l, r) if attrName(r).contains(src) =>
-            gLit(l).map(LessThanOrEqual(ga, _))
-          case LessThan(l, r) if attrName(r).contains(src) =>
-            gLit(l).map(GreaterThanOrEqual(ga, _))
-          case LessThanOrEqual(l, r) if attrName(r).contains(src) =>
-            gLit(l).map(GreaterThanOrEqual(ga, _))
+          case GreaterThanOrEqual(l, r) if isSrc(r) => gLit(l).map(LessThanOrEqual(ga, _))
+          case LessThan(l, r) if isSrc(r) => gLit(l).map(GreaterThanOrEqual(ga, _))
+          case LessThanOrEqual(l, r) if isSrc(r) => gLit(l).map(GreaterThanOrEqual(ga, _))
           case _ => None
         }
       }
     }
+
+  /** Whether a resolved generation expression over one column is a
+    * shape pruning derives from: Some(true) when it is monotone in its
+    * source (`CAST(ts AS DATE)`, `to_date`, `date_trunc`, `year`,
+    * `substring(s, 1, n)`), Some(false) for the hash bucket
+    * `pmod(hash(k), n)`, None for anything else.
+    */
+  private def monotone(g: Expression): Option[Boolean] = {
+    def chain(e: Expression): Boolean = e match {
+      case _: Attribute => true
+      case c: Cast => (c.dataType match {
+        case DateType | TimestampType | TimestampNTZType => true
+        case _ => false
+      }) && (c.child.dataType match {
+        case DateType | TimestampType | TimestampNTZType => chain(c.child)
+        case _ => false
+      })
+      case TruncTimestamp(_: Literal, c, _) => chain(c)
+      case Year(c) => chain(c)
+      case Substring(c, Literal(1, IntegerType), _: Literal) => chain(c)
+      case _ => false
+    }
+    g match {
+      case Pmod(h: Murmur3Hash, _: Literal, _) if h.children.forall(_.isInstanceOf[Attribute]) =>
+        Some(false)
+      case _ if chain(g) => Some(true)
+      case _ => None
+    }
   }
 
-  /** Parse a generation expression and, when it is a supported
-    * monotone shape over a single source attribute, return
-    * (srcColumn, literal mapper). The mapper applies the generation
-    * function to a predicate literal via resolved Catalyst eval —
-    * exactly the arithmetic the write path used to produce the
-    * partition value.
+  /** Top-level equality bindings `attr = literal` in the conjuncts —
+    * the shapes bloom-filter skipping can consume.
     */
-  private def genMapping(sql: String)
-      : Option[(String, (Any, DataType) => Option[(Any, DataType)], Boolean)] = Try {
-    org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseExpression(sql)
-  }.toOption.flatMap {
-    case c: Cast if c.dataType == DateType =>
-      attrName(c.child).map((_, castMapper(DateType), true))
-    case f: UnresolvedFunction =>
-      val args = f.arguments
-      (f.nameParts.last.toLowerCase, args) match {
-        case ("to_date", Seq(a)) =>
-          attrName(a).map((_, castMapper(DateType), true))
-        case ("date_trunc", Seq(u, a)) if litValue(u).isDefined =>
-          val unit = litValue(u).get._1
-          attrName(a).map((_, { (v: Any, t: DataType) =>
-            Try {
-              val ts = Cast(Literal(v, t), TimestampType).withTimeZone(sessionTz)
-              val e = TruncTimestamp(Literal(unit, StringType), ts, Some(sessionTz))
-              (e.eval(), TimestampType)
-            }.toOption.filter(_._1 != null)
-          }, true))
-        case ("year", Seq(a)) =>
-          attrName(a).map((_, { (v: Any, t: DataType) =>
-            Try {
-              val d = Cast(Literal(v, t), DateType).withTimeZone(sessionTz)
-              (Year(d).eval(), IntegerType)
-            }.toOption.filter(_._1 != null)
-          }, true))
-        case ("substring" | "substr", Seq(a, p, n))
-            if litValue(p).exists(_._1 == 1) && litValue(n).isDefined =>
-          attrName(a).map((_, { (v: Any, t: DataType) =>
-            if (t != StringType) None
-            else Try {
-              (Substring(Literal(v, t), Literal(1), Literal(
-                litValue(n).get._1.asInstanceOf[Number].intValue())).eval(),
-                StringType)
-            }.toOption.filter(_._1 != null)
-          }, true))
-        // hash buckets: `pmod(hash(src), n)` — NOT monotone, so only
-        // equality/IN predicates derive (a point lookup on the raw
-        // key prunes to one bucket); the eval replays the exact
-        // Murmur3(seed 42) + pmod arithmetic the write path ran
-        case ("pmod", Seq(h: UnresolvedFunction, nl))
-            if h.nameParts.last.equalsIgnoreCase("hash") &&
-              h.arguments.length == 1 && litValue(nl).isDefined =>
-          val n = litValue(nl).get._1.asInstanceOf[Number].intValue()
-          attrName(h.arguments.head).map((_, { (v: Any, t: DataType) =>
-            Try {
-              (Pmod(new Murmur3Hash(Seq(Literal(v, t))),
-                Literal(n)).eval(), IntegerType)
-            }.toOption.filter(_._1 != null)
-          }, false))
-        case _ => None
-      }
-    case _ => None
-  }
-
-  private def castMapper(to: DataType)
-      : (Any, DataType) => Option[(Any, DataType)] = (v, t) =>
-    Try {
-      (Cast(Literal(v, t), to).withTimeZone(sessionTz).eval(), to)
-    }.toOption.filter(_._1 != null)
-
-  /** Top-level equality bindings `attr = literal` in the predicate's
-    * conjuncts — the shapes bloom-filter skipping can consume.
-    */
-  def equalityBindings(predicate: Column): Seq[(String, Any)] =
-    splitConjuncts(normalize(GraftExpr.expression(predicate))).flatMap {
-      case EqualTo(l, r) =>
-        (attrName(l), litValue(r), attrName(r), litValue(l)) match {
-          case (Some(n), Some((v, _)), _, _) => Some(n -> v)
-          case (_, _, Some(n), Some((v, _))) => Some(n -> v)
-          case _ => None
-        }
+  def equalityBindings(conjuncts: Seq[Expression]): Seq[(String, Any)] =
+    conjuncts.flatMap {
+      case EqualTo(Col(a), Lit(l)) => Some(a.name -> l.value)
+      case EqualTo(Lit(l), Col(a)) => Some(a.name -> l.value)
+      case EqualNullSafe(Col(a), Lit(l)) => Some(a.name -> l.value)
+      case EqualNullSafe(Lit(l), Col(a)) => Some(a.name -> l.value)
       case _ => None
     }
 
@@ -193,51 +246,26 @@ object Pruning {
     * values) — a file survives bloom pruning if ANY value might be in
     * it.
     */
-  def inBindings(predicate: Column): Seq[(String, Seq[Any])] =
-    splitConjuncts(normalize(GraftExpr.expression(predicate))).flatMap {
-      case In(a, list) if list.forall(_.foldable) =>
-        attrName(a).map { n =>
-          n -> list.flatMap(litValue(_).map(_._1))
-        }
-      case _ => None
+  def inBindings(conjuncts: Seq[Expression]): Seq[(String, Seq[Any])] =
+    conjuncts.collect {
+      case In(Col(a), list) if list.forall(_.isInstanceOf[Literal]) =>
+        a.name -> list.collect { case Lit(l) => l.value }
     }
 
-  /** The Spark 4 Column→Expression converter leaves comparison
-    * operators as `UnresolvedFunction("=", ...)` nodes (the analyzer
-    * usually resolves them); rewrite the shapes pruning understands
-    * into concrete Catalyst operators.
-    */
-  private def normalize(e: Expression): Expression = e match {
-    case f: UnresolvedFunction =>
-      val args = f.arguments.map(normalize)
-      (f.nameParts.last.toLowerCase, args) match {
-        case ("and", Seq(l, r)) => And(l, r)
-        case ("or", Seq(l, r)) => Or(l, r)
-        case ("=" | "==", Seq(l, r)) => EqualTo(l, r)
-        case ("<", Seq(l, r)) => LessThan(l, r)
-        case ("<=", Seq(l, r)) => LessThanOrEqual(l, r)
-        case (">", Seq(l, r)) => GreaterThan(l, r)
-        case (">=", Seq(l, r)) => GreaterThanOrEqual(l, r)
-        case ("in", l +: rest) if rest.nonEmpty => In(l, rest)
-        case ("startswith", Seq(l, r)) => StartsWith(l, r)
-        case ("isnull", Seq(x)) => IsNull(x)
-        case ("isnotnull", Seq(x)) => IsNotNull(x)
-        case _ => e
-      }
-    case And(l, r) => And(normalize(l), normalize(r))
-    case Or(l, r) => Or(normalize(l), normalize(r))
-    case other => other
+  /** A column reference. */
+  private object Col {
+    def unapply(e: Expression): Option[AttributeReference] = e match {
+      case a: AttributeReference => Some(a)
+      case _ => None
+    }
   }
 
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
-    case other => Seq(other)
-  }
-
-  private def attrName(e: Expression): Option[String] = e match {
-    case a: UnresolvedAttribute => Some(a.name)
-    case a: AttributeReference => Some(a.name)
-    case _ => None
+  /** A non-null literal. */
+  private object Lit {
+    def unapply(e: Expression): Option[Literal] = e match {
+      case l: Literal if l.value != null => Some(l)
+      case _ => None
+    }
   }
 
   /** The timezone every derivation/eval here must share with the
@@ -248,157 +276,75 @@ object Pruning {
   private def sessionTz: String =
     org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone
 
-  /** Fold a (possibly Cast-wrapped) literal-valued expression.
-    * Casts of string literals to timestamp need a timezone to eval —
-    * use the session's (what Spark's own filter evaluation will use).
-    */
-  private def litValue(e: Expression): Option[(Any, DataType)] = e match {
-    case Literal(v, t) if v != null => Some((v, t))
-    case c: Cast if c.foldable =>
-      val cz = if (c.timeZoneId.isEmpty) c.withTimeZone(sessionTz) else c
-      Try((cz.eval(), c.dataType)).toOption.filter(_._1 != null)
-    case _ => None
-  }
-
-  /** Wall-clock rendering ("yyyy-MM-dd[ HH:mm:ss[.f]]") → epoch
-    * micros in `tz` — how partition-directory timestamp values parse
-    * back.
-    */
-  private def wallToMicros(s: String, tz: String): Long = {
-    val ldt = Try(java.time.LocalDateTime.parse(s.replace(' ', 'T')))
-      .getOrElse(java.time.LocalDate.parse(s).atStartOfDay())
-    val inst = ldt.atZone(java.time.ZoneId.of(tz)).toInstant
-    inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-  }
-
-  /** Compare a stored stat string against a literal of type `t`.
-    * None when incomparable (unknown type → keep file).
-    */
-  private def cmp(stored: String, lit: Any, t: DataType): Option[Int] = Try {
-    t match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        stored.toLong.compare(lit.asInstanceOf[Number].longValue())
-      case FloatType | DoubleType =>
-        stored.toDouble.compare(lit.asInstanceOf[Number].doubleValue())
-      case _: DecimalType =>
-        BigDecimal(stored).compare(lit.asInstanceOf[Decimal].toBigDecimal)
-      case StringType =>
-        // code-point (UTF-8 byte) order — the order the footer stats
-        // were written in; Java String.compareTo (UTF-16 unit order)
-        // disagrees between supplementary chars and [U+E000,U+FFFF],
-        // same hazard prefixUpper/StartsWith guard against
-        UTF8String.fromString(stored).compareTo(lit.asInstanceOf[UTF8String])
-      case TimestampType =>
-        // footer stats store epoch micros; partition-dir values render
-        // as session-local wall time — accept both
-        val us = Try(stored.toLong).getOrElse(wallToMicros(stored, sessionTz))
-        us.compare(lit.asInstanceOf[Number].longValue())
-      case TimestampNTZType =>
-        // NTZ wall time is zone-free: epoch encoding fixes UTC
-        val us = Try(stored.toLong).getOrElse(wallToMicros(stored, "UTC"))
-        us.compare(lit.asInstanceOf[Number].longValue())
-      case DateType =>
-        // footer stats store epoch days; partition-dir values render
-        // as "yyyy-MM-dd" — accept both
-        val days = Try(stored.toInt).getOrElse(
-          java.time.LocalDate.parse(stored).toEpochDay.toInt)
-        days.compare(lit.asInstanceOf[Number].intValue())
-      case BooleanType =>
-        stored.toBoolean.compare(lit.asInstanceOf[Boolean])
-      case _ => throw new MatchError(t)
-    }
-  }.toOption
-
   private def mayMatch(f: AddFile, partitionCols: Seq[String],
                        e: Expression): Boolean = {
 
-    def bounds(name: String): Option[(String, String)] =
-      if (partitionCols.contains(name))
-        f.partitionValues.get(name).map(v => (v, v))
+    /** The file's (min, max) for `a`, as `a`'s internal values. */
+    def bounds(a: AttributeReference): Option[(Any, Any)] =
+      if (partitionCols.contains(a.name))
+        Try(GraftFileIndex.partitionValue(f.partitionValues.get(a.name), a.dataType, sessionTz))
+          .toOption.filter(_ != null).map(v => (v, v))
       else for {
         st <- f.stats
-        mn <- st.minValues.get(name)
-        mx <- st.maxValues.get(name)
+        mn <- st.minValues.get(a.name).flatMap(Stats.decode(_, a.dataType))
+        mx <- st.maxValues.get(a.name).flatMap(Stats.decode(_, a.dataType))
       } yield (mn, mx)
 
     /** keep(cmp(min,lit), cmp(max,lit)): can the file contain a match? */
-    def boundsCheck(name: String, lv: Any, t: DataType,
+    def boundsCheck(a: AttributeReference, l: Literal,
                     keep: (Int, Int) => Boolean): Boolean =
-      bounds(name) match {
-        case Some((mn, mx)) =>
-          (cmp(mn, lv, t), cmp(mx, lv, t)) match {
-            case (Some(mnC), Some(mxC)) => keep(mnC, mxC)
-            case _ => true
-          }
-        case None => true
+      l.dataType != a.dataType || bounds(a).forall { case (mn, mx) =>
+        Try {
+          val ord = TypeUtils.getInterpretedOrdering(a.dataType)
+          keep(ord.compare(mn, l.value), ord.compare(mx, l.value))
+        }.getOrElse(true)
       }
 
     def decide(l: Expression, r: Expression,
-               keep: (Int, Int) => Boolean): Boolean =
-      (attrName(l), litValue(r), attrName(r), litValue(l)) match {
-        case (Some(name), Some((lv, t)), _, _) =>
-          boundsCheck(name, lv, t, keep)
-        case (_, _, Some(name), Some((lv, t))) =>
-          // lit op attr ≡ attr (flipped op) lit → mirror comparisons
-          boundsCheck(name, lv, t, (mnC, mxC) => keep(-mxC, -mnC))
-        case _ => true
-      }
+               keep: (Int, Int) => Boolean): Boolean = (l, r) match {
+      case (Col(a), Lit(v)) => boundsCheck(a, v, keep)
+      // lit op attr ≡ attr (flipped op) lit → mirror comparisons
+      case (Lit(v), Col(a)) => boundsCheck(a, v, (mnC, mxC) => keep(-mxC, -mnC))
+      case _ => true
+    }
 
+    val eq = (mnC: Int, mxC: Int) => mnC <= 0 && mxC >= 0
     e match {
-      case EqualTo(l, r) => decide(l, r, (mnC, mxC) => mnC <= 0 && mxC >= 0)
+      case EqualTo(l, r) => decide(l, r, eq)
+      // with a non-null literal, `<=>` holds exactly where `=` does
+      case EqualNullSafe(l, r) => decide(l, r, eq)
       case LessThan(l, r) => decide(l, r, (mnC, _) => mnC < 0)
       case LessThanOrEqual(l, r) => decide(l, r, (mnC, _) => mnC <= 0)
       case GreaterThan(l, r) => decide(l, r, (_, mxC) => mxC > 0)
       case GreaterThanOrEqual(l, r) => decide(l, r, (_, mxC) => mxC >= 0)
-      case In(a, list) if list.forall(_.foldable) =>
-        attrName(a) match {
-          case Some(name) => list.exists(v =>
-            litValue(v).forall { case (lv, t) =>
-              boundsCheck(name, lv, t, (mnC, mxC) => mnC <= 0 && mxC >= 0)
-            })
-          case None => true
-        }
-      case StartsWith(l, r) =>
-        (attrName(l), litValue(r)) match {
-          case (Some(name), Some((p: UTF8String, StringType))) =>
-            val prefix = p.toString
-            bounds(name) match {
-              case Some((mn, mx)) =>
-                // matches form the interval [prefix, prefixUpper):
-                // file range [mn,mx] must intersect it. Footer bounds
-                // stay valid under parquet stat truncation (truncated
-                // min is ≤ data, truncated max ≥ data), so this only
-                // ever keeps extra files, never drops a match.
-                // Compare as UTF8String (code-point order): the footer
-                // min/max were written in UTF-8 byte order, and Java
-                // String.compareTo (UTF-16 unit order) disagrees with
-                // it between supplementary chars and [U+E000,U+FFFF].
-                UTF8String.fromString(mx)
-                    .compareTo(UTF8String.fromString(prefix)) >= 0 &&
-                  prefixUpper(prefix).forall(u => UTF8String.fromString(mn)
-                    .compareTo(UTF8String.fromString(u)) < 0)
-              case None => true
-            }
+      case In(Col(a), list) if list.forall(_.foldable) =>
+        list.exists {
+          case Lit(v) => boundsCheck(a, v, eq)
           case _ => true
         }
-      case IsNull(a) =>
-        attrName(a) match {
-          // a partition column's value is constant per file; null
-          // partitions surface as the default-partition dir — keep
-          case Some(name) if !partitionCols.contains(name) =>
-            f.stats.forall(st => st.nullCounts.get(name).forall(_ > 0))
+      case StartsWith(Col(a), Lit(Literal(p: UTF8String, _))) if a.dataType == StringType =>
+        bounds(a) match {
+          case Some((mn: UTF8String, mx: UTF8String)) =>
+            // matches form the interval [prefix, prefixUpper):
+            // file range [mn,mx] must intersect it. Footer bounds
+            // stay valid under parquet stat truncation (truncated
+            // min is ≤ data, truncated max ≥ data), so this only
+            // ever keeps extra files, never drops a match.
+            // UTF8String compares in code-point (UTF-8 byte) order,
+            // the order the footer min/max were written in.
+            mx.compareTo(p) >= 0 &&
+              prefixUpper(p.toString).forall(u => mn.compareTo(UTF8String.fromString(u)) < 0)
           case _ => true
         }
-      case IsNotNull(a) =>
-        attrName(a) match {
-          case Some(name) if !partitionCols.contains(name) =>
-            f.stats.forall(st =>
-              st.nullCounts.get(name).forall(_ < st.numRecords))
-          case _ => true
-        }
+      case IsNull(Col(a)) if !partitionCols.contains(a.name) =>
+        // a partition column's value is constant per file; null
+        // partitions surface as the default-partition dir — keep
+        f.stats.forall(st => st.nullCounts.get(a.name).forall(_ > 0))
+      case IsNotNull(Col(a)) if !partitionCols.contains(a.name) =>
+        f.stats.forall(st => st.nullCounts.get(a.name).forall(_ < st.numRecords))
       case Or(l, r) =>
         mayMatch(f, partitionCols, l) || mayMatch(f, partitionCols, r)
-      case Literal(false, BooleanType) => false // an empty key set
+      case Literal(false, BooleanType) => false // folded to false, or an empty key set
       case _ => true // unsupported shape → cannot exclude
     }
   }

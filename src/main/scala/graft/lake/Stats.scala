@@ -7,9 +7,13 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** File-level column statistics straight from parquet footers —
   * metadata-only reads (no data scan), distributed across executors,
@@ -38,7 +42,7 @@ object Stats {
       val mins = scala.collection.mutable.Map[String, Any]()
       val maxs = scala.collection.mutable.Map[String, Any]()
       val nulls = scala.collection.mutable.Map[String, Long]()
-      val types = scala.collection.mutable.Map[String, PrimitiveTypeName]()
+      val types = scala.collection.mutable.Map[String, PrimitiveType]()
       footer.getBlocks.asScala.foreach { block =>
         numRecords += block.getRowCount
         block.getColumns.asScala.foreach { cc =>
@@ -47,8 +51,7 @@ object Stats {
           if (st != null && !st.isEmpty) {
             nulls(name) = nulls.getOrElse(name, 0L) + st.getNumNulls
             if (st.hasNonNullValue) {
-              val tpe = cc.getPrimitiveType.getPrimitiveTypeName
-              types(name) = tpe
+              types(name) = cc.getPrimitiveType
               val (mn, mx) = (st.genericGetMin, st.genericGetMax)
               val cmp = st.comparator.asInstanceOf[java.util.Comparator[Any]]
               mins(name) = mins.get(name).map(m => if (cmp.compare(mn, m) < 0) mn else m).getOrElse(mn)
@@ -57,12 +60,6 @@ object Stats {
           }
         }
       }
-      def render(v: Any, t: PrimitiveTypeName): String = t match {
-        case PrimitiveTypeName.BINARY =>
-          new String(v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes,
-            java.nio.charset.StandardCharsets.UTF_8)
-        case _ => String.valueOf(v)
-      }
       FileStats(
         numRecords,
         mins.map { case (k, v) => k -> render(v, types(k)) }.toMap,
@@ -70,6 +67,41 @@ object Stats {
         nulls.toMap)
     } finally reader.close()
   }
+
+  /** One footer min/max in the [[FileStats]] string form: a decimal
+    * as its unscaled integer whether parquet stores it as INT32, INT64
+    * or bytes (precision > 18), other binaries as UTF-8 text, the rest
+    * as Java prints the physical value.
+    */
+  private def render(v: Any, t: PrimitiveType): String = v match {
+    case b: Binary if t.getLogicalTypeAnnotation
+        .isInstanceOf[LogicalTypeAnnotation.DecimalLogicalTypeAnnotation] =>
+      new java.math.BigInteger(b.getBytes).toString
+    case b: Binary if t.getPrimitiveTypeName == PrimitiveTypeName.BINARY =>
+      new String(b.getBytes, java.nio.charset.StandardCharsets.UTF_8)
+    case _ => String.valueOf(v)
+  }
+
+  /** A stored bound of a `dt` column as the Catalyst internal value
+    * that column's ordering compares: a decimal scaled by the column's
+    * own scale, a date as its epoch day, a timestamp as epoch micros.
+    * None for a type file skipping does not compare (binary, nested, a
+    * string of any collation but the default, byte-ordered one) and for a string
+    * no writer of this form produces, such as the `Binary{…}` text old
+    * logs hold for wide decimals — the caller keeps the file.
+    */
+  def decode(stored: String, dt: DataType): Option[Any] = Try[Any](dt match {
+    case ByteType => stored.toByte
+    case ShortType => stored.toShort
+    case IntegerType | DateType => stored.toInt
+    case LongType | TimestampType | TimestampNTZType => stored.toLong
+    case FloatType => stored.toFloat
+    case DoubleType => stored.toDouble
+    case d: DecimalType => Decimal(new java.math.BigDecimal(
+      new java.math.BigInteger(stored), d.scale), d.precision, d.scale)
+    case BooleanType => stored.toBoolean
+    case st: StringType if st == StringType => UTF8String.fromString(stored)
+  }).toOption
 
   /** Distributed footer-stats for a batch of files (abs paths). */
   def collect(spark: SparkSession, absPaths: Seq[String]): Map[String, FileStats] =

@@ -1,13 +1,9 @@
 package graft.lake
 
-import java.util.Locale
 import java.util.zip.CRC32
 
-import scala.util.Try
-
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, Literal}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.variant.VariantGet
 import org.apache.spark.sql.functions.{col, try_variant_get}
 import org.apache.spark.sql.types.{DataType, StringType, VariantType}
@@ -123,61 +119,21 @@ object VariantShred {
         try_variant_get(col(pv), sp.path, sp.dt.sql))
     }
 
-  /** Pruning-side rewrite: replace every `variant_get`/
+  /** Pruning-side rewrite: replace every resolved `variant_get` /
     * `try_variant_get(vcol, path, type)` whose (column, path, type)
-    * triple matches a declared shred with the companion attribute.
-    * The result is ONLY ever handed to [[Pruning.prune]] /
-    * [[GraftTable]] bloom skipping (whose comparisons type off the
-    * LITERAL side, so the unresolved companion attribute needs no
-    * schema entry) — never evaluated against rows.
+    * triple matches a declared shred with the companion column, an
+    * attribute of the shred's declared type. The result is ONLY ever
+    * handed to [[Pruning.prune]], which types each companion bound by
+    * that attribute as it types any column's — never evaluated against
+    * rows.
     */
-  def rewrite(pred: Column, specs: Seq[Spec]): Column =
-    if (specs.isEmpty) pred
-    else GraftExpr.column(rewriteExpr(GraftExpr.expression(pred), specs))
-
-  private def rewriteExpr(e: Expression, specs: Seq[Spec]): Expression =
-    e.transformUp {
-      case f: UnresolvedFunction
-          if isVariantGet(f.nameParts.last) && f.arguments.length == 3 =>
-        matchSpec(f.arguments(0), f.arguments(1), f.arguments(2), specs)
-          .getOrElse(f)
-      // defensive: an already-analyzed predicate (relation-layer
-      // callers) carries the resolved node instead
-      case vg: VariantGet =>
-        VariantGet.unapply(vg).flatMap { case (child, path, dt, _, _) =>
-          pathString(path).flatMap(p => specs.find(sp =>
-            attrName(child).contains(sp.vcol) && sp.path == p &&
-              sp.dt == dt).map(sp => attr(sp.shredCol)))
-        }.getOrElse(vg)
-    }
-
-  private def isVariantGet(name: String): Boolean = {
-    val n = name.toLowerCase(Locale.ROOT)
-    n == "variant_get" || n == "try_variant_get"
-  }
-
-  private def matchSpec(v: Expression, path: Expression, tpe: Expression,
-                        specs: Seq[Spec]): Option[Expression] =
-    for {
-      name <- attrName(v)
-      p <- pathString(path)
-      t <- pathString(tpe)
-      dt <- Try(DataType.fromDDL(t)).toOption
-      sp <- specs.find(sp => sp.vcol == name && sp.path == p && sp.dt == dt)
-    } yield attr(sp.shredCol)
-
-  private def attr(name: String): Expression = UnresolvedAttribute(Seq(name))
-
-  private def attrName(e: Expression): Option[String] = e match {
-    case a: UnresolvedAttribute => Some(a.name)
-    case a: AttributeReference => Some(a.name)
-    case _ => None
-  }
-
-  private def pathString(e: Expression): Option[String] = e match {
-    case Literal(s: UTF8String, StringType) => Some(s.toString)
-    case _ => None
-  }
+  def rewrite(conjuncts: Seq[Expression], specs: Seq[Spec]): Seq[Expression] =
+    if (specs.isEmpty) conjuncts
+    else conjuncts.map(_.transformUp {
+      case vg @ VariantGet(a: Attribute, Literal(p: UTF8String, StringType), dt, _, _) =>
+        specs.find(sp => sp.vcol == a.name && sp.path == p.toString && sp.dt == dt)
+          .map(sp => AttributeReference(sp.shredCol, sp.dt)()).getOrElse(vg)
+    })
 
   /** Validation shared by the dedicated API and the generic
     * TBLPROPERTIES path: the variant column must exist with VARIANT

@@ -46,11 +46,12 @@ private[graft] final case class GraftDml(table: GraftLakeTable, op: String,
     val src = AttributeSet(source.toSeq.flatMap(_.output))
     def column(prefix: String)(e: Expression): Column = GraftExpr.column(e.transformUp {
       // BETWEEN and the other runtime-replaceable forms read as their
-      // replacement, so the planner's pruning sees `>=` / `<=`
+      // replacement, and a With (how BETWEEN's replacement shares its
+      // input) is inlined: a With re-derives its references' types from
+      // its definitions, so it cannot hold the unresolved names its
+      // attributes turn into below
       case r: RuntimeReplaceable => r.replacement
     }.transformUp {
-      // a With (how BETWEEN's replacement shares its input) holds a
-      // definition by id: inline it, so its attributes can turn into names
       case w: With =>
         val defs = w.defs.map(d => d.id -> d.child).toMap
         w.child.transform { case r: CommonExpressionRef if defs.contains(r.id) => defs(r.id) }

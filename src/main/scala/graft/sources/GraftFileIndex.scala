@@ -128,8 +128,8 @@ private[graft] object GraftFileIndex {
     * inference types a partition column the read schema declares: a
     * cast under the session time zone. The Hive default marker and an
     * absent value read as null. A date stored as its epoch day (how
-    * Iceberg attaches once stored it) reads as that day, as
-    * [[graft.lake.Pruning]] compares it.
+    * Iceberg attaches once stored it) reads as that day.
+    * [[graft.lake.Pruning]] types partition values by this function too.
     */
   def partitionValue(v: Option[String], dt: DataType, timeZone: String): Any =
     v.filter(_ != ParquetShim.defaultPartitionName).map {

@@ -473,7 +473,8 @@ class DeltaExportSpec extends GraftSparkSpec {
       "(external data skipping food)") {
     import spark.implicits._
     val t = GraftTable.create(spark, tmpDir("dexp_stats"),
-      (1 to 100).map(i => (i.toLong, s"s$i")).toDF("id", "v"))
+      (1 to 100).map(i => (i.toLong, s"s$i")).toDF("id", "v")
+        .withColumn("d", (col("id") / 4).cast("decimal(10,2)")))
     DeltaExport.export(t)
     val adds = actions(t, 0L).filter(_.has("add")).map(_.get("add"))
     val sts = adds.map(a => mapper.readTree(a.get("stats").asText()))
@@ -485,6 +486,12 @@ class DeltaExportSpec extends GraftSparkSpec {
     assert(sts.forall(_.get("minValues").get("v").isTextual),
       "string min must be a JSON string")
     assert(sts.forall(_.get("nullCount").get("id").asLong() == 0L))
+    // a decimal bound is the column's value, not the unscaled integer
+    // the footer stats store
+    assert(sts.map(st => BigDecimal(st.get("minValues").get("d").decimalValue())).min ==
+      BigDecimal("0.25"))
+    assert(sts.map(st => BigDecimal(st.get("maxValues").get("d").decimalValue())).max ==
+      BigDecimal("25.00"))
   }
 
   test("attachDelta seeds from a classic checkpoint parquet when early " +

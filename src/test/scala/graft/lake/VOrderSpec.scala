@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
 class VOrderSpec extends GraftSparkSpec {
 
   private def filesCovering(t: GraftTable, flag: String): Int =
-    Pruning.prune(t.snapshot.activeFiles, t.snapshot.schema,
-      t.snapshot.partitionColumns, col("l_returnflag") === flag).size
+    t.filesFor(col("l_returnflag") === flag).size
 
   test("OPTIMIZE under VORDER range-clusters files; pruning reads fewer") {
     val li = Tables(spark, sfDir, "lineitem")

@@ -150,6 +150,15 @@ class DmlParitySpec extends GraftSparkSpec {
     }
   }
 
+  test("BETWEEN conditions remove the same files through every entry point, copy-on-write") {
+    val between = "part BETWEEN 'p0' AND 'p1' AND v BETWEEN 100 AND 400"
+    parity("delete_between", mor = false)(_.delete(expr(between)),
+      n => s"DELETE FROM $n WHERE $between", n => s"DELETE FROM $n WHERE $between")
+    parity("update_between", mor = false)(_.update(expr(between), Map("v" -> (col("v") + 100))),
+      n => s"UPDATE $n SET v = v + 100 WHERE $between",
+      n => s"UPDATE $n SET v = v + 100 WHERE $between")
+  }
+
   test("MERGE shapes the planner cannot express refuse alike in GraftSql and at catalog analysis") {
     useCatalog()
     spark.range(3).selectExpr("id AS k", "id", "CAST(0 AS BIGINT) AS v")

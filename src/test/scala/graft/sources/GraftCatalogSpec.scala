@@ -198,12 +198,8 @@ class GraftCatalogSpec extends GraftSparkSpec {
     // partitions via the monotone generation expression
     val warehouseT = graft.lake.GraftTable.forPath(spark, dir.toString)
     val snap = warehouseT.snapshot
-    val gens = snap.metadata.map(_.properties).getOrElse(Map.empty)
-      .collect { case (k, v) if k.startsWith("graft.generated.") =>
-        k.stripPrefix("graft.generated.") -> v }
-    val pruned = graft.lake.Pruning.prune(snap.activeFiles, snap.schema,
-      snap.partitionColumns,
-      col("ts") >= lit("2024-03-02 00:00:00").cast("timestamp"), gens)
+    val pruned = warehouseT.filesFor(
+      col("ts") >= lit("2024-03-02 00:00:00").cast("timestamp"), snap)
     assert(pruned.forall(_.path.contains("ts_day=2024-03-02")) &&
       pruned.nonEmpty,
       s"ts predicate must prune to the 03-02 partition, kept: " +
@@ -228,22 +224,17 @@ class GraftCatalogSpec extends GraftSparkSpec {
     val bDir = java.nio.file.Paths.get(tmpWarehouse, "default", "pb")
     val bt = graft.lake.GraftTable.forPath(spark, bDir.toString)
     val bSnap = bt.snapshot
-    val bGens = bSnap.metadata.map(_.properties).getOrElse(Map.empty)
-      .collect { case (key, value) if key.startsWith("graft.generated.") =>
-        key.stripPrefix("graft.generated.") -> value }
     val allBuckets = bSnap.activeFiles
       .flatMap(_.partitionValues.get("k_bucket")).distinct
     assert(allBuckets.size > 1, "200 keys must span multiple buckets")
-    val point = graft.lake.Pruning.prune(bSnap.activeFiles, bSnap.schema,
-      bSnap.partitionColumns, col("k") === 42L, bGens)
+    val point = bt.filesFor(col("k") === 42L, bSnap)
     assert(point.flatMap(_.partitionValues.get("k_bucket")).distinct.size == 1,
       "k = 42 must prune to a single bucket")
     // sanity: the surviving bucket actually holds the row
     assert(point.nonEmpty)
     // footer stats may still skip low-k files, but the survivors must
     // span MANY buckets — a hash-derived range bound would be unsound
-    val ranged = graft.lake.Pruning.prune(bSnap.activeFiles, bSnap.schema,
-      bSnap.partitionColumns, col("k") >= 42L, bGens)
+    val ranged = bt.filesFor(col("k") >= 42L, bSnap)
     assert(ranged.flatMap(_.partitionValues.get("k_bucket")).distinct.size ==
       allBuckets.size,
       "a range predicate must not derive hash-bucket bounds")
@@ -262,13 +253,8 @@ class GraftCatalogSpec extends GraftSparkSpec {
     assert(spark.sql("SELECT COUNT(*) AS n FROM graftc.default.pc " +
       "WHERE k = 7 AND ts >= TIMESTAMP'2024-05-02 00:00:00'")
       .head().getLong(0) == 1)
-    val pcGens = pcT.snapshot.metadata.map(_.properties).getOrElse(Map.empty)
-      .collect { case (key, value) if key.startsWith("graft.generated.") =>
-        key.stripPrefix("graft.generated.") -> value }
-    val prunedBoth = graft.lake.Pruning.prune(pcT.snapshot.activeFiles,
-      pcT.snapshot.schema, pcT.snapshot.partitionColumns,
-      col("k") === 7L && col("ts") >= java.sql.Timestamp.valueOf("2024-05-02 00:00:00"),
-      pcGens)
+    val prunedBoth = pcT.filesFor(
+      col("k") === 7L && col("ts") >= java.sql.Timestamp.valueOf("2024-05-02 00:00:00"))
     assert(prunedBoth.flatMap(_.partitionValues.get("k_bucket")).distinct.size == 1,
       "the k = 7 conjunct must prune to one bucket")
     assert(!prunedBoth.flatMap(_.partitionValues.get("ts_day")).distinct
