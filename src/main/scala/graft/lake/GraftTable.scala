@@ -251,6 +251,16 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         "row id; deduplicate the source first")
   }
 
+  /** The log paths of the `files` that the `_metadata.file_path` URIs
+    * `paths` name; a URI naming none fails rather than drop changes.
+    */
+  private def filesAt(files: Seq[AddFile], paths: Seq[String]): Set[String] = {
+    val byFsPath = files.map(f => GraftTable.canonicalFsPath(dataPath(f.path)) -> f.path).toMap
+    paths.map(p => byFsPath.getOrElse(GraftTable.canonicalFsPath(p),
+      throw new IllegalStateException(
+        s"changed rows in $p, which names none of the scanned files of $path"))).toSet
+  }
+
   /** Per-key-column [min,max] of the source delta as ONE 1-row agg;
     * the conjunction lets stats pruning scope the merge rewrite to
     * target files overlapping the delta on EVERY key column.
@@ -3762,8 +3772,9 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       .exists(m => m.equalsIgnoreCase("merge-on-read") || m.equalsIgnoreCase("mor"))
 
   /** DELETE FROM ... WHERE cond (reference 02-lab:220-225).
-    * Copy-on-write: only stats-pruned candidate files are rewritten;
-    * rows where cond is false/null survive.
+    * Copy-on-write: only the files that hold a matching row are
+    * rewritten (stats prune the scan that finds them); rows where cond
+    * is false/null survive.
     */
   def delete(cond: Column): Map[String, String] = deleteRows(cond, mor = false)
 
@@ -4020,9 +4031,11 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       val sourceMetrics = source.fold(Map.empty[String, String])(src =>
         Map("numSourceRows" -> src.count().toString))
       source.foreach { src => validateConstraints(src, s); enforceSchema(src.schema, s.schema) }
-      val candidates = source.fold(Seq.empty[AddFile])(src =>
+      val keptByStats = source.fold(Seq.empty[AddFile])(src =>
         this.candidates(s, s.activeFiles, skippingConjuncts(s, sourceKeyRange(src, keys))))
-      val restFiles = nmbsRestFiles(s, candidates.map(_.path).toSet, c.nmbsUpdate, c.nmbsDelete)
+      val restByStats =
+        nmbsRestFiles(s, keptByStats.map(_.path).toSet, c.nmbsUpdate, c.nmbsDelete)
+      val scanned = keptByStats ++ restByStats
       val rt = rowTrackingOn(s)
       val fields = s.schema.fieldNames.toIndexedSeq.map(col)
       val outFields = if (rt) fields :+ col(RowIdCol) else fields
@@ -4033,8 +4046,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       def target(files: Seq[AddFile]): DataFrame = scan(s, files,
         (if (rt) Set(RowIdCol) else Set.empty[String]) ++
           (if (mor) Set("file_path", "row_index") else Set.empty[String]))
-      val candT = target(candidates)
-      val restT = target(restFiles)
       def isTrue(e: Column): Column = coalesce(e, lit(false)) === true
       def isFalse(e: Column): Column = coalesce(e, lit(false)) === false
 
@@ -4056,6 +4067,25 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         src.join(tgt.select(keyCols: _*), keys, "left_anti"))(cond =>
         prefixed(src).join(tgt, cond, "left_anti")
           .select(src.columns.toIndexedSeq.map(n => col(s"src_$n").as(n)): _*))
+      val changeConds = c.nmbsDelete.toSeq ++ c.nmbsUpdate.map(_._1.getOrElse(lit(true)))
+
+      // copy-on-write rewrites only the kept files that DO hold a
+      // changed row (Delta's touched files), found by one scan for the
+      // files of matched rows and of rows an NMBS condition holds for;
+      // the rest would be copied unchanged. MoR marks rows in place
+      val (candidates, restFiles) =
+        if (mor || scanned.isEmpty) (keptByStats, restByStats)
+        else {
+          def withPath(files: Seq[AddFile]): DataFrame = scan(s, files, Set("file_path"))
+          val hitRows = source.map(semi(_, withPath(keptByStats))).toSeq ++
+            changeConds.reduceOption(_ || _).map(cc => withPath(scanned).filter(isTrue(cc)))
+          val hit = hitRows.map(_.select("file_path")).reduceOption(_ unionByName _)
+            .fold(Set.empty[String])(df =>
+              filesAt(scanned, df.distinct().collect().toSeq.map(_.getString(0))))
+          (keptByStats.filter(f => hit(f.path)), restByStats.filter(f => hit(f.path)))
+        }
+      val candT = target(candidates)
+      val restT = target(restFiles)
 
       // MATCHED clauses: the delete condition first, then the update
       // (gated by its condition), both evaluated on the target row. MoR
@@ -4103,7 +4133,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       // persisted when more than the marks read them
       val untouched = source.map(anti(_, candT))
       val unmatched = untouched.fold(restT)(_.unionByName(restT))
-      val changeConds = c.nmbsDelete.toSeq ++ c.nmbsUpdate.map(_._1.getOrElse(lit(true)))
       val nmbsBase =
         if (changeConds.isEmpty) None
         else if (!mor) Some(unmatched)
@@ -4142,7 +4171,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
           .map(applyNmbs(_, s, c.nmbsUpdate, c.nmbsDelete)) ++
           keptMatched ++ updPost ++ inserts)
           .map(_.select(outFields: _*)).reduce(_ unionByName _)
-        rewriteCommit(s, op, touched, mayInsert = inserts.isDefined,
+        rewriteCommit(s, op, touched, scanned.map(_.path).toSet, mayInsert = inserts.isDefined,
           stage(rewritten), Some(changeRows), sourceMetrics, extraActions)
       } else {
         val marks = Seq(delRows, updPre, nmbsDel, nmbsUpdPre).flatten
@@ -4160,11 +4189,13 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
 
   /** The copy-on-write commit tail of the planner: the rewritten
     * candidates replace the removed files in one optimistic
-    * commit, with a CDC sidecar when the table has `graft.cdf`. With
+    * commit, with a CDC sidecar when the table has `graft.cdf`; a
+    * concurrent removal of any `scanned` file conflicts. With
     * nothing to remove and nothing to insert the statement is a no-op
     * commit, and `adds` and `cdc` are never evaluated.
     */
   private def rewriteCommit(s: Snapshot, op: String, removed: Seq[AddFile],
+      scanned: Set[String],
       mayInsert: Boolean, adds: => Seq[AddFile], cdc: => Option[DataFrame],
       metrics: Map[String, String], extraActions: Seq[Action] = Nil)
       : Map[String, String] = {
@@ -4183,7 +4214,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       "numAddedFiles" -> staged.size.toString)
     commitOrReclaimCdc(cdcActions)(commitAndCheckpoint(
       Seq(info(op, metrics = m)) ++ extraActions ++ cdcActions ++ removes ++ staged,
-      readVersion = s.version))
+      readVersion = s.version, readPaths = scanned))
     m
   }
 

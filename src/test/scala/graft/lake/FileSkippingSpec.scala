@@ -114,6 +114,35 @@ class FileSkippingSpec extends GraftSparkSpec {
     finally (1 to n).foreach(i => spark.sql(s"DROP TABLE IF EXISTS graftskip.default.skip_$i"))
   }
 
+  test("copy-on-write DML rewrites the files that hold its rows, not every file stats keep") {
+    // four files whose id ranges all span 0–79: file i holds id % 4 == i
+    def interleaved(path: String): GraftTable = {
+      val t = GraftTable.create(spark, path, rows.filter(col("id") % 4 === 0).coalesce(1))
+      (1 until 4).foreach(i => t.append(rows.filter(col("id") % 4 === i).coalesce(1)))
+      assert(t.snapshot.activeFiles.size == 4 && t.pruneFiles(expr("id = 5")) == (4, 4))
+      t
+    }
+    val d = interleaved(tmpDir("skip-touched-delete"))
+    assert(d.delete(expr("id = 5"))("numRemovedFiles") == "1")
+    assert(ids(d.toDF) == (0L until 80L).toSet - 5L)
+    // no row left to delete: nothing is rewritten
+    assert(d.delete(expr("id = 5"))("numRemovedFiles") == "0")
+    assert(d.snapshot.activeFiles.size == 4)
+    val u = interleaved(tmpDir("skip-touched-update"))
+    assert(u.update(expr("id IN (2, 6)"), Map("v" -> lit(-1)))("numRemovedFiles") == "1")
+    assert(ids(u.toDF.filter(col("v") === -1)) == Set(2L, 6L))
+    assert(u.toDF.count() == 80)
+
+    // ids 1 and 78 lie in two of the 8 range-clustered files; the key
+    // range between them (and the new key 100) keeps all 8
+    val g = clustered(tmpDir("skip-touched-merge"))
+    val src = rows.filter(col("id").isin(1, 78)).withColumn("v", lit(-1))
+      .unionByName(rows.filter(col("id") === 0).withColumn("id", lit(100L)))
+    assert(g.merge(src, "id")("numRemovedFiles") == "2")
+    assert(ids(g.toDF.filter(col("v") === -1)) == Set(1L, 78L))
+    assert(ids(g.toDF) == (0L until 80L).toSet + 100L)
+  }
+
   test("auto-collected stats after an append equal a fresh ANALYZE of the same rows") {
     val all = spark.range(60).select(col("id"),
       (col("id") + 0.25).cast("decimal(10,2)").as("d"),
