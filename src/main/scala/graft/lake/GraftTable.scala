@@ -1109,16 +1109,18 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * freshness — recompute after large rewrites to restore skipping.
     */
   def computeBloomFilter(column: String, fpp: Double = 0.01): Long = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.unsafe.types.UTF8String
     import org.apache.spark.util.sketch.BloomFilter
     val s = snapshot
     require(s.schema.fieldNames.contains(column), s"no such column: $column")
     val dt = s.schema(column).dataType
     import org.apache.spark.sql.types._
-    val put: (BloomFilter, Any) => Unit = dt match {
+    val (value, put): (Column, (BloomFilter, InternalRow) => Unit) = dt match {
       case ByteType | ShortType | IntegerType | LongType =>
-        (b, v) => { b.putLong(v.asInstanceOf[Number].longValue()); () }
+        (col(column).cast(LongType), (b, r) => { b.putLong(r.getLong(1)); () })
       case StringType =>
-        (b, v) => { b.putString(v.asInstanceOf[String]); () }
+        (col(column), (b, r) => { b.putString(r.getUTF8String(1).toString); () })
       case other => throw new IllegalArgumentException(
         s"bloom filters support integral/string columns, not $other")
     }
@@ -1127,18 +1129,28 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val pathByAbs = s.activeFiles.map(f =>
       Paths.get(dataPath(f.path)).toAbsolutePath.normalize.toString -> f.path).toMap
     val bc = spark.sparkContext.broadcast(pathByAbs)
+    // A task reads its files one after another, so it resolves a file's
+    // `_metadata.file_path` URI to the log path once, when the file
+    // changes, and fills one bloom per log path.
     val perFile = scan(s, s.activeFiles, Set("file_path"))
-      .select(col("file_path"), col(column)).rdd
-      .flatMap { r =>
-        if (r.isNullAt(1)) None
-        else {
-          val abs = new java.net.URI(r.getString(0)).getPath
-          bc.value.get(abs).map(lp => (lp, r.get(1)))
+      .where(col(column).isNotNull).select(col("file_path"), value)
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        val blooms = scala.collection.mutable.HashMap.empty[String, BloomFilter]
+        var uri: UTF8String = null
+        var bf: BloomFilter = null // null while the file is not in the snapshot
+        rows.foreach { r =>
+          if (!r.getUTF8String(0).equals(uri)) {
+            uri = r.getUTF8String(0).clone()
+            bf = bc.value.get(new java.net.URI(uri.toString).getPath)
+              .map(lp => blooms.getOrElseUpdate(lp, BloomFilter.create(expected, fpp)))
+              .orNull
+          }
+          if (bf != null) put(bf, r)
         }
+        blooms.iterator
       }
-      .aggregateByKey(BloomFilter.create(expected, fpp))(
-        (bf, v) => { put(bf, v); bf },
-        (a, b) => a.mergeInPlace(b))
+      .reduceByKey((a, b) => a.mergeInPlace(b))
       .mapValues { bf =>
         val bos = new java.io.ByteArrayOutputStream()
         bf.writeTo(bos)
@@ -4842,9 +4854,11 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         .foreach(c => computeBloomFilter(c))
   }
 
-  /** OPTIMIZE ... ZORDER BY (cols): full rewrite, rows clustered by
-    * Morton rank so file min/max ranges are tight on every clustered
-    * column (reference 02-lab:139-163).
+  /** OPTIMIZE ... ZORDER BY (cols): full rewrite, range-partitioned
+    * by Morton rank so each file's min/max ranges are tight on every
+    * clustered column (reference 02-lab:139-163). The tight ranges are
+    * per file: on a partitioned table the writer's sort on the
+    * partition columns sets the order of rows inside each file.
     */
   def zorderBy(targetBytes: Long, cols: String*): Map[String, String] =
     zorderWhere(targetBytes, None, cols: _*)

@@ -119,4 +119,31 @@ class BloomSpec extends GraftSparkSpec {
       li.limit(4000).unionAll(li.limit(500)).unionAll(li.limit(500))
         .filter(col("l_returnflag") === "R").count())
   }
+
+  test("bloom on escaped partition paths: one sidecar row per file, keyed by its log path") {
+    import spark.implicits._
+    // ' ', '%' and 'é' come back percent-encoded in `_metadata.file_path`
+    val parts = Seq("a b", "50%", "é")
+    val df = (0 until 3000).map(i => (2L * i, parts(i % 3))).toDF("k", "p")
+    val t = GraftTable.create(spark, tmpDir("bloom-escaped"), df.repartition(4),
+      partitionBy = Seq("p"))
+    t.computeBloomFilter("k")
+    val rel = t.snapshot.metadata.map(_.properties).getOrElse(Map.empty)
+      .apply("graft.bloom.k")
+    val keyed = spark.read.parquet(s"${t.path}/$rel").select("file_path")
+      .collect().map(_.getString(0)).sorted.toSeq
+    val active = t.snapshot.activeFiles.map(_.path).sorted
+    assert(active.size >= parts.size)
+    assert(keyed == active, s"sidecar rows $keyed, active files $active")
+
+    // odd keys are absent but inside every file's [min, max]
+    val (kept, total) = pruneBothSides(t, col("k") === 2999L)
+    assert(kept == 0, s"an absent key should prune every file, kept $kept/$total")
+    val present = col("k") === 3000L
+    val expected = df.filter(present).collect().map(_.toString).toSeq
+    assert(expected.size == 1)
+    def rows(pred: Column) = t.readWhere(pred).select("k", "p").collect().map(_.toString).toSeq
+    assert(rows(present) == expected)
+    assert(aboveSidecarGate(rows(present)) == expected)
+  }
 }
