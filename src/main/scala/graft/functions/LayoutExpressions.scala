@@ -12,10 +12,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * value under Spark's own `<=` on doubles (−0.0 equals 0.0; NaN equals
   * itself and sorts above every number). A null value buckets to 0.
   * This is the z-order clustering bucket: a binary search over the
-  * cuts in one codegen'd static call, where `size(filter(cuts, c -> c
-  * <= x))` ran interpreted and called its lambda once per cut.
-  * `cuts` must be ascending under that order, so the cuts at or below
-  * any value form a prefix.
+  * cuts in one codegen'd static call, so layout jobs stay inside
+  * whole-stage codegen. `cuts` must be ascending under that order, so
+  * the cuts at or below any value form a prefix.
   */
 case class QuantileBucket(child: Expression, cuts: Array[Double])
     extends UnaryExpression {

@@ -1131,7 +1131,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val bc = spark.sparkContext.broadcast(pathByAbs)
     // A task reads its files one after another, so it resolves a file's
     // `_metadata.file_path` URI to the log path once, when the file
-    // changes, and fills one bloom per log path.
+    // changes (rows interleaved across files only resolve more often),
+    // and fills one bloom per log path.
     val perFile = scan(s, s.activeFiles, Set("file_path"))
       .where(col(column).isNotNull).select(col("file_path"), value)
       .queryExecution.toRdd
