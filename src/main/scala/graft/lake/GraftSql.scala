@@ -2,9 +2,16 @@ package graft.lake
 
 import scala.util.matching.Regex
 
-import graft.sources.GraftCatalog
+import graft.plans.{GraftDml, GraftDmlCommand}
+import graft.sources.{GraftCatalog, GraftLakeTable, GraftSqlParser}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LogicalPlan,
+  MergeIntoTable, SubqueryAlias, UpdateTable}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.StreamShim
 import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType,
   LongType, StringType, StructField, StructType}
 
@@ -13,9 +20,11 @@ import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType,
   * docs/02-lab-optimizations.md: `OPTIMIZE sales VORDER` §C,
   * `DESCRIBE HISTORY` / `VERSION AS OF` / `DELETE FROM` §D,
   * `VACUUM ... DRY RUN | RETAIN n HOURS` §E, `DESCRIBE DETAIL` §F),
-  * plus RESTORE and UPDATE. Anything else falls through to
-  * `spark.sql` with every registered table exposed as a temp view of
-  * its current snapshot.
+  * plus RESTORE. DELETE, UPDATE and MERGE are Spark's grammar: each
+  * is parsed by Spark's parser and lowered by [[graft.plans.GraftDml]],
+  * as catalog DML is. Anything else falls through to `spark.sql` with
+  * every registered table exposed as a temp view of its current
+  * snapshot.
   *
   * The statement table lives in the companion: each shape declares
   * its pattern and its catalog route, which
@@ -718,20 +727,6 @@ final class GraftSql(spark: SparkSession) {
           .collect { case a: AddFile => a.stats.map(_.numRecords).getOrElse(0L) }
           .sum
         Seq(("numInsertedRows", inserted.toString)).toDF("metric", "value")
-      case updateInRe(name, sets, keyCol, sub) =>
-        // IN-subquery UPDATE: same keyed-merge shape as the IN-subquery
-        // DELETE; SET expressions evaluate on the target row
-        exposeViews()
-        keyedMerge(name, keyCol, sub,
-          MergeClause.MatchedUpdate(None, Some(setAssignments(sets))))
-      case deleteInRe(name, keyCol, sub) =>
-        // IN-subquery DELETE runs as a keyed anti-merge: the subquery
-        // result joins the table on the key (hash equi-join — the
-        // 100 TB shape; never a collected value list) and matched rows
-        // delete through the merge planner with its stats pruning, in
-        // the table's graft.dml.mode
-        exposeViews()
-        keyedMerge(name, keyCol, sub, MergeClause.MatchedDelete(None))
       case insertRe(mode, name, payload) =>
         val t = table(name)
         // the payload may SELECT from any registered lake table —
@@ -771,10 +766,6 @@ final class GraftSql(spark: SparkSession) {
         table(name).snapshot.metadata.toSeq
           .flatMap(_.properties.toSeq).sorted.toDF("key", "value")
       case showPartitionsRe(name) => table(name).partitionsDF
-      case deleteRe(name, cond) =>
-        // no WHERE = whole-table delete (Delta parity)
-        val c = Option(cond).map(expr).getOrElse(lit(true))
-        table(name).deleteRows(c).toSeq.sorted.toDF("metric", "value")
       case analyzeRe(name) => table(name).computeStats()
       case analyzeColumnsRe(name, forCols) =>
         // FOR COLUMNS: base stats (rows/NDV/min/max) PLUS the
@@ -784,9 +775,6 @@ final class GraftSql(spark: SparkSession) {
         t.computeStats()
         t.computeHistogram(forCols.split(",").map(_.trim).toSeq
           .filter(_.nonEmpty))
-      case updateRe(name, sets, cond) =>
-        table(name).updateRows(expr(cond), setAssignments(sets))
-          .toSeq.sorted.toDF("metric", "value")
       case showCreateRe(name) =>
         // Spark/Delta parity: one row, the re-runnable DDL — schema
         // with NOT NULL markers, partitioning, location, properties
@@ -954,11 +942,7 @@ final class GraftSql(spark: SparkSession) {
           val toV = Snapshot.versionAtTimestamp(t.log, parseTsMillis(toTs))
           t.changeFeed(math.min(fromV - 1, toV), toV)
         }
-      case mergeRe(tName, tAlias, sName, sAlias, on, clauses) =>
-        executeSqlMerge(tName, Option(tAlias), sName, Option(sAlias), on, clauses)
-      case mergeEvolveRe(tName, tAlias, sName, sAlias, on, clauses) =>
-        executeSqlMerge(tName, Option(tAlias), sName, Option(sAlias), on, clauses,
-          evolve = true)
+      case dmlRe() => dml(statement)
       case other =>
         // register snapshots (incl. any VERSION AS OF rewrites) and
         // delegate to Spark SQL
@@ -983,132 +967,65 @@ final class GraftSql(spark: SparkSession) {
     }
   }
 
-  /** An IN-subquery DELETE / UPDATE as a keyed merge: the subquery's
-    * key set joins the table on `keyCol` and `clause` acts on the
-    * matched rows, in the table's `graft.dml.mode`.
+  /** DELETE / UPDATE / MERGE, parsed by Spark's grammar and lowered
+    * by [[graft.plans.GraftDml]] exactly as catalog DML is: the target
+    * name resolves through [[lookup]] (inside a transaction, to its
+    * shadow) and the statement answers the planner's metrics. Other
+    * names (a MERGE source, an IN-subquery) read as in any query.
+    * `MERGE WITH SCHEMA EVOLUTION` is analyzed as a plain MERGE over
+    * the evolved schema, held in memory, and the source aligned to it;
+    * the table evolves only once the statement has passed analysis, so
+    * a refused statement commits nothing.
     */
-  private def keyedMerge(name: String, keyCol: String, sub: String,
-      clause: MergeClause): DataFrame = {
+  private def dml(statement: String): DataFrame = {
     import spark.implicits._
-    val t = table(name)
-    t.executeDml("MERGE", Some(DmlClauses.keySource(t, keyCol, spark.sql(sub))),
-      Seq(keyCol), DmlClauses.lower(Seq(clause), None, t.snapshot.schema.fieldNames.toSet),
-      t.dmlMergeOnRead).toSeq.sorted.toDF("metric", "value")
-  }
-
-  /** `MERGE INTO t [AS a] USING s [AS b] ON <cond> WHEN ... THEN ...`
-    * (Delta's SQL merge surface). The ON clause must contain at least
-    * one same-name column equality conjunct — the natural key that
-    * drives file pruning and the hash join; every OTHER top-level
-    * conjunct (range guards like `b.ts > a.ts`, cross-named
-    * equalities, parenthesized disjunctions) becomes a residual
-    * predicate riding the match join. Source- and target-alias
-    * references inside conditions and assignments are rewritten to
-    * the builder's frame: `b.c` → `src_c`, `a.c` → `c`.
-    *
-    * Clause semantics are Delta's first-match-in-order: multiple
-    * `WHEN NOT MATCHED` clauses insert each row by the FIRST clause
-    * whose condition it meets; a MATCHED UPDATE written before a
-    * MATCHED DELETE shields its rows from the delete. At most one
-    * MATCHED UPDATE, one MATCHED DELETE, and one of each NOT MATCHED
-    * BY SOURCE action per statement — a repeat is an error, never a
-    * silent last-wins. String literals are opaque to the clause
-    * scanner and every splitter.
-    */
-  private def executeSqlMerge(tName: String, tAlias: Option[String],
-      sName: String, sAlias: Option[String],
-      onClause: String, clauseTail: String,
-      evolve: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val tgtAliases = (tAlias.toSeq :+ tName).map(_.toLowerCase)
-    val srcAliases = (sAlias.toSeq :+ sName).map(_.toLowerCase)
-    // 0 = unqualified, 1 = target, 2 = source, -1 = unknown alias
-    def side(q: String): Int =
-      if (q == null) 0 else if (tgtAliases.contains(q.toLowerCase)) 1
-      else if (srcAliases.contains(q.toLowerCase)) 2 else -1
-    val (keyConjs, residConjs) = splitTopAnd(onClause).map(_.trim)
-      .partition {
-        case mergeOnRe(q1, c1, q2, c2) =>
-          val (s1, s2) = (side(q1), side(q2))
-          c1.equalsIgnoreCase(c2) && s1 >= 0 && s2 >= 0 &&
-            (s1 == 0 || s2 == 0 || s1 != s2)
-        case _ => false
-      }
-    val keys = keyConjs.map { case mergeOnRe(_, kt, _, _) => kt }
-    DmlClauses.requireKeys(keys, onClause)
-    val source0 =
-      lookup(sName).map(_.toDF).getOrElse(spark.table(sName))
-    def ref(a: String) = "(?i)(?<!\\w)" + java.util.regex.Pattern.quote(a) + "\\."
-    val tgtRefs = (tAlias.toSeq :+ tName).map(ref)
-    val srcRefs = (sAlias.toSeq :+ sName).map(ref(_) + "(\\w+)")
-    def rewrite(e: String): String = {
-      val s1 = srcRefs.foldLeft(e)((acc, r) => acc.replaceAll(r, "src_$1"))
-      tgtRefs.foldLeft(s1)((acc, r) => acc.replaceAll(r, ""))
+    val parsed = GraftSqlParser.sparkParser(spark).parsePlan(statement)
+    // registered tables read through their temp views, published only
+    // when the statement names a table besides its target
+    if (parsed.collectWithSubqueries { case r: UnresolvedRelation => r }.size > 1) exposeViews()
+    // the target, bare or aliased: its name becomes the table the
+    // catalog route resolves it to, read in `evolveFor`'s evolved schema
+    // when given
+    def target(p: LogicalPlan, evolveFor: Option[StructType] = None)
+        : (GraftTable, LogicalPlan) = p match {
+      case a @ SubqueryAlias(_, child) =>
+        val (t, r) = target(child, evolveFor)
+        (t, a.copy(child = r))
+      case r: UnresolvedRelation =>
+        val name = r.multipartIdentifier
+        val t = table(name.map(n => s"`$n`").mkString("."))
+        val rel = DataSourceV2Relation.create(
+          new GraftLakeTable(spark, t.path, name.mkString(".")), None, None)
+        (t, SubqueryAlias(name, evolveFor.fold(rel)(src =>
+          rel.copy(output = DataTypeUtils.toAttributes(t.evolvedSchema(src))))))
+      case other => throw new IllegalArgumentException(
+        s"unsupported DML target: ${other.nodeName}")
     }
-    // NOT MATCHED clauses evaluate on the raw SOURCE frame (there is
-    // no target row and no src_ prefix): alias refs rewrite to bare
-    // source column names instead
-    def rewriteIns(e: String): String = {
-      val s1 = srcRefs.foldLeft(e)((acc, r) => acc.replaceAll(r, "$1"))
-      tgtRefs.foldLeft(s1)((acc, r) => acc.replaceAll(r, ""))
+    val (plan, evolve) = parsed match {
+      case d: DeleteFromTable => (d.copy(table = target(d.table)._2), None)
+      case u: UpdateTable => (u.copy(table = target(u.table)._2), None)
+      case m: MergeIntoTable if m.withSchemaEvolution =>
+        val src = StreamShim.ofRows(spark, m.sourceTable)
+        val (t, tgt) = target(m.targetTable, Some(src.schema))
+        // the aligned source keeps the qualifier its clauses name it by
+        val aligned = t.alignToSchema(src, t.evolvedSchema(src.schema)).queryExecution.analyzed
+        val qualifier = src.queryExecution.analyzed.output.head.qualifier
+        (m.copy(targetTable = tgt, withSchemaEvolution = false,
+          sourceTable = if (qualifier.isEmpty) aligned else SubqueryAlias(qualifier, aligned)),
+          Some(() => t.evolveSchemaFor(src)))
+      case m: MergeIntoTable => (m.copy(targetTable = target(m.targetTable)._2), None)
+      case other => throw new IllegalArgumentException(
+        s"not a DELETE, UPDATE or MERGE statement: ${other.nodeName}")
     }
-    def assignments(sets: String): Map[String, org.apache.spark.sql.Column] =
-      splitTop(sets).map { a =>
-        val (k, v) = splitAssign(a)
-        rewrite(k.trim) -> expr(rewrite(v.trim))
-      }.toMap
-    val updateSetRe = """(?is)^UPDATE\s+SET\s+(.+)$""".r
-    // the clause scanner runs over a literal-masked copy so a ') WHEN '
-    // or 'THEN' inside a string can never end a clause early; group
-    // CONTENT is lifted from the original by match position
-    val masked = maskLiterals(clauseTail)
-    val clauses = mergeClauseRe.findAllMatchIn(masked).map { m =>
-      def g(i: Int): Option[String] =
-        Option(m.group(i)).map(_ => clauseTail.substring(m.start(i), m.end(i)))
-      (g(1).get.toUpperCase.replaceAll("\\s+", " "), g(2), g(3).get.trim)
-    }.toList.map { case (kind, condStr, action) =>
-      val cond = condStr.map(c => expr(rewrite(c)))
-      val actionMasked = maskLiterals(action)
-      def sets: String = updateSetRe.findFirstMatchIn(actionMasked)
-        .map(m => action.substring(m.start(1), m.end(1))).get
-      (kind, actionMasked) match {
-        case ("MATCHED", updateSetRe(_)) =>
-          MergeClause.MatchedUpdate(cond,
-            if (sets.trim == "*") None else Some(assignments(sets)))
-        case ("MATCHED", a) if a.equalsIgnoreCase("DELETE") =>
-          MergeClause.MatchedDelete(cond)
-        case ("NOT MATCHED", mergeInsertColsRe(_, _)) =>
-          val mm = mergeInsertColsRe.findFirstMatchIn(actionMasked).get
-          val colList = action.substring(mm.start(1), mm.end(1))
-          val valList = action.substring(mm.start(2), mm.end(2))
-          val cols = colList.split(",").map(c => rewriteIns(c.trim))
-          val vals = splitTop(valList).map(v => expr(rewriteIns(v.trim)))
-          require(cols.length == vals.length,
-            s"INSERT column/value arity mismatch: ${cols.length} vs ${vals.length}")
-          MergeClause.Insert(condStr.map(c => expr(rewriteIns(c))),
-            Some(cols.toSeq.zip(vals).toMap))
-        case ("NOT MATCHED", a) if a.toUpperCase.startsWith("INSERT") =>
-          MergeClause.Insert(condStr.map(c => expr(rewriteIns(c))), None)
-        case ("NOT MATCHED BY SOURCE", updateSetRe(_)) =>
-          MergeClause.NmbsUpdate(cond, assignments(sets))
-        case ("NOT MATCHED BY SOURCE", a) if a.equalsIgnoreCase("DELETE") =>
-          MergeClause.NmbsDelete(cond)
-        case (k, a) => throw new IllegalArgumentException(
-          s"unsupported MERGE clause: WHEN $k THEN $a")
-      }
+    val qe = spark.sessionState.executePlan(GraftDml.markInsertStar(plan))
+    qe.assertAnalyzed()
+    qe.analyzed match {
+      case c: GraftDmlCommand =>
+        evolve.foreach(_())
+        c.execute(spark).toSeq.sorted.toDF("metric", "value")
+      case _ => throw new IllegalStateException("GraftSql DELETE / UPDATE / MERGE " +
+        "need spark.sql.extensions=graft.GraftExtensions")
     }
-    val t = table(tName)
-    val lowered = DmlClauses.lower(clauses,
-      if (residConjs.isEmpty) None
-      else Some(expr(rewrite(residConjs.map(c => s"($c)").mkString(" AND ")))),
-      t.snapshot.schema.fieldNames.toSet)
-    // WITH SCHEMA EVOLUTION: the source's new columns are added to the
-    // table first (metadata commits), then the source aligns to the
-    // evolved shape by name
-    val source =
-      if (!evolve) source0 else { t.evolveSchemaFor(source0); t.alignToSchema(source0) }
-    t.executeDml("MERGE", Some(source), keys, lowered, t.dmlMergeOnRead)
-      .toSeq.sorted.toDF("metric", "value")
   }
 
   /** The (SUM/AVG, MIN, MAX) source columns of a CREATE MATERIALIZED
@@ -1132,85 +1049,6 @@ final class GraftSql(spark: SparkSession) {
     (sources { case mvSumItemRe(c) => c; case mvAvgItemRe(c) => c },
       sources { case mvMinItemRe(c) => c },
       sources { case mvMaxItemRe(c) => c })
-  }
-
-  /** Split on top-level commas only: parens nest (function calls) and
-    * single-quoted SQL strings may carry commas or parens — both are
-    * opaque to the splitter ('' is the escaped quote inside a string).
-    * Shared by MERGE assignment/VALUES lists and the UPDATE SET lists.
-    */
-  private def splitTop(s0: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var start = 0; var inStr = false
-    var i = 0
-    while (i < s0.length) {
-      s0.charAt(i) match {
-        case '\'' => inStr = !inStr
-        case '(' if !inStr => depth += 1
-        case ')' if !inStr => depth -= 1
-        case ',' if !inStr && depth == 0 =>
-          out += s0.substring(start, i); start = i + 1
-        case _ => ()
-      }
-      i += 1
-    }
-    out += s0.substring(start)
-    out.toSeq
-  }
-
-  /** First top-level '=' (outside strings and parens) splits an
-    * assignment — commas/equals inside calls or literals are opaque.
-    */
-  private def splitAssign(a: String): (String, String) = {
-    var depth = 0; var inStr = false; var i = 0
-    while (i < a.length) {
-      a.charAt(i) match {
-        case '\'' => inStr = !inStr
-        case '(' if !inStr => depth += 1
-        case ')' if !inStr => depth -= 1
-        case '=' if !inStr && depth == 0 =>
-          return (a.substring(0, i), a.substring(i + 1))
-        case _ => ()
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(s"malformed assignment: $a")
-  }
-
-  /** UPDATE SET list → column/expression map, literal- and
-    * paren-aware (a comma inside concat('a,b', x) never splits).
-    */
-  private def setAssignments(sets: String)
-      : Map[String, org.apache.spark.sql.Column] =
-    splitTop(sets).map { a =>
-      val (k, v) = splitAssign(a)
-      k.trim -> org.apache.spark.sql.functions.expr(v.trim)
-    }.toMap
-
-  /** Split on top-level (?i)AND keywords — parens nest, string
-    * literals are opaque, word boundaries required.
-    */
-  private def splitTopAnd(s0: String): Seq[String] = {
-    val masked = maskLiterals(s0)
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var start = 0; var i = 0
-    def isWord(c: Char) = c.isLetterOrDigit || c == '_'
-    while (i < masked.length) {
-      masked.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case c if depth == 0 && (c == 'a' || c == 'A') &&
-            i + 3 <= masked.length &&
-            masked.substring(i, i + 3).equalsIgnoreCase("and") &&
-            (i == 0 || !isWord(masked.charAt(i - 1))) &&
-            (i + 3 == masked.length || !isWord(masked.charAt(i + 3))) =>
-          out += s0.substring(start, i); start = i + 3; i += 2
-        case _ => ()
-      }
-      i += 1
-    }
-    out += s0.substring(start)
-    out.toSeq
   }
 }
 
@@ -1240,26 +1078,17 @@ object GraftSql {
     extends Route
 
   /** One statement of the grammar: the whole-statement pattern around
-    * `body`, and its catalog route. A `masked` shape matches the
-    * literal-masked text and lifts its groups from the original, so a
-    * keyword inside a string literal never ends a clause.
+    * `body`, and its catalog route.
     */
-  final class Shape private[GraftSql] (val route: Route, body: String,
-      masked: Boolean) {
+  final class Shape private[GraftSql] (val route: Route, body: String) {
     private val re = ("(?is)^\\s*" + body + "\\s*;?\\s*$").r
-    def unapplySeq(stmt: String): Option[List[String]] =
-      if (!masked) re.unapplySeq(stmt)
-      else re.findFirstMatchIn(maskLiterals(stmt)).map(m =>
-        List.tabulate(m.groupCount)(i =>
-          if (m.start(i + 1) < 0) null
-          else stmt.substring(m.start(i + 1), m.end(i + 1))))
+    def unapplySeq(stmt: String): Option[List[String]] = re.unapplySeq(stmt)
   }
 
   // the shapes whose route is not Never, in declaration order
   private val routed = scala.collection.mutable.ArrayBuffer[Shape]()
-  private def shape(body: String, route: Route = Never,
-      masked: Boolean = false): Shape = {
-    val s = new Shape(route, body, masked)
+  private def shape(body: String, route: Route = Never): Shape = {
+    val s = new Shape(route, body)
     if (route != Never) routed += s
     s
   }
@@ -1318,12 +1147,10 @@ object GraftSql {
   private val extendedRe = shape(raw"""DESCRIBE\s+EXTENDED\s+$id""")
   private val clusteringRe = shape(
     raw"""DESCRIBE\s+CLUSTERING\s+$id(?:\s*\(([\w,\s]+)\))?""")
-  private val deleteRe = shape(raw"""DELETE\s+FROM\s+$id(?:\s+WHERE\s+(.+?))?""")
   private val analyzeRe = shape(
     raw"""ANALYZE\s+TABLE\s+$id\s+COMPUTE\s+STATISTICS""", IfGraft(statsOut))
   private val analyzeColumnsRe = shape(
     raw"""ANALYZE\s+TABLE\s+$id\s+COMPUTE\s+STATISTICS\s+FOR\s+COLUMNS\s*\(([\w,\s]+)\)""")
-  private val updateRe = shape(raw"""UPDATE\s+$id\s+SET\s+(.+?)\s+WHERE\s+(.+?)""")
   private val showCreateRe = shape(raw"""SHOW\s+CREATE\s+TABLE\s+$id""")
   private val createLikeRe = shape(
     raw"""CREATE\s+TABLE\s+(\w+)\s+LIKE\s+$id\s+LOCATION\s+'([^']+)'""")
@@ -1430,10 +1257,6 @@ object GraftSql {
     raw"""INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?$id\s+((?:SELECT|VALUES|TABLE)\s*.+?)""")
   private val insertColsRe = shape(
     raw"""INSERT\s+INTO\s+(?:TABLE\s+)?$id\s*\(([\w,\s]+)\)\s*((?:SELECT|VALUES|TABLE)\s*.+?)""")
-  private val deleteInRe = shape(
-    raw"""DELETE\s+FROM\s+$id\s+WHERE\s+(\w+)\s+IN\s*\(\s*(SELECT\s+.+)\)""")
-  private val updateInRe = shape(
-    raw"""UPDATE\s+$id\s+SET\s+(.+?)\s+WHERE\s+(\w+)\s+IN\s*\(\s*(SELECT\s+.+)\)""")
   private val createSchemaRe = shape(
     raw"""CREATE\s+TABLE\s+(\w+)\s*\((.+?)\)\s*(?:USING\s+graftlake\s+)?(?:PARTITIONED\s+BY\s*\(([\w,\s]+)\)\s*)?LOCATION\s+'([^']+)'""")
   private val showPropsRe = shape(raw"""SHOW\s+TBLPROPERTIES\s+$id""")
@@ -1452,16 +1275,14 @@ object GraftSql {
   private val tableChangesRe = shape(
     raw"""TABLE\s+CHANGES\s+$id\s+BETWEEN\s+(?:(\d+)\s+AND\s+(\d+)|TIMESTAMP\s+'([^']+)'\s+AND\s+TIMESTAMP\s+'([^']+)')""",
     Lazy())
-  private val mergeTail =
-    raw"""INTO\s+$id(?:\s+(?:AS\s+)?(\w+))?\s+USING\s+$id(?:\s+(?:AS\s+)?(\w+))?\s+ON\s+(.+?)\s+(WHEN\s+.+?)"""
-  private val mergeRe = shape(raw"""MERGE\s+$mergeTail""", masked = true)
-  // plain MERGE on a catalog name resolves in Spark's analyzer and runs
-  // as graft.plans.GraftDml over the same planner; WITH SCHEMA
-  // EVOLUTION routes here, since Spark's resolution of it expects
-  // column defaults this catalog does not declare
+  // DELETE / UPDATE / MERGE: Spark's grammar parses them (GraftSql.dml),
+  // after MERGE BRANCH and every other shape had its turn. On a catalog
+  // name Spark's analyzer takes them to graft.plans.GraftDml directly;
+  // only WITH SCHEMA EVOLUTION routes here, since GraftSql resolves the
+  // MERGE against the evolved schema before the table evolves
+  private val dmlRe = shape(raw"""(?:DELETE|UPDATE|MERGE)\s.+""")
   private val mergeEvolveRe = shape(
-    raw"""MERGE\s+WITH\s+SCHEMA\s+EVOLUTION\s+$mergeTail""",
-    IfGraft(metricValue), masked = true)
+    raw"""MERGE\s+WITH\s+SCHEMA\s+EVOLUTION\s+INTO\s+$id\s.+""", IfGraft(metricValue))
 
   private val beginRe = shape(raw"""BEGIN(?:\s+TRANSACTION)?""")
   private val commitTxnRe = shape(raw"""COMMIT(?:\s+TRANSACTION)?""")
@@ -1495,13 +1316,6 @@ object GraftSql {
     """(?i)^COUNT\s*\(\s*\*\s*\)(?:\s+AS\s+\w+)?$""".r
   private val mvCountDistinctItemRe: Regex =
     """(?i)^COUNT\s*\(\s*DISTINCT\s+(\w+)\s*\)(?:\s+AS\s+\w+)?$""".r
-  // an ON conjunct `[q.]c = [q.]c`; a qualifier may be a table name
-  private val mergeOnRe: Regex =
-    raw"""(?is)^\s*(?:$id\.)?(\w+)\s*=\s*(?:$id\.)?(\w+)\s*$$""".r
-  private val mergeClauseRe: Regex =
-    """(?is)WHEN\s+(NOT\s+MATCHED\s+BY\s+SOURCE|NOT\s+MATCHED|MATCHED)(?:\s+AND\s+(.+?))?\s+THEN\s+(UPDATE\s+SET\s+.+?|DELETE|INSERT\s+\*|INSERT\s*\([^)]+\)\s*VALUES\s*\(.+?\))\s*(?=WHEN\s|$)""".r
-  private val mergeInsertColsRe: Regex =
-    """(?is)^INSERT\s*\(([^)]+)\)\s*VALUES\s*\((.+)\)$""".r
 
   /** Same-length copy with every character inside a single-quoted SQL
     * string literal replaced by '_' ('' escapes stay masked): regexes

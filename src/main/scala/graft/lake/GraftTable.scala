@@ -3546,15 +3546,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // nested additions: merge each common column's type and commit
     // the evolved schema once if anything grew
     val s2 = snapshot
-    val bySrc = source.schema.fields.map(f => f.name -> f.dataType).toMap
-    val evolved = org.apache.spark.sql.types.StructType(
-      s2.schema.fields.map { f =>
-        bySrc.get(f.name) match {
-          case Some(srcT) =>
-            f.copy(dataType = GraftTable.mergeNestedType(f.dataType, srcT))
-          case None => f
-        }
-      })
+    val evolved = evolvedSchema(source.schema, s2.schema)
     if (evolved != s2.schema) {
       val meta = s2.metadata.get.copy(schemaJson = evolved.json)
       commitAndCheckpoint(Seq(info("EVOLVE SCHEMA",
@@ -3562,6 +3554,23 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         readVersion = s2.version, metadataConflict = true)
       ()
     }
+  }
+
+  /** The schema [[evolveSchemaFor]] commits for `source`, computed
+    * without committing: `schema` with every source column it lacks
+    * appended (nullable) and each common column's nested type merged.
+    */
+  private[lake] def evolvedSchema(source: StructType,
+      schema: StructType = snapshot.schema): StructType = {
+    val bySrc = source.fields.map(f => f.name -> f.dataType).toMap
+    val added = source.fields.filterNot(f => schema.fieldNames.contains(f.name))
+    val widened = added.foldLeft(schema)((s, f) => s.add(f.name, f.dataType, nullable = true))
+    StructType(widened.fields.map { f =>
+      bySrc.get(f.name) match {
+        case Some(srcT) => f.copy(dataType = GraftTable.mergeNestedType(f.dataType, srcT))
+        case None => f
+      }
+    })
   }
 
   /** Project `df`'s struct columns onto the table's (evolved) nested
@@ -3573,9 +3582,9 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * field-order technicality. Top-level columns are untouched:
     * omitting one still refuses (the flat contract).
     */
-  private[lake] def alignToSchema(df: DataFrame): DataFrame = {
-    val s = snapshot
-    val tb = s.schema.fields.map(f => f.name -> f.dataType).toMap
+  private[lake] def alignToSchema(df: DataFrame,
+      schema: StructType = snapshot.schema): DataFrame = {
+    val tb = schema.fields.map(f => f.name -> f.dataType).toMap
     df.select(df.schema.fields.toIndexedSeq.map { f =>
       tb.get(f.name) match {
         case Some(t) if GraftTable.nullableDeep(t) !=
@@ -3817,15 +3826,13 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
 
   /** DELETE / UPDATE through the one planner: with no source every
     * target row is "not matched by source", so the WHERE clause is a
-    * not-matched-by-source clause. The mode defaults to the table's
-    * `graft.dml.mode`.
+    * not-matched-by-source clause.
     */
-  private[graft] def deleteRows(cond: Column,
-      mor: Boolean = dmlMergeOnRead): Map[String, String] =
+  private def deleteRows(cond: Column, mor: Boolean): Map[String, String] =
     executeDml("DELETE", None, Nil, DmlClauses(nmbsDelete = Some(cond)), mor)
 
-  private[graft] def updateRows(cond: Column, set: Map[String, Column],
-      mor: Boolean = dmlMergeOnRead): Map[String, String] =
+  private def updateRows(cond: Column, set: Map[String, Column],
+      mor: Boolean): Map[String, String] =
     executeDml("UPDATE", None, Nil,
       DmlClauses(nmbsUpdate = Some((Some(cond), set))), mor)
 

@@ -28,7 +28,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   *
   * The builder names its mode: copy-on-write unless `mergeOnRead()`.
   * The SQL front ends (`GraftSql`, catalog `spark.sql`) follow the
-  * table's `graft.dml.mode` instead, through [[DmlClauses.lower]]. All
+  * table's `graft.dml.mode` instead, through [[graft.plans.GraftDml]]. All
   * run the same clause planner (`GraftTable.executeDml`).
   */
 final class MergeBuilder private[lake] (t: GraftTable, source: DataFrame, keys: Seq[String]) {
@@ -173,105 +173,9 @@ private[graft] final case class DmlClauses(
     nmbsDelete: Option[Column] = None,
     matchCond: Option[Column] = None)
 
-/** One `WHEN … THEN …` clause of a SQL MERGE, in statement order, as
-  * both SQL front ends (`GraftSql`'s MERGE and the catalog command,
-  * [[graft.plans.GraftDml]]) hand it to [[DmlClauses.lower]]. A `set`
-  * of `None` is `UPDATE SET *` / `INSERT *`. MATCHED and NOT MATCHED
-  * BY SOURCE conditions read the target row; MATCHED assignments read
-  * target columns bare and source columns as `src_<name>`; NOT MATCHED
-  * conditions and values read the source row's columns bare.
-  */
-private[graft] sealed trait MergeClause
-private[graft] object MergeClause {
-  final case class MatchedUpdate(cond: Option[Column], set: Option[Map[String, Column]])
-    extends MergeClause
-  final case class MatchedDelete(cond: Option[Column]) extends MergeClause
-  final case class Insert(cond: Option[Column], set: Option[Map[String, Column]])
-    extends MergeClause
-  final case class NmbsUpdate(cond: Option[Column], set: Map[String, Column])
-    extends MergeClause
-  final case class NmbsDelete(cond: Option[Column]) extends MergeClause
-}
-
 private[graft] object DmlClauses {
 
-  /** The MERGE key: the ON clause's same-name column equalities. */
-  def requireKeys(keys: Seq[String], on: => String): Unit =
-    require(keys.nonEmpty,
-      s"MERGE ON needs at least one same-column key equality, got: $on")
-
-  /** A SQL MERGE's ordered clauses as the planner reads them, with
-    * Delta's first-match semantics: each MATCHED (or NOT MATCHED BY
-    * SOURCE) clause applies only where no earlier clause of its family
-    * fired, so a MATCHED UPDATE written before a MATCHED DELETE shields
-    * its rows from the delete; NOT MATCHED clauses stay ordered, the
-    * first whose condition holds inserts the row. At most one MATCHED
-    * UPDATE, one MATCHED DELETE and one of each NOT MATCHED BY SOURCE
-    * action: a repeat is an error, never a silent last-wins. A MATCHED
-    * condition may read only target columns (`targetCols`): the
-    * planner evaluates it on the matched target row.
-    */
-  def lower(clauses: Seq[MergeClause], matchCond: Option[Column],
-      targetCols: Set[String]): DmlClauses = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    def gated(cond: Option[Column], earlier: Seq[Option[Column]]): Option[Column] =
-      if (earlier.isEmpty) cond
-      else {
-        val noneEarlier = earlier
-          .map(c => coalesce(c.getOrElse(lit(true)), lit(false)) === false)
-          .reduce(_ && _)
-        Some(cond.map(_ && noneEarlier).getOrElse(noneEarlier))
-      }
-    def targetOnly(cond: Option[Column]): Unit = cond.foreach { c =>
-      val src = GraftExpr.expression(c).collect {
-        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-            if a.nameParts.head.startsWith("src_") && !targetCols(a.nameParts.head) =>
-          a.nameParts.head.stripPrefix("src_")
-      }
-      require(src.isEmpty, "MERGE: a WHEN MATCHED condition may read only " +
-        s"target columns, got source column(s) ${src.distinct.mkString(", ")}")
-    }
-    var c = DmlClauses(matchCond = matchCond)
-    var earlierMatched = Seq.empty[Option[Column]]
-    var earlierNmbs = Seq.empty[Option[Column]]
-    var seen = Set.empty[String]
-    def once(k: String): Unit = {
-      require(!seen(k), s"MERGE supports at most one $k clause")
-      seen += k
-    }
-    clauses.foreach {
-      case MergeClause.MatchedUpdate(cond, set) =>
-        once("WHEN MATCHED ... UPDATE"); targetOnly(cond)
-        c = c.copy(updateAll = true, updateCond = gated(cond, earlierMatched), updateSet = set)
-        earlierMatched :+= cond
-      case MergeClause.MatchedDelete(cond) =>
-        once("WHEN MATCHED ... DELETE"); targetOnly(cond)
-        c = c.copy(deleteCond = Some(gated(cond, earlierMatched).getOrElse(lit(true))))
-        earlierMatched :+= cond
-      case MergeClause.Insert(cond, set) =>
-        c = c.copy(inserts = c.inserts :+ ((cond, set)))
-      case MergeClause.NmbsUpdate(cond, set) =>
-        once("WHEN NOT MATCHED BY SOURCE ... UPDATE")
-        c = c.copy(nmbsUpdate = Some((gated(cond, earlierNmbs), set)))
-        earlierNmbs :+= cond
-      case MergeClause.NmbsDelete(cond) =>
-        once("WHEN NOT MATCHED BY SOURCE ... DELETE")
-        c = c.copy(nmbsDelete = Some(gated(cond, earlierNmbs).getOrElse(lit(true))))
-        earlierNmbs :+= cond
-    }
-    c
-  }
-
-  /** An IN-subquery's key set as a MERGE source for `t`: its distinct
-    * keys, aligned to the table's schema (only the key joins).
-    */
-  def keySource(t: GraftTable, keyCol: String, keys: DataFrame): DataFrame = {
-    require(t.snapshot.schema.fieldNames.contains(keyCol),
-      s"unknown column $keyCol in the IN-subquery predicate for ${t.path}")
-    alignSource(t, keys.toDF(keyCol).distinct())
-  }
-
-  /** A catalog MERGE source in `t`'s schema, as the planner reads it:
+  /** A SQL MERGE source in `t`'s schema, as the planner reads it:
     * each table column from the same-name source column (matched
     * case-insensitively), cast to the table's type, or a typed null
     * where the source has none; source columns the table lacks drop.

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.lake.{GraftSql, GraftTable}
+import graft.plans.GraftDml
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
@@ -26,15 +27,22 @@ import org.apache.spark.sql.types._
   * GraftLake table. A match runs the
   * original text through a fresh GraftSql, whose name lookup reaches
   * the catalog; anything else parses through the delegate untouched,
-  * so the extension is a strict superset of Spark SQL.
+  * so the extension is a strict superset of Spark SQL. Plain DELETE /
+  * UPDATE / MERGE are such statements: Spark resolves them and
+  * [[graft.plans.GraftDml]] lowers them; a MERGE with `INSERT *` is
+  * tagged as it parses ([[graft.plans.GraftDml.markInsertStar]]),
+  * since Spark expands the star before the lowering sees it. MERGE
+  * WITH SCHEMA EVOLUTION routes to GraftSql, which lowers a plain MERGE
+  * the same way over the evolved schema and adds the source's new
+  * columns once the statement has passed analysis.
   */
-class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
+class GraftSqlParser(session: SparkSession, private val delegate: ParserInterface)
     extends ParserInterface {
 
   override def parsePlan(sqlText: String): LogicalPlan =
     GraftSqlParser.intercept(session, sqlText, name =>
       GraftCatalog.resolve(session, name).map(GraftTable.forPath(session, _)))
-      .getOrElse(delegate.parsePlan(sqlText))
+      .getOrElse(GraftDml.markInsertStar(delegate.parsePlan(sqlText)))
 
   override def parseExpression(sqlText: String): Expression =
     delegate.parseExpression(sqlText)
@@ -55,6 +63,16 @@ class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
 }
 
 object GraftSqlParser {
+
+  /** Spark's own parser under `spark`'s session parser: the statement
+    * table's verbs are not intercepted, so a statement parses exactly
+    * as Spark's grammar reads it.
+    */
+  private[graft] def sparkParser(spark: SparkSession): ParserInterface =
+    spark.sessionState.sqlParser match {
+      case p: GraftSqlParser => p.delegate
+      case p => p
+    }
 
   /** The plan for a statement GraftSql's table routes on catalog
     * names, or None to delegate. `tableOf` resolves a name to a

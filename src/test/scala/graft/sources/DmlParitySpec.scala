@@ -150,6 +150,94 @@ class DmlParitySpec extends GraftSparkSpec {
     }
   }
 
+  // statements whose shapes only a full SQL grammar reads: no WHERE on
+  // an UPDATE, a subquery MERGE source, an aliased DELETE target
+  test("an UPDATE with no WHERE agrees across entry points, copy-on-write") {
+    parity("update_all", mor = false)(_.update(lit(true), Map("v" -> lit(0L))),
+      n => s"UPDATE $n SET v = 0", n => s"UPDATE $n SET v = 0")
+  }
+
+  test("a MERGE whose source is a subquery agrees across entry points, merge-on-read") {
+    val using = "USING (SELECT id, part, v * 2 AS v FROM dml_par_src WHERE id < 1002) AS s " +
+      "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *"
+    parity("merge_subquery", mor = true)(
+      t => t.mergeBuilder(spark.sql("SELECT id, part, v * 2 AS v FROM dml_par_src WHERE id < 1002"),
+          "id").whenMatchedUpdate(Map("v" -> col("src_v"))).whenNotMatchedInsertAll()
+        .mergeOnRead().execute(),
+      n => s"MERGE INTO $n AS t $using", n => s"MERGE INTO $n AS t $using")
+  }
+
+  test("a DELETE on an aliased target agrees across entry points, copy-on-write") {
+    parity("delete_alias", mor = false)(_.delete(expr("id < 5 OR v = 300")),
+      n => s"DELETE FROM $n AS x WHERE x.id < 5 OR x.v = 300",
+      n => s"DELETE FROM $n AS x WHERE x.id < 5 OR x.v = 300")
+  }
+
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  test("UPDATE SET * / INSERT * refuse alike when the source has a column the table lacks") {
+    useCatalog()
+    spark.range(10, 13).selectExpr("id", "'p1' AS part", "id AS v", "'x' AS extra")
+      .createOrReplaceTempView("dml_star_src")
+    val gsql = new GraftSql(spark)
+    val sqlT = fixture(tmpDir("dml-star-sql"), mor = false)
+    gsql.register("star_sql", sqlT.path)
+    val catT = fixture(java.nio.file.Paths.get(warehouse, "default", "star_cat").toString,
+      mor = false)
+    val using = "AS t USING dml_star_src AS s ON t.id = s.id"
+    val msg = "would drop source column(s) extra that"
+    try {
+      for (tail <- Seq("WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+          "WHEN MATCHED THEN UPDATE SET *", "WHEN NOT MATCHED THEN INSERT *")) {
+        val viaSql = intercept[Exception](gsql.sql(s"MERGE INTO star_sql $using $tail").collect())
+        assert(messages(viaSql).contains(msg), s"GraftSql: $tail\n${messages(viaSql)}")
+        val viaCatalog = intercept[Exception](
+          spark.sql(s"MERGE INTO graftdml.default.star_cat $using $tail").collect())
+        assert(messages(viaCatalog).contains(msg), s"catalog: $tail\n${messages(viaCatalog)}")
+      }
+      assert(sqlT.version == 0 && GraftTable.forPath(spark, catT.path).version == 0,
+        "a refused MERGE commits nothing")
+    } finally spark.sql("DROP TABLE IF EXISTS graftdml.default.star_cat")
+  }
+
+  test("an INSERT listing every column from a wider source agrees across entry points") {
+    val using = "USING (SELECT *, 'x' AS extra FROM dml_par_src) AS s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET v = s.v " +
+      "WHEN NOT MATCHED THEN INSERT (id, part, v) VALUES (s.id, s.part, s.v)"
+    parity("merge_insert_cols", mor = false)(
+      _.mergeBuilder(spark.table("dml_par_src"), "id").whenMatchedUpdate(Map("v" -> col("src_v")))
+        .whenNotMatchedInsertAll().execute(),
+      n => s"MERGE INTO $n AS t $using", n => s"MERGE INTO $n AS t $using")
+  }
+
+  test("a refused MERGE WITH SCHEMA EVOLUTION leaves the table's version and schema") {
+    useCatalog()
+    spark.range(10, 13).selectExpr("id AS k", "'p1' AS part", "id AS v", "'x' AS extra")
+      .createOrReplaceTempView("dml_evolve_src")
+    val gsql = new GraftSql(spark)
+    val sqlT = fixture(tmpDir("dml-evolve-sql"), mor = false)
+    gsql.register("evolve_sql", sqlT.path)
+    val catT = fixture(java.nio.file.Paths.get(warehouse, "default", "evolve_cat").toString,
+      mor = false)
+    def merge(n: String) = s"MERGE WITH SCHEMA EVOLUTION INTO $n AS t " +
+      "USING dml_evolve_src AS s ON t.id = s.k WHEN MATCHED THEN DELETE"
+    val schema = sqlT.snapshot.schema
+    try {
+      for ((via, stmt) <- Seq[(String, () => Unit)](
+          "GraftSql" -> (() => gsql.sql(merge("evolve_sql")).collect()),
+          "catalog" -> (() => spark.sql(merge("graftdml.default.evolve_cat")).collect()))) {
+        val e = intercept[Exception](stmt())
+        assert(messages(e).contains("MERGE ON needs at least one same-column key equality"),
+          s"$via: ${messages(e)}")
+      }
+      for (t <- Seq(sqlT, catT).map(t => GraftTable.forPath(spark, t.path))) {
+        assert(t.version == 0, s"${t.path}: a refused MERGE committed v${t.version}")
+        assert(t.snapshot.schema == schema, s"${t.path}: schema became ${t.snapshot.schema}")
+      }
+    } finally spark.sql("DROP TABLE IF EXISTS graftdml.default.evolve_cat")
+  }
+
   test("BETWEEN conditions remove the same files through every entry point, copy-on-write") {
     val between = "part BETWEEN 'p0' AND 'p1' AND v BETWEEN 100 AND 400"
     parity("delete_between", mor = false)(_.delete(expr(between)),

@@ -11,9 +11,19 @@ checkout (for example a fresh `git archive` of each commit), each with its
 own build directories.
 
 For every end-to-end metric of BENCHMARK.json it prints each side's
-median and quartiles and the number of pairs the change won (in the
-metric's `better` direction). It exits non-zero if any run fails, is not
-`correct` or has failed operations.
+median and quartiles, the number of pairs the change won (in the
+metric's `better` direction), the change/parent median ratio next to the
+metric's `bound`, and a verdict:
+
+  worse       the change's median is worse than the parent's by more
+              than the bound;
+  unresolved  the parent's interquartile range is wider than the bound
+              (relative to its median) and not every change run beats
+              every parent run, so the runs cannot tell;
+  ok          otherwise.
+
+It exits non-zero if any run fails, is not `correct` or has failed
+operations.
 """
 import argparse
 import json
@@ -45,6 +55,23 @@ def quartiles(xs):
         return xs[0], xs[0], xs[0]
     q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
     return q1, q2, q3
+
+
+def verdict(parent, change, lower, bound):
+    """(change/parent median ratio, "worse" | "unresolved" | "ok") of one
+    metric's runs on each side; `bound` is the relative worsening allowed.
+    """
+    _, pm, _ = quartiles(parent)
+    _, cm, _ = quartiles(change)
+    ratio = cm / pm if pm else (1.0 if cm == pm else float("inf"))
+    if (ratio > 1 + bound) if lower else (ratio < 1 - bound):
+        return ratio, "worse"
+    q1, _, q3 = quartiles(parent)
+    spread = (q3 - q1) / abs(pm) if pm else (0.0 if q3 == q1 else float("inf"))
+    all_beat = max(change) < min(parent) if lower else min(change) > max(parent)
+    if spread > bound and not all_beat:
+        return ratio, "unresolved"
+    return ratio, "ok"
 
 
 def main():
@@ -83,15 +110,17 @@ def main():
     pairs = [(p, c) for p, c in zip(runs["parent"], runs["change"])
              if p is not None and c is not None]
     print(f"\n{args.workload} seed {args.seed}: {len(pairs)} complete pairs of {args.pairs}")
-    print(f"{'metric':30} {'parent q1/med/q3':>28} {'change q1/med/q3':>28} {'won':>6}")
+    print(f"{'metric':30} {'parent q1/med/q3':>28} {'change q1/med/q3':>28} {'won':>6} "
+          f"{'ratio':>7} {'bound':>6}  verdict")
     for m in bench["end_to_end"] if pairs else []:
         name, lower = m["name"], m["better"] == "lower"
         pv = [p["metrics"][name]["value"] for p, _ in pairs]
         cv = [c["metrics"][name]["value"] for _, c in pairs]
         won = sum((c < p) if lower else (c > p) for p, c in zip(pv, cv))
+        ratio, mark = verdict(pv, cv, lower, m["bound"])
         fmt = lambda q: "/".join(f"{v:.4g}" for v in q)  # noqa: E731
         print(f"{name:30} {fmt(quartiles(pv)):>28} {fmt(quartiles(cv)):>28} "
-              f"{won:>3}/{len(pairs)}")
+              f"{won:>3}/{len(pairs)} {ratio:>7.3f} {m['bound']:>6.2f}  {mark}")
     if not ok:
         print("some run failed, was not correct or had failed ops", file=sys.stderr)
     sys.exit(0 if ok else 1)
